@@ -66,27 +66,19 @@ object BpeIndex {
   /** Base ∪ LIVE delta memo rows (word, n_sub, pbucket) of the
     * newest committed generation — the artifact's full word
     * inventory (the purge audit's read surface). Deltas already
-    * consumed by a purge/re-train (named in `_folded.json`) are
-    * excluded: for a purge the crash window between its commit and
-    * its delta cleanup would otherwise RESURRECT purged word strings
-    * through the leftover dir; for a re-train the leftover's n_sub
-    * derives from the superseded merges.
+    * consumed by a purge/re-train are excluded: for a purge the crash
+    * window between its commit and its delta cleanup would otherwise
+    * RESURRECT purged word strings through the leftover dir; for a
+    * re-train the leftover's n_sub derives from the superseded
+    * merges.
     */
   private[graft] def memoAll(spark: SparkSession, root: String): DataFrame = {
     val idxPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
     (new java.io.File(idxPath, "memo").toString +:
-        liveDeltas(root, idxPath))
+        DeltaLog.live(root, idxPath))
       .map(p => spark.read.schema(MemoSchema).parquet(p))
       .reduce(_.unionByName(_))
-  }
-
-  /** Delta roots NOT consumed by the generation at `genPath` — the
-    * read set every consumer must use (see [[memoAll]]).
-    */
-  private def liveDeltas(root: String, genPath: String): Seq[String] = {
-    val folded = foldedOf(genPath)
-    deltas(root).filterNot(p => folded(new java.io.File(p).getName))
   }
 
   /** Bucket-pruned memo MEMBERSHIP probe: the (word, n_sub) rows of
@@ -136,7 +128,7 @@ object BpeIndex {
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
       else resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root"))
-    val deltaSnap = if (pinned) Nil else liveDeltas(root, idxPath)
+    val deltaSnap = if (pinned) Nil else DeltaLog.live(root, idxPath)
     val wb0 = words.select("word").distinct()
       .withColumn("pbucket", pbucketOf(col("word")))
     val wb = if (materialize) wb0.persist() else wb0
@@ -171,17 +163,15 @@ object BpeIndex {
     * re-train path) INVALIDATES the delta log: every delta's n_sub
     * derives from the superseded merges, so serving it against the
     * new generation would break the memo-hit ≡ fold invariant. The
-    * new generation's `_folded.json` names them (read paths skip,
-    * redelivered folds absorb — including a fold replayed after a
-    * pre-retrain purge, the PII closure) and the dirs are dropped
-    * after the commit.
+    * new generation's ledger names them (read paths skip, redelivered
+    * folds absorb — including a fold replayed after a pre-retrain
+    * purge, the PII closure) and the dirs are dropped after the
+    * commit.
     */
   def publish(docs: DataFrame, id: String, text: String, rounds: Int,
               root: String): String = synchronized {
-    val prev = resolve(root)
-    val deltaSnap = if (prev.isDefined) deltas(root) else Nil
-    val foldedNames = (prev.map(foldedOf).getOrElse(Set.empty) ++
-      deltaSnap.map(p => new java.io.File(p).getName)).toSeq.sorted
+    val log = resolve(root).map(new DeltaLog.Snapshot(_, deltas(root)))
+    val foldedNames = log.fold(Seq.empty[String])(_.consumed)
     val path = VersionedDirs.commit(root) { staging =>
       val vocab = wordsOf(docs, id, text)
         .groupBy("word").agg(count(lit(1)).as("freq"))
@@ -209,17 +199,12 @@ object BpeIndex {
         new java.io.File(staging, "_params.json").toPath,
         s"""{"rounds":$rounds,"fert":$fert}""")
       if (foldedNames.nonEmpty)
-        java.nio.file.Files.writeString(
-          new java.io.File(staging, "_folded.json").toPath,
-          foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
+        DeltaLog.writeLedger(staging, DeltaLog.Folded, foldedNames)
       java.nio.file.Files.createFile(
         new java.io.File(staging, "_SUCCESS").toPath)
       ()
     }
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
-    deltaSnap.foreach(p => rm(new java.io.File(p)))
+    log.foreach(l => DeltaLog.cleanup(root, l.listed))
     path
   }
 
@@ -273,15 +258,8 @@ object BpeIndex {
 
   // ------------------------------------------------------ memo deltas
 
-  private def deltaDir(root: String): java.io.File =
-    new java.io.File(root, "deltas")
-
   /** The committed memo delta roots. */
-  def deltas(root: String): Seq[String] =
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getAbsolutePath).sorted.toSeq
+  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
 
   /** Commit a batch's newly-derived segmentations (word, n_sub) as a
     * memo delta — batch cost, the committed memo never read or
@@ -290,63 +268,32 @@ object BpeIndex {
     * any copy carries the identical n_sub. The one redelivery that
     * must still be absorbed is the PII one: a tagged fold replayed
     * after [[purgeWords]] consumed its delta would re-commit the
-    * purged word STRINGS into the store — so purge records consumed
-    * delta names in the new generation's `_folded.json`
-    * ([[FirstSeenIndex]]'s pattern, carried forward across
-    * generations) and an absorbed tag returns without writing.
+    * purged word STRINGS into the store — the ledger absorbs it
+    * ([[DeltaLog.append]]).
     */
   def foldMemo(spark: SparkSession, seg: DataFrame, root: String,
                tag: String = java.util.UUID.randomUUID().toString): String =
     synchronized {
-      require(resolve(root).isDefined,
-        s"no committed index under $root — publish first")
-      val dr = deltaDir(root); dr.mkdirs()
-      val target = new java.io.File(dr, s"batch-$tag")
-      if (new java.io.File(target, "_SUCCESS").isFile)
-        return target.getAbsolutePath
-      // consumed by a purge and its dir deleted: ABSORB — a re-commit
-      // here would resurrect purged word strings (see [[purgeWords]])
+      DeltaLog.requireTag(tag)
       val gen = resolve(root)
-      if (gen.exists(p => foldedOf(p)(s"batch-$tag")))
-        return gen.get
-      graft.sources.Artifacts.notePublish()
-      val staging = new java.io.File(dr,
-        s".staging-${java.util.UUID.randomUUID()}")
-      seg.select(col("word"), col("n_sub"))
-        .withColumn("pbucket", pbucketOf(col("word")))
-        .repartition(col("pbucket"))
-        .sortWithinPartitions("word")
-        .write.partitionBy("pbucket").mode("overwrite")
-        .parquet(staging.getAbsolutePath)
-      require(staging.renameTo(target),
-        s"memo delta rename failed into $dr")
-      target.getAbsolutePath
+      require(gen.isDefined,
+        s"no committed index under $root — publish first")
+      DeltaLog.append(root, gen.get, tag) { staging =>
+        seg.select(col("word"), col("n_sub"))
+          .withColumn("pbucket", pbucketOf(col("word")))
+          .repartition(col("pbucket"))
+          .sortWithinPartitions("word")
+          .write.partitionBy("pbucket").mode("overwrite")
+          .parquet(staging.getAbsolutePath)
+        true
+      }
     }
 
-  /** Delta dir NAMES a generation has consumed — [[purgeWords]]
-    * writes them (previous generation's names carried forward, so
-    * absorption survives any number of purges) and [[foldMemo]]
-    * checks them: without the record, a checkpoint-lagged redelivery
-    * of a tagged fold arriving after a purge would re-commit the
-    * delta and resurrect the purged word strings into the store.
-    * Names only (~bytes per batch), never the words themselves.
-    */
-  private def foldedOf(genPath: String): Set[String] = {
-    val f = new java.io.File(genPath, "_folded.json")
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r.findAllMatchIn(
-      java.nio.file.Files.readString(f.toPath)).map(_.group(1)).toSet
-  }
-
   /** True when a fold tagged `tag` has already committed — live in
-    * the delta log, or consumed by a purge (its name in the resolved
-    * generation's `_folded.json`).
+    * the delta log, or consumed by a purge.
     */
-  def folded(root: String, tag: String): Boolean = {
-    val live = new java.io.File(
-      new java.io.File(deltaDir(root), s"batch-$tag"), "_SUCCESS").isFile
-    live || resolve(root).exists(p => foldedOf(p)(s"batch-$tag"))
-  }
+  def folded(root: String, tag: String): Boolean =
+    DeltaLog.contains(root, tag)
 
   /** Drop memo rows for `words` (one column `word`) — the word-level
     * deletion surface (see the class PII note): rewrite base ∪ deltas
@@ -355,8 +302,7 @@ object BpeIndex {
     * unchanged by construction (purged words re-derive through the
     * frozen-merge fold); this removes the literal token string from
     * the stored artifact. Consumed delta names land in the new
-    * generation's `_folded.json` (see [[foldedOf]]) so a redelivered
-    * fold cannot resurrect them.
+    * generation's ledger so a redelivered fold cannot resurrect them.
     */
   def purgeWords(spark: SparkSession, words: DataFrame,
                  root: String): String = synchronized {
@@ -365,8 +311,8 @@ object BpeIndex {
     // LIVE deltas only: a leftover dir from a prior purge's crash
     // window still holds the previously-purged word strings, and
     // unioning it here would write them back into the new base
-    val deltaSnap = liveDeltas(root, idxPath)
-    val all = (new java.io.File(idxPath, "memo").toString +: deltaSnap)
+    val log = new DeltaLog.Snapshot(idxPath, deltas(root))
+    val all = (new java.io.File(idxPath, "memo").toString +: log.live)
       .map(p => spark.read.schema(MemoSchema).parquet(p))
       .reduce(_.unionByName(_))
     val kept = all.join(words.select("word"), Seq("word"), "left_anti")
@@ -377,8 +323,6 @@ object BpeIndex {
       java.nio.file.Paths.get(idxPath, "_params.json"))
     val merges = spark.read.parquet(
       new java.io.File(idxPath, "merges").toString)
-    val foldedNames = (foldedOf(idxPath) ++
-      deltaSnap.map(p => new java.io.File(p).getName)).toSeq.sorted
     val path = VersionedDirs.commit(root) { st =>
       kept.repartition(col("pbucket"))
         .sortWithinPartitions("word")
@@ -388,21 +332,12 @@ object BpeIndex {
         .write.parquet(new java.io.File(st, "merges").toString)
       java.nio.file.Files.writeString(
         new java.io.File(st, "_params.json").toPath, params)
-      java.nio.file.Files.writeString(
-        new java.io.File(st, "_folded.json").toPath,
-        foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
+      DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
       java.nio.file.Files.createFile(
         new java.io.File(st, "_SUCCESS").toPath)
       ()
     }
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
-    // drop the consumed dirs AND any already-folded leftovers a
-    // prior purge's crash window left behind
-    deltas(root).foreach(p => rm(new java.io.File(p)))
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(VersionedDirs.stagingOrphan).foreach(rm)
+    DeltaLog.cleanup(root, log.listed)
     path
   }
 
@@ -485,7 +420,7 @@ object BpeIndex {
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
       else resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root"))
-    val deltaSnap = if (pinned) Nil else liveDeltas(root, idxPath)
+    val deltaSnap = if (pinned) Nil else DeltaLog.live(root, idxPath)
     val merges = mergesAt(spark, idxPath)
     val occ0 = wordsOf(docs, id, text)
     val occ = if (materialize) occ0.persist() else occ0

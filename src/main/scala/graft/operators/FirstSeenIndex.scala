@@ -35,9 +35,8 @@ import org.apache.spark.sql.functions._
   * over the touched buckets (duplicate shingle rows across
   * generations are harmless — min is idempotent, the [[SimIndex]]
   * stance) and folded physically at compaction cadence. Folds ARE
-  * recorded in a `_folded.json` sidecar ([[LexIndex]]'s pattern)
-  * despite min-idempotence: the idempotence argument breaks across a
-  * purge — see [[foldedOf]].
+  * recorded in the [[DeltaLog]] ledger despite min-idempotence: the
+  * idempotence argument breaks across a purge — see [[folded]].
   */
 object FirstSeenIndex {
 
@@ -78,15 +77,8 @@ object FirstSeenIndex {
 
   // ------------------------------------------------------ delta folds
 
-  private def deltaDir(root: String): java.io.File =
-    new java.io.File(root, "deltas")
-
   /** The committed delta roots. */
-  def deltas(root: String): Seq[String] =
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getAbsolutePath).sorted.toSeq
+  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
 
   /** Fold a processed batch in at BATCH cost: commit the batch's OWN
     * (shingle, min doc) as a delta — the committed map is never read,
@@ -98,83 +90,48 @@ object FirstSeenIndex {
     * compaction cadence. A non-default `tag` names the delta dir
     * deterministically (`batch-<tag>`) so an at-least-once caller —
     * the streaming gate — can test [[folded]] and absorb a
-    * redelivered fold instead of double-committing it (double-commit
-    * would still be CORRECT — min is idempotent — just wasted bytes).
+    * redelivered fold instead of double-committing it.
     */
   def fold(spark: SparkSession, batchShingles: DataFrame, root: String,
            tag: String = java.util.UUID.randomUUID().toString): String =
     synchronized {
-      require(resolve(root).isDefined,
-        s"no committed index under $root — publish a base first")
-      val dr = deltaDir(root); dr.mkdirs()
-      val target = new java.io.File(dr, s"batch-$tag")
-      if (new java.io.File(target, "_SUCCESS").isFile)
-        return target.getAbsolutePath // tagged fold already committed
-      // already folded into a committed generation and its dir
-      // deleted: ABSORB — re-committing here would resurrect purged
-      // doc ids when a purge ran between the fold and this redelivery
-      // (see [[foldedOf]]); returns the generation holding the rows
+      DeltaLog.requireTag(tag)
       val gen = resolve(root)
-      if (gen.exists(p => foldedOf(p)(s"batch-$tag")))
-        return gen.get
-      graft.sources.Artifacts.notePublish()
-      val staging = new java.io.File(dr,
-        s".staging-${java.util.UUID.randomUUID()}")
-      // the ingestion gate of the ban closure: a banned doc's rows
-      // never enter the delta, so it can never re-claim
-      // first-occurrence through the min-union (see [[addBans]]); an
-      // ENTIRELY banned batch commits nothing — an empty partitioned
-      // delta dir would break every later read of the append log
-      val bn = bans(spark, root)
-      // batch-scoped cache: the emptiness check and the min-union
-      // write are two actions over the same anti-joined frame —
-      // persist so the broadcast gate's batch scan runs once, not twice
-      val gated = bn
-        .map(b => batchShingles.join(
-          b.select(col("index_id").as("doc_id")), Seq("doc_id"),
-          "left_anti").persist())
-        .getOrElse(batchShingles)
-      try {
-        // EMPTY commits nothing, whatever emptied it — fully banned
-        // OR empty at the source (an empty bucket-partitioned dir has
-        // no footers; the GraphIndex:171 hazard class, closed
-        // fleet-wide in r15)
-        if (gated.isEmpty) return gen.get
-        writeMap(gated.groupBy("s").agg(min("doc_id").as("first_doc")),
-          staging.getAbsolutePath)
-      } finally if (bn.isDefined) { gated.unpersist(); () }
-      require(staging.renameTo(target),
-        s"delta fold rename failed into $dr")
-      target.getAbsolutePath
+      require(gen.isDefined,
+        s"no committed index under $root — publish a base first")
+      DeltaLog.append(root, gen.get, tag) { staging =>
+        // the ingestion gate of the ban closure: a banned doc's rows
+        // never enter the delta, so it can never re-claim
+        // first-occurrence through the min-union (see [[addBans]])
+        val bn = bans(spark, root)
+        // batch-scoped cache: the emptiness check and the min-union
+        // write are two actions over the same anti-joined frame —
+        // persist so the broadcast gate's batch scan runs once, not
+        // twice
+        val gated = bn
+          .map(b => batchShingles.join(
+            b.select(col("index_id").as("doc_id")), Seq("doc_id"),
+            "left_anti").persist())
+          .getOrElse(batchShingles)
+        try {
+          !gated.isEmpty && {
+            writeMap(gated.groupBy("s").agg(min("doc_id").as("first_doc")),
+              staging.getAbsolutePath)
+            true
+          }
+        } finally if (bn.isDefined) { gated.unpersist(); () }
+      }
     }
 
-  /** Delta dir NAMES already folded into the generation at `genPath`
-    * — the durable fold record ([[LexIndex]]'s `_folded.json`
-    * pattern). "Min is idempotent, a double fold is harmless" only
-    * holds while no DELETE happened in between: an at-least-once
-    * redelivery of a tagged fold arriving after a purge +
-    * [[mergeCompact]] (tombstones reset) would re-commit the delta
+  /** True when a fold tagged `tag` has already committed. "Min is
+    * idempotent, a double fold is harmless" only holds while no
+    * DELETE happened in between: a redelivery arriving after a purge
+    * + [[mergeCompact]] (tombstones reset) would re-commit the delta
     * and resurrect purged doc ids into the served first-occurrence
-    * map. The sidecar is what lets [[folded]] answer "already in the
-    * generation" after the delta dir itself is gone.
+    * map, so the ledger half of this check is load-bearing.
     */
-  private def foldedOf(genPath: String): Set[String] = {
-    val f = new java.io.File(genPath, "_folded.json")
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r.findAllMatchIn(
-      java.nio.file.Files.readString(f.toPath)).map(_.group(1)).toSet
-  }
-
-  /** True when a fold tagged `tag` has already committed — either
-    * live in the append log or folded into the resolved generation
-    * (its name in `_folded.json`). The folded half is the purge-race
-    * closure: see [[foldedOf]].
-    */
-  def folded(root: String, tag: String): Boolean = {
-    val live = new java.io.File(
-      new java.io.File(deltaDir(root), s"batch-$tag"), "_SUCCESS").isFile
-    live || resolve(root).exists(p => foldedOf(p)(s"batch-$tag"))
-  }
+  def folded(root: String, tag: String): Boolean =
+    DeltaLog.contains(root, tag)
 
   // ------------------------------------------------------ deletes
   //
@@ -242,16 +199,11 @@ object FirstSeenIndex {
   def mergeCompact(spark: SparkSession, root: String,
                    reassignSrc: Option[DataFrame] = None): String =
     synchronized {
-      val deltaSnap = deltas(root)
-      val basePath = resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
-      // a crash leftover a predecessor folded but never deleted must
-      // not re-enter: its rows are in the base AND it may predate a
-      // purge (see [[foldedOf]])
-      val folded0 = foldedOf(basePath)
-      val liveDeltas = deltaSnap
-        .filterNot(p => folded0(new java.io.File(p).getName))
-      val all = (basePath +: liveDeltas)
+      val listed = deltas(root)
+      val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
+        throw new IllegalStateException(s"no committed index under $root")),
+        listed)
+      val all = (log.genPath +: log.live)
         .map(p => spark.read.parquet(p).select(col("s"), col("first_doc")))
         .reduce(_.unionByName(_))
       // banned holders that slipped in pre-ban scrub physically here
@@ -280,40 +232,13 @@ object FirstSeenIndex {
           }
       }
       val merged = merged0.groupBy("s").agg(min("first_doc").as("first_doc"))
-      // CUMULATIVE across generations (SimIndex's rule): fold tags are
-      // CALLER-SUPPLIED batch identities, so a checkpoint-lagged
-      // redelivery can arrive any number of merges later — pruning the
-      // ledger to the current snapshot would let it re-commit then,
-      // resurrecting purged doc ids (NoveltyStream has no marker of
-      // its own; this ledger IS its absorption). Names are ~bytes per
-      // batch — the sidecar grows with batch count, never with data.
-      val foldedNames =
-        (folded0 ++
-          liveDeltas.map(new java.io.File(_).getName)).toSeq.sorted
+      // the cumulative ledger IS NoveltyStream's absorption — it has
+      // no marker of its own
       val path = VersionedDirs.commit(root) { st =>
         writeMap(merged, st)
-        // record the fold BEFORE deleting the dirs — the durable
-        // commit record a redelivered tagged fold checks via
-        // [[folded]] (the purge-resurrection closure; see foldedOf)
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_folded.json").toPath,
-          foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
-        ()
+        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
       }
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      // delete exactly what THIS merge folded plus crash leftovers a
-      // predecessor folded but never deleted (an append committed
-      // after the snapshot survives); a probe racing the deletion
-      // that double-reads a LIVE delta is harmless — min is
-      // idempotent. Crashed staging leftovers vacuum past the grace
-      // age only.
-      (liveDeltas ++
-        deltaSnap.filter(p => folded0(new java.io.File(p).getName)))
-        .foreach(p => rm(new java.io.File(p)))
-      Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-        .filter(VersionedDirs.stagingOrphan).foreach(rm)
+      DeltaLog.cleanup(root, listed)
       Tombstones.reset(spark, root)
       path
     }
@@ -346,18 +271,12 @@ object FirstSeenIndex {
   private def probeCore(spark: SparkSession, batchShingles: DataFrame,
                         root: String, materialize: Boolean): DataFrame = {
     // read-order discipline (see SimIndex.probeTopK): tombstones, then
-    // the delta listing, then resolve — duplicate reads under a
-    // racing merge stay harmless because min is idempotent, and the
-    // folded-sidecar filter below drops exactly the dirs a racing
-    // merge already folded into the resolved generation (a folded
-    // leftover may predate a purge — see [[foldedOf]])
+    // the delta listing, then resolve
     val ts = tombstones(spark, root)
-    val deltaSnap0 = deltas(root)
+    val listed = deltas(root)
     val idxPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
-    val foldedNames = foldedOf(idxPath)
-    val deltaSnap = deltaSnap0
-      .filterNot(p => foldedNames(new java.io.File(p).getName))
+    val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     val bs0 = batchShingles.withColumn("pbucket", pbucketOf(col("s")))
     // the cache backs the touched-bucket collect AND the returned
     // join, and is held until the result is materialized below (the

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   *     [[SketchIndex]] hazard in a row-keyed family): base and deltas
   *     each hold their own batch's (src, dst, w); the served weight
   *     is the SUM across them, so a redelivered fold double-counts
-  *     and the `_folded.json` tag ledger is load-bearing, not an
+  *     and the [[DeltaLog]] tag ledger is load-bearing, not an
   *     optimization;
   *   - **deletion is two-sided**: purging node u must drop u's own
   *     rows AND every edge (v, u) held by OTHER nodes. Probe-time
@@ -108,93 +108,68 @@ object GraphIndex {
 
   // ------------------------------------------------------ delta folds
 
-  private def deltaDir(root: String): java.io.File =
-    new java.io.File(root, "deltas")
-
   /** The committed delta roots. */
-  def deltas(root: String): Seq[String] =
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getAbsolutePath).sorted.toSeq
+  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
 
-  private def foldedOf(genPath: String): Set[String] = {
-    val f = new java.io.File(genPath, "_folded.json")
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r.findAllMatchIn(
-      java.nio.file.Files.readString(f.toPath)).map(_.group(1)).toSet
-  }
-
-  /** True when a fold tagged `tag` has already committed — live in
-    * the delta log, or consumed by a merge (its name in the resolved
-    * generation's `_folded.json`). Edge weights are SUMS, not
-    * min/union — a double fold double-counts — so this closure is
-    * what keeps an at-least-once redelivery correct, exactly the
-    * [[SketchIndex.folded]] burden.
+  /** True when a fold tagged `tag` has already committed. Edge
+    * weights are SUMS, not min/union — a double fold double-counts —
+    * so this closure is what keeps an at-least-once redelivery
+    * correct, exactly the [[SketchIndex.folded]] burden.
     */
-  def folded(root: String, tag: String): Boolean = {
-    val live = new java.io.File(
-      new java.io.File(deltaDir(root), s"batch-$tag"), "_SUCCESS").isFile
-    live || resolve(root).exists(p => foldedOf(p)(s"batch-$tag"))
-  }
+  def folded(root: String, tag: String): Boolean =
+    DeltaLog.contains(root, tag)
 
   /** Fold a batch's edges in at BATCH cost: the delta holds the
     * batch's OWN (src, dst, w) sums — the committed adjacency is
     * never read, never rewritten. Probes serve the weight-SUM of
     * base ∪ live deltas; [[mergeCompact]] folds the log physically.
-    * A redelivered tagged fold is ABSORBED (live dir, or the
-    * generation's `_folded.json` after a merge consumed it) — sums
-    * are not idempotent, so the absorb is correctness, not hygiene.
+    * A redelivered tagged fold is ABSORBED ([[DeltaLog.append]]) —
+    * sums are not idempotent, so the absorb is correctness, not
+    * hygiene.
     */
   def fold(spark: SparkSession, batchEdges: DataFrame, root: String,
            tag: String = java.util.UUID.randomUUID().toString): String =
     synchronized {
+      DeltaLog.requireTag(tag)
       val genPath = resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root"))
-      val dr = deltaDir(root); dr.mkdirs()
-      val target = new java.io.File(dr, s"batch-$tag")
-      if (new java.io.File(target, "_SUCCESS").isFile)
-        return target.getAbsolutePath
-      if (foldedOf(genPath)(s"batch-$tag")) return genPath
-      graft.sources.Artifacts.notePublish()
-      val staging = new java.io.File(dr,
-        s".staging-${java.util.UUID.randomUUID()}")
-      // the ingestion gate of the ban closure: edges re-mentioning a
-      // banned identity never enter the delta (see the bans section).
-      // Batch-scoped cache: the emptiness check and the write are two
-      // actions over the same (possibly anti-joined) frame — persist
-      // so the batch scan runs once, not twice.
-      val bn = bans(spark, root)
-      val gated = maskBoth(batchEdges, bn).persist()
-      try {
-        if (gated.isEmpty) {
-          // an EMPTY batch — fully banned, or empty at the source —
-          // still commits its TAG: a marker-only EMPTY delta — plain
-          // (non-partitioned) parquet under both twins, so the footer
-          // carries the schema readers need (an empty partitionBy
-          // write leaves no footers at all and would break every
-          // later read of the append log). Without the marker,
-          // `folded(root, tag)` stays false forever and an
-          // at-least-once caller
-          // ([[graft.streaming.GraphStream]].processBatch) re-runs
-          // the gate and reports "work committed" on every
-          // redelivery; with it the replay absorbs like any other
-          // fold.
-          val empty = gated
-            .select(col("src").cast("long"), col("dst").cast("long"),
-              col("w").cast("long"))
-            .withColumn("pbucket", pbucketOf(col("src")))
-            .limit(0)
-          empty.write.mode("overwrite")
-            .parquet(s"${staging.getAbsolutePath}/out")
-          empty.write.mode("overwrite")
-            .parquet(s"${staging.getAbsolutePath}/in")
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(staging.getAbsolutePath, "_SUCCESS"))
-        } else writeAdj(aggEdges(gated), staging.getAbsolutePath)
-      } finally { gated.unpersist(); () }
-      require(staging.renameTo(target), s"delta fold rename failed into $dr")
-      target.getAbsolutePath
+      DeltaLog.append(root, genPath, tag) { staging =>
+        // the ingestion gate of the ban closure: edges re-mentioning a
+        // banned identity never enter the delta (see the bans section).
+        // Batch-scoped cache: the emptiness check and the write are two
+        // actions over the same (possibly anti-joined) frame — persist
+        // so the batch scan runs once, not twice.
+        val bn = bans(spark, root)
+        val gated = maskBoth(batchEdges, bn).persist()
+        try {
+          if (gated.isEmpty) {
+            // an EMPTY batch — fully banned, or empty at the source —
+            // still commits its TAG: a marker-only EMPTY delta — plain
+            // (non-partitioned) parquet under both twins, so the footer
+            // carries the schema readers need (an empty partitionBy
+            // write leaves no footers at all and would break every
+            // later read of the append log). Without the marker,
+            // `folded(root, tag)` stays false forever and an
+            // at-least-once caller
+            // ([[graft.streaming.GraphStream]].processBatch) re-runs
+            // the gate and reports "work committed" on every
+            // redelivery; with it the replay absorbs like any other
+            // fold.
+            val empty = gated
+              .select(col("src").cast("long"), col("dst").cast("long"),
+                col("w").cast("long"))
+              .withColumn("pbucket", pbucketOf(col("src")))
+              .limit(0)
+            empty.write.mode("overwrite")
+              .parquet(s"${staging.getAbsolutePath}/out")
+            empty.write.mode("overwrite")
+              .parquet(s"${staging.getAbsolutePath}/in")
+            java.nio.file.Files.createFile(
+              java.nio.file.Paths.get(staging.getAbsolutePath, "_SUCCESS"))
+          } else writeAdj(aggEdges(gated), staging.getAbsolutePath)
+        } finally { gated.unpersist(); () }
+        true
+      }
     }
 
   // ------------------------------------------------------ deletes
@@ -262,22 +237,16 @@ object GraphIndex {
     * incident to a tombstoned node (both endpoints — and with the
     * `in/` mirror both halves are bucket-addressable; this full
     * rewrite also folds the delta log, so it reads `out/` once and
-    * re-emits both twins, at GDPR cadence). Consumed delta names are
-    * recorded CUMULATIVELY in `_folded.json` ([[SimIndex]]'s rule:
-    * fold tags are caller-supplied batch identities, a
-    * checkpoint-lagged redelivery can arrive any number of merges
-    * later, and a re-commit would double-count). Clears the log and
-    * resets tombstones.
+    * re-emits both twins, at GDPR cadence). Clears the log and resets
+    * tombstones.
     */
   def mergeCompact(spark: SparkSession, root: String): String =
     synchronized {
-      val deltaSnap = deltas(root)
-      val basePath = resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
-      val folded0 = foldedOf(basePath)
-      val liveDeltas = deltaSnap
-        .filterNot(p => folded0(new java.io.File(p).getName))
-      val all = (basePath +: liveDeltas)
+      val listed = deltas(root)
+      val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
+        throw new IllegalStateException(s"no committed index under $root")),
+        listed)
+      val all = (log.genPath +: log.live)
         .map(p => spark.read.parquet(s"$p/out")
           .select(col("src"), col("dst"), col("w")))
         .reduce(_.unionByName(_))
@@ -285,27 +254,11 @@ object GraphIndex {
       // here also scrubs any banned edge that slipped in pre-ban
       val merged = aggEdges(
         maskBoth(maskBoth(all, tombstones(spark, root)), bans(spark, root)))
-      val foldedNames =
-        (folded0 ++ liveDeltas.map(new java.io.File(_).getName)).toSeq.sorted
       val path = VersionedDirs.commit(root) { st =>
         writeAdj(merged, st)
-        // record the fold BEFORE deleting the dirs — the durable
-        // commit record a redelivered tagged fold checks via
-        // [[folded]] (sums are not idempotent: without it a replay
-        // after this merge would double-count its edges)
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_folded.json").toPath,
-          foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
-        ()
+        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
       }
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      (liveDeltas ++
-        deltaSnap.filter(p => folded0(new java.io.File(p).getName)))
-        .foreach(p => rm(new java.io.File(p)))
-      Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-        .filter(VersionedDirs.stagingOrphan).foreach(rm)
+      DeltaLog.cleanup(root, listed)
       Tombstones.reset(spark, root)
       path
     }
@@ -340,10 +293,8 @@ object GraphIndex {
       val basePath = resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root"))
       if (ts.isEmpty) return basePath
-      val folded0 = foldedOf(basePath)
-      val liveDeltas = deltas(root)
-        .filterNot(p => foldedOf(basePath)(new java.io.File(p).getName))
-      if (liveDeltas.nonEmpty) return mergeCompact(spark, root)
+      val log = new DeltaLog.Snapshot(basePath, deltas(root))
+      if (log.live.nonEmpty) return mergeCompact(spark, root)
       val t = ts.get.select(col("index_id").cast("long").as("tid"))
       val tBuckets = t.select(pbucketOf(col("tid")).as("pb")).distinct()
         .collect().map(_.getInt(0)).toSet
@@ -424,11 +375,8 @@ object GraphIndex {
         ensureFooters("out")
         ensureFooters("in")
         // fold ledger carries forward unchanged — no delta consumed
-        if (folded0.nonEmpty)
-          java.nio.file.Files.writeString(
-            new java.io.File(st, "_folded.json").toPath,
-            folded0.toSeq.sorted.map(n => s""""$n"""")
-              .mkString("[", ",", "]"))
+        if (log.ledger.nonEmpty)
+          DeltaLog.writeLedger(st, DeltaLog.Folded, log.ledger)
         java.nio.file.Files.createFile(
           java.nio.file.Paths.get(st, "_SUCCESS"))
         ()
@@ -506,20 +454,17 @@ object GraphIndex {
     val (layout, keyCol, nbrCol) =
       if (out) ("out", "src", "dst") else ("in", "dst", "src")
     // read-order discipline (SimIndex.probeTopK): tombstones, then the
-    // delta listing, then resolve; the folded-sidecar filter drops
-    // exactly the dirs a racing merge already folded (double-reading a
-    // live delta would double-COUNT — the filter is load-bearing).
+    // delta listing, then resolve; the ledger filter is load-bearing
+    // (double-reading a folded delta would double-COUNT).
     // pinned = fleet-snapshot read: `root` IS the generation path and
     // every later log is out of scope.
     val ts = if (pinned) None else tombstones(spark, root)
-    val deltaSnap0 = if (pinned) Nil else deltas(root)
+    val listed = if (pinned) Nil else deltas(root)
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
       else resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root"))
-    val foldedNames = foldedOf(idxPath)
-    val deltaSnap = deltaSnap0
-      .filterNot(p => foldedNames(new java.io.File(p).getName))
+    val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     val ns0 = nodes.withColumn("pbucket", pbucketOf(col("node")))
     val ns = if (materialize) ns0.persist() else ns0
     // knownTouched: a caller that already materialized the node set
@@ -581,12 +526,10 @@ object GraphIndex {
     */
   def edges(spark: SparkSession, root: String): DataFrame = {
     val ts = tombstones(spark, root)
-    val deltaSnap0 = deltas(root)
+    val listed = deltas(root)
     val idxPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
-    val foldedNames = foldedOf(idxPath)
-    val deltaSnap = deltaSnap0
-      .filterNot(p => foldedNames(new java.io.File(p).getName))
+    val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     val all = (idxPath +: deltaSnap)
       .map(p => spark.read.parquet(s"$p/out").select(col("src"), col("dst"),
         col("w")))

@@ -7,9 +7,9 @@ import org.apache.spark.sql.SparkSession
   * compliance officer (or an on-call engineer) asks for before and
   * after a [[PurgeCascade]] run. All eight families share the same
   * on-disk conventions ([[VersionedDirs]] versioned generations,
-  * `deltas/batch-*` append logs, `_folded.json`/`_purged.json`
-  * ledgers, [[Tombstones]] logs), so the inspection is one generic
-  * walk per root:
+  * [[DeltaLog]]'s `deltas/batch-*` append logs and
+  * `_folded.json`/`_purged.json` ledgers, [[Tombstones]] logs), so
+  * the inspection is one generic walk per root:
   *
   *   - `generation` / `nGenerations` — the serving head and how many
   *     committed versions still exist (1 after a vacuum; >1 means
@@ -54,20 +54,6 @@ object IndexCatalog {
       nRows: Long,
       nBytes: Long)
 
-  private def ledger(genPath: String, name: String): Set[String] = {
-    val f = new java.io.File(genPath, name)
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r.findAllMatchIn(
-      java.nio.file.Files.readString(f.toPath)).map(_.group(1)).toSet
-  }
-
-  private def deltaDirs(root: String): Seq[java.io.File] =
-    Option(new java.io.File(root, "deltas").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .toSeq
-
   private def bytesUnder(dir: java.io.File): Long = {
     def walk(f: java.io.File): Long =
       if (f.isDirectory)
@@ -84,9 +70,8 @@ object IndexCatalog {
     */
   def inspect(spark: SparkSession, family: String, root: String): Entry = {
     val gen = VersionedDirs.resolve(root)
-    val folded = gen.map(ledger(_, "_folded.json")).getOrElse(Set.empty)
-    val purged = gen.map(ledger(_, "_purged.json")).getOrElse(Set.empty)
-    val pending = deltaDirs(root).filterNot(d => folded(d.getName))
+    val listed = DeltaLog.committed(root)
+    val log = gen.map(new DeltaLog.Snapshot(_, listed))
     def logRows(name: String): Long =
       VersionedDirs.resolve(new java.io.File(root, name).getAbsolutePath)
         .fold(0L)(p => ParquetFooters.rows(new java.io.File(p)))
@@ -98,9 +83,9 @@ object IndexCatalog {
     }
     Entry(family, root, gen,
       nGenerations = VersionedDirs.versionsOf(root).size,
-      nPendingDeltas = pending.size,
-      nFoldedTags = folded.size,
-      nPurgedTags = purged.size,
+      nPendingDeltas = log.fold(listed)(_.live).size,
+      nFoldedTags = log.fold(0)(_.ledger.size),
+      nPurgedTags = gen.fold(0)(DeltaLog.ledger(_, DeltaLog.Purged).size),
       nTombstones = nTomb,
       nBans = nBans,
       nRows = rows, nBytes = bytes)

@@ -29,10 +29,9 @@ import graft.functions.TextFunctions
   * the post-compaction state, where stats are exact again).
   *
   * Layout/commit/retention ride [[VersionedDirs]]; deletes ride the
-  * shared [[Tombstones]] log; delta folds record `_folded.json`
-  * ([[PqIndex]]'s race closure — BM25 SUMS per-term contributions,
-  * so a delta read twice would double df and score; duplicates are
-  * NOT harmless here, unlike [[SimIndex]]'s max-aggregated probe).
+  * shared [[Tombstones]] log; appends ride [[DeltaLog]], whose ledger
+  * filter is load-bearing here — BM25 SUMS per-term contributions,
+  * so a delta read twice would double df and score.
   *
   * Scale shape: postings are corpus-linear, written once per
   * re-index; a probe costs the touched partition dirs of base +
@@ -208,29 +207,10 @@ object LexIndex {
 
   // ------------------------------------------------------ delta appends
 
-  private def deltaDir(root: String): java.io.File =
-    new java.io.File(root, "deltas")
-
   /** The committed delta roots. Caller batches are disjoint doc sets
     * by construction (the family contract).
     */
-  def deltas(root: String): Seq[String] =
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getAbsolutePath).sorted.toSeq
-
-  /** Delta dir NAMES already folded into the generation at `genPath`
-    * — see [[PqIndex]]: BM25 sums contributions, so a folded delta
-    * read twice would double-count df and score.
-    */
-  private def foldedOf(genPath: String): Set[String] = {
-    val f = new java.io.File(genPath, "_folded.json")
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r
-      .findAllMatchIn(java.nio.file.Files.readString(f.toPath))
-      .map(_.group(1)).toSet
-  }
+  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
 
   /** Append `docs` as a new postings delta with its own frozen stats
     * sidecar — batch cost, the base is never touched. Probes then
@@ -238,123 +218,100 @@ object LexIndex {
     * append shifts df AND the collection statistics exactly as a
     * re-index over the grown corpus would. A caller-supplied `tag`
     * names the delta dir deterministically and makes the append
-    * IDEMPOTENT (an already-committed tag returns without rewriting)
-    * — the at-least-once hook [[graft.streaming.LexStream]] rides,
-    * same as [[FirstSeenIndex.fold]]'s tagged folds.
+    * IDEMPOTENT ([[DeltaLog.append]]) — the at-least-once hook
+    * [[graft.streaming.LexStream]] rides. BM25 sums df/score, so an
+    * unabsorbed redelivery would double-count the batch.
     */
   def appendDelta(docs: DataFrame, id: String, text: String,
                   root: String,
                   tag: String = java.util.UUID.randomUUID().toString)
       : String = synchronized {
+    DeltaLog.requireTag(tag)
     val idxPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
-    val dr = deltaDir(root); dr.mkdirs()
-    val target = new java.io.File(dr, s"batch-$tag")
-    if (new java.io.File(target, "_SUCCESS").isFile)
-      return target.getAbsolutePath // tagged append already committed
-    // already folded into a committed generation and its dir deleted:
-    // ABSORB — BM25 sums df/score, so a re-commit here would
-    // double-count the batch (and resurrect purged docs when a purge
-    // ran in between); the ledger is cumulative, so this holds past
-    // any number of merges
-    if (foldedOf(idxPath)(s"batch-$tag")) return idxPath
-    graft.sources.Artifacts.notePublish()
-    val staging = new java.io.File(dr,
-      s".staging-${java.util.UUID.randomUUID()}")
-    // the ingestion gate of the ban closure: a banned doc's rows AND
-    // its stats contribution (its dl toward Σdl, its +1 toward N, its
-    // terms toward df) never commit — the sidecar below is computed
-    // from the gated frame; an ENTIRELY banned batch commits nothing
-    // at all (an empty partitioned delta dir would have no parquet
-    // footers and break every later read of the append log)
-    val bn = bans(docs.sparkSession, root)
-    // batch-scoped cache: the emptiness check and the posting build
-    // are two actions over the same anti-joined frame — persist so
-    // the broadcast gate's batch scan runs once, not twice
-    val gated = bn
-      .map(b => docs.join(b.select(col("index_id").cast("long").as(id)),
-        Seq(id), "left_anti").persist())
-      .getOrElse(docs)
-    try {
-      // EMPTY commits nothing, whatever emptied it — fully banned OR
-      // empty at the source (an empty partitionBy dir has no footers;
-      // the GraphIndex:171 hazard class, closed fleet-wide in r15)
-      if (gated.isEmpty) return idxPath
-      val (rows, dl, tfc) = postingRows(gated, id, text)
+    DeltaLog.append(root, idxPath, tag) { staging =>
+      // the ingestion gate of the ban closure: a banned doc's rows AND
+      // its stats contribution (its dl toward Σdl, its +1 toward N, its
+      // terms toward df) never commit — the sidecar below is computed
+      // from the gated frame
+      val bn = bans(docs.sparkSession, root)
+      // batch-scoped cache: the emptiness check and the posting build
+      // are two actions over the same anti-joined frame — persist so
+      // the broadcast gate's batch scan runs once, not twice
+      val gated = bn
+        .map(b => docs.join(b.select(col("index_id").cast("long").as(id)),
+          Seq(id), "left_anti").persist())
+        .getOrElse(docs)
       try {
-        rows.repartition(col("pbucket"))
-          .sortWithinPartitions("term")
-          .write.partitionBy("pbucket").mode("overwrite")
-          .parquet(staging.getAbsolutePath)
-        writeStats(dl, staging.getAbsolutePath)
-      } finally tfc.unpersist()
-    } finally if (bn.isDefined) { gated.unpersist(); () }
-    // append-time headroom enforcement — the probe-time check's twin:
-    // a grown Σdl/N can cross the 9000·dl·N int64 bound BETWEEN
-    // publishes, and once an over-bound delta COMMITS, the probe-side
-    // require refuses to serve the ENTIRE index. Reject the batch
-    // here instead, before it becomes committed state (the staging
-    // dir is dropped; nothing durable changes). Same poisoned-max
-    // rule as the probe: any sidecar with no recorded max_dl forces
-    // the check to skip — it can only be verified, never assumed.
-    val folded = foldedOf(idxPath)
-    val live = deltas(root)
-      .filterNot(p => folded(new java.io.File(p).getName))
-    val statsAll = ((idxPath +: live) :+ staging.getAbsolutePath)
-      .map(statsAt)
+        !gated.isEmpty && {
+          val (rows, dl, tfc) = postingRows(gated, id, text)
+          try {
+            rows.repartition(col("pbucket"))
+              .sortWithinPartitions("term")
+              .write.partitionBy("pbucket").mode("overwrite")
+              .parquet(staging.getAbsolutePath)
+            writeStats(dl, staging.getAbsolutePath)
+          } finally tfc.unpersist()
+          requireHeadroom(idxPath, root, staging)
+          true
+        }
+      } finally if (bn.isDefined) { gated.unpersist(); () }
+    }
+  }
+
+  /** Append-time headroom enforcement — the probe-time check's twin:
+    * a grown Σdl/N can cross the 9000·dl·N int64 bound BETWEEN
+    * publishes, and once an over-bound delta COMMITS, the probe-side
+    * require refuses to serve the ENTIRE index. Reject the batch
+    * here instead, before it becomes committed state. Same
+    * poisoned-max rule as the probe: any sidecar with no recorded
+    * max_dl forces the check to skip — it can only be verified,
+    * never assumed.
+    */
+  private def requireHeadroom(idxPath: String, root: String,
+                              staging: java.io.File): Unit = {
+    val statsAll =
+      ((idxPath +: DeltaLog.live(root, idxPath)) :+ staging.getAbsolutePath)
+        .map(statsAt)
     val nDocs = statsAll.map(_._1).sum
     val maxDl =
       if (statsAll.exists(s => s._1 > 0L && s._3 == 0L)) 0L
       else statsAll.map(_._3).max
     if (!(maxDl == 0L || nDocs == 0L ||
-        maxDl <= ContribDlNBound / nDocs)) {
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      rm(staging)
+        maxDl <= ContribDlNBound / nDocs))
       throw new IllegalArgumentException(
         s"BM25 integer headroom would be exceeded by this append: " +
           s"max(dl)=$maxDl x N=$nDocs overflows contribSql's " +
           s"9000*dl*N intermediate (bound ${ContribDlNBound}); shard " +
           "the corpus into per-shard collections or rescale the " +
           "normalizer")
-    }
-    require(staging.renameTo(target),
-      s"delta append rename failed into $dr")
-    target.getAbsolutePath
   }
 
   /** Has the tagged append already been ingested — either live in the
-    * append log or folded into the resolved generation (its name in
-    * `_folded.json`)? The folded half matters to at-least-once
-    * callers: a replay arriving AFTER a merge deleted the delta dir
-    * must not re-append rows the generation already holds.
+    * append log or folded into the resolved generation? The folded
+    * half matters to at-least-once callers: a replay arriving AFTER a
+    * merge deleted the delta dir must not re-append rows the
+    * generation already holds.
     */
-  def appended(root: String, tag: String): Boolean = {
-    val live = new java.io.File(
-      new java.io.File(deltaDir(root), s"batch-$tag"), "_SUCCESS").isFile
-    live || resolve(root).exists(p => foldedOf(p)(s"batch-$tag"))
-  }
+  def appended(root: String, tag: String): Boolean =
+    DeltaLog.contains(root, tag)
 
   /** Fold every committed delta and pending delete into the next
     * generation — pure row union + filter, no re-tokenization — and
     * recompute the collection stats EXACTLY from the surviving rows
     * (the distinct (doc, dl) pairs the postings already carry), so
     * the post-compaction index is byte-equivalent to a fresh publish
-    * of the surviving corpus. Records `_folded.json` before deleting
-    * the folded dirs (the [[PqIndex]] race closure); clears the
-    * append log and resets tombstones.
+    * of the surviving corpus. Clears the append log and resets
+    * tombstones.
     */
   def mergeCompact(spark: SparkSession, root: String): String =
     synchronized {
-      val deltaSnap = deltas(root)
-      val basePath = resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
-      val folded0 = foldedOf(basePath)
-      val live = deltaSnap
-        .filterNot(p => folded0(new java.io.File(p).getName))
-      val all0 = live.map(spark.read.parquet(_))
-        .foldLeft(spark.read.parquet(basePath))(_.unionByName(_))
+      val listed = deltas(root)
+      val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
+        throw new IllegalStateException(s"no committed index under $root")),
+        listed)
+      val all0 = log.live.map(spark.read.parquet(_))
+        .foldLeft(spark.read.parquet(log.genPath))(_.unionByName(_))
       val all1 = tombstones(spark, root)
         .map(t => all0.join(t, Seq("index_id"), "left_anti"))
         .getOrElse(all0)
@@ -363,14 +320,8 @@ object LexIndex {
       val all = bans(spark, root)
         .map(b => all1.join(b, Seq("index_id"), "left_anti"))
         .getOrElse(all1)
-      // CUMULATIVE across generations (SimIndex's rule): append tags
-      // are caller-supplied, so a redelivery can arrive any number of
-      // merges later; BM25 sums df/score (non-idempotent), and while
-      // LexStream carries its own durable marker, a non-stream tagged
-      // caller has only this ledger. Bytes per batch, never data.
-      val foldedNames =
-        (folded0 ++
-          live.map(new java.io.File(_).getName)).toSeq.sorted
+      // LexStream carries its own durable marker, but a non-stream
+      // tagged caller has only the ledger
       val path = VersionedDirs.commit(root) { st =>
         val allc = all.persist() // write + exact stats recompute
         try {
@@ -379,21 +330,9 @@ object LexIndex {
             .write.partitionBy("pbucket").mode("overwrite").parquet(st)
           writeStats(allc.select("index_id", "dl").distinct(), st)
         } finally allc.unpersist()
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_folded.json").toPath,
-          foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
-        ()
+        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
       }
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      // delete exactly what THIS merge folded plus crash leftovers a
-      // predecessor folded but never deleted; staging dirs only past
-      // the grace age (see PqIndex.mergeCompact for the full why)
-      (live ++ deltaSnap.filter(p => folded0(new java.io.File(p).getName)))
-        .foreach(p => rm(new java.io.File(p)))
-      Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-        .filter(VersionedDirs.stagingOrphan).foreach(rm)
+      DeltaLog.cleanup(root, listed)
       Tombstones.reset(spark, root)
       path
     }
@@ -438,20 +377,16 @@ object LexIndex {
                        pinned: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // read-order discipline (see DedupIndex.probeBanded): tombstones,
-    // then the delta listing, then resolve; the folded-sidecar filter
-    // keeps a racing merge's folded-but-not-yet-deleted delta from
-    // double-counting df and score. pinned = fleet-snapshot read:
-    // `root` IS the generation path and every later log is out of
-    // scope.
+    // then the delta listing, then resolve. pinned = fleet-snapshot
+    // read: `root` IS the generation path and every later log is out
+    // of scope.
     val ts = if (pinned) None else tombstones(spark, root)
-    val deltaSnap0 = if (pinned) Nil else deltas(root)
+    val listed = if (pinned) Nil else deltas(root)
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
       else resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root"))
-    val folded = foldedOf(idxPath)
-    val deltaSnap = deltaSnap0
-      .filterNot(p => folded(new java.io.File(p).getName))
+    val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     val stats = (idxPath +: deltaSnap).map(statsAt)
     val nDocs = stats.map(_._1).sum
     val sumdl = stats.map(_._2).sum

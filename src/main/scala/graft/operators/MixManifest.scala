@@ -92,13 +92,11 @@ object MixManifest {
     val committedVs = versionsOf(root).filter { case (_, f) =>
       new java.io.File(f, "_SUCCESS").isFile }.map(_._1)
     val keepFloor = committedVs.sorted.takeRight(2).headOption.getOrElse(0L)
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
-    versionsOf(root).filter(_._1 < keepFloor).foreach(v => rm(v._2))
+    versionsOf(root).filter(_._1 < keepFloor)
+      .foreach(v => VersionedDirs.deleteTree(v._2))
     Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(".staging-"))
-      .foreach(rm)
+      .foreach(VersionedDirs.deleteTree)
     path
   }
 

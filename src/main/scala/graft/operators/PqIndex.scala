@@ -99,12 +99,9 @@ object PqIndex {
       // re-train path) INVALIDATES the delta log: delta codes were
       // argmin'd against the SUPERSEDED codebooks, so decoding them
       // against the new generation's ADC tables is garbage. The new
-      // generation's _folded.json names them (probes skip,
-      // redelivered appends absorb) and the dirs drop post-commit.
-      val prev = resolve(root)
-      val deltaSnap = if (prev.isDefined) deltas(root) else Nil
-      val invalidated = (prev.map(foldedOf).getOrElse(Set.empty) ++
-        deltaSnap.map(p => new java.io.File(p).getName)).toSeq.sorted
+      // generation's ledger names them and the dirs drop post-commit.
+      val log = resolve(root).map(new DeltaLog.Snapshot(_, deltas(root)))
+      val invalidated = log.fold(Seq.empty[String])(_.consumed)
       val committed = VersionedDirs.commit(root) { staging =>
         val e = applyPerm(VectorQuantizer.scaled(corpus, id, vec), dimPerm)
           .persist()
@@ -147,19 +144,14 @@ object PqIndex {
             s""""resid":${if (byResidual) 1 else 0},"qerr":$qerr""" +
             s"""${permJson(dimPerm)}}""")
         if (invalidated.nonEmpty)
-          java.nio.file.Files.writeString(
-            new java.io.File(staging, "_folded.json").toPath,
-            invalidated.map(n => s""""$n"""").mkString("[", ",", "]"))
+          DeltaLog.writeLedger(staging, DeltaLog.Folded, invalidated)
         // the parquet writes each committed their own subdir; the
         // version-level marker is what resolve() keys on
         java.nio.file.Files.createFile(
           new java.io.File(staging, "_SUCCESS").toPath)
         ()
       }
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      deltaSnap.foreach(p => rm(new java.io.File(p)))
+      log.foreach(l => DeltaLog.cleanup(root, l.listed))
       committed
     }
 
@@ -378,15 +370,8 @@ object PqIndex {
   // deltas into the next generation as a pure row union, codebook
   // and params carried over byte-identically.
 
-  private def deltaDir(root: String): java.io.File =
-    new java.io.File(root, "deltas")
-
   /** The committed delta roots. */
-  def deltas(root: String): Seq[String] =
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getAbsolutePath).sorted.toSeq
+  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
 
   /** Append `corpus` as a new code delta, encoded with the base's
     * frozen codebooks. Batch cost: one argmin pass over the batch
@@ -411,83 +396,58 @@ object PqIndex {
     val coarse = if (coarseAt(idxPath)._1 > 0)
       Some(spark.read.parquet(new java.io.File(idxPath, "coarse").toString))
     else None
-    graft.sources.Artifacts.notePublish()
-    val dr = deltaDir(root); dr.mkdirs()
-    val staging = new java.io.File(dr,
-      s".staging-${java.util.UUID.randomUUID()}")
-    // the ingestion gate of the ban closure: a banned vector's code
-    // rows never commit (see [[addBans]]); an ENTIRELY banned batch
-    // commits nothing — an IVFPQ delta is ccell-partitioned, and an
-    // empty partitioned dir would break every later read
-    val bn = bans(spark, root)
-    // batch-scoped cache: the emptiness check and the encode below are
-    // two actions over the same anti-joined frame — persist so the
-    // broadcast gate's batch scan runs once, not twice
-    val gatedCorpus = bn
-      .map(b => corpus.join(
-        b.select(col("index_id").cast("long").as(id)), Seq(id),
-        "left_anti").persist())
-      .getOrElse(corpus)
-    try {
-      // EMPTY commits nothing, whatever emptied it — fully banned OR
-      // empty at the source (an empty ccell-partitioned dir has no
-      // footers; the GraphIndex:171 hazard class, closed fleet-wide)
-      if (gatedCorpus.isEmpty) return idxPath
-      // a by_residual generation's deltas encode residuals against the
-      // SAME frozen coarse centroids + codebooks (pure assign+argmin,
-      // never a Lloyd round — the flat path's frozen-codebook rule)
-      // the frozen permutation applies to every later scaling — a delta
-      // encoded in the unpermuted basis would ADC-score garbage
-      val e = applyPerm(VectorQuantizer.scaled(gatedCorpus, id, vec),
-        permAt(idxPath))
-      val rows =
-        if (residAt(idxPath))
-          codeRowsResidual(residualFrame(e, coarse.get, id),
-            cent, id, m, dsub)
-        else codeRows(e, id, cent, m, dsub, coarse)
-      writeCodes(rows, staging.getAbsolutePath)
-    } finally if (bn.isDefined) { gatedCorpus.unpersist(); () }
-    val target = new java.io.File(dr,
-      s"batch-${java.util.UUID.randomUUID()}")
-    require(staging.renameTo(target),
-      s"delta append rename failed into $dr")
-    target.getAbsolutePath
-  }
-
-  /** Delta dir NAMES already folded into the generation at `genPath`
-    * (its `_folded.json`, written by [[mergeCompact]]) — empty for a
-    * fresh publish. Unlike [[SimIndex]], duplicate code rows are NOT
-    * harmless here: its probe max-aggregates an idempotent score, but
-    * ADC SUMS d² per code row, so a vector read from both the folded
-    * generation and a not-yet-vacuumed delta would double its
-    * distance and corrupt every ranking it appears in. The sidecar
-    * closes the commit→delta-delete race: a reader that resolves the
-    * new generation while the old delta dirs still exist skips
-    * exactly the folded ones.
-    */
-  private def foldedOf(genPath: String): Set[String] = {
-    val f = new java.io.File(genPath, "_folded.json")
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r
-      .findAllMatchIn(java.nio.file.Files.readString(f.toPath))
-      .map(_.group(1)).toSet
+    // untagged: every call is a fresh batch
+    val tag = java.util.UUID.randomUUID().toString
+    DeltaLog.append(root, idxPath, tag) { staging =>
+      // the ingestion gate of the ban closure: a banned vector's code
+      // rows never commit (see [[addBans]])
+      val bn = bans(spark, root)
+      // batch-scoped cache: the emptiness check and the encode below are
+      // two actions over the same anti-joined frame — persist so the
+      // broadcast gate's batch scan runs once, not twice
+      val gatedCorpus = bn
+        .map(b => corpus.join(
+          b.select(col("index_id").cast("long").as(id)), Seq(id),
+          "left_anti").persist())
+        .getOrElse(corpus)
+      try {
+        !gatedCorpus.isEmpty && {
+          // a by_residual generation's deltas encode residuals against
+          // the SAME frozen coarse centroids + codebooks (pure
+          // assign+argmin, never a Lloyd round — the flat path's
+          // frozen-codebook rule); the frozen permutation applies to
+          // every later scaling — a delta encoded in the unpermuted
+          // basis would ADC-score garbage
+          val e = applyPerm(VectorQuantizer.scaled(gatedCorpus, id, vec),
+            permAt(idxPath))
+          val rows =
+            if (residAt(idxPath))
+              codeRowsResidual(residualFrame(e, coarse.get, id),
+                cent, id, m, dsub)
+            else codeRows(e, id, cent, m, dsub, coarse)
+          writeCodes(rows, staging.getAbsolutePath)
+          true
+        }
+      } finally if (bn.isDefined) { gatedCorpus.unpersist(); () }
+    }
   }
 
   /** Fold every committed code delta and pending delete into the next
     * generation: pure row union + filter over existing artifacts —
     * no re-encode, no re-train; codebook and params carry over
-    * unchanged. The new generation records WHICH delta dirs it folded
-    * (`_folded.json`) before they are deleted, so a probe racing the
-    * deletion never reads a delta twice (see [[foldedOf]]); a crash
-    * between commit and deletion leaves only already-folded dirs,
-    * which every reader and the next merge skip. Clears the append
-    * log and resets tombstones.
+    * unchanged. Unlike [[SimIndex]], duplicate code rows are NOT
+    * harmless here: ADC SUMS d² per code row, so a vector read from
+    * both the folded generation and a not-yet-deleted delta would
+    * double its distance — the ledger filter is load-bearing. Clears
+    * the append log and resets tombstones.
     */
   def mergeCompact(spark: SparkSession, root: String): String =
     synchronized {
-      val deltaSnap = deltas(root)
-      val basePath = resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
+      val listed = deltas(root)
+      val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
+        throw new IllegalStateException(s"no committed index under $root")),
+        listed)
+      val basePath = log.genPath
       val (m, dsub, ks, iters) = paramsAt(basePath)
       val (cc, citers) = coarseAt(basePath)
       val cent = spark.read.parquet(
@@ -496,11 +456,8 @@ object PqIndex {
         Some(spark.read.parquet(new java.io.File(basePath, "coarse").toString))
       else None
       // the base generation keeps its codes under codes/; each delta
-      // dir IS a codes table; deltas a crashed predecessor already
-      // folded into basePath must not fold twice
-      val folded0 = foldedOf(basePath)
-      val live = deltaSnap.filterNot(p => folded0(new java.io.File(p).getName))
-      val all0 = live
+      // dir IS a codes table
+      val all0 = log.live
         .map(spark.read.parquet(_))
         .foldLeft(spark.read.parquet(
           new java.io.File(basePath, "codes").toString))(_.unionByName(_))
@@ -511,13 +468,10 @@ object PqIndex {
       val all = bans(spark, root)
         .map(b => all1.join(b, Seq("index_id"), "left_anti"))
         .getOrElse(all1)
-      // prune carried fold names to dirs that still exist (a deleted
-      // UUID dir can never reappear) so the sidecar stays bounded by
-      // the crash-leftover count, not the root's whole history
-      val snapNames = deltaSnap.map(new java.io.File(_).getName).toSet
-      val foldedNames =
-        ((folded0 intersect snapNames) ++
-          live.map(new java.io.File(_).getName)).toSeq.sorted
+      // untagged appends never redeliver, so the ledger need only
+      // name the listed dirs (a deleted UUID dir can never reappear) —
+      // not the root's whole history — to keep readers of the
+      // pre-merge listing from reading them twice
       val path = VersionedDirs.commit(root) { st =>
         writeCodes(all, new java.io.File(st, "codes").toString)
         cent.write.parquet(new java.io.File(st, "codebook").toString)
@@ -534,31 +488,13 @@ object PqIndex {
             s""""resid":${if (residAt(basePath)) 1 else 0},""" +
             s""""qerr":${qerrAt(basePath)}""" +
             s"""${permJson(permAt(basePath))}}""")
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_folded.json").toPath,
-          foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
+        DeltaLog.writeLedger(st, DeltaLog.Folded,
+          listed.map(DeltaLog.nameOf).sorted)
         java.nio.file.Files.createFile(
           new java.io.File(st, "_SUCCESS").toPath)
         ()
       }
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      // delete exactly the dirs THIS merge folded — an append another
-      // process committed after the snapshot was not folded and must
-      // survive (a blanket deltaDir rm would silently lose its
-      // vectors). Dirs a crashed predecessor folded but never deleted
-      // (folded0 ∩ snapshot) are already in the base generation, so
-      // they delete too — which is what lets the carried sidecar
-      // shrink back to empty at the NEXT merge (their names stay in
-      // THIS generation's sidecar for readers holding the pre-merge
-      // delta listing). Crashed-append staging leftovers vacuum past
-      // the grace age only — a live cross-process append's staging
-      // dir must not be yanked mid-write.
-      (live ++ deltaSnap.filter(p => folded0(new java.io.File(p).getName)))
-        .foreach(p => rm(new java.io.File(p)))
-      Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-        .filter(VersionedDirs.stagingOrphan).foreach(rm)
+      DeltaLog.cleanup(root, listed)
       Tombstones.reset(spark, root)
       path
     }
@@ -680,18 +616,12 @@ object PqIndex {
                         pinned: Boolean = false,
                         candPairs: Option[DataFrame] = None): DataFrame = {
     // read-order discipline (see DedupIndex.probeBanded): tombstones,
-    // then the DELTA LISTING, then resolve. Tombstones-first keeps a
-    // racing compact's log reset from resurfacing purged rows;
-    // deltas-before-resolve keeps a probe that would have resolved
-    // the OLD generation from seeing the append log AFTER the merge
-    // deleted it (it would serve old-gen-minus-deltas — a state that
-    // was never committed); and the folded-sidecar filter below
-    // drops exactly the listed dirs a racing merge already folded
-    // into the NEW generation, so no vector's d² is ever summed twice
+    // then the delta listing, then resolve ([[DeltaLog]]) — no
+    // vector's d² is ever summed twice
     // pinned = fleet-snapshot read: `root` IS the generation path and
     // every later log (deltas, tombstones, bans) is out of scope
     val ts = if (pinned) None else tombstones(spark, root)
-    val deltaSnap = if (pinned) Nil else deltas(root)
+    val listed = if (pinned) Nil else deltas(root)
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
       else resolve(root).getOrElse(
@@ -728,9 +658,7 @@ object PqIndex {
     // at append time); uncompacted deletes are honored at probe time
     // via the shared tombstone log. The probed-cell filter applies per
     // root, so an unmerged delta costs its probed partitions only.
-    val folded = foldedOf(idxPath)
-    val codes0 = deltaSnap
-      .filterNot(p => folded(new java.io.File(p).getName))
+    val codes0 = DeltaLog.unfolded(listed, idxPath)
       .map(spark.read.parquet(_))
       .foldLeft(spark.read.parquet(
         new java.io.File(idxPath, "codes").toString))(_.unionByName(_))

@@ -138,125 +138,64 @@ object SimIndex {
   // ------------------------------------------------------ delta appends
   //
   // Daily growth without daily re-index: a new batch lands as an
-  // append-log delta (one `batch-*` dir per append — the LSM L0
-  // shape), keyed with the BASE index's frozen (r, T) so base and
-  // delta keys stay joinable. Probes read base ∪ deltas with the
-  // same bucket pruning applied to each; a periodic merge-compaction
-  // folds every delta into the next base generation and clears the
-  // log. Appends are batch-cost, probes pay one extra root per
-  // unmerged delta — the knob is the compaction cadence.
-
-  private def deltaDir(root: String): java.io.File =
-    new java.io.File(root, "deltas")
+  // append-log delta ([[DeltaLog]]), keyed with the BASE index's
+  // frozen (r, T) so base and delta keys stay joinable. Probes read
+  // base ∪ deltas with the same bucket pruning applied to each; a
+  // periodic merge-compaction folds every delta into the next base
+  // generation and clears the log. Appends are batch-cost, probes pay
+  // one extra root per unmerged delta — the knob is the compaction
+  // cadence.
 
   /** The committed delta roots (append order is irrelevant — deltas
     * are disjoint key sets by construction of the caller's batches).
     */
-  def deltas(root: String): Seq[String] =
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getAbsolutePath).sorted.toSeq
+  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
 
-  /** Delta roots NOT yet consumed by the generation at `genPath` —
-    * the read set every consumer must use: a delta named in
-    * `_folded.json` is already in the generation's rows, and worse,
-    * it may PREDATE a purge the generation applied — reading the
-    * leftover dir in the crash window between a merge's commit and
-    * its delta cleanup would resurface purged vectors through every
-    * probe.
+  /** True when an append tagged `tag` has already committed. The
+    * ledger half matters even though the probe max-aggregates an
+    * idempotent score: a redelivery arriving after a purge +
+    * [[mergeCompact]] (tombstones reset) would resurrect the purged
+    * vec_ids' band rows.
     */
-  private def liveDeltas(root: String, genPath: String): Seq[String] = {
-    val folded = foldedOf(genPath)
-    deltas(root).filterNot(p => folded(new java.io.File(p).getName))
-  }
-
-  /** Delta dir NAMES already folded into the generation at `genPath`
-    * — the durable fold record ([[FirstSeenIndex]]'s closure, carried
-    * forward CUMULATIVELY across generations). "Max-aggregated scores
-    * are idempotent, a double-read is harmless" only holds while no
-    * DELETE happened in between: an at-least-once redelivery of a
-    * tagged append arriving after a purge + [[mergeCompact]]
-    * (tombstones reset) would re-commit the delta and resurrect the
-    * purged vec_ids' band rows through every probe. The sidecar is
-    * what lets [[folded]] answer "already in the generation" after
-    * the delta dir itself is gone.
-    */
-  private def foldedOf(genPath: String): Set[String] = {
-    val f = new java.io.File(genPath, "_folded.json")
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r.findAllMatchIn(
-      java.nio.file.Files.readString(f.toPath)).map(_.group(1)).toSet
-  }
-
-  /** True when an append tagged `tag` has already committed — live in
-    * the delta log, or folded into the resolved generation (its name
-    * in `_folded.json`). The folded half is the purge-race closure:
-    * see [[foldedOf]].
-    */
-  def folded(root: String, tag: String): Boolean = {
-    val live = new java.io.File(
-      new java.io.File(deltaDir(root), s"batch-$tag"), "_SUCCESS").isFile
-    live || resolve(root).exists(p => foldedOf(p)(s"batch-$tag"))
-  }
+  def folded(root: String, tag: String): Boolean =
+    DeltaLog.contains(root, tag)
 
   /** Append `corpus` as a new delta batch, keyed with the base
-    * index's frozen (r, T). Commit is the same stage-then-rename
-    * protocol; a crashed append leaves an uncommitted `.staging-`
-    * dir that probes skip and the next merge vacuums. `tag` names the
-    * batch (an at-least-once producer supplies its batch identity):
-    * a redelivered tag is ABSORBED — returned without writing —
-    * whether the delta is still live or was already folded into a
-    * committed generation, so a replay arriving after a
-    * purge + [[mergeCompact]] cannot resurrect purged vectors.
+    * index's frozen (r, T). `tag` names the batch (an at-least-once
+    * producer supplies its batch identity); a redelivered tag is
+    * absorbed ([[DeltaLog.append]]).
     */
   def appendDelta(corpus: DataFrame, id: String, vec: String,
                   root: String,
                   tag: String = java.util.UUID.randomUUID().toString)
       : String = synchronized {
+    DeltaLog.requireTag(tag)
     val genPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
     val (bits, tables) = paramsAt(genPath)
-    val dr = deltaDir(root); dr.mkdirs()
-    val target = new java.io.File(dr, s"batch-$tag")
-    if (new java.io.File(target, "_SUCCESS").isFile)
-      return target.getAbsolutePath // tagged append already committed
-    // already folded into a committed generation and its dir deleted:
-    // ABSORB — re-committing would resurrect purged vec_ids when a
-    // purge ran between the append and this redelivery (see foldedOf)
-    if (foldedOf(genPath)(s"batch-$tag")) return genPath
-    graft.sources.Artifacts.notePublish()
-    val staging = new java.io.File(dr,
-      s".staging-${java.util.UUID.randomUUID()}")
-    // the ingestion gate of the ban closure: a banned vector's key
-    // rows never enter the delta (see [[addBans]]); an ENTIRELY
-    // banned batch commits nothing at all — an empty partitioned
-    // delta dir would have no parquet footers and break every later
-    // read of the append log
-    val bn = Bans.get(corpus.sparkSession, root)
-    // batch-scoped cache: the emptiness check and the write below are
-    // two actions over the same anti-joined frame — persist so the
-    // broadcast gate's batch scan runs once, not twice
-    val gated = bn
-      .map(b => corpus.join(
-        b.select(col("index_id").cast("long").as(id)), Seq(id),
-        "left_anti").persist())
-      .getOrElse(corpus)
-    try {
-      // EMPTY commits nothing, whatever emptied it — fully banned OR
-      // empty at the source: an empty partitionBy write leaves no
-      // parquet footers and would break every later append-log read
-      // (the GraphIndex:171 hazard class, closed fleet-wide in r15)
-      if (gated.isEmpty) return genPath
-      keyRows(gated, id, vec, bits, tables)
-        .repartition(col("pbucket"))
-        .sortWithinPartitions("tbl", "bucket")
-        .write.partitionBy("pbucket").mode("overwrite")
-        .parquet(staging.getAbsolutePath)
-    } finally if (bn.isDefined) { gated.unpersist(); () }
-    require(staging.renameTo(target),
-      s"delta append rename failed into $dr")
-    target.getAbsolutePath
+    DeltaLog.append(root, genPath, tag) { staging =>
+      // the ingestion gate of the ban closure: a banned vector's key
+      // rows never enter the delta (see [[addBans]])
+      val bn = Bans.get(corpus.sparkSession, root)
+      // batch-scoped cache: the emptiness check and the write below are
+      // two actions over the same anti-joined frame — persist so the
+      // broadcast gate's batch scan runs once, not twice
+      val gated = bn
+        .map(b => corpus.join(
+          b.select(col("index_id").cast("long").as(id)), Seq(id),
+          "left_anti").persist())
+        .getOrElse(corpus)
+      try {
+        !gated.isEmpty && {
+          keyRows(gated, id, vec, bits, tables)
+            .repartition(col("pbucket"))
+            .sortWithinPartitions("tbl", "bucket")
+            .write.partitionBy("pbucket").mode("overwrite")
+            .parquet(staging.getAbsolutePath)
+          true
+        }
+      } finally if (bn.isDefined) { gated.unpersist(); () }
+    }
   }
 
   /** Fold every committed delta into the next base generation and
@@ -264,17 +203,12 @@ object SimIndex {
     * no re-hashing; params carry over unchanged.
     */
   def mergeCompact(spark: SparkSession, root: String): String = synchronized {
-    val deltaSnap = deltas(root)
-    val basePath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    val (bits, tables) = paramsAt(basePath)
-    // a crash leftover a predecessor folded but never deleted must
-    // not re-enter: its rows are in the base AND it may predate a
-    // purge (see [[foldedOf]])
-    val folded0 = foldedOf(basePath)
-    val liveSnap = deltaSnap
-      .filterNot(p => folded0(new java.io.File(p).getName))
-    val all0 = (basePath +: liveSnap)
+    val listed = deltas(root)
+    val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
+      throw new IllegalStateException(s"no committed index under $root")),
+      listed)
+    val (bits, tables) = paramsAt(log.genPath)
+    val all0 = (log.genPath +: log.live)
       .map(p => spark.read.parquet(p))
       .reduce(_.unionByName(_))
     // fold pending deletes into the rewrite (pure row filter, no
@@ -286,12 +220,6 @@ object SimIndex {
     val all = bans(spark, root)
       .map(b => all1.join(b, Seq("index_id"), "left_anti"))
       .getOrElse(all1)
-    // cumulative fold record: prior generations' names carry forward
-    // so a tag redelivered ANY number of merges later still absorbs
-    // (names are ~bytes per batch — the ledger grows with batch
-    // count, never with data)
-    val foldedNames = (folded0 ++
-      liveSnap.map(p => new java.io.File(p).getName)).toSeq.sorted
     val path = VersionedDirs.commit(root) { st =>
       all.repartition(col("pbucket"))
         .sortWithinPartitions("tbl", "bucket")
@@ -299,24 +227,9 @@ object SimIndex {
       java.nio.file.Files.writeString(
         new java.io.File(st, "_params.json").toPath,
         s"""{"bits":$bits,"tables":$tables}""")
-      // record the fold BEFORE deleting the dirs — the durable commit
-      // record a redelivered tagged append checks via [[folded]]
-      java.nio.file.Files.writeString(
-        new java.io.File(st, "_folded.json").toPath,
-        foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
-      ()
+      DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
     }
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
-    // delete exactly the dirs THIS merge folded plus already-folded
-    // crash leftovers — an append another process committed after the
-    // snapshot was not folded and must survive (a blanket deltaDir rm
-    // would silently lose its vectors); crashed-append staging
-    // leftovers vacuum alongside.
-    deltaSnap.foreach(p => rm(new java.io.File(p)))
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(VersionedDirs.stagingOrphan).foreach(rm)
+    DeltaLog.cleanup(root, listed)
     Tombstones.reset(spark, root)
     path
   }
@@ -372,28 +285,18 @@ object SimIndex {
                         materialize: Boolean,
                         pinned: Boolean = false): DataFrame = {
     // read-order discipline (see DedupIndex.probeBanded): tombstones,
-    // then the DELTA LISTING, then resolve. Tombstones-first keeps a
-    // racing compact's log reset from resurfacing purged vectors;
-    // deltas-before-resolve keeps a probe that resolves the OLD
-    // generation from seeing the append log after a racing merge
-    // deleted it (old-gen-minus-deltas was never a committed state).
-    // Resolving the NEW generation with the stale delta listing is
-    // harmless here: the probe max-aggregates an idempotent score, so
-    // double-read key rows can't change any ranking — EXCEPT a
-    // leftover dir the generation already folded, which may predate a
-    // purge the generation applied; those are filtered against the
-    // resolved generation's `_folded.json` below.
+    // then the delta listing, then resolve ([[DeltaLog]]).
+    // Tombstones-first keeps a racing compact's log reset from
+    // resurfacing purged vectors.
     // pinned = fleet-snapshot read: `root` IS the generation path and
     // every later log (deltas, tombstones, bans) is out of scope
     val ts = if (pinned) None else tombstones(spark, root)
-    val deltaSnap0 = if (pinned) Nil else deltas(root)
+    val listed = if (pinned) Nil else deltas(root)
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
       else resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root"))
-    val folded0 = foldedOf(idxPath)
-    val deltaSnap = deltaSnap0
-      .filterNot(p => folded0(new java.io.File(p).getName))
+    val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     // params pinned to the resolved generation (re-resolving could
     // land on a racing re-publish's (r, T))
     val (bits, tables) = paramsAt(idxPath)

@@ -35,10 +35,9 @@ import org.apache.spark.sql.functions._
   * oracle.
   *
   * Layout per committed generation: `cells/` (r, cell, cnt) +
-  * `_params.json` {"depth","width"} + `_folded.json` (delta names a
-  * compaction/purge consumed — [[FirstSeenIndex.foldedOf]]'s closure;
-  * here the hazard is arithmetic: a redelivered fold after a merge
-  * would DOUBLE-COUNT its cells, sums are not idempotent).
+  * `_params.json` {"depth","width"} + the [[DeltaLog]] ledgers. Here
+  * the ledger hazard is arithmetic: a redelivered fold after a merge
+  * would DOUBLE-COUNT its cells, sums are not idempotent.
   */
 object SketchIndex {
 
@@ -75,70 +74,43 @@ object SketchIndex {
     * hold cells of the OLD geometry, and summing them against a
     * regrown width would corrupt every estimate — so `items` must be
     * the full ingested corpus (deltas included), the new generation's
-    * `_folded.json` names the consumed dirs (redelivered tagged
-    * deltas absorb) and the purge ledger carries forward.
+    * ledger names the consumed dirs (redelivered tagged deltas
+    * absorb) and the purge ledger carries forward.
     */
   def publish(items: DataFrame, term: String, depth: Int, width: Int,
               root: String): String = synchronized {
-    val prev = resolve(root)
-    val deltaSnap = if (prev.isDefined) deltas(root) else Nil
-    val foldedNames = (prev.map(foldedOf).getOrElse(Set.empty) ++
-      deltaSnap.map(p => new java.io.File(p).getName)).toSeq.sorted
-    val purgedNames = prev.map(purgedOf).getOrElse(Set.empty).toSeq.sorted
+    val log = resolve(root).map(new DeltaLog.Snapshot(_, deltas(root)))
     val path = VersionedDirs.commit(root) { st =>
       writeCells(CountMin.build(items, term, depth, width),
         new java.io.File(st, "cells"))
       java.nio.file.Files.writeString(
         new java.io.File(st, "_params.json").toPath,
         s"""{"depth":$depth,"width":$width}""")
-      if (foldedNames.nonEmpty)
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_folded.json").toPath,
-          foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
-      if (purgedNames.nonEmpty)
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_purged.json").toPath,
-          purgedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
+      log.foreach { l =>
+        if (l.consumed.nonEmpty)
+          DeltaLog.writeLedger(st, DeltaLog.Folded, l.consumed)
+        val purgedNames = DeltaLog.ledger(l.genPath, DeltaLog.Purged)
+        if (purgedNames.nonEmpty)
+          DeltaLog.writeLedger(st, DeltaLog.Purged, purgedNames)
+      }
       java.nio.file.Files.createFile(
         new java.io.File(st, "_SUCCESS").toPath)
       ()
     }
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
-    deltaSnap.foreach(p => rm(new java.io.File(p)))
+    log.foreach(l => DeltaLog.cleanup(root, l.listed))
     path
   }
 
   // ------------------------------------------------------ deltas
 
-  private def deltaDir(root: String): java.io.File =
-    new java.io.File(root, "deltas")
+  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
 
-  def deltas(root: String): Seq[String] =
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getAbsolutePath).sorted.toSeq
-
-  private def foldedOf(genPath: String): Set[String] = {
-    val f = new java.io.File(genPath, "_folded.json")
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r.findAllMatchIn(
-      java.nio.file.Files.readString(f.toPath)).map(_.group(1)).toSet
-  }
-
-  /** True when a delta tagged `tag` has already committed — live in
-    * the delta log, or consumed by a merge/purge (its name in the
-    * resolved generation's `_folded.json`). Cell sums are NOT
-    * idempotent, so this closure is what keeps an at-least-once
-    * redelivery from double-counting.
+  /** True when a delta tagged `tag` has already committed. Cell sums
+    * are NOT idempotent, so this closure is what keeps an
+    * at-least-once redelivery from double-counting.
     */
-  def folded(root: String, tag: String): Boolean = {
-    val live = new java.io.File(
-      new java.io.File(deltaDir(root), s"batch-$tag"), "_SUCCESS").isFile
-    live || resolve(root).exists(p => foldedOf(p)(s"batch-$tag"))
-  }
+  def folded(root: String, tag: String): Boolean =
+    DeltaLog.contains(root, tag)
 
   /** Commit a batch's OWN sketch as a delta — O(d·w), the committed
     * cells never read or rewritten. Serving state is the cell-sum of
@@ -148,42 +120,26 @@ object SketchIndex {
                   root: String,
                   tag: String = java.util.UUID.randomUUID().toString)
       : String = synchronized {
+    DeltaLog.requireTag(tag)
     val genPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
-    val dr = deltaDir(root); dr.mkdirs()
-    val target = new java.io.File(dr, s"batch-$tag")
-    if (new java.io.File(target, "_SUCCESS").isFile)
-      return target.getAbsolutePath
-    if (foldedOf(genPath)(s"batch-$tag")) return genPath
-    graft.sources.Artifacts.notePublish()
-    val (d, w) = geometry(root)
-    val staging = new java.io.File(dr,
-      s".staging-${java.util.UUID.randomUUID()}")
-    writeCells(CountMin.build(items, term, d, w), staging)
-    require(staging.renameTo(target), s"delta rename failed into $dr")
-    target.getAbsolutePath
-  }
-
-  /** Delta roots NOT yet consumed by the generation at `genPath` —
-    * the read set every consumer must use: a delta named in
-    * `_folded.json` is already IN the generation's cells, and unlike
-    * the min/union families a double-read here double-COUNTS (sums
-    * are not idempotent), so the filter is load-bearing for the
-    * crash window between a rewrite's commit and its delta cleanup.
-    */
-  private def liveDeltas(root: String, genPath: String): Seq[String] = {
-    val folded = foldedOf(genPath)
-    deltas(root).filterNot(p => folded(new java.io.File(p).getName))
+    DeltaLog.append(root, genPath, tag) { staging =>
+      val (d, w) = geometry(root)
+      writeCells(CountMin.build(items, term, d, w), staging)
+      true
+    }
   }
 
   /** The serving cells: cell-sum of base ∪ live (unconsumed) deltas —
-    * ≤ d·w rows after the aggregate, at any corpus size.
+    * ≤ d·w rows after the aggregate, at any corpus size. The ledger
+    * filter is load-bearing here: unlike the min/union families a
+    * double-read double-COUNTS.
     */
   private def servedCells(spark: SparkSession, root: String): DataFrame = {
     val genPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
     (new java.io.File(genPath, "cells").toString +:
-        liveDeltas(root, genPath))
+        DeltaLog.live(root, genPath))
       .map(p => spark.read.schema(CellSchema).parquet(p))
       .reduce(_.unionByName(_))
       .groupBy("r", "cell").agg(sum("cnt").as("cnt"))
@@ -237,28 +193,21 @@ object SketchIndex {
   }
 
   /** Fold the delta log physically: commit the cell-sum as the next
-    * generation and record consumed delta names (carried forward) in
-    * `_folded.json`, then drop the consumed dirs.
+    * generation, recording the consumed dirs in its ledger.
     */
   def mergeCompact(spark: SparkSession, root: String): String =
     rewrite(spark, root, identity)
 
-  /** Purge tags already applied to the generation at `genPath` — the
-    * subtraction twin of `_folded.json`: subtraction is NOT
-    * idempotent (a re-run with the same deletion set subtracts
-    * twice), so [[purge]] records its tag (carried forward across
-    * generations) and absorbs a repeat.
+  /** True when a purge tagged `tag` has already been applied. The
+    * `_purged.json` ledger is the subtraction twin of the fold
+    * ledger: subtraction is NOT idempotent (a re-run with the same
+    * deletion set subtracts twice), so [[purge]] records its tag
+    * (carried forward across generations) and absorbs a repeat.
     */
-  private def purgedOf(genPath: String): Set[String] = {
-    val f = new java.io.File(genPath, "_purged.json")
-    if (!f.isFile) Set.empty
-    else """"([^"]+)"""".r.findAllMatchIn(
-      java.nio.file.Files.readString(f.toPath)).map(_.group(1)).toSet
+  def purged(root: String, tag: String): Boolean = {
+    DeltaLog.requireTag(tag)
+    resolve(root).exists(p => DeltaLog.ledger(p, DeltaLog.Purged)(tag))
   }
-
-  /** True when a purge tagged `tag` has already been applied. */
-  def purged(root: String, tag: String): Boolean =
-    resolve(root).exists(p => purgedOf(p)(tag))
 
   /** A content fingerprint of a (small) deletion frame — the default
     * purge tag, so retrying the same deletion set is absorbed without
@@ -288,12 +237,13 @@ object SketchIndex {
     */
   def purge(spark: SparkSession, deleted: DataFrame, term: String,
             root: String, tag: Option[String] = None): String = {
+    tag.foreach(DeltaLog.requireTag)
     val t = tag.getOrElse(deletionTag(deleted, term))
     // cheap early absorb; rewrite re-checks INSIDE its lock (two
     // concurrent same-tag purges must not both pass this check and
     // subtract twice)
     resolve(root) match {
-      case Some(p) if purgedOf(p)(t) => return p
+      case Some(p) if DeltaLog.ledger(p, DeltaLog.Purged)(t) => return p
       case _ => ()
     }
     val (d, w) = geometry(root)
@@ -313,33 +263,22 @@ object SketchIndex {
       throw new IllegalStateException(s"no committed index under $root"))
     // locked re-check of the purge ledger: a concurrent same-tag
     // purge that committed while this call waited must absorb here
-    purgeTag.foreach { t => if (purgedOf(genPath)(t)) return genPath }
-    val deltaSnap = deltas(root)
+    val purgedNames = DeltaLog.ledger(genPath, DeltaLog.Purged)
+    purgeTag.foreach { t => if (purgedNames(t)) return genPath }
+    val log = new DeltaLog.Snapshot(genPath, deltas(root))
     val params = paramsText(genPath)
     val cells = f(servedCells(spark, root))
-    val foldedNames = (foldedOf(genPath) ++
-      deltaSnap.map(p => new java.io.File(p).getName)).toSeq.sorted
-    val purgedNames = (purgedOf(genPath) ++ purgeTag).toSeq.sorted
     val path = VersionedDirs.commit(root) { st =>
       writeCells(cells, new java.io.File(st, "cells"))
       java.nio.file.Files.writeString(
         new java.io.File(st, "_params.json").toPath, params)
-      java.nio.file.Files.writeString(
-        new java.io.File(st, "_folded.json").toPath,
-        foldedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
-      java.nio.file.Files.writeString(
-        new java.io.File(st, "_purged.json").toPath,
-        purgedNames.map(n => s""""$n"""").mkString("[", ",", "]"))
+      DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+      DeltaLog.writeLedger(st, DeltaLog.Purged, purgedNames ++ purgeTag)
       java.nio.file.Files.createFile(
         new java.io.File(st, "_SUCCESS").toPath)
       ()
     }
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
-    deltaSnap.foreach(p => rm(new java.io.File(p)))
-    Option(deltaDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(VersionedDirs.stagingOrphan).foreach(rm)
+    DeltaLog.cleanup(root, log.listed)
     path
   }
 

@@ -10,7 +10,10 @@ import java.io.File
   * returns the highest committed version, and retention keeps the
   * newest two COMMITTED generations so re-indexing never disturbs a
   * concurrent reader of the previous generation. Mirrors
-  * [[graft.FlatFileEngine]]'s versioned-dir table commits.
+  * [[graft.FlatFileEngine]]'s versioned-dir table commits. The
+  * `deltas/batch-*` append logs beside the generations, and the
+  * `_folded.json`/`_purged.json` ledgers inside them, belong to
+  * [[DeltaLog]].
   */
 private[graft] object VersionedDirs {
 
@@ -30,6 +33,11 @@ private[graft] object VersionedDirs {
   def stagingOrphan(f: File): Boolean =
     f.isDirectory && f.getName.startsWith(".staging-") &&
       System.currentTimeMillis() - f.lastModified() > StagingGraceMs
+
+  /** Recursively delete `f` (no-op when absent). */
+  def deleteTree(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree)); f.delete(); ()
+  }
 
   def versionsOf(root: String): Seq[(Long, File)] = {
     val d = new File(root)
@@ -103,16 +111,13 @@ private[graft] object VersionedDirs {
     val committedVs = versionsOf(root).filter { case (_, f) =>
       new File(f, "_SUCCESS").isFile }.map(_._1)
     val keepFloor = committedVs.sorted.takeRight(keep).headOption.getOrElse(0L)
-    def rm(x: File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
     val below = versionsOf(root).filter(_._1 < keepFloor)
     if (below.nonEmpty) {
       val pinned = FleetSnapshot.pinnedGenerations(root)
       below.filterNot(v => pinned(v._2.getAbsolutePath))
-        .foreach(v => rm(v._2))
+        .foreach(v => deleteTree(v._2))
     }
     Option(new File(root).listFiles()).getOrElse(Array.empty)
-      .filter(stagingOrphan).foreach(rm)
+      .filter(stagingOrphan).foreach(deleteTree)
   }
 }
