@@ -3,7 +3,9 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.SocialOps
 import graft.sources.CsvIngest
@@ -35,6 +37,22 @@ import graft.sources.CsvIngest
   * uncoordinated, the same scope as the reference's process-local
   * mutexes. A plain `posts.csv` fixture (file or dir) is read as the
   * pre-version-0 snapshot, so reference-style fixtures work unchanged.
+  *
+  * Read path: the reference parses its CSVs once and serves every call
+  * from memory (buzzdb_lab1.cpp:92-94); here every table access goes
+  * through one resolver that computes the table's committed identity —
+  * resolved base path, committed delta chain, and the base's leaf data
+  * files (name, length, mtime) — from listings alone, and serves the
+  * ONE materialized frame (an eager `localCheckpoint`) the engine holds
+  * for that identity. A committed path never changes after its commit,
+  * so the frame stays valid until the identity moves: a commit by this
+  * or any other process, or an append into the base directory. A miss
+  * parses exactly the listed files once. The engine holds one frame per
+  * table, for the current identity only; a superseded frame is dropped
+  * by reference and freed by Spark's context cleaner once no reader
+  * holds it, so a racing reader keeps reading exactly its snapshot.
+  * Views ([[snapshot]]) pin frames, not paths. RI filters and the read
+  * ops stay lazy compositions over the held frames.
   *
   * **Point-write modes.** The reference rewrites the whole table per
   * point update (buzzdb_lab1.cpp:1032-1059) and the default mode is
@@ -181,7 +199,12 @@ class FlatFileEngine(spark: SparkSession, dir: String,
     * filesystem, so racing readers are safe by construction.
     */
   private def tablePath(table: String): String =
-    resolvePath(table, if (manifestCommits) currentManifest else Map.empty)
+    resolvePath(table, liveManifest)
+
+  /** The manifest reads resolve against: the current one in manifest
+    * mode, none (pure `_SUCCESS` resolution) in the default mode. */
+  private def liveManifest: Map[String, Long] =
+    if (manifestCommits) currentManifest else Map.empty
 
   /** Resolve `table` against a given manifest map (the manifest entry
     * wins — version 0 names the bare fixture; `_SUCCESS` resolution is
@@ -222,23 +245,17 @@ class FlatFileEngine(spark: SparkSession, dir: String,
   /** A read view whose three tables all resolved through ONE manifest
     * read — the cross-table analog of the per-table snapshot a racing
     * reader already gets. In manifest mode no commit that lands after
-    * this call can make the view observe half a cascade; the pinned
-    * generation stays on disk through the next commit (the vacuum
-    * horizon), the same liveness rule as single-table readers. In the
+    * this call can make the view observe half a cascade. In the
     * default mode resolution is per-table (there is nothing database-
     * level to pin), matching the engine's documented scope there.
     */
   def snapshot(): FlatFileEngine.SnapshotView = {
-    val m = if (manifestCommits) currentManifest else Map.empty[String, Long]
-    // pin the COMMITTED DELTA CHAIN along with each base path: without
-    // this, a delta committed after snapshot() (or between accesses of
-    // two tables in the view) would leak in through merge-on-read —
-    // weaker isolation than the pinned-version semantics promised here
+    val m = liveManifest
+    // the view pins the three materialized frames themselves: a later
+    // delta, compaction, vacuum or an append of part files into a
+    // pinned base directory cannot reach rows that are already in memory
     new FlatFileEngine.SnapshotView(
-      Seq("users", "posts", "engagements").map { t =>
-        val p = resolvePath(t, m)
-        t -> ((p, committedDeltas(t, p)))
-      }.toMap, this)
+      Seq("users", "posts", "engagements").map(t => t -> resolve(t, m)).toMap)
   }
 
   // ------------------------------------------------------- changelog deltas
@@ -263,41 +280,78 @@ class FlatFileEngine(spark: SparkSession, dir: String,
     }
   }
 
-  /** Merge-on-read resolution: the base snapshot with every COMMITTED
-    * delta applied, the highest-sequence row image per id winning
-    * ([[graft.operators.Merge.latestWins]] — one key shuffle, no
-    * join). With no deltas this is exactly the plain snapshot read;
-    * an uncommitted delta (crashed writer) is invisible, the same
-    * `_SUCCESS` rule as full versions.
+  // ------------------------------------------------------------ read path
+
+  /** The current committed state of `table`, served from the one frame
+    * the engine holds for it (see "Read path" in the class doc). Every
+    * table access — the loads, each write's read of the table it
+    * rewrites, [[snapshot]] — goes through here.
     */
   private def currentTable(table: String): DataFrame =
-    tableFrom(table, tablePath(table))
+    resolve(table, liveManifest)
 
-  /** The committed delta chain riding `basePath`, in sequence order —
-    * resolved eagerly so a snapshot can PIN it (see [[snapshot]]).
-    */
-  private[graft] def committedDeltas(table: String,
-                                     basePath: String): Seq[(Long, String)] =
-    listDeltas(table, basePath).filter(d => committed(d._2)).sortBy(_._1)
-      .map { case (m, p) => (m, p.toString) }
+  /** table → (identity, frame, id of the frame's checkpointed RDD). */
+  private val held = scala.collection.mutable.Map[String, (Identity, DataFrame, Int)]()
 
-  private[graft] def tableFrom(table: String, basePath: String): DataFrame =
-    tableFrom(table, basePath, committedDeltas(table, basePath))
+  private[graft] def heldFrames: Int = held.synchronized(held.size)
 
-  private[graft] def tableFrom(table: String, basePath: String,
-                               deltas: Seq[(Long, String)]): DataFrame = {
-    val base = CsvIngest.readFlatFile(spark, basePath, schemaOf(table))
-    if (deltas.isEmpty) base
-    else {
-      val all = deltas.foldLeft(base.withColumn("_seq", lit(0L))) {
-        case (acc, (m, p)) =>
-          acc.unionByName(
-            CsvIngest.readFlatFile(spark, p, schemaOf(table))
-              .withColumn("_seq", lit(m)))
+  private def resolve(table: String, manifest: Map[String, Long]): DataFrame = {
+    val id = identity(table, manifest)
+    held.synchronized {
+      held.get(table) match {
+        // an unpersisted checkpoint (a caller draining every persistent
+        // RDD between runs) would fail on its first scan: rebuild
+        case Some((i, frame, rdd)) if i == id &&
+          spark.sparkContext.getPersistentRDDs.contains(rdd) => frame
+        case _ =>
+          val frame = load(table, id)
+          val rdd = frame.queryExecution.logical.collectFirst {
+            case r: LogicalRDD => r.rdd.id
+          }.get
+          held(table) = (id, frame, rdd)
+          frame
       }
-      graft.operators.Merge.latestWins(all, Seq("id"), Seq("_seq"))
-        .drop("_seq")
     }
+  }
+
+  /** What `table` resolves to, from listings alone. The leaf files are
+    * part of the key because appends add part files to the base
+    * directory in place; Spark's hidden-file rule (`_`/`.` prefixes)
+    * keeps `_SUCCESS`, checksums and in-flight `_temporary` dirs out.
+    */
+  private def identity(table: String, manifest: Map[String, Long]): Identity = {
+    val base = resolvePath(table, manifest)
+    val deltas = listDeltas(table, base).filter(d => committed(d._2))
+      .sortBy(_._1).map { case (m, p) => (m, p.toString) }
+    val files = fs.listStatus(new Path(base)).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+    Identity(base, deltas, files.sortBy(_._1))
+  }
+
+  /** Merge-on-read over exactly the identity's files: the base with
+    * every COMMITTED delta applied, the highest-sequence row image per
+    * id winning ([[graft.operators.Merge.latestWins]] — one key
+    * shuffle, no join); an uncommitted delta (crashed writer) is
+    * invisible, the same `_SUCCESS` rule as full versions. Parsed once
+    * and materialized, so the frame reads no file after this returns.
+    */
+  private def load(table: String, id: Identity): DataFrame = {
+    val schema = schemaOf(table)
+    val base = CsvIngest.readFlatFile(spark, id.files.map(_._1), schema)
+    val merged =
+      if (id.deltas.isEmpty) base
+      else {
+        val all = id.deltas.foldLeft(base.withColumn("_seq", lit(0L))) {
+          case (acc, (m, p)) =>
+            acc.unionByName(CsvIngest.readFlatFile(spark, Seq(p), schema)
+              .withColumn("_seq", lit(m)))
+        }
+        graft.operators.Merge.latestWins(all, Seq("id"), Seq("_seq"))
+          .drop("_seq")
+      }
+    merged.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK)
   }
 
   // ------------------------------------------------------------------ loads
@@ -311,14 +365,10 @@ class FlatFileEngine(spark: SparkSession, dir: String,
     */
   def users: DataFrame = currentTable("users")
 
-  def posts: DataFrame =
-    SocialOps.riFilter(currentTable("posts"), "username", users, "username")
+  def posts: DataFrame = riPosts(currentTable("posts"), users)
 
-  def engagements: DataFrame = {
-    val e = currentTable("engagements")
-    val byPost = SocialOps.riFilter(e, "postId", posts.select(col("id")), "id")
-    SocialOps.riFilter(byPost, "username", users, "username")
-  }
+  def engagements: DataFrame =
+    riEngagements(currentTable("engagements"), posts, users)
 
   // ----------------------------------------------------------------- reads
 
@@ -374,7 +424,8 @@ class FlatFileEngine(spark: SparkSession, dir: String,
     require(snapshotVersions(table).contains(version),
       s"$table has no committed version $version " +
         s"(retained: ${snapshotVersions(table).mkString(", ")})")
-    CsvIngest.readFlatFile(spark, path(table) + ".v" + version, schemaOf(table))
+    CsvIngest.readFlatFile(spark, Seq(path(table) + ".v" + version),
+      schemaOf(table))
   }
 
   private def schemaOf(table: String): StructType = table match {
@@ -443,11 +494,8 @@ class FlatFileEngine(spark: SparkSession, dir: String,
     // CSV file is first converted to a version directory
     val cur = new Path(tablePath("engagements"))
     if (fs.exists(cur) && fs.getFileStatus(cur).isFile)
-      swapIn(CsvIngest.readFlatFile(spark, cur.toString, engagementSchema),
-        "engagements")
-    val valid = SocialOps.riFilter(
-      SocialOps.riFilter(fresh, "postId", posts.select(col("id")), "id"),
-      "username", users, "username")
+      swapIn(currentTable("engagements"), "engagements")
+    val valid = riEngagements(fresh, posts, users)
     // semi-joins move the key column first; restore schema order so
     // every part file in the table directory has the same header
     valid.select(engagementSchema.fields.map(f => col(f.name)).toSeq: _*)
@@ -574,26 +622,33 @@ class FlatFileEngine(spark: SparkSession, dir: String,
 
 object FlatFileEngine {
 
-  /** Read view over one pinned table→path resolution (see
-    * [[FlatFileEngine.snapshot]]) with the engine's load-time RI
-    * semantics applied within the pinned set.
+  /** Read view over the three frames one [[FlatFileEngine.snapshot]]
+    * resolved, with the engine's load-time RI semantics applied within
+    * the pinned set.
     */
-  final class SnapshotView private[graft] (
-      pins: Map[String, (String, Seq[(Long, String)])],
-      engine: FlatFileEngine) {
-    private def read(t: String): DataFrame = {
-      val (base, deltas) = pins(t)
-      engine.tableFrom(t, base, deltas)
-    }
-    def users: DataFrame = read("users")
-    def posts: DataFrame = SocialOps.riFilter(
-      read("posts"), "username", users, "username")
-    def engagements: DataFrame = {
-      val byPost = SocialOps.riFilter(read("engagements"), "postId",
-        posts.select(col("id")), "id")
-      SocialOps.riFilter(byPost, "username", users, "username")
-    }
+  final class SnapshotView private[graft] (frames: Map[String, DataFrame]) {
+    def users: DataFrame = frames("users")
+    def posts: DataFrame = riPosts(frames("posts"), users)
+    def engagements: DataFrame =
+      riEngagements(frames("engagements"), posts, users)
   }
+
+  /** A table's committed identity: resolved base path, committed delta
+    * chain (seq, path), and the base's leaf files (path, length, mtime).
+    */
+  private final case class Identity(base: String, deltas: Seq[(Long, String)],
+                                    files: Seq[(String, Long, Long)])
+
+  /** The load-time RI filters: posts by a live author; engagements on
+    * a live post by a live user. */
+  private def riPosts(posts: DataFrame, users: DataFrame): DataFrame =
+    SocialOps.riFilter(posts, "username", users, "username")
+
+  private def riEngagements(e: DataFrame, posts: DataFrame,
+                            users: DataFrame): DataFrame =
+    SocialOps.riFilter(
+      SocialOps.riFilter(e, "postId", posts.select(col("id")), "id"),
+      "username", users, "username")
 
   /** The reference's three fixed schemas (buzzdb_lab1.cpp:39-83). */
   val userSchema: StructType = StructType(Seq(

@@ -27,16 +27,16 @@ import org.apache.spark.sql.types._
   */
 object CsvIngest {
 
-  /** Read a headered CSV as all-string columns with reference
-    * tokenization (no quotes, no escapes, whitespace-trimmed).
+  /** Read headered CSV files or directories as all-string columns with
+    * reference tokenization (no quotes, no escapes, whitespace-trimmed).
     */
-  def readRaw(spark: SparkSession, path: String, columns: Seq[String]): DataFrame = {
+  def readRaw(spark: SparkSession, paths: Seq[String], columns: Seq[String]): DataFrame = {
     val raw = spark.read
       .option("header", true)
       .option("quote", "")          // reference split_csv has no quoting
       .option("mode", "DROPMALFORMED")
       .schema(StructType(columns.map(StructField(_, StringType, nullable = true))))
-      .csv(path)
+      .csv(paths: _*)
     // an empty cell parses as null, but wrong-arity rows were already
     // dropped above — so every surviving null IS an empty cell, which
     // the reference keeps as "" (split_csv keeps empty tokens)
@@ -68,7 +68,7 @@ object CsvIngest {
     converted.na.drop("any", intCols.toSeq)
   }
 
-  /** Full reference load pipeline for one table. */
-  def readFlatFile(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    typed(readRaw(spark, path, schema.fields.map(_.name).toSeq), schema)
+  /** Full reference load pipeline for one table's files. */
+  def readFlatFile(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame =
+    typed(readRaw(spark, paths, schema.fields.map(_.name).toSeq), schema)
 }

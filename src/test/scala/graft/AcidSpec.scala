@@ -175,6 +175,28 @@ class AcidSpec extends SparkSpec {
     assert(pinned == 100, s"snapshot leaked a post-pin delta: $pinned")
   }
 
+  for ((mode, manifest) <- Seq("default" -> false, "manifest" -> true))
+    test(s"snapshot() is isolated from a later engagement append ($mode mode)") {
+      val dir = freshDir()
+      val e = new FlatFileEngine(spark, dir, manifestCommits = manifest)
+      def batch(ids: Int*) =
+        ids.map(i => (i, 19, "bob", "comment", s"c$i", 100 + i))
+          .toDF("id", "postId", "username", "type", "comment", "timestamp")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).toSet
+      // the first append turns the fixture file into a version
+      // directory; the second adds part files to that same directory
+      e.addEngagementRecords(batch(2))
+      val snap = e.snapshot()
+      val pinned = rows(snap.engagements)
+      assert(pinned.size == 2)
+      e.addEngagementRecords(batch(3, 4))
+      assert(rows(snap.engagements) == pinned,
+        "snapshot saw rows appended after it was taken")
+      assert(e.engagements.select("id").as[Int].collect().toSet ==
+        Set(1, 2, 3, 4))
+    }
+
   test("changelog mode: missing id writes no delta (ref test 8)") {
     val dir = freshDir()
     val e = new FlatFileEngine(spark, dir, changelogWrites = true)
