@@ -51,7 +51,8 @@ private[graft] object Bans {
       ParquetFooters.rows(new java.io.File(p))).getOrElse(0L) + ids.count()
     val cur = ids.select(col(idCol).cast("long").as("index_id")).distinct()
     val all = prev
-      .map(p => spark.read.parquet(p).unionByName(cur).distinct())
+      .map(p => spark.read.schema(Tombstones.IdSchema).parquet(p)
+        .unionByName(cur).distinct())
       .getOrElse(cur)
     VersionedDirs.commit(tr) { st =>
       (if (bound <= OneFileMax) all.coalesce(1) else all).write.parquet(st)
@@ -61,10 +62,12 @@ private[graft] object Bans {
   /** The committed ban set, if any. The emptiness check reads parquet
     * FOOTER counts (driver-side metadata), not an `isEmpty` Spark job
     * — this runs on every fold/append/probe/compact of six families,
-    * so the empty and absent cases must cost a listing, not a job.
+    * so the empty and absent cases must cost a listing, not a job;
+    * a non-empty set reads with the fixed [[Tombstones.IdSchema]],
+    * without a schema-inference job.
     */
   def get(spark: SparkSession, indexRoot: String): Option[DataFrame] =
     VersionedDirs.resolve(root(indexRoot))
       .filter(p => ParquetFooters.rows(new java.io.File(p)) > 0)
-      .map(spark.read.parquet(_))
+      .map(spark.read.schema(Tombstones.IdSchema).parquet(_))
 }

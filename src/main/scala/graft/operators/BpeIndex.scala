@@ -129,24 +129,29 @@ object BpeIndex {
       else resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root"))
     val deltaSnap = if (pinned) Nil else DeltaLog.live(root, idxPath)
-    val wb0 = words.select("word").distinct()
-      .withColumn("pbucket", pbucketOf(col("word")))
-    val wb = if (materialize) wb0.persist() else wb0
-    val touched = wb.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val memo = (new java.io.File(idxPath, "memo").toString +: deltaSnap)
-      .map(p => spark.read.schema(MemoSchema).parquet(p)
-        .filter(col("pbucket").isin(touched.toIndexedSeq.map(Int.box): _*))
-        .select(col("word"), col("n_sub")))
-      .reduce(_.unionByName(_))
+    val wb = ProbeCache.keyed(
+      words.select("word").distinct()
+        .withColumn("pbucket", pbucketOf(col("word"))),
+      "pbucket", NumBuckets, materialize)
+    wb.settle {
+      val memo = memoRows(spark, idxPath, deltaSnap, wb.touched)
+      wb.frame.select("word").join(memo, Seq("word"))
+    }
+  }
+
+  /** The (word, n_sub) memo rows of base ∪ `deltaSnap` in the
+    * `touched` word buckets, read through those bucket dirs only.
+    */
+  private def memoRows(spark: SparkSession, idxPath: String,
+                       deltaSnap: Seq[String],
+                       touched: Seq[Int]): DataFrame =
+    ProbeCache.prunedRead(spark,
+        new java.io.File(idxPath, "memo").toString +: deltaSnap,
+        "pbucket", touched, Some(MemoSchema))
+      .select(col("word"), col("n_sub"))
       // base ∪ deltas may both hold a word (identical n_sub by
       // derivation) — fold duplicates
       .groupBy("word").agg(min("n_sub").as("n_sub"))
-    val result = wb.select("word").join(memo, Seq("word"))
-    if (materialize)
-      try ProbeCache.materialize(result) finally { wb.unpersist(); () }
-    else result
-  }
 
   /** Highest committed version under `root`, if any. */
   def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
@@ -372,9 +377,15 @@ object BpeIndex {
 
   private def tokenizeCore(spark: SparkSession, docs: DataFrame,
                            id: String, text: String, root: String,
-                           materialize: Boolean): DataFrame =
-    censusCore(spark, docs, id, text, root, materialize)
-      ._1.drop("n_memo_hits")
+                           materialize: Boolean,
+                           pinned: Boolean = false): DataFrame = {
+    val (census, unseen) =
+      censusCore(spark, docs, id, text, root, materialize, pinned)
+    // the census is materialized, so the unseen tail's checkpoint is
+    // an intermediate here — release it now
+    if (materialize) ProbeCache.release(unseen)
+    census.drop("n_memo_hits")
+  }
 
   /** [[tokenize]] plus the streaming gate's two extras, one shared
     * derivation ([[graft.streaming.BpeStream]]): the census carries
@@ -400,15 +411,15 @@ object BpeIndex {
     */
   def tokenizeAt(spark: SparkSession, docs: DataFrame, id: String,
                  text: String, genPath: String): DataFrame =
-    censusCore(spark, docs, id, text, genPath, materialize = true,
-      pinned = true)._1.drop("n_memo_hits")
+    tokenizeCore(spark, docs, id, text, genPath, materialize = true,
+      pinned = true)
 
   /** The LAZY plan behind [[tokenizeAt]] — for pruning audits. */
   private[graft] def tokenizeAtPlan(spark: SparkSession, docs: DataFrame,
                                     id: String, text: String,
                                     genPath: String): DataFrame =
-    censusCore(spark, docs, id, text, genPath, materialize = false,
-      pinned = true)._1.drop("n_memo_hits")
+    tokenizeCore(spark, docs, id, text, genPath, materialize = false,
+      pinned = true)
 
   private def censusCore(spark: SparkSession, docs: DataFrame,
                          id: String, text: String, root: String,
@@ -424,39 +435,33 @@ object BpeIndex {
     val merges = mergesAt(spark, idxPath)
     val occ0 = wordsOf(docs, id, text)
     val occ = if (materialize) occ0.persist() else occ0
-    val wb0 = occ.select("word").distinct()
-      .withColumn("pbucket", pbucketOf(col("word")))
-    val wb = if (materialize) wb0.persist() else wb0
-    val touched = wb.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val memo = (new java.io.File(idxPath, "memo").toString +: deltaSnap)
-      .map(p => spark.read.schema(MemoSchema).parquet(p)
-        .filter(col("pbucket").isin(touched.toIndexedSeq.map(Int.box): _*))
-        .select(col("word"), col("n_sub")))
-      .reduce(_.unionByName(_))
-      // base ∪ deltas may both hold a word (identical n_sub by
-      // derivation) — fold duplicates
-      .groupBy("word").agg(min("n_sub").as("n_sub"))
-    val known = wb.select("word").join(memo, Seq("word"))
-    val unseen0 = applyMerges(
-      wb.select("word").join(memo.select("word"), Seq("word"), "left_anti"),
-      merges)
-    // the unseen tail is batch-bounded — settle it first so the
-    // census plan (and a stream's later fold) reads the one computed
-    // copy instead of re-running the R-round fold
-    val unseen =
-      if (materialize) ProbeCache.materialize(unseen0) else unseen0
-    val seg = known.withColumn("memo_hit", lit(1L))
-      .unionByName(unseen.withColumn("memo_hit", lit(0L)))
-    val result = occ.join(seg, Seq("word"))
-      .groupBy(col(id))
-      .agg(count(lit(1)).as("n_words"),
-        sum("n_sub").as("n_subwords"),
-        sum("memo_hit").as("n_memo_hits"))
-    if (materialize)
-      try (ProbeCache.materialize(result), unseen)
-      finally { wb.unpersist(); occ.unpersist(); () }
-    else (result, unseen)
+    try {
+      val wb = ProbeCache.keyed(
+        occ.select("word").distinct()
+          .withColumn("pbucket", pbucketOf(col("word"))),
+        "pbucket", NumBuckets, materialize)
+      try {
+        val memo = memoRows(spark, idxPath, deltaSnap, wb.touched)
+        val known = wb.frame.select("word").join(memo, Seq("word"))
+        val unseen0 = applyMerges(
+          wb.frame.select("word")
+            .join(memo.select("word"), Seq("word"), "left_anti"),
+          merges)
+        // the unseen tail is batch-bounded — settle it first so the
+        // census plan (and a stream's later fold) reads the one
+        // computed copy instead of re-running the R-round fold
+        val unseen =
+          if (materialize) ProbeCache.materialize(unseen0) else unseen0
+        val seg = known.withColumn("memo_hit", lit(1L))
+          .unionByName(unseen.withColumn("memo_hit", lit(0L)))
+        val result = occ.join(seg, Seq("word"))
+          .groupBy(col(id))
+          .agg(count(lit(1)).as("n_words"),
+            sum("n_sub").as("n_subwords"),
+            sum("memo_hit").as("n_memo_hits"))
+        (if (materialize) ProbeCache.materialize(result) else result, unseen)
+      } finally wb.release()
+    } finally if (materialize) { occ.unpersist(); () }
   }
 
   // ------------------------------------------------------ fertility drift

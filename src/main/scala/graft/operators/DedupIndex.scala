@@ -228,9 +228,8 @@ object DedupIndex {
                             genPath: String): DataFrame = {
     graft.sources.Artifacts.noteResolveHit()
     val touched = newBands.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val idx = spark.read.parquet(genPath)
-      .filter(col("bucket").isin(touched.toIndexedSeq.map(Int.box): _*))
+      .collect().map(_.getInt(0)).sorted.toSeq
+    val idx = ProbeCache.prunedRead(spark, Seq(genPath), "bucket", touched)
     newBands.join(idx, Seq("bucket", "band", "band_key"))
       .select(col("new_id"), col("index_id")).distinct()
   }
@@ -259,9 +258,8 @@ object DedupIndex {
     val idxPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
     val touched = newBands.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val idx = spark.read.parquet(idxPath)
-      .filter(col("bucket").isin(touched.toIndexedSeq.map(Int.box): _*))
+      .collect().map(_.getInt(0)).sorted.toSeq
+    val idx = ProbeCache.prunedRead(spark, Seq(idxPath), "bucket", touched)
     // uncompacted deletes are honored at probe time: the tombstone
     // anti-join is O(deletes-since-compaction); no broadcast HINT —
     // a mass purge can be arbitrarily large, so the strategy is left

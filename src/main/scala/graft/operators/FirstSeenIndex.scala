@@ -249,9 +249,9 @@ object FirstSeenIndex {
     * annotated with `seen_doc` = the committed first-occurrence doc —
     * the MIN over base ∪ unfolded deltas, excluding purged holders
     * (null if no surviving generation has seen the shingle). Reads
-    * ONLY the partition dirs the batch touches per root
-    * (≤ [[NumBuckets]] ints collected — a constant, never
-    * data-sized).
+    * ONLY the partition dirs the batch touches per root (≤
+    * [[NumBuckets]] bits observed while the batch is checkpointed — a
+    * constant, never data-sized; [[ProbeCache]]'s one-job prologue).
     */
   def probe(spark: SparkSession, batchShingles: DataFrame,
             root: String): DataFrame =
@@ -277,39 +277,36 @@ object FirstSeenIndex {
     val idxPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
     val deltaSnap = DeltaLog.unfolded(listed, idxPath)
-    val bs0 = batchShingles.withColumn("pbucket", pbucketOf(col("s")))
-    // the cache backs the touched-bucket collect AND the returned
-    // join, and is held until the result is materialized below (the
-    // [[ProbeCache]] contract)
-    val bs = if (materialize) bs0.persist() else bs0
-    val touched = bs.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val idx0 = (idxPath +: deltaSnap)
-      .map(p => spark.read.parquet(p)
-        .filter(col("pbucket").isin(touched.toIndexedSeq.map(Int.box): _*))
-        .select(col("pbucket"), col("s"), col("first_doc")))
-      .reduce(_.unionByName(_))
-    val live0 = ts.fold(idx0)(t =>
-      idx0.join(t.select(col("index_id").as("first_doc")),
-        Seq("first_doc"), "left_anti"))
-    // bans mask like tombstones but never reset (the re-ingestion
-    // closure — see [[addBans]])
-    val live = bans(spark, root).fold(live0)(b =>
-      live0.join(b.select(col("index_id").as("first_doc")),
-        Seq("first_doc"), "left_anti"))
-    // base-only, purge-free reads skip the min-union aggregate — the
-    // committed map is already one row per shingle (masks only
-    // REMOVE rows, so a banned-masked base read stays one-per-key)
-    val idx =
-      if (deltaSnap.isEmpty && ts.isEmpty)
-        live.select(col("pbucket"), col("s"), col("first_doc").as("seen_doc"))
-      else live.groupBy("pbucket", "s").agg(min("first_doc").as("seen_doc"))
-    val result = bs.join(idx, Seq("pbucket", "s"), "left")
-      .drop("pbucket")
-    // batch-shingle-sized (never corpus-sized) — materialize before
-    // releasing the batch cache; see [[ProbeCache]]
-    if (materialize) try ProbeCache.materialize(result) finally bs.unpersist()
-    else result
+    // the checkpointed keyed batch backs the touched-bucket set AND
+    // the returned join, and is held until the result is materialized
+    // (the [[ProbeCache]] contract)
+    val bs = ProbeCache.keyed(
+      batchShingles.withColumn("pbucket", pbucketOf(col("s"))),
+      "pbucket", NumBuckets, materialize)
+    bs.settle {
+      val idx0 = ProbeCache.prunedRead(spark, idxPath +: deltaSnap,
+          "pbucket", bs.touched)
+        .select(col("pbucket"), col("s"), col("first_doc"))
+      val live0 = ts.fold(idx0)(t =>
+        idx0.join(t.select(col("index_id").as("first_doc")),
+          Seq("first_doc"), "left_anti"))
+      // bans mask like tombstones but never reset (the re-ingestion
+      // closure — see [[addBans]])
+      val live = bans(spark, root).fold(live0)(b =>
+        live0.join(b.select(col("index_id").as("first_doc")),
+          Seq("first_doc"), "left_anti"))
+      // base-only, purge-free reads skip the min-union aggregate — the
+      // committed map is already one row per shingle (masks only
+      // REMOVE rows, so a banned-masked base read stays one-per-key)
+      val idx =
+        if (deltaSnap.isEmpty && ts.isEmpty)
+          live.select(col("pbucket"), col("s"),
+            col("first_doc").as("seen_doc"))
+        else live.groupBy("pbucket", "s").agg(min("first_doc").as("seen_doc"))
+      // batch-shingle-sized (never corpus-sized) — materialized before
+      // the batch checkpoint is released; see [[ProbeCache]]
+      bs.frame.join(idx, Seq("pbucket", "s"), "left").drop("pbucket")
+    }
   }
 
   /** [[probe]] against a PINNED committed generation — the
@@ -337,17 +334,15 @@ object FirstSeenIndex {
   private def probeAtCore(spark: SparkSession, batchShingles: DataFrame,
                           genPath: String, materialize: Boolean): DataFrame = {
     graft.sources.Artifacts.noteResolveHit()
-    val bs0 = batchShingles.withColumn("pbucket", pbucketOf(col("s")))
-    val bs = if (materialize) bs0.persist() else bs0
-    val touched = bs.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val idx = spark.read.parquet(genPath)
-      .filter(col("pbucket").isin(touched.toIndexedSeq.map(Int.box): _*))
-      .select(col("pbucket"), col("s"), col("first_doc").as("seen_doc"))
-    val result = bs.join(idx, Seq("pbucket", "s"), "left")
-      .drop("pbucket")
-    if (materialize) try ProbeCache.materialize(result) finally bs.unpersist()
-    else result
+    val bs = ProbeCache.keyed(
+      batchShingles.withColumn("pbucket", pbucketOf(col("s"))),
+      "pbucket", NumBuckets, materialize)
+    bs.settle {
+      val idx = ProbeCache.prunedRead(spark, Seq(genPath), "pbucket",
+          bs.touched)
+        .select(col("pbucket"), col("s"), col("first_doc").as("seen_doc"))
+      bs.frame.join(idx, Seq("pbucket", "s"), "left").drop("pbucket")
+    }
   }
 
   /** [[scoreBatch]] of a [[probeAt]]-annotated batch — the pinned

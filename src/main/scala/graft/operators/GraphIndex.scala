@@ -489,7 +489,12 @@ object GraphIndex {
     // twice. Single-probe callers pass None and keep the one-shot
     // read. Reuse is sound within one query execution: the artifact
     // is immutable once committed and any fold/publish happens
-    // strictly before the probes.
+    // strictly before the probes. Loops keep this cache rather than
+    // the touched-dirs-only read of the other families
+    // ([[ProbeCache.prunedRead]]): a frontier touches most buckets
+    // after a hop or two, so a pruned read would list nearly every
+    // directory again on every hop, while the cached scan lists each
+    // path once for the whole traversal.
     def pathScan(p: String): DataFrame = {
       def mk = spark.read.parquet(s"$p/$layout")
       scanCache.fold(mk)(_.getOrElseUpdate(s"$p/$layout", mk))

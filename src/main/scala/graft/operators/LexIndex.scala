@@ -37,9 +37,10 @@ import graft.functions.TextFunctions
   * re-index; a probe costs the touched partition dirs of base +
   * unmerged deltas (term-bucket pruned), one term-keyed join against
   * the batch-bounded query set, and a per-query top-k window.
-  * Nothing corpus-sized ever reaches the driver — the only collects
-  * are the ≤ [[NumBuckets]] touched-bucket ints and the 1-row stats
-  * aggregate at publish/compact cadence.
+  * Nothing corpus-sized ever reaches the driver — the only driver
+  * values are the ≤ [[NumBuckets]]-bit touched-bucket mask observed
+  * at probe time and the 1-row stats aggregate at publish/compact
+  * cadence.
   */
 object LexIndex {
 
@@ -338,8 +339,9 @@ object LexIndex {
     }
 
   /** Integer-BM25 top-k of each query (a bag of terms: one row per
-    * (query_id, term)) against the committed index: collect the
-    * batch's touched term buckets (≤ [[NumBuckets]] ints), read ONLY
+    * (query_id, term)) against the committed index: observe the
+    * batch's touched term buckets while checkpointing it (≤
+    * [[NumBuckets]] bits, [[ProbeCache]]'s one-job prologue), read ONLY
     * those partition dirs of base + live deltas, mask tombstones,
     * derive df for exactly the query's terms from the pruned
     * postings, and score with the frozen collection stats. Returns
@@ -409,54 +411,50 @@ object LexIndex {
     // the DISTINCT enforces the "bag of DISTINCT terms" contract the
     // DuckDB oracles all assume: a duplicated (query_id, term) row
     // would otherwise multiply that term's contribution and n_hit
-    val qt0 = queries
-      .select(col(qid).cast("long").as("query_id"),
-        col(term).as("term"))
-      .distinct()
-      .withColumn("pbucket", pbucketOf(col("term")))
-    // the cache backs the touched-bucket collect and BOTH joins below,
-    // and is held until the result is materialized (the [[ProbeCache]]
-    // contract)
-    val qt = if (materialize) qt0.persist() else qt0
-    val touched = qt.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val post0 = (idxPath +: deltaSnap)
-      .map(p => spark.read.parquet(p)
-        .filter(col("pbucket").isin(touched.toIndexedSeq.map(Int.box): _*)))
-      .reduce(_.unionByName(_))
-    val post1 = ts
-      .map(t => post0.join(t, Seq("index_id"), "left_anti"))
-      .getOrElse(post0)
-    // bans mask like tombstones but never reset (the re-ingestion
-    // closure — see [[addBans]]); out of scope for a pinned read
-    val post = (if (pinned) None else bans(spark, root))
-      .map(b => post1.join(b, Seq("index_id"), "left_anti"))
-      .getOrElse(post1)
-    // postings restricted to the query's terms (bucket-pruned scan,
-    // then a term equi-join); df derives from exactly these rows —
-    // tombstone-masked, so a purged doc stops counting immediately.
-    // A per-term window (one term-keyed exchange, partition sizes
-    // bounded by df) beats a groupBy+join here: the pruned artifact
-    // scan feeds the plan ONCE instead of once for df and once for
-    // scoring
-    val matched = post
-      .join(qt.select("term", "pbucket").distinct(), Seq("pbucket", "term"))
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("term")))
-    val contrib = contribSql("tf", "df", "dl",
-      nDocs.toString, sumdl.toString, "div")
-    val result = matched
-      .join(qt.select("query_id", "term"), Seq("term"))
-      .selectExpr("query_id", "index_id", s"$contrib AS contrib")
-      .groupBy("query_id", "index_id")
-      .agg(count(lit(1)).as("n_hit"), sum("contrib").as("score"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(desc("score"), asc("index_id"))).cast("long"))
-      .filter(col("rnk") <= k)
-    // ≤ k rows per query — materialize before releasing the
-    // query-term cache; see [[ProbeCache]]
-    if (materialize) try ProbeCache.materialize(result) finally qt.unpersist()
-    else result
+    val qt = ProbeCache.keyed(
+      queries
+        .select(col(qid).cast("long").as("query_id"), col(term).as("term"))
+        .distinct()
+        .withColumn("pbucket", pbucketOf(col("term"))),
+      "pbucket", NumBuckets, materialize)
+    // the checkpointed query terms back the touched-bucket set and
+    // BOTH joins below, and are held until the result is materialized
+    // (the [[ProbeCache]] contract)
+    qt.settle {
+      val post0 = ProbeCache.prunedRead(spark, idxPath +: deltaSnap,
+        "pbucket", qt.touched)
+      val post1 = ts
+        .map(t => post0.join(t, Seq("index_id"), "left_anti"))
+        .getOrElse(post0)
+      // bans mask like tombstones but never reset (the re-ingestion
+      // closure — see [[addBans]]); out of scope for a pinned read
+      val post = (if (pinned) None else bans(spark, root))
+        .map(b => post1.join(b, Seq("index_id"), "left_anti"))
+        .getOrElse(post1)
+      // postings restricted to the query's terms (bucket-pruned scan,
+      // then a term equi-join); df derives from exactly these rows —
+      // tombstone-masked, so a purged doc stops counting immediately.
+      // A per-term window (one term-keyed exchange, partition sizes
+      // bounded by df) beats a groupBy+join here: the pruned artifact
+      // scan feeds the plan ONCE instead of once for df and once for
+      // scoring
+      val matched = post
+        .join(qt.frame.select("term", "pbucket").distinct(),
+          Seq("pbucket", "term"))
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+      val contrib = contribSql("tf", "df", "dl",
+        nDocs.toString, sumdl.toString, "div")
+      // ≤ k rows per query — materialized before the query-term
+      // checkpoint is released; see [[ProbeCache]]
+      matched
+        .join(qt.frame.select("query_id", "term"), Seq("term"))
+        .selectExpr("query_id", "index_id", s"$contrib AS contrib")
+        .groupBy("query_id", "index_id")
+        .agg(count(lit(1)).as("n_hit"), sum("contrib").as("score"))
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy("query_id")
+            .orderBy(desc("score"), asc("index_id"))).cast("long"))
+        .filter(col("rnk") <= k)
+    }
   }
 }

@@ -15,6 +15,13 @@ import graft.functions.VectorFunctions._
   * in-plan [[Similarity.multiTableTopK]] stays as the
   * oracle-checkable form; this is the production artifact.
   *
+  * A probe pays only for the partitions it touches: it checkpoints
+  * its keyed batch once and observes the touched buckets in that same
+  * job, then reads only the touched `pbucket=<b>` directories of the
+  * base and of each live delta, with the schema taken from a part
+  * file's footer — no listing job over the whole generation, no
+  * schema-inference job ([[ProbeCache]]'s one-job prologue).
+  *
   * Each key row CARRIES ITS VECTOR (index_id, tbl, bucket, ivec): the
   * write-once-read-many trade every ANN index makes (FAISS stores
   * codes in its inverted lists for the same reason) — T copies of
@@ -243,9 +250,10 @@ object SimIndex {
       .withColumn("pbucket", pbucketOf(col("tbl"), col("bucket")))
 
   /** Approximate top-k of each query vector against the committed
-    * index: key the batch with the index's FROZEN (r, T), collect its
-    * touched partition buckets (≤ [[NumBuckets]] ints — a constant,
-    * never data-sized), read ONLY those directories, and score inline
+    * index: key the batch with the index's FROZEN (r, T), observe its
+    * touched partition buckets while checkpointing the keyed batch
+    * (≤ [[NumBuckets]] bits — a constant, never data-sized), read
+    * ONLY those directories, and score inline
     * on the (pbucket, tbl, bucket) equi-join — a pair colliding in
     * several tables is scored per collision but COUNTED once
     * (max-aggregated on the identical rounded score), exactly
@@ -300,43 +308,39 @@ object SimIndex {
     // params pinned to the resolved generation (re-resolving could
     // land on a racing re-publish's (r, T))
     val (bits, tables) = paramsAt(idxPath)
-    // one banding pass for BOTH the touched-bucket collect and the
-    // probe join (the q91 lesson, baked in): persist backs both, and
-    // the cache is held until the RESULT is materialized below (the
-    // [[ProbeCache]] contract) so the returned frame never re-derives
-    // this batch-sized keying
-    val qk0 = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-        posexplode(multiTableBuckets(col(vec), bits, tables))
-          .as(Seq("tbl", "bucket")))
-      .withColumn("pbucket", pbucketOf(col("tbl"), col("bucket")))
-    val qk = if (materialize) qk0.persist() else qk0
-    val touched = qk.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    // base ∪ committed deltas, each with the same static partition
-    // filter — pruning applies per root, so an unmerged delta costs
-    // its touched buckets only
-    val idx0 = (idxPath +: deltaSnap)
-      .map(p => spark.read.parquet(p)
-        .filter(col("pbucket").isin(touched.toIndexedSeq.map(Int.box): _*)))
-      .reduce(_.unionByName(_))
-    // uncompacted deletes are honored at probe time; strategy left to
-    // AQE (a mass purge can be arbitrarily large — no broadcast hint)
-    val idx1 = ts
-      .map(t => idx0.join(t, Seq("index_id"), "left_anti"))
-      .getOrElse(idx0)
-    // bans mask like tombstones but never reset (the re-ingestion
-    // closure — see [[addBans]]); out of scope for a pinned read
-    val idx = (if (pinned) None else bans(spark, root))
-      .map(b => idx1.join(b, Seq("index_id"), "left_anti"))
-      .getOrElse(idx1)
-    val scored = qk.join(idx, Seq("pbucket", "tbl", "bucket"))
-      .filter(col("index_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("index_id"))
-      .agg(max(round(cosineNative(col("qv"), col("ivec")), 6)).as("cos_sim"))
-    val result = Similarity.topK(scored, "index_id", k)
-    // materialize the (≤ k per query) result BEFORE releasing the
-    // batch cache — see [[ProbeCache]]
-    if (materialize) try ProbeCache.materialize(result) finally qk.unpersist()
-    else result
+    // one banding pass for BOTH the touched-bucket set and the probe
+    // join: the keyed batch is checkpointed once, its touched buckets
+    // observed in that same job, and the checkpoint held until the
+    // RESULT is materialized (the [[ProbeCache]] contract) so the
+    // returned frame never re-derives this batch-sized keying
+    val qk = ProbeCache.keyed(
+      queries.select(col(id).as("query_id"), col(vec).as("qv"),
+          posexplode(multiTableBuckets(col(vec), bits, tables))
+            .as(Seq("tbl", "bucket")))
+        .withColumn("pbucket", pbucketOf(col("tbl"), col("bucket"))),
+      "pbucket", NumBuckets, materialize)
+    qk.settle {
+      // base ∪ committed deltas, each read through its touched bucket
+      // dirs only — an unmerged delta costs its touched buckets only
+      val idx0 = ProbeCache.prunedRead(spark, idxPath +: deltaSnap,
+        "pbucket", qk.touched)
+      // uncompacted deletes are honored at probe time; strategy left
+      // to AQE (a mass purge can be arbitrarily large — no broadcast
+      // hint)
+      val idx1 = ts
+        .map(t => idx0.join(t, Seq("index_id"), "left_anti"))
+        .getOrElse(idx0)
+      // bans mask like tombstones but never reset (the re-ingestion
+      // closure — see [[addBans]]); out of scope for a pinned read
+      val idx = (if (pinned) None else bans(spark, root))
+        .map(b => idx1.join(b, Seq("index_id"), "left_anti"))
+        .getOrElse(idx1)
+      val scored = qk.frame.join(idx, Seq("pbucket", "tbl", "bucket"))
+        .filter(col("index_id") =!= col("query_id"))
+        .groupBy(col("query_id"), col("index_id"))
+        .agg(max(round(cosineNative(col("qv"), col("ivec")), 6))
+          .as("cos_sim"))
+      Similarity.topK(scored, "index_id", k)
+    }
   }
 }

@@ -56,13 +56,19 @@ object SketchIndex {
       java.nio.file.Paths.get(genPath, "_params.json"))
 
   /** The frozen (depth, width) of the newest committed generation. */
-  def geometry(root: String): (Int, Int) = {
-    val p = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    val t = paramsText(p)
+  def geometry(root: String): (Int, Int) =
+    geometryAt(resolve(root).getOrElse(
+      throw new IllegalStateException(s"no committed index under $root")))
+
+  /** The frozen (depth, width) of ONE resolved generation — internal
+    * reads pin the path, so cells and geometry always come from the
+    * same generation even while a regrow commits a wider one.
+    */
+  private def geometryAt(genPath: String): (Int, Int) = {
+    val t = paramsText(genPath)
     def f(k: String) = s""""$k":(\\d+)""".r.findFirstMatchIn(t)
       .map(_.group(1).toInt).getOrElse(
-        throw new IllegalStateException(s"malformed params under $root"))
+        throw new IllegalStateException(s"malformed params under $genPath"))
     (f("depth"), f("width"))
   }
 
@@ -124,26 +130,24 @@ object SketchIndex {
     val genPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
     DeltaLog.append(root, genPath, tag) { staging =>
-      val (d, w) = geometry(root)
+      val (d, w) = geometryAt(genPath)
       writeCells(CountMin.build(items, term, d, w), staging)
       true
     }
   }
 
-  /** The serving cells: cell-sum of base ∪ live (unconsumed) deltas —
-    * ≤ d·w rows after the aggregate, at any corpus size. The ledger
-    * filter is load-bearing here: unlike the min/union families a
+  /** The serving cells of the generation at `genPath`: cell-sum of
+    * its cells ∪ the `live` (unconsumed) deltas — ≤ d·w rows after
+    * the aggregate, at any corpus size. The ledger filter that picked
+    * `live` is load-bearing here: unlike the min/union families a
     * double-read double-COUNTS.
     */
-  private def servedCells(spark: SparkSession, root: String): DataFrame = {
-    val genPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    (new java.io.File(genPath, "cells").toString +:
-        DeltaLog.live(root, genPath))
+  private def servedCells(spark: SparkSession, genPath: String,
+                          live: Seq[String]): DataFrame =
+    (new java.io.File(genPath, "cells").toString +: live)
       .map(p => spark.read.schema(CellSchema).parquet(p))
       .reduce(_.unionByName(_))
       .groupBy("r", "cell").agg(sum("cnt").as("cnt"))
-  }
 
   /** Point estimates for `queries`' distinct `term` values against
     * the served state: min over the term's d cells, absent terms
@@ -154,8 +158,29 @@ object SketchIndex {
     */
   def estimate(spark: SparkSession, queries: DataFrame, term: String,
                root: String): DataFrame = {
-    val (d, w) = geometry(root)
-    val cells = servedCells(spark, root)
+    val (genPath, live) = served(root)
+    estimateOn(spark, queries, term, genPath, live)
+  }
+
+  /** The newest generation and its live deltas, resolved once — read
+    * order per [[DeltaLog]]: list the log, then resolve.
+    */
+  private def served(root: String): (String, Seq[String]) = {
+    val listed = deltas(root)
+    val genPath = resolve(root).getOrElse(
+      throw new IllegalStateException(s"no committed index under $root"))
+    (genPath, DeltaLog.unfolded(listed, genPath))
+  }
+
+  /** [[estimate]] on one resolved generation and its live deltas:
+    * geometry and cells both come from `genPath`, so a regrow that
+    * commits a wider generation meanwhile cannot mix the two.
+    */
+  private[graft] def estimateOn(spark: SparkSession, queries: DataFrame,
+                                term: String, genPath: String,
+                                live: Seq[String]): DataFrame = {
+    val (d, w) = geometryAt(genPath)
+    val cells = servedCells(spark, genPath, live)
     val n = cells.filter(col("r") === 0)
       .agg(coalesce(sum("cnt"), lit(0L)).as("n_total"))
     val q = queries.select(col(term)).distinct().persist()
@@ -177,26 +202,14 @@ object SketchIndex {
   def estimateAt(spark: SparkSession, queries: DataFrame, term: String,
                  genPath: String): DataFrame = {
     graft.sources.Artifacts.noteResolveHit()
-    val t = paramsText(genPath)
-    def f(k: String) = s""""$k":(\\d+)""".r.findFirstMatchIn(t)
-      .map(_.group(1).toInt).getOrElse(
-        throw new IllegalStateException(s"malformed params under $genPath"))
-    val (d, w) = (f("depth"), f("width"))
-    val cells = spark.read.schema(CellSchema)
-      .parquet(new java.io.File(genPath, "cells").toString)
-    val n = cells.filter(col("r") === 0)
-      .agg(coalesce(sum("cnt"), lit(0L)).as("n_total"))
-    val q = queries.select(col(term)).distinct().persist()
-    try ProbeCache.materialize(
-      CountMin.estimate(cells, q, term, d, w).crossJoin(broadcast(n)))
-    finally { q.unpersist(); () }
+    estimateOn(spark, queries, term, genPath, Nil)
   }
 
   /** Fold the delta log physically: commit the cell-sum as the next
     * generation, recording the consumed dirs in its ledger.
     */
   def mergeCompact(spark: SparkSession, root: String): String =
-    rewrite(spark, root, identity)
+    rewrite(spark, root)((_, served) => served)
 
   /** True when a purge tagged `tag` has already been applied. The
     * `_purged.json` ledger is the subtraction twin of the fold
@@ -246,28 +259,37 @@ object SketchIndex {
       case Some(p) if DeltaLog.ledger(p, DeltaLog.Purged)(t) => return p
       case _ => ()
     }
-    val (d, w) = geometry(root)
-    val neg = CountMin.build(deleted, term, d, w)
-      .select(col("r"), col("cell"), (-col("cnt")).as("cnt"))
-    rewrite(spark, root, served =>
+    // the negative sketch is built inside the lock, with the geometry
+    // of the generation it is subtracted from: one built before a
+    // concurrent regrow committed would subtract at the old width
+    rewrite(spark, root, purgeTag = Some(t)) { case ((d, w), served) =>
+      val neg = CountMin.build(deleted, term, d, w)
+        .select(col("r"), col("cell"), (-col("cnt")).as("cnt"))
       served.unionByName(neg)
         .groupBy("r", "cell").agg(sum("cnt").as("cnt"))
-        .filter(col("cnt") =!= 0L), purgeTag = Some(t))
+        .filter(col("cnt") =!= 0L)
+    }
   }
 
+  /** Commit `f(geometry, served cells)` of the newest generation as
+    * the next one, under the lock; `f` sees the geometry of exactly
+    * the generation whose cells it gets.
+    */
   private def rewrite(spark: SparkSession, root: String,
-                      f: DataFrame => DataFrame,
-                      purgeTag: Option[String] = None): String =
+                      purgeTag: Option[String] = None)
+                     (f: ((Int, Int), DataFrame) => DataFrame): String =
     synchronized {
+    // read order (see [[DeltaLog]]): list the log, then resolve
+    val listed = deltas(root)
     val genPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
     // locked re-check of the purge ledger: a concurrent same-tag
     // purge that committed while this call waited must absorb here
     val purgedNames = DeltaLog.ledger(genPath, DeltaLog.Purged)
     purgeTag.foreach { t => if (purgedNames(t)) return genPath }
-    val log = new DeltaLog.Snapshot(genPath, deltas(root))
+    val log = new DeltaLog.Snapshot(genPath, listed)
     val params = paramsText(genPath)
-    val cells = f(servedCells(spark, root))
+    val cells = f(geometryAt(genPath), servedCells(spark, genPath, log.live))
     val path = VersionedDirs.commit(root) { st =>
       writeCells(cells, new java.io.File(st, "cells"))
       java.nio.file.Files.writeString(
@@ -305,10 +327,11 @@ object SketchIndex {
     */
   def biasAudit(spark: SparkSession, corpus: DataFrame, term: String,
                 root: String): DataFrame = {
-    val (_, w) = geometry(root)
+    val (genPath, live) = served(root)
+    val (_, w) = geometryAt(genPath)
     val exact = corpus.groupBy(col(term))
       .agg(count(lit(1)).as("exact"))
-    estimate(spark, corpus, term, root)
+    estimateOn(spark, corpus, term, genPath, live)
       .join(exact, Seq(term))
       .select((col("cms_est") - col("exact")).as("err"), col("n_total"))
       .agg(count(lit(1)).as("n_terms"),

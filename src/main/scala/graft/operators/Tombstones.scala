@@ -17,6 +17,13 @@ private[graft] object Tombstones {
   private def root(indexRoot: String): String =
     new java.io.File(indexRoot, "tombstones").getAbsolutePath
 
+  /** The schema of a tombstone or ban set: both logs write their ids
+    * as a long, so reads name it instead of paying a schema-inference
+    * job.
+    */
+  val IdSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL("index_id BIGINT")
+
   /** Commit `ids` (as column `index_id`) unioned with the previous
     * committed set. Bounded by the cumulative delete rate between
     * compactions — never index-sized. The write stays partitioned:
@@ -30,7 +37,8 @@ private[graft] object Tombstones {
     val tr = root(indexRoot)
     val cur = ids.select(col(idCol).cast("long").as("index_id")).distinct()
     val all = VersionedDirs.resolve(tr)
-      .map(p => spark.read.parquet(p).unionByName(cur).distinct())
+      .map(p => spark.read.schema(IdSchema).parquet(p)
+        .unionByName(cur).distinct())
       .getOrElse(cur)
     VersionedDirs.commit(tr) { st => all.write.parquet(st) }
   }
@@ -38,12 +46,13 @@ private[graft] object Tombstones {
   /** The committed set, if any (empty-after-compact counts as none).
     * The emptiness check reads parquet FOOTER counts (driver-side
     * metadata, [[ParquetFooters]]) rather than running an `isEmpty`
-    * Spark job — probes call this on every read.
+    * Spark job, and the read names [[IdSchema]] — probes call this on
+    * every read.
     */
   def get(spark: SparkSession, indexRoot: String): Option[DataFrame] =
     VersionedDirs.resolve(root(indexRoot))
       .filter(p => ParquetFooters.rows(new java.io.File(p)) > 0)
-      .map(spark.read.parquet(_))
+      .map(spark.read.schema(IdSchema).parquet(_))
 
   /** Reset to the empty set (after a compaction folded the deletes). */
   def reset(spark: SparkSession, indexRoot: String): Unit = {

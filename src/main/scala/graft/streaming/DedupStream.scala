@@ -135,7 +135,15 @@ final class DedupStream(spark: SparkSession, root: String,
         else {
           val touched = nb.select("bucket").distinct()
             .collect().map(_.getInt(0)).sorted // bounded by NumBuckets
-          val joined = spark.read.parquet(tail: _*)
+          // the schema comes from a footer of the tail itself — no
+          // schema-inference job; the tail dirs are not bucket
+          // partitioned, so the filter prunes row groups, not dirs
+          val schema = graft.operators.ParquetFooters
+            .sparkSchema(tail.map(p =>
+              new java.io.File(new Path(p).toUri.getPath)))
+            .getOrElse(throw new IllegalStateException(
+              s"no parquet part file in the tail under $root"))
+          val joined = spark.read.schema(schema).parquet(tail: _*)
             .filter(col("bucket").isin(touched.toIndexedSeq.map(Int.box): _*))
             .withColumnRenamed("new_id", "index_id")
             .join(nb, Seq("bucket", "band", "band_key"))

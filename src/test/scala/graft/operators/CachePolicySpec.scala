@@ -19,7 +19,10 @@ import graft.SparkSpec
   *   2. the returned plan is a plain RDD scan — no exchanges, no
   *      scans of the batch source;
   *   3. a probe never unpersists a frame the CALLER persisted (r11's
-  *      probeBanded evicted DedupStream's batch cache mid-batch).
+  *      probeBanded evicted DedupStream's batch cache mid-batch);
+  *   4. for the families on the one-job prologue (Sim, FirstSeen,
+  *      Lex, Bpe), the call evaluates its batch side exactly once and
+  *      leaves no checkpoint behind but the returned frames' own.
   *
   * Evaluation counting is an accumulator inside a UDF threaded
   * through the batch column every probe must read: any post-return
@@ -54,6 +57,27 @@ class CachePolicySpec extends SparkSpec {
       s"returned probe frame is not a materialized RDD scan:\n${p.take(800)}")
     assert(!p.contains("Exchange"),
       s"returned probe frame still carries exchanges:\n${p.take(800)}")
+  }
+
+  /** Run one probe call over a batch of `batchRows` rows whose
+    * evaluations `acc` counts: the batch side must be evaluated
+    * exactly once during the call, and no checkpoint the call made
+    * may outlive it except the returned frames' own.
+    */
+  private def assertOnePass(acc: LongAccumulator, batchRows: Long)
+                           (call: => Seq[DataFrame]): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val evals0 = acc.value
+    val results = call
+    assert(acc.value - evals0 == batchRows,
+      s"batch side evaluated ${acc.value - evals0} row-times, want $batchRows")
+    val own = results.flatMap(_.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }).toSet
+    val kept = sc.getPersistentRDDs.keySet -- before
+    assert(kept.subsetOf(own),
+      s"checkpoints outlived the call: ${kept -- own} (results: $own)")
   }
 
   // ---------------------------------------------------------- fixtures
@@ -198,6 +222,62 @@ class CachePolicySpec extends SparkSpec {
     assertSettled(r, acc)
     val d = GraphIndex.degrees(spark, nodes, root)
     assertSettled(d, acc)
+  }
+
+  test("SimIndex.probeTopK/probeTopKAt: one batch pass, no batch checkpoint kept") {
+    val root = Files.createTempDirectory("cps-sim1").toString
+    val gen = SimIndex.publish(vecIndex, "vec_id", "embedding", 8, 4, root)
+    SimIndex.appendDelta(vecQueries.withColumn("vec_id", $"vec_id" + 500L),
+      "vec_id", "embedding", root, "d1")
+    val (q, acc) = countedVec(vecQueries, "embedding")
+    assertOnePass(acc, 5L)(Seq(
+      SimIndex.probeTopK(spark, q, "vec_id", "embedding", 3, root)))
+    assertOnePass(acc, 5L)(Seq(
+      SimIndex.probeTopKAt(spark, q, "vec_id", "embedding", 3, gen)))
+  }
+
+  test("FirstSeenIndex.probe/probeAt: one batch pass, no batch checkpoint kept") {
+    val root = Files.createTempDirectory("cps-fs1").toString
+    val gen = FirstSeenIndex.publish(
+      Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("doc_id", "s"), root)
+    FirstSeenIndex.fold(spark, Seq((5L, "x")).toDF("doc_id", "s"), root, "f1")
+    val (batch, acc) = countedText(
+      Seq((10L, "b"), (10L, "x"), (11L, "a")).toDF("doc_id", "s"), "s")
+    assertOnePass(acc, 3L)(Seq(FirstSeenIndex.probe(spark, batch, root)))
+    assertOnePass(acc, 3L)(Seq(FirstSeenIndex.probeAt(spark, batch, gen)))
+  }
+
+  test("LexIndex.bm25TopK/bm25TopKAt: one batch pass, no batch checkpoint kept") {
+    val root = Files.createTempDirectory("cps-lex3").toString
+    val gen = LexIndex.publish(corpusDocs, "doc_id", "text", root)
+    val (q, acc) = countedText(
+      Seq((0L, "alpha"), (0L, "word5"), (1L, "zeta"))
+        .toDF("query_id", "term"), "term")
+    assertOnePass(acc, 3L)(Seq(
+      LexIndex.bm25TopK(spark, q, "query_id", "term", 5, root)))
+    assertOnePass(acc, 3L)(Seq(
+      LexIndex.bm25TopKAt(spark, q, "query_id", "term", 5, gen)))
+  }
+
+  test("BpeIndex memo probes: one batch pass, no batch checkpoint kept") {
+    val root = Files.createTempDirectory("cps-bpe3").toString
+    val gen = BpeIndex.publish(corpusDocs, "doc_id", "text", 4, root)
+    val (batch, acc) = countedText(
+      (50 until 55).map(i => (i.toLong, doc(i))).toDF("doc_id", "text"),
+      "text")
+    assertOnePass(acc, 5L)(Seq(
+      BpeIndex.tokenize(spark, batch, "doc_id", "text", root)))
+    assertOnePass(acc, 5L)(Seq(
+      BpeIndex.tokenizeAt(spark, batch, "doc_id", "text", gen)))
+    assertOnePass(acc, 5L) {
+      val (census, unseen) =
+        BpeIndex.censusAndUnseen(spark, batch, "doc_id", "text", root)
+      Seq(census, unseen)
+    }
+    val (words, wacc) = countedText(
+      Seq("alpha", "zeta", "nope").toDF("word"), "word")
+    assertOnePass(wacc, 3L)(Seq(BpeIndex.memoLookup(spark, words, root)))
+    assertOnePass(wacc, 3L)(Seq(BpeIndex.memoLookupAt(spark, words, gen)))
   }
 
   test("SketchIndex.estimate: result settled before the query cache is released") {

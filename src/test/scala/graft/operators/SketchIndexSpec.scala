@@ -190,4 +190,21 @@ class SketchIndexSpec extends SparkSpec {
     assert(VersionedDirs.versionsOf(root).size == 1)
     assert(SketchIndex.geometry(root) == ((D, W)))
   }
+
+  test("an estimate on a resolved generation keeps its geometry across a regrow") {
+    val root = Files.createTempDirectory("cms").toString
+    val corpus = terms((0 until 40).map(i => s"t$i" -> (1 + i % 5)): _*)
+    SketchIndex.publish(corpus, "term", D, 16, root)
+    val qs = (0 until 40).map(i => s"t$i")
+    val want = estMap(root, qs)
+    // the generation an estimate resolved; then a regrow commits a
+    // 4×-wider generation before the estimate reads its geometry
+    val gen = SketchIndex.resolve(root).get
+    SketchIndex.publish(corpus, "term", D, 64, root)
+    assert(SketchIndex.geometry(root) == ((D, 64)))
+    val got = SketchIndex.estimateOn(spark, qs.toDF("term"), "term", gen, Nil)
+      .select("term", "cms_est").as[(String, Long)].collect().toMap
+    assert(got == want,
+      "estimate mixed the resolved generation's cells with another width")
+  }
 }
