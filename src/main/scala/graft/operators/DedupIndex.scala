@@ -107,10 +107,13 @@ object DedupIndex {
   def bans(spark: SparkSession, root: String): Option[DataFrame] =
     Bans.get(spark, root)
 
-  /** Rewrite the committed index WITHOUT the tombstoned rows as the
-    * next version (a pure row filter over the existing artifact — no
-    * re-shingling, no re-signing; partition layout preserved), then
-    * reset the tombstone set. Returns the compacted path.
+  /** Rewrite the committed index WITHOUT the tombstoned (and banned)
+    * rows as the next version (a pure row filter over the existing
+    * artifact, read through its bucket directories
+    * ([[ProbeCache.prunedRead]]) — no re-shingling, no re-signing;
+    * partition layout preserved), then reset the tombstone set.
+    * Returns the serving generation after the call; unchanged when
+    * nothing was pending ([[DeltaLog.unlessIdle]]).
     *
     * NOTE the previous generation still holds the purged rows on disk
     * (standard keep-two retention, for readers pinned pre-compaction)
@@ -121,22 +124,28 @@ object DedupIndex {
   def compact(spark: SparkSession, root: String): String = synchronized {
     val idxPath = resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root"))
-    val idx = spark.read.parquet(idxPath)
-    val filtered0 = tombstones(spark, root)
-      .map(t => idx.join(t, Seq("index_id"), "left_anti"))
-      .getOrElse(idx)
-    // banned rows that slipped in pre-ban scrub physically here too
-    val filtered = bans(spark, root)
-      .map(b => filtered0.join(b, Seq("index_id"), "left_anti"))
-      .getOrElse(filtered0)
-    val path = VersionedDirs.commit(root) { st =>
-      filtered.repartition(col("bucket"))
-        .sortWithinPartitions("band", "band_key")
-        .write.partitionBy("bucket").mode("overwrite").parquet(st)
+    val ts = tombstones(spark, root)
+    val bn = bans(spark, root)
+    // no append log: the generation alone, pending only on its masks
+    DeltaLog.unlessIdle(root, new DeltaLog.Snapshot(idxPath, Nil), ts, bn) {
+      val idx = ProbeCache.prunedRead(spark, Seq(idxPath), "bucket",
+        0 until NumBuckets)
+      val filtered0 = ts
+        .map(t => idx.join(t, Seq("index_id"), "left_anti"))
+        .getOrElse(idx)
+      // banned rows that slipped in pre-ban scrub physically here too
+      val filtered = bn
+        .map(b => filtered0.join(b, Seq("index_id"), "left_anti"))
+        .getOrElse(filtered0)
+      val path = VersionedDirs.commit(root) { st =>
+        filtered.repartition(col("bucket"))
+          .sortWithinPartitions("band", "band_key")
+          .write.partitionBy("bucket").mode("overwrite").parquet(st)
+      }
+      // reset: commit an empty set so probes stop paying the anti-join
+      Tombstones.reset(root)
+      path
     }
-    // reset: commit an empty set so probes stop paying the anti-join
-    Tombstones.reset(spark, root)
-    path
   }
 
   /** Drop every index generation but the newest committed one — the

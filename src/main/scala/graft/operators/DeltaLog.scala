@@ -37,6 +37,15 @@ import java.io.File
   * ([[unfolded]]). A probe that resolves the OLD generation never
   * misses deltas a racing merge deleted; one that resolves the NEW
   * generation skips exactly the dirs it folded.
+  *
+  * Idle compactions ([[unlessIdle]]): every family's compaction, under
+  * its lock and in the same read order (list, then resolve), has work
+  * only when the log holds a live delta or a mask set — tombstones or
+  * bans — is non-empty. With nothing pending it runs [[cleanup]] on the
+  * listed dirs (already-folded leftovers) and returns the resolved
+  * generation: no Spark job, no version committed. ([[PqIndex]], whose
+  * ledger names only its last merge's listing, also counts a ledger
+  * left naming a dir that is no longer listed.)
   */
 private[graft] object DeltaLog {
 
@@ -154,4 +163,14 @@ private[graft] object DeltaLog {
     Option(dir(root).listFiles()).getOrElse(Array.empty)
       .filter(VersionedDirs.stagingOrphan).foreach(VersionedDirs.deleteTree)
   }
+
+  /** A compaction of `log` that commits only when work is pending: a
+    * live delta, or any defined `pending` (a non-empty tombstone or ban
+    * set, a purge to apply). Otherwise [[cleanup]] the listed dirs and
+    * return the resolved generation without running `rewrite`.
+    */
+  def unlessIdle(root: String, log: Snapshot, pending: Option[Any]*)
+                (rewrite: => String): String =
+    if (log.live.nonEmpty || pending.exists(_.isDefined)) rewrite
+    else { cleanup(root, log.listed); log.genPath }
 }

@@ -103,23 +103,16 @@ object FirstSeenIndex {
         // the ingestion gate of the ban closure: a banned doc's rows
         // never enter the delta, so it can never re-claim
         // first-occurrence through the min-union (see [[addBans]])
-        val bn = bans(spark, root)
-        // batch-scoped cache: the emptiness check and the min-union
-        // write are two actions over the same anti-joined frame —
-        // persist so the broadcast gate's batch scan runs once, not
-        // twice
-        val gated = bn
+        val gated = bans(spark, root)
           .map(b => batchShingles.join(
             b.select(col("index_id").as("doc_id")), Seq("doc_id"),
-            "left_anti").persist())
+            "left_anti"))
           .getOrElse(batchShingles)
-        try {
-          !gated.isEmpty && {
-            writeMap(gated.groupBy("s").agg(min("doc_id").as("first_doc")),
-              staging.getAbsolutePath)
-            true
-          }
-        } finally if (bn.isDefined) { gated.unpersist(); () }
+        // an empty batch writes no part file: the write itself says
+        // whether there is anything to commit
+        writeMap(gated.groupBy("s").agg(min("doc_id").as("first_doc")),
+          staging.getAbsolutePath)
+        ParquetFooters.rows(staging) > 0
       }
     }
 
@@ -193,8 +186,11 @@ object FirstSeenIndex {
     * was purged simply drops (conservative: the gate re-treats it as
     * novel). The repair join is keyed on the AFFECTED shingle set
     * (O(purged docs' shingles) — semi-join pruned), so the source
-    * scan is one pass paid at GDPR cadence, never per probe. Clears
-    * the append log and resets tombstones.
+    * scan is one pass paid at GDPR cadence, never per probe. Every
+    * root is read through its bucket directories
+    * ([[ProbeCache.prunedRead]]). Clears the append log and resets
+    * tombstones. Returns the serving generation after the call;
+    * unchanged when nothing was pending ([[DeltaLog.unlessIdle]]).
     */
   def mergeCompact(spark: SparkSession, root: String,
                    reassignSrc: Option[DataFrame] = None): String =
@@ -203,44 +199,47 @@ object FirstSeenIndex {
       val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root")),
         listed)
-      val all = (log.genPath +: log.live)
-        .map(p => spark.read.parquet(p).select(col("s"), col("first_doc")))
-        .reduce(_.unionByName(_))
-      // banned holders that slipped in pre-ban scrub physically here
-      // (the repair join below then reassigns their shingles exactly
-      // like a tombstone purge would)
+      val ts = tombstones(spark, root)
       val bn = bans(spark, root)
-      val merged0 = tombstones(spark, root)
-          .map(_.unionByName(
-            bn.getOrElse(spark.range(0).select(col("id").as("index_id"))))
-            .distinct())
-          .orElse(bn) match {
-        case None => all
-        case Some(t) =>
-          val td = t.select(col("index_id").as("first_doc"))
-          val live = all.join(td, Seq("first_doc"), "left_anti")
-          // shingles that lost a RECORDED holder: only these need the
-          // repair scan — everything else already has its true min
-          val affected = all.join(td, Seq("first_doc"), "left_semi")
-            .select("s").distinct()
-          reassignSrc.fold(live) { src =>
-            val repaired = src
-              .select(col("s"), col("doc_id").cast("long").as("first_doc"))
-              .join(affected, Seq("s"), "left_semi")
-              .join(td, Seq("first_doc"), "left_anti")
-            live.unionByName(repaired)
-          }
+      DeltaLog.unlessIdle(root, log, ts, bn) {
+        val all = ProbeCache.prunedRead(spark, log.genPath +: log.live,
+            "pbucket", 0 until NumBuckets)
+          .select(col("s"), col("first_doc"))
+        // banned holders that slipped in pre-ban scrub physically here
+        // (the repair join below then reassigns their shingles exactly
+        // like a tombstone purge would)
+        val merged0 = ts
+            .map(_.unionByName(
+              bn.getOrElse(spark.range(0).select(col("id").as("index_id"))))
+              .distinct())
+            .orElse(bn) match {
+          case None => all
+          case Some(t) =>
+            val td = t.select(col("index_id").as("first_doc"))
+            val live = all.join(td, Seq("first_doc"), "left_anti")
+            // shingles that lost a RECORDED holder: only these need the
+            // repair scan — everything else already has its true min
+            val affected = all.join(td, Seq("first_doc"), "left_semi")
+              .select("s").distinct()
+            reassignSrc.fold(live) { src =>
+              val repaired = src
+                .select(col("s"), col("doc_id").cast("long").as("first_doc"))
+                .join(affected, Seq("s"), "left_semi")
+                .join(td, Seq("first_doc"), "left_anti")
+              live.unionByName(repaired)
+            }
+        }
+        val merged = merged0.groupBy("s").agg(min("first_doc").as("first_doc"))
+        // the cumulative ledger IS NoveltyStream's absorption — it has
+        // no marker of its own
+        val path = VersionedDirs.commit(root) { st =>
+          writeMap(merged, st)
+          DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+        }
+        DeltaLog.cleanup(root, listed)
+        Tombstones.reset(root)
+        path
       }
-      val merged = merged0.groupBy("s").agg(min("first_doc").as("first_doc"))
-      // the cumulative ledger IS NoveltyStream's absorption — it has
-      // no marker of its own
-      val path = VersionedDirs.commit(root) { st =>
-        writeMap(merged, st)
-        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
-      }
-      DeltaLog.cleanup(root, listed)
-      Tombstones.reset(spark, root)
-      path
     }
 
   // ------------------------------------------------------ probe

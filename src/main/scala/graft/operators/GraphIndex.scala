@@ -95,6 +95,10 @@ object GraphIndex {
     } finally { e.unpersist(); () }
   }
 
+  /** The data columns of every `out/` and `in/` edge file. */
+  private val EdgeSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "src BIGINT, dst BIGINT, w BIGINT")
+
   private def aggEdges(edges: DataFrame): DataFrame =
     edges.groupBy("src", "dst").agg(sum("w").as("w"))
 
@@ -237,8 +241,12 @@ object GraphIndex {
     * incident to a tombstoned node (both endpoints — and with the
     * `in/` mirror both halves are bucket-addressable; this full
     * rewrite also folds the delta log, so it reads `out/` once and
-    * re-emits both twins, at GDPR cadence). Clears the log and resets
-    * tombstones.
+    * re-emits both twins, at GDPR cadence), through its bucket
+    * directories with the family's [[EdgeSchema]]
+    * ([[ProbeCache.prunedRead]]), so an all-purged generation still
+    * reads. Clears the log and resets tombstones. Returns the serving
+    * generation after the call; unchanged when nothing was pending
+    * ([[DeltaLog.unlessIdle]]).
     */
   def mergeCompact(spark: SparkSession, root: String): String =
     synchronized {
@@ -246,21 +254,25 @@ object GraphIndex {
       val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root")),
         listed)
-      val all = (log.genPath +: log.live)
-        .map(p => spark.read.parquet(s"$p/out")
-          .select(col("src"), col("dst"), col("w")))
-        .reduce(_.unionByName(_))
-      // tombstones reset below; bans do NOT — and the physical drop
-      // here also scrubs any banned edge that slipped in pre-ban
-      val merged = aggEdges(
-        maskBoth(maskBoth(all, tombstones(spark, root)), bans(spark, root)))
-      val path = VersionedDirs.commit(root) { st =>
-        writeAdj(merged, st)
-        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+      val ts = tombstones(spark, root)
+      val bn = bans(spark, root)
+      DeltaLog.unlessIdle(root, log, ts, bn) {
+        // a marker delta holds no bucket dir, so it contributes nothing
+        val all = ProbeCache.prunedRead(spark,
+            (log.genPath +: log.live).map(p => s"$p/out"), "pbucket",
+            0 until NumBuckets, Some(EdgeSchema))
+          .select(col("src"), col("dst"), col("w"))
+        // tombstones reset below; bans do NOT — and the physical drop
+        // here also scrubs any banned edge that slipped in pre-ban
+        val merged = aggEdges(maskBoth(maskBoth(all, ts), bn))
+        val path = VersionedDirs.commit(root) { st =>
+          writeAdj(merged, st)
+          DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+        }
+        DeltaLog.cleanup(root, listed)
+        Tombstones.reset(root)
+        path
       }
-      DeltaLog.cleanup(root, listed)
-      Tombstones.reset(spark, root)
-      path
     }
 
   /** Purge-ONLY compaction — the bucket-local rewrite the twin
@@ -381,7 +393,7 @@ object GraphIndex {
           java.nio.file.Paths.get(st, "_SUCCESS"))
         ()
       }
-      Tombstones.reset(spark, root)
+      Tombstones.reset(root)
       path
     }
 

@@ -117,6 +117,12 @@ object LexIndex {
     (rows, dl, tf)
   }
 
+  /** The data columns of every posting file (the partition column
+    * `pbucket` lives in directory names): what [[postingRows]] writes.
+    */
+  private val PostingSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "index_id BIGINT, term STRING, tf BIGINT, dl BIGINT")
+
   private def writeStats(dl: DataFrame, dir: String): Unit = {
     val r = dl.agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"),
         coalesce(max("dl"), lit(0L)).as("m"))
@@ -235,28 +241,25 @@ object LexIndex {
       // its stats contribution (its dl toward Σdl, its +1 toward N, its
       // terms toward df) never commit — the sidecar below is computed
       // from the gated frame
-      val bn = bans(docs.sparkSession, root)
-      // batch-scoped cache: the emptiness check and the posting build
-      // are two actions over the same anti-joined frame — persist so
-      // the broadcast gate's batch scan runs once, not twice
-      val gated = bn
+      val gated = bans(docs.sparkSession, root)
         .map(b => docs.join(b.select(col("index_id").cast("long").as(id)),
-          Seq(id), "left_anti").persist())
+          Seq(id), "left_anti"))
         .getOrElse(docs)
+      val (rows, dl, tfc) = postingRows(gated, id, text)
       try {
-        !gated.isEmpty && {
-          val (rows, dl, tfc) = postingRows(gated, id, text)
-          try {
-            rows.repartition(col("pbucket"))
-              .sortWithinPartitions("term")
-              .write.partitionBy("pbucket").mode("overwrite")
-              .parquet(staging.getAbsolutePath)
-            writeStats(dl, staging.getAbsolutePath)
-          } finally tfc.unpersist()
+        rows.repartition(col("pbucket"))
+          .sortWithinPartitions("term")
+          .write.partitionBy("pbucket").mode("overwrite")
+          .parquet(staging.getAbsolutePath)
+        // an empty batch (or one of zero-token docs) writes no part
+        // file: the write itself says whether there is anything to
+        // commit, and an empty one shifts no collection stats
+        ParquetFooters.rows(staging) > 0 && {
+          writeStats(dl, staging.getAbsolutePath)
           requireHeadroom(idxPath, root, staging)
           true
         }
-      } finally if (bn.isDefined) { gated.unpersist(); () }
+      } finally tfc.unpersist()
     }
   }
 
@@ -297,13 +300,16 @@ object LexIndex {
   def appended(root: String, tag: String): Boolean =
     DeltaLog.contains(root, tag)
 
-  /** Fold every committed delta and pending delete into the next
-    * generation — pure row union + filter, no re-tokenization — and
-    * recompute the collection stats EXACTLY from the surviving rows
+  /** Fold every committed delta and pending delete or ban into the
+    * next generation — pure row union + filter, no re-tokenization —
+    * and recompute the collection stats EXACTLY from the surviving rows
     * (the distinct (doc, dl) pairs the postings already carry), so
     * the post-compaction index is byte-equivalent to a fresh publish
-    * of the surviving corpus. Clears the append log and resets
-    * tombstones.
+    * of the surviving corpus. Every root is read through its bucket
+    * directories with the family's [[PostingSchema]]
+    * ([[ProbeCache.prunedRead]]). Clears the append log and resets
+    * tombstones. Returns the serving generation after the call;
+    * unchanged when nothing was pending ([[DeltaLog.unlessIdle]]).
     */
   def mergeCompact(spark: SparkSession, root: String): String =
     synchronized {
@@ -311,31 +317,35 @@ object LexIndex {
       val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root")),
         listed)
-      val all0 = log.live.map(spark.read.parquet(_))
-        .foldLeft(spark.read.parquet(log.genPath))(_.unionByName(_))
-      val all1 = tombstones(spark, root)
-        .map(t => all0.join(t, Seq("index_id"), "left_anti"))
-        .getOrElse(all0)
-      // banned rows that slipped in pre-ban scrub physically here —
-      // and the exact stats recompute below then counts survivors only
-      val all = bans(spark, root)
-        .map(b => all1.join(b, Seq("index_id"), "left_anti"))
-        .getOrElse(all1)
-      // LexStream carries its own durable marker, but a non-stream
-      // tagged caller has only the ledger
-      val path = VersionedDirs.commit(root) { st =>
-        val allc = all.persist() // write + exact stats recompute
-        try {
-          allc.repartition(col("pbucket"))
-            .sortWithinPartitions("term")
-            .write.partitionBy("pbucket").mode("overwrite").parquet(st)
-          writeStats(allc.select("index_id", "dl").distinct(), st)
-        } finally allc.unpersist()
-        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+      val ts = tombstones(spark, root)
+      val bn = bans(spark, root)
+      DeltaLog.unlessIdle(root, log, ts, bn) {
+        val all0 = ProbeCache.prunedRead(spark, log.genPath +: log.live,
+          "pbucket", 0 until NumBuckets, Some(PostingSchema))
+        val all1 = ts
+          .map(t => all0.join(t, Seq("index_id"), "left_anti"))
+          .getOrElse(all0)
+        // banned rows that slipped in pre-ban scrub physically here —
+        // and the exact stats recompute below then counts survivors only
+        val all = bn
+          .map(b => all1.join(b, Seq("index_id"), "left_anti"))
+          .getOrElse(all1)
+        // LexStream carries its own durable marker, but a non-stream
+        // tagged caller has only the ledger
+        val path = VersionedDirs.commit(root) { st =>
+          val allc = all.persist() // write + exact stats recompute
+          try {
+            allc.repartition(col("pbucket"))
+              .sortWithinPartitions("term")
+              .write.partitionBy("pbucket").mode("overwrite").parquet(st)
+            writeStats(allc.select("index_id", "dl").distinct(), st)
+          } finally allc.unpersist()
+          DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+        }
+        DeltaLog.cleanup(root, listed)
+        Tombstones.reset(root)
+        path
       }
-      DeltaLog.cleanup(root, listed)
-      Tombstones.reset(spark, root)
-      path
     }
 
   /** Integer-BM25 top-k of each query (a bag of terms: one row per

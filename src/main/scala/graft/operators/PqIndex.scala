@@ -401,34 +401,28 @@ object PqIndex {
     DeltaLog.append(root, idxPath, tag) { staging =>
       // the ingestion gate of the ban closure: a banned vector's code
       // rows never commit (see [[addBans]])
-      val bn = bans(spark, root)
-      // batch-scoped cache: the emptiness check and the encode below are
-      // two actions over the same anti-joined frame — persist so the
-      // broadcast gate's batch scan runs once, not twice
-      val gatedCorpus = bn
+      val gatedCorpus = bans(spark, root)
         .map(b => corpus.join(
           b.select(col("index_id").cast("long").as(id)), Seq(id),
-          "left_anti").persist())
+          "left_anti"))
         .getOrElse(corpus)
-      try {
-        !gatedCorpus.isEmpty && {
-          // a by_residual generation's deltas encode residuals against
-          // the SAME frozen coarse centroids + codebooks (pure
-          // assign+argmin, never a Lloyd round — the flat path's
-          // frozen-codebook rule); the frozen permutation applies to
-          // every later scaling — a delta encoded in the unpermuted
-          // basis would ADC-score garbage
-          val e = applyPerm(VectorQuantizer.scaled(gatedCorpus, id, vec),
-            permAt(idxPath))
-          val rows =
-            if (residAt(idxPath))
-              codeRowsResidual(residualFrame(e, coarse.get, id),
-                cent, id, m, dsub)
-            else codeRows(e, id, cent, m, dsub, coarse)
-          writeCodes(rows, staging.getAbsolutePath)
-          true
-        }
-      } finally if (bn.isDefined) { gatedCorpus.unpersist(); () }
+      // a by_residual generation's deltas encode residuals against
+      // the SAME frozen coarse centroids + codebooks (pure
+      // assign+argmin, never a Lloyd round — the flat path's
+      // frozen-codebook rule); the frozen permutation applies to
+      // every later scaling — a delta encoded in the unpermuted
+      // basis would ADC-score garbage
+      val e = applyPerm(VectorQuantizer.scaled(gatedCorpus, id, vec),
+        permAt(idxPath))
+      val rows =
+        if (residAt(idxPath))
+          codeRowsResidual(residualFrame(e, coarse.get, id),
+            cent, id, m, dsub)
+        else codeRows(e, id, cent, m, dsub, coarse)
+      writeCodes(rows, staging.getAbsolutePath)
+      // an empty batch writes no row: the write itself says whether
+      // there is anything to commit
+      ParquetFooters.rows(staging) > 0
     }
   }
 
@@ -439,7 +433,10 @@ object PqIndex {
     * harmless here: ADC SUMS d² per code row, so a vector read from
     * both the folded generation and a not-yet-deleted delta would
     * double its distance — the ledger filter is load-bearing. Clears
-    * the append log and resets tombstones.
+    * the append log and resets tombstones. Returns the serving
+    * generation after the call; unchanged when nothing was pending
+    * ([[DeltaLog.unlessIdle]]; here a ledger left naming a cleaned-up
+    * dir is pending too, so the merge after a fold prunes it).
     */
   def mergeCompact(spark: SparkSession, root: String): String =
     synchronized {
@@ -447,56 +444,64 @@ object PqIndex {
       val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed index under $root")),
         listed)
-      val basePath = log.genPath
-      val (m, dsub, ks, iters) = paramsAt(basePath)
-      val (cc, citers) = coarseAt(basePath)
-      val cent = spark.read.parquet(
-        new java.io.File(basePath, "codebook").toString)
-      val coarse = if (cc > 0)
-        Some(spark.read.parquet(new java.io.File(basePath, "coarse").toString))
-      else None
-      // the base generation keeps its codes under codes/; each delta
-      // dir IS a codes table
-      val all0 = log.live
-        .map(spark.read.parquet(_))
-        .foldLeft(spark.read.parquet(
-          new java.io.File(basePath, "codes").toString))(_.unionByName(_))
-      val all1 = tombstones(spark, root)
-        .map(t => all0.join(t, Seq("index_id"), "left_anti"))
-        .getOrElse(all0)
-      // banned rows that slipped in pre-ban scrub physically here
-      val all = bans(spark, root)
-        .map(b => all1.join(b, Seq("index_id"), "left_anti"))
-        .getOrElse(all1)
-      // untagged appends never redeliver, so the ledger need only
-      // name the listed dirs (a deleted UUID dir can never reappear) —
-      // not the root's whole history — to keep readers of the
-      // pre-merge listing from reading them twice
-      val path = VersionedDirs.commit(root) { st =>
-        writeCodes(all, new java.io.File(st, "codes").toString)
-        cent.write.parquet(new java.io.File(st, "codebook").toString)
-        coarse.foreach(_.write.parquet(
-          new java.io.File(st, "coarse").toString))
-        // qerr carries forward VERBATIM: the codebooks are frozen
-        // across a compaction, so the publish-time fit baseline is
-        // unchanged — dropping it would silently kill
-        // [[retrainOnDrift]] after the first GDPR compaction
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_params.json").toPath,
-          s"""{"m":$m,"dsub":$dsub,"ks":$ks,"iters":$iters,""" +
-            s""""c":$cc,"citers":$citers,""" +
-            s""""resid":${if (residAt(basePath)) 1 else 0},""" +
-            s""""qerr":${qerrAt(basePath)}""" +
-            s"""${permJson(permAt(basePath))}}""")
-        DeltaLog.writeLedger(st, DeltaLog.Folded,
-          listed.map(DeltaLog.nameOf).sorted)
-        java.nio.file.Files.createFile(
-          new java.io.File(st, "_SUCCESS").toPath)
-        ()
+      val ts = tombstones(spark, root)
+      val bn = bans(spark, root)
+      // this family's ledger names only the last merge's listing (see
+      // below), so a serving ledger naming a dir no longer listed is
+      // pending work too: the next generation prunes it
+      val prune = Option.when(log.ledger != listed.map(DeltaLog.nameOf).toSet)(())
+      DeltaLog.unlessIdle(root, log, ts, bn, prune) {
+        val basePath = log.genPath
+        val (m, dsub, ks, iters) = paramsAt(basePath)
+        val (cc, citers) = coarseAt(basePath)
+        val cent = spark.read.parquet(
+          new java.io.File(basePath, "codebook").toString)
+        val coarse = if (cc > 0)
+          Some(spark.read.parquet(new java.io.File(basePath, "coarse").toString))
+        else None
+        // the base generation keeps its codes under codes/; each delta
+        // dir IS a codes table
+        val all0 = log.live
+          .map(spark.read.parquet(_))
+          .foldLeft(spark.read.parquet(
+            new java.io.File(basePath, "codes").toString))(_.unionByName(_))
+        val all1 = ts
+          .map(t => all0.join(t, Seq("index_id"), "left_anti"))
+          .getOrElse(all0)
+        // banned rows that slipped in pre-ban scrub physically here
+        val all = bn
+          .map(b => all1.join(b, Seq("index_id"), "left_anti"))
+          .getOrElse(all1)
+        // untagged appends never redeliver, so the ledger need only
+        // name the listed dirs (a deleted UUID dir can never reappear) —
+        // not the root's whole history — to keep readers of the
+        // pre-merge listing from reading them twice
+        val path = VersionedDirs.commit(root) { st =>
+          writeCodes(all, new java.io.File(st, "codes").toString)
+          cent.write.parquet(new java.io.File(st, "codebook").toString)
+          coarse.foreach(_.write.parquet(
+            new java.io.File(st, "coarse").toString))
+          // qerr carries forward VERBATIM: the codebooks are frozen
+          // across a compaction, so the publish-time fit baseline is
+          // unchanged — dropping it would silently kill
+          // [[retrainOnDrift]] after the first GDPR compaction
+          java.nio.file.Files.writeString(
+            new java.io.File(st, "_params.json").toPath,
+            s"""{"m":$m,"dsub":$dsub,"ks":$ks,"iters":$iters,""" +
+              s""""c":$cc,"citers":$citers,""" +
+              s""""resid":${if (residAt(basePath)) 1 else 0},""" +
+              s""""qerr":${qerrAt(basePath)}""" +
+              s"""${permJson(permAt(basePath))}}""")
+          DeltaLog.writeLedger(st, DeltaLog.Folded,
+            listed.map(DeltaLog.nameOf).sorted)
+          java.nio.file.Files.createFile(
+            new java.io.File(st, "_SUCCESS").toPath)
+          ()
+        }
+        DeltaLog.cleanup(root, listed)
+        Tombstones.reset(root)
+        path
       }
-      DeltaLog.cleanup(root, listed)
-      Tombstones.reset(spark, root)
-      path
     }
 
   /** The frozen (m, dsub, ks, iters) of the newest committed index. */

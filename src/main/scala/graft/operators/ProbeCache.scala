@@ -158,8 +158,12 @@ private[graft] object ProbeCache {
     * carries it as PartitionFilters. A root with no touched directory
     * contributes nothing; when none contributes the result is an
     * empty frame of the same schema. Lists directories driver-side
-    * and launches no Spark job (up to Spark's parallel-listing
-    * threshold of touched directories per root).
+    * and launches no Spark job: each root's directories are split
+    * into scans of at most Spark's parallel-listing threshold
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`), so
+    * no scan lists its paths with a job; a root within the threshold
+    * stays one scan. Rewrites read a whole generation through it with
+    * every bucket touched.
     */
   def prunedRead(spark: SparkSession, roots: Seq[String],
                  bucketCol: String, touched: Seq[Int],
@@ -183,10 +187,14 @@ private[graft] object ProbeCache {
     val full =
       if (data.fieldNames.contains(bucketCol)) data
       else data.add(bucketCol, IntegerType)
-    val reads = dirs.collect { case (r, ds) if ds.nonEmpty =>
-      spark.read.schema(full).option("basePath", r)
-        .parquet(ds.map(_.getAbsolutePath): _*)
-        .filter(col(bucketCol).isin(touched.map(Int.box): _*))
+    val perScan = math.max(1, spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    val reads = dirs.flatMap { case (r, ds) =>
+      ds.grouped(perScan).map { chunk =>
+        spark.read.schema(full).option("basePath", r)
+          .parquet(chunk.map(_.getAbsolutePath): _*)
+          .filter(col(bucketCol).isin(touched.map(Int.box): _*))
+      }
     }
     // no path at all: an empty scan of the same schema (no listing)
     if (reads.isEmpty) spark.read.schema(full).parquet()

@@ -37,8 +37,9 @@ object PurgeCascade {
 
   /** One artifact registered for propagation: family-tagged closures
     * over its root. `compact` receives the deletion frame (the same
-    * one [[purge]] passed to `addTombstones`) and returns the new
-    * committed generation — Targets are STATELESS values, safe to
+    * one [[purge]] passed to `addTombstones`) and returns the serving
+    * generation after the call; unchanged when nothing was pending
+    * (an empty deletion set, say) — Targets are STATELESS values, safe to
     * build once and reuse across any number of (including concurrent)
     * cascades; the families' own `synchronized` commits serialize the
     * artifact writes.
@@ -201,7 +202,9 @@ object PurgeCascade {
         .select("word").distinct(), Seq("word"), "left_anti")
   }
 
-  /** The new committed generation of one propagated artifact. */
+  /** One propagated artifact: `newVersion` is the serving generation
+    * after the call; unchanged when nothing was pending.
+    */
   final case class Report(family: String, root: String, newVersion: String)
 
   /** Propagate one deletion set to every registered artifact:

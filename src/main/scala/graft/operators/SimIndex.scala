@@ -183,62 +183,63 @@ object SimIndex {
     DeltaLog.append(root, genPath, tag) { staging =>
       // the ingestion gate of the ban closure: a banned vector's key
       // rows never enter the delta (see [[addBans]])
-      val bn = Bans.get(corpus.sparkSession, root)
-      // batch-scoped cache: the emptiness check and the write below are
-      // two actions over the same anti-joined frame — persist so the
-      // broadcast gate's batch scan runs once, not twice
-      val gated = bn
+      val gated = Bans.get(corpus.sparkSession, root)
         .map(b => corpus.join(
           b.select(col("index_id").cast("long").as(id)), Seq(id),
-          "left_anti").persist())
+          "left_anti"))
         .getOrElse(corpus)
-      try {
-        !gated.isEmpty && {
-          keyRows(gated, id, vec, bits, tables)
-            .repartition(col("pbucket"))
-            .sortWithinPartitions("tbl", "bucket")
-            .write.partitionBy("pbucket").mode("overwrite")
-            .parquet(staging.getAbsolutePath)
-          true
-        }
-      } finally if (bn.isDefined) { gated.unpersist(); () }
+      // an empty batch writes no part file: the write itself says
+      // whether there is anything to commit
+      keyRows(gated, id, vec, bits, tables)
+        .repartition(col("pbucket"))
+        .sortWithinPartitions("tbl", "bucket")
+        .write.partitionBy("pbucket").mode("overwrite")
+        .parquet(staging.getAbsolutePath)
+      ParquetFooters.rows(staging) > 0
     }
   }
 
-  /** Fold every committed delta into the next base generation and
-    * clear the append log. Pure row union over existing artifacts —
-    * no re-hashing; params carry over unchanged.
+  /** Fold every committed delta and pending delete or ban into the
+    * next base generation and clear the append log. Pure row union
+    * over existing artifacts — no re-hashing; params carry over
+    * unchanged. Every root is read through its bucket directories
+    * ([[ProbeCache.prunedRead]]): no listing or schema-inference job.
+    * Returns the serving generation after the call; unchanged when
+    * nothing was pending ([[DeltaLog.unlessIdle]]).
     */
   def mergeCompact(spark: SparkSession, root: String): String = synchronized {
     val listed = deltas(root)
     val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
       throw new IllegalStateException(s"no committed index under $root")),
       listed)
-    val (bits, tables) = paramsAt(log.genPath)
-    val all0 = (log.genPath +: log.live)
-      .map(p => spark.read.parquet(p))
-      .reduce(_.unionByName(_))
-    // fold pending deletes into the rewrite (pure row filter, no
-    // re-hashing), then reset the log
-    val all1 = tombstones(spark, root)
-      .map(t => all0.join(t, Seq("index_id"), "left_anti"))
-      .getOrElse(all0)
-    // banned rows that slipped in pre-ban scrub physically here
-    val all = bans(spark, root)
-      .map(b => all1.join(b, Seq("index_id"), "left_anti"))
-      .getOrElse(all1)
-    val path = VersionedDirs.commit(root) { st =>
-      all.repartition(col("pbucket"))
-        .sortWithinPartitions("tbl", "bucket")
-        .write.partitionBy("pbucket").mode("overwrite").parquet(st)
-      java.nio.file.Files.writeString(
-        new java.io.File(st, "_params.json").toPath,
-        s"""{"bits":$bits,"tables":$tables}""")
-      DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+    val ts = tombstones(spark, root)
+    val bn = bans(spark, root)
+    DeltaLog.unlessIdle(root, log, ts, bn) {
+      val (bits, tables) = paramsAt(log.genPath)
+      val all0 = ProbeCache.prunedRead(spark, log.genPath +: log.live,
+        "pbucket", 0 until NumBuckets)
+      // fold pending deletes into the rewrite (pure row filter, no
+      // re-hashing), then reset the log
+      val all1 = ts
+        .map(t => all0.join(t, Seq("index_id"), "left_anti"))
+        .getOrElse(all0)
+      // banned rows that slipped in pre-ban scrub physically here
+      val all = bn
+        .map(b => all1.join(b, Seq("index_id"), "left_anti"))
+        .getOrElse(all1)
+      val path = VersionedDirs.commit(root) { st =>
+        all.repartition(col("pbucket"))
+          .sortWithinPartitions("tbl", "bucket")
+          .write.partitionBy("pbucket").mode("overwrite").parquet(st)
+        java.nio.file.Files.writeString(
+          new java.io.File(st, "_params.json").toPath,
+          s"""{"bits":$bits,"tables":$tables}""")
+        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+      }
+      DeltaLog.cleanup(root, listed)
+      Tombstones.reset(root)
+      path
     }
-    DeltaLog.cleanup(root, listed)
-    Tombstones.reset(spark, root)
-    path
   }
 
   /** The shared key layout of [[publish]] and [[appendDelta]]. */

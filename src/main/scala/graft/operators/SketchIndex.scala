@@ -206,7 +206,9 @@ object SketchIndex {
   }
 
   /** Fold the delta log physically: commit the cell-sum as the next
-    * generation, recording the consumed dirs in its ledger.
+    * generation, recording the consumed dirs in its ledger. Returns the
+    * serving generation after the call; unchanged when nothing was
+    * pending — no live delta ([[DeltaLog.unlessIdle]]).
     */
   def mergeCompact(spark: SparkSession, root: String): String =
     rewrite(spark, root)((_, served) => served)
@@ -288,20 +290,23 @@ object SketchIndex {
     val purgedNames = DeltaLog.ledger(genPath, DeltaLog.Purged)
     purgeTag.foreach { t => if (purgedNames(t)) return genPath }
     val log = new DeltaLog.Snapshot(genPath, listed)
-    val params = paramsText(genPath)
-    val cells = f(geometryAt(genPath), servedCells(spark, genPath, log.live))
-    val path = VersionedDirs.commit(root) { st =>
-      writeCells(cells, new java.io.File(st, "cells"))
-      java.nio.file.Files.writeString(
-        new java.io.File(st, "_params.json").toPath, params)
-      DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
-      DeltaLog.writeLedger(st, DeltaLog.Purged, purgedNames ++ purgeTag)
-      java.nio.file.Files.createFile(
-        new java.io.File(st, "_SUCCESS").toPath)
-      ()
+    // a purge always rewrites; a merge only over live deltas
+    DeltaLog.unlessIdle(root, log, purgeTag) {
+      val params = paramsText(genPath)
+      val cells = f(geometryAt(genPath), servedCells(spark, genPath, log.live))
+      val path = VersionedDirs.commit(root) { st =>
+        writeCells(cells, new java.io.File(st, "cells"))
+        java.nio.file.Files.writeString(
+          new java.io.File(st, "_params.json").toPath, params)
+        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
+        DeltaLog.writeLedger(st, DeltaLog.Purged, purgedNames ++ purgeTag)
+        java.nio.file.Files.createFile(
+          new java.io.File(st, "_SUCCESS").toPath)
+        ()
+      }
+      DeltaLog.cleanup(root, log.listed)
+      path
     }
-    DeltaLog.cleanup(root, log.listed)
-    path
   }
 
   /** Drop every generation but the newest committed one. */

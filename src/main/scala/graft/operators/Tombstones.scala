@@ -54,11 +54,22 @@ private[graft] object Tombstones {
       .filter(p => ParquetFooters.rows(new java.io.File(p)) > 0)
       .map(spark.read.schema(IdSchema).parquet(_))
 
-  /** Reset to the empty set (after a compaction folded the deletes). */
-  def reset(spark: SparkSession, indexRoot: String): Unit = {
-    VersionedDirs.commit(root(indexRoot)) { st =>
-      spark.range(0).select(col("id").as("index_id")).write.parquet(st)
-    }
+  /** Reset to the empty set (after a compaction folded the deletes):
+    * commit a `_SUCCESS`-only generation — zero footer rows, which
+    * [[get]] treats as none and [[add]] reads as empty through
+    * [[IdSchema]] — and only when the committed set is non-empty.
+    * Launches no Spark job.
+    */
+  def reset(indexRoot: String): Unit = {
+    val tr = root(indexRoot)
+    if (VersionedDirs.resolve(tr)
+        .exists(p => ParquetFooters.rows(new java.io.File(p)) > 0))
+      VersionedDirs.commit(tr) { st =>
+        val dir = new java.io.File(st)
+        dir.mkdirs()
+        java.nio.file.Files.createFile(new java.io.File(dir, "_SUCCESS").toPath)
+        ()
+      }
     ()
   }
 }

@@ -233,7 +233,7 @@ final class DedupStream(spark: SparkSession, root: String,
         .sortWithinPartitions("band", "band_key")
         .write.partitionBy("bucket").mode("overwrite").parquet(path)
       if (ts.isDefined)
-        graft.operators.Tombstones.reset(spark, compactedRoot)
+        graft.operators.Tombstones.reset(compactedRoot)
       DedupIndex.retainLatestGenerations(compactedRoot)
       Some(path)
     }
