@@ -43,9 +43,12 @@ import org.apache.spark.sql.functions._
   * delete story). A token that made it into `merges/` itself — it
   * was frequent enough to win a merge round — can only be forgotten
   * by re-training without it; [[retrainOnFertility]]'s re-publish
-  * path is the vehicle (pass the scrubbed corpus).
+  * path is the vehicle (pass the scrubbed corpus). The same PII
+  * closure is why [[folded]] matters here although memo rows are
+  * derived: a tagged fold replayed after [[purgeWords]] consumed its
+  * delta would re-commit the purged word STRINGS.
   */
-object BpeIndex {
+object BpeIndex extends IndexFamily {
 
   /** Memo partition-dir count — layout constant, as
     * [[DedupIndex.NumBuckets]].
@@ -73,8 +76,7 @@ object BpeIndex {
     * merges.
     */
   private[graft] def memoAll(spark: SparkSession, root: String): DataFrame = {
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val idxPath = head(root)
     (new java.io.File(idxPath, "memo").toString +:
         DeltaLog.live(root, idxPath))
       .map(p => spark.read.schema(MemoSchema).parquet(p))
@@ -126,8 +128,7 @@ object BpeIndex {
     // the delta log is out of scope
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
-      else resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
+      else head(root)
     val deltaSnap = if (pinned) Nil else DeltaLog.live(root, idxPath)
     val wb = ProbeCache.keyed(
       words.select("word").distinct()
@@ -153,9 +154,6 @@ object BpeIndex {
       // derivation) — fold duplicates
       .groupBy("word").agg(min("n_sub").as("n_sub"))
 
-  /** Highest committed version under `root`, if any. */
-  def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
-
   private def wordsOf(docs: DataFrame, id: String, text: String) =
     docs.select(col(id),
         explode(graft.functions.TextFunctions.words(col(text))).as("word"))
@@ -176,7 +174,6 @@ object BpeIndex {
   def publish(docs: DataFrame, id: String, text: String, rounds: Int,
               root: String): String = synchronized {
     val log = resolve(root).map(new DeltaLog.Snapshot(_, deltas(root)))
-    val foldedNames = log.fold(Seq.empty[String])(_.consumed)
     val path = VersionedDirs.commit(root) { staging =>
       val vocab = wordsOf(docs, id, text)
         .groupBy("word").agg(count(lit(1)).as("freq"))
@@ -200,11 +197,10 @@ object BpeIndex {
         .first()
       val fert =
         if (f.getLong(0) == 0L) 0L else f.getLong(1) * 1000L / f.getLong(0)
-      java.nio.file.Files.writeString(
-        new java.io.File(staging, "_params.json").toPath,
-        s"""{"rounds":$rounds,"fert":$fert}""")
-      if (foldedNames.nonEmpty)
-        DeltaLog.writeLedger(staging, DeltaLog.Folded, foldedNames)
+      Sidecar.write(staging, Sidecar.Params, "rounds" -> rounds,
+        "fert" -> fert)
+      DeltaLog.writeLedger(staging, DeltaLog.Folded,
+        log.fold(Seq.empty[String])(_.consumed))
       java.nio.file.Files.createFile(
         new java.io.File(staging, "_SUCCESS").toPath)
       ()
@@ -215,23 +211,13 @@ object BpeIndex {
 
   /** The frozen round count of the newest committed generation. */
   def rounds(root: String): Int =
-    """"rounds":(\d+)""".r.findFirstMatchIn(paramsText(root))
-      .map(_.group(1).toInt).getOrElse(
-        throw new IllegalStateException(s"malformed params under $root"))
+    Sidecar.read(head(root), Sidecar.Params).int("rounds")
 
   /** The train corpus's fertility (×10³ subwords per word) recorded
     * at publish — [[retrainOnFertility]]'s baseline.
     */
   def publishFertility(root: String): Long =
-    """"fert":(\d+)""".r.findFirstMatchIn(paramsText(root))
-      .fold(0L)(_.group(1).toLong)
-
-  private def paramsText(root: String): String = {
-    val p = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(p, "_params.json"))
-  }
+    Sidecar.read(head(root), Sidecar.Params).long("fert", 0L)
 
   /** The frozen merge list of one resolved generation, in round
     * order — R rows collected to the driver (bounded by the round
@@ -263,9 +249,6 @@ object BpeIndex {
 
   // ------------------------------------------------------ memo deltas
 
-  /** The committed memo delta roots. */
-  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
-
   /** Commit a batch's newly-derived segmentations (word, n_sub) as a
     * memo delta — batch cost, the committed memo never read or
     * rewritten. Duplicate rows across generations are harmless for
@@ -280,10 +263,7 @@ object BpeIndex {
                tag: String = java.util.UUID.randomUUID().toString): String =
     synchronized {
       DeltaLog.requireTag(tag)
-      val gen = resolve(root)
-      require(gen.isDefined,
-        s"no committed index under $root — publish first")
-      DeltaLog.append(root, gen.get, tag) { staging =>
+      DeltaLog.append(root, head(root), tag) { staging =>
         seg.select(col("word"), col("n_sub"))
           .withColumn("pbucket", pbucketOf(col("word")))
           .repartition(col("pbucket"))
@@ -293,12 +273,6 @@ object BpeIndex {
         true
       }
     }
-
-  /** True when a fold tagged `tag` has already committed — live in
-    * the delta log, or consumed by a purge.
-    */
-  def folded(root: String, tag: String): Boolean =
-    DeltaLog.contains(root, tag)
 
   /** Drop memo rows for `words` (one column `word`) — the word-level
     * deletion surface (see the class PII note): rewrite base ∪ deltas
@@ -311,8 +285,7 @@ object BpeIndex {
     */
   def purgeWords(spark: SparkSession, words: DataFrame,
                  root: String): String = synchronized {
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val idxPath = head(root)
     // LIVE deltas only: a leftover dir from a prior purge's crash
     // window still holds the previously-purged word strings, and
     // unioning it here would write them back into the new base
@@ -344,11 +317,6 @@ object BpeIndex {
     }
     DeltaLog.cleanup(root, log.listed)
     path
-  }
-
-  /** Drop every generation but the newest committed one. */
-  def vacuumOld(root: String): Unit = synchronized {
-    VersionedDirs.retainLatestGenerations(root, keep = 1)
   }
 
   // ------------------------------------------------------ tokenize probe
@@ -429,8 +397,7 @@ object BpeIndex {
     // the delta log is out of scope
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
-      else resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
+      else head(root)
     val deltaSnap = if (pinned) Nil else DeltaLog.live(root, idxPath)
     val merges = mergesAt(spark, idxPath)
     val occ0 = wordsOf(docs, id, text)

@@ -26,19 +26,29 @@ import org.apache.spark.sql.functions._
   * STATIC partition filter — bounded by the bucket-count constant, the
   * same bounded-by-design class as the HLL register map, never by
   * data volume.
+  *
+  * Deletes: the q172 purge sweep meets derived state — deleting a
+  * document from the corpus must also make it unfindable through the
+  * INDEX, or a redelivered copy of a purged document resurfaces a link
+  * to data the pipeline promised to forget. Deletes follow the
+  * tombstone-then-compact pattern every LSM/lakehouse uses
+  * ([[MaskedIndexFamily]]): probes anti-join the tombstone set
+  * immediately, and [[compact]] rewrites the index WITHOUT the
+  * tombstoned rows (pure row filter, no re-signing). The family has no
+  * append log: [[deltas]] is empty, [[folded]] false.
+  *
+  * Bans: tombstones reset at [[compact]], so a backfill re-submitting
+  * a purged doc id would re-enter the index; a ban survives
+  * compaction, the streaming ingest gate filters banned ids out of
+  * arriving batches, and every probe masks them besides.
   */
-object DedupIndex {
+object DedupIndex extends MaskedIndexFamily {
 
   val NumBuckets = 64
 
   /** Stable bucket of a band row — the partition key of the index. */
   def bucketOf(band: Column, bandKey: Column): Column =
     pmod(xxhash64(band, bandKey), lit(NumBuckets.toLong)).cast("int")
-
-  /** Highest committed (`_SUCCESS`-marked) index version under `root`,
-    * or None before the first publish.
-    */
-  def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
 
   /** Publish the banded index of `indexSig` (a MinHash signature
     * frame) as the next version under `root`: one row per (id, band,
@@ -65,48 +75,6 @@ object DedupIndex {
   private[graft] def retainLatestGenerations(root: String): Unit =
     VersionedDirs.retainLatestGenerations(root)
 
-  // ------------------------------------------------------ delete support
-  //
-  // The q172 purge sweep meets derived state: deleting a document
-  // from the corpus must also make it unfindable through the INDEX,
-  // or a redelivered copy of a purged document resurfaces a link to
-  // data the pipeline promised to forget. Deletes follow the
-  // tombstone-then-compact pattern every LSM/lakehouse uses: a delete
-  // request appends ids to a (small, cumulative) versioned tombstone
-  // set that probes anti-join immediately — O(deletes) cost, no index
-  // rewrite on the delete path — and the next compaction rewrites the
-  // index WITHOUT the tombstoned rows (pure row filter, no
-  // re-signing) and resets the tombstone set. Both steps ride the
-  // same [[VersionedDirs]] commit protocol, so readers pinned to the
-  // previous generation are never disturbed.
-
-  /** Record `ids` as deleted — see [[Tombstones.add]]. */
-  def addTombstones(spark: SparkSession, ids: DataFrame, idCol: String,
-                    root: String): String = synchronized {
-    Tombstones.add(spark, ids, idCol, root)
-  }
-
-  /** The committed tombstone set, if any (empty-after-compact counts
-    * as none).
-    */
-  def tombstones(spark: SparkSession, root: String): Option[DataFrame] =
-    Tombstones.get(spark, root)
-
-  /** Durably ban doc `ids` — the re-ingestion closure ([[Bans]]):
-    * tombstones reset at [[compact]], so a backfill re-submitting a
-    * purged doc id would re-enter the index; a ban survives
-    * compaction, the streaming ingest gate filters banned ids out of
-    * arriving batches, and every probe masks them besides.
-    */
-  def addBans(spark: SparkSession, ids: DataFrame, idCol: String,
-              root: String): String = synchronized {
-    Bans.add(spark, ids, idCol, root)
-  }
-
-  /** The committed ban set, if any. */
-  def bans(spark: SparkSession, root: String): Option[DataFrame] =
-    Bans.get(spark, root)
-
   /** Rewrite the committed index WITHOUT the tombstoned (and banned)
     * rows as the next version (a pure row filter over the existing
     * artifact, read through its bucket directories
@@ -121,39 +89,16 @@ object DedupIndex {
     * reader grace period passes, which drops every generation but the
     * compacted head.
     */
-  def compact(spark: SparkSession, root: String): String = synchronized {
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    val ts = tombstones(spark, root)
-    val bn = bans(spark, root)
+  def compact(spark: SparkSession, root: String): String =
     // no append log: the generation alone, pending only on its masks
-    DeltaLog.unlessIdle(root, new DeltaLog.Snapshot(idxPath, Nil), ts, bn) {
-      val idx = ProbeCache.prunedRead(spark, Seq(idxPath), "bucket",
-        0 until NumBuckets)
-      val filtered0 = ts
-        .map(t => idx.join(t, Seq("index_id"), "left_anti"))
-        .getOrElse(idx)
-      // banned rows that slipped in pre-ban scrub physically here too
-      val filtered = bn
-        .map(b => filtered0.join(b, Seq("index_id"), "left_anti"))
-        .getOrElse(filtered0)
-      val path = VersionedDirs.commit(root) { st =>
-        filtered.repartition(col("bucket"))
-          .sortWithinPartitions("band", "band_key")
-          .write.partitionBy("bucket").mode("overwrite").parquet(st)
-      }
-      // reset: commit an empty set so probes stop paying the anti-join
-      Tombstones.reset(root)
-      path
+    // (banned rows that slipped in pre-ban scrub physically here too)
+    compactWith(spark, root) { (log, masks, st) =>
+      masks.scrub(ProbeCache.prunedRead(spark, Seq(log.genPath), "bucket",
+          0 until NumBuckets))
+        .repartition(col("bucket"))
+        .sortWithinPartitions("band", "band_key")
+        .write.partitionBy("bucket").mode("overwrite").parquet(st)
     }
-  }
-
-  /** Drop every index generation but the newest committed one — the
-    * post-grace step of a compliance purge (see [[compact]]).
-    */
-  def vacuumOld(root: String): Unit = synchronized {
-    VersionedDirs.retainLatestGenerations(root, keep = 1)
-  }
 
   /** NEW × persisted-INDEX candidate pairs with bucket pruning: band
     * the new batch, collect its touched buckets (≤ [[NumBuckets]]
@@ -256,31 +201,22 @@ object DedupIndex {
     */
   def probeBanded(spark: SparkSession, newBands: DataFrame,
                   root: String): DataFrame = {
-    // tombstones are read BEFORE resolving the generation: applying a
+    // the masks are read BEFORE resolving the generation: applying a
     // pre-reset tombstone set to either generation is always correct
     // (old: the filter is needed; compacted: the rows are already
     // gone, anti-join is a no-op), whereas the reverse order lets a
     // probe that resolved the OLD generation read the log AFTER a
     // concurrent compact's reset — and the purged rows resurface for
     // exactly that probe. Same discipline in SimIndex and PqIndex.
-    val ts = tombstones(spark, root)
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val masks = this.masks(spark, root)
+    val idxPath = head(root)
     val touched = newBands.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-    val idx = ProbeCache.prunedRead(spark, Seq(idxPath), "bucket", touched)
     // uncompacted deletes are honored at probe time: the tombstone
-    // anti-join is O(deletes-since-compaction); no broadcast HINT —
-    // a mass purge can be arbitrarily large, so the strategy is left
-    // to AQE (broadcast when the runtime size allows)
-    val live0 = ts
-      .map(t => idx.join(t, Seq("index_id"), "left_anti"))
-      .getOrElse(idx)
-    // bans mask like tombstones but never reset (the re-ingestion
-    // closure — see [[addBans]])
-    val live = bans(spark, root)
-      .map(b => live0.join(b, Seq("index_id"), "left_anti"))
-      .getOrElse(live0)
+    // anti-join is O(deletes-since-compaction); bans mask like
+    // tombstones but never reset
+    val live = masks.scrub(
+      ProbeCache.prunedRead(spark, Seq(idxPath), "bucket", touched))
     newBands.join(live, Seq("bucket", "band", "band_key"))
       .select(col("new_id"), col("index_id")).distinct()
   }

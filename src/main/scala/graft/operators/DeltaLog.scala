@@ -16,8 +16,8 @@ import java.io.File
   * them in its `_folded.json` — cumulative across generations — and
   * [[SketchIndex.purge]] records its purge tags the same way in
   * `_purged.json`. Both are a sorted JSON string array,
-  * `["batch-a","batch-b"]`; an absent file reads as empty. The ledger
-  * is what closes two hazards:
+  * `["batch-a","batch-b"]`; an empty ledger is never written, and an
+  * absent file reads as empty. The ledger is what closes two hazards:
   *   - a redelivered tag arriving after a merge consumed its dir must
   *     be ABSORBED, or it re-commits rows the generation already
   *     holds (resurrecting purged ids, or double-counting in the sum
@@ -34,18 +34,26 @@ import java.io.File
   *
   * Read order for probes: list the log BEFORE resolving the
   * generation, then drop the dirs that generation's ledger names
-  * ([[unfolded]]). A probe that resolves the OLD generation never
-  * misses deltas a racing merge deleted; one that resolves the NEW
-  * generation skips exactly the dirs it folded.
+  * ([[unfolded]]). A probe that resolves the NEW generation skips
+  * exactly the dirs it folded. A probe that resolves the OLD
+  * generation is NOT safe yet: a merge that commits between the
+  * probe's listing and its file reads deletes the listed dirs right
+  * after its commit ([[cleanup]]), and the probe fails on the vanished
+  * dir (reproduced: `SketchIndex.estimateOn` across a regrow failed
+  * with `[PATH_NOT_FOUND] …/deltas/batch-d1`). That window is open.
+  * The six compactions reach [[cleanup]] through one call, in
+  * [[MaskedIndexFamily.compactWith]], which is where the fix (a
+  * deferred delete, or a reader retry on the new generation) lands;
+  * the re-publishes of Sketch, Pq and Bpe and the rewrites of
+  * [[SketchIndex]] (merge, purge) and [[BpeIndex.purgeWords]] call
+  * [[cleanup]] directly and need the same change.
   *
   * Idle compactions ([[unlessIdle]]): every family's compaction, under
   * its lock and in the same read order (list, then resolve), has work
   * only when the log holds a live delta or a mask set — tombstones or
   * bans — is non-empty. With nothing pending it runs [[cleanup]] on the
   * listed dirs (already-folded leftovers) and returns the resolved
-  * generation: no Spark job, no version committed. ([[PqIndex]], whose
-  * ledger names only its last merge's listing, also counts a ledger
-  * left naming a dir that is no longer listed.)
+  * generation: no Spark job, no version committed.
   */
 private[graft] object DeltaLog {
 
@@ -88,10 +96,14 @@ private[graft] object DeltaLog {
     else decode(java.nio.file.Files.readString(f.toPath))
   }
 
-  def writeLedger(dir: String, file: String, names: Iterable[String]): Unit = {
-    java.nio.file.Files.writeString(new File(dir, file).toPath, encode(names))
-    ()
-  }
+  /** Write ledger `file` into `dir` — nothing for an empty set, which
+    * reads back as empty ([[ledger]]).
+    */
+  def writeLedger(dir: String, file: String, names: Iterable[String]): Unit =
+    if (names.nonEmpty) {
+      java.nio.file.Files.writeString(new File(dir, file).toPath, encode(names))
+      ()
+    }
 
   // ------------------------------------------------------ read sets
 

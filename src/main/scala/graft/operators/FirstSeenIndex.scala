@@ -35,10 +35,33 @@ import org.apache.spark.sql.functions._
   * over the touched buckets (duplicate shingle rows across
   * generations are harmless — min is idempotent, the [[SimIndex]]
   * stance) and folded physically at compaction cadence. Folds ARE
-  * recorded in the [[DeltaLog]] ledger despite min-idempotence: the
-  * idempotence argument breaks across a purge — see [[folded]].
+  * recorded in the [[DeltaLog]] ledger despite min-idempotence: "a
+  * double fold is harmless" only holds while no DELETE happened in
+  * between — a redelivery arriving after a purge + [[mergeCompact]]
+  * (tombstones reset) would re-commit the delta and resurrect purged
+  * doc ids into the served first-occurrence map, so the ledger half of
+  * [[folded]] is load-bearing.
+  *
+  * Deletes ([[MaskedIndexFamily]]'s shared [[Tombstones]] log) carry a
+  * subtlety no sibling has: the tombstoned ids are DOC ids, while the
+  * index rows are keyed by shingle with the doc as a VALUE. Purging a
+  * doc that "owns" first-occurrence rows must not just hide those
+  * rows — the never-ingested truth is that the next-earliest
+  * SURVIVING holder becomes the first occurrence. Probes resolve the
+  * min over surviving rows (a delta's later holder takes over
+  * immediately); [[mergeCompact]]'s optional repair source restores
+  * exact never-ingested semantics for shingles whose every RECORDED
+  * holder was purged.
+  *
+  * Bans: the min-semantics make a leak especially sharp — first
+  * occurrence is min(doc_id), and GDPR requests skew toward EARLY ids,
+  * so a banned early doc re-folded by a backfill would steal
+  * first-occurrence back from the survivor the purge reassigned it to,
+  * silently flipping ownership (and downstream novelty verdicts)
+  * corpus-wide. Banned ids are gated at [[fold]], masked at [[probe]],
+  * and scrubbed at [[mergeCompact]].
   */
-object FirstSeenIndex {
+object FirstSeenIndex extends MaskedIndexFamily {
 
   /** Partition-dir count — layout constant ([[DedupIndex.NumBuckets]]
     * class).
@@ -50,9 +73,6 @@ object FirstSeenIndex {
     */
   def pbucketOf(s: Column): Column =
     pmod(xxhash64(s), lit(NumBuckets.toLong)).cast("int")
-
-  /** Highest committed version under `root`, if any. */
-  def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
 
   /** The shared bucketed layout of [[publish]], [[fold]] and
     * [[mergeCompact]]: one row per distinct shingle with the minimum
@@ -77,9 +97,6 @@ object FirstSeenIndex {
 
   // ------------------------------------------------------ delta folds
 
-  /** The committed delta roots. */
-  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
-
   /** Fold a processed batch in at BATCH cost: commit the batch's OWN
     * (shingle, min doc) as a delta — the committed map is never read,
     * never rewritten (the r10 form re-aggregated and rewrote all 64
@@ -96,18 +113,10 @@ object FirstSeenIndex {
            tag: String = java.util.UUID.randomUUID().toString): String =
     synchronized {
       DeltaLog.requireTag(tag)
-      val gen = resolve(root)
-      require(gen.isDefined,
-        s"no committed index under $root — publish a base first")
-      DeltaLog.append(root, gen.get, tag) { staging =>
-        // the ingestion gate of the ban closure: a banned doc's rows
-        // never enter the delta, so it can never re-claim
-        // first-occurrence through the min-union (see [[addBans]])
-        val gated = bans(spark, root)
-          .map(b => batchShingles.join(
-            b.select(col("index_id").as("doc_id")), Seq("doc_id"),
-            "left_anti"))
-          .getOrElse(batchShingles)
+      DeltaLog.append(root, head(root), tag) { staging =>
+        // a banned doc's rows never enter the delta, so it can never
+        // re-claim first-occurrence through the min-union
+        val gated = gate(spark, root, batchShingles, "doc_id")
         // an empty batch writes no part file: the write itself says
         // whether there is anything to commit
         writeMap(gated.groupBy("s").agg(min("doc_id").as("first_doc")),
@@ -115,66 +124,6 @@ object FirstSeenIndex {
         ParquetFooters.rows(staging) > 0
       }
     }
-
-  /** True when a fold tagged `tag` has already committed. "Min is
-    * idempotent, a double fold is harmless" only holds while no
-    * DELETE happened in between: a redelivery arriving after a purge
-    * + [[mergeCompact]] (tombstones reset) would re-commit the delta
-    * and resurrect purged doc ids into the served first-occurrence
-    * map, so the ledger half of this check is load-bearing.
-    */
-  def folded(root: String, tag: String): Boolean =
-    DeltaLog.contains(root, tag)
-
-  // ------------------------------------------------------ deletes
-  //
-  // Shared [[Tombstones]] log, same O(deletes) commit as the three
-  // sibling families — but deletion here has a subtlety none of them
-  // have: the tombstoned ids are DOC ids, while the index rows are
-  // keyed by shingle with the doc as a VALUE. Purging a doc that
-  // "owns" first-occurrence rows must not just hide those rows — the
-  // never-ingested truth is that the next-earliest SURVIVING holder
-  // becomes the first occurrence. Probes resolve the min over
-  // surviving rows (a delta's later holder takes over immediately);
-  // [[mergeCompact]]'s optional repair source restores exact
-  // never-ingested semantics for shingles whose every RECORDED holder
-  // was purged.
-
-  /** Record doc `ids` as purged — their first-occurrence rows vanish
-    * from every probe immediately (min-union over surviving rows),
-    * removed/reassigned physically at the next [[mergeCompact]].
-    */
-  def addTombstones(spark: SparkSession, ids: DataFrame, idCol: String,
-                    root: String): String = synchronized {
-    Tombstones.add(spark, ids, idCol, root)
-  }
-
-  /** The committed purged-doc set, if any. */
-  def tombstones(spark: SparkSession, root: String): Option[DataFrame] =
-    Tombstones.get(spark, root)
-
-  /** Durably ban doc `ids` — the re-ingestion closure ([[Bans]]),
-    * and in THIS family the min-semantics make a leak especially
-    * sharp: first occurrence is min(doc_id), and GDPR requests skew
-    * toward EARLY ids — a banned early doc re-folded by a backfill
-    * would steal first-occurrence back from the survivor the purge
-    * reassigned it to, silently flipping ownership (and downstream
-    * novelty verdicts) corpus-wide. Banned ids are gated at [[fold]],
-    * masked at [[probe]], and scrubbed at [[mergeCompact]].
-    */
-  def addBans(spark: SparkSession, ids: DataFrame, idCol: String,
-              root: String): String = synchronized {
-    Bans.add(spark, ids, idCol, root)
-  }
-
-  /** The committed ban set, if any. */
-  def bans(spark: SparkSession, root: String): Option[DataFrame] =
-    Bans.get(spark, root)
-
-  /** Drop every index generation but the newest committed one. */
-  def vacuumOld(root: String): Unit = synchronized {
-    VersionedDirs.retainLatestGenerations(root, keep = 1)
-  }
 
   /** Fold every committed delta and pending purge into the next
     * generation: min-union of base ∪ deltas, minus rows whose
@@ -194,52 +143,36 @@ object FirstSeenIndex {
     */
   def mergeCompact(spark: SparkSession, root: String,
                    reassignSrc: Option[DataFrame] = None): String =
-    synchronized {
-      val listed = deltas(root)
-      val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root")),
-        listed)
-      val ts = tombstones(spark, root)
-      val bn = bans(spark, root)
-      DeltaLog.unlessIdle(root, log, ts, bn) {
-        val all = ProbeCache.prunedRead(spark, log.genPath +: log.live,
-            "pbucket", 0 until NumBuckets)
-          .select(col("s"), col("first_doc"))
-        // banned holders that slipped in pre-ban scrub physically here
-        // (the repair join below then reassigns their shingles exactly
-        // like a tombstone purge would)
-        val merged0 = ts
-            .map(_.unionByName(
-              bn.getOrElse(spark.range(0).select(col("id").as("index_id"))))
-              .distinct())
-            .orElse(bn) match {
-          case None => all
-          case Some(t) =>
-            val td = t.select(col("index_id").as("first_doc"))
-            val live = all.join(td, Seq("first_doc"), "left_anti")
-            // shingles that lost a RECORDED holder: only these need the
-            // repair scan — everything else already has its true min
-            val affected = all.join(td, Seq("first_doc"), "left_semi")
-              .select("s").distinct()
-            reassignSrc.fold(live) { src =>
-              val repaired = src
-                .select(col("s"), col("doc_id").cast("long").as("first_doc"))
-                .join(affected, Seq("s"), "left_semi")
-                .join(td, Seq("first_doc"), "left_anti")
-              live.unionByName(repaired)
-            }
-        }
-        val merged = merged0.groupBy("s").agg(min("first_doc").as("first_doc"))
-        // the cumulative ledger IS NoveltyStream's absorption — it has
-        // no marker of its own
-        val path = VersionedDirs.commit(root) { st =>
-          writeMap(merged, st)
-          DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
-        }
-        DeltaLog.cleanup(root, listed)
-        Tombstones.reset(root)
-        path
+    // the cumulative ledger IS NoveltyStream's absorption — it has no
+    // marker of its own
+    compactWith(spark, root) { (log, masks, st) =>
+      val all = ProbeCache.prunedRead(spark, log.genPath +: log.live,
+          "pbucket", 0 until NumBuckets)
+        .select(col("s"), col("first_doc"))
+      // banned holders that slipped in pre-ban scrub physically here
+      // (the repair join below then reassigns their shingles exactly
+      // like a tombstone purge would)
+      val merged0 = masks.tombstones
+          .map(_.unionByName(masks.bans.getOrElse(
+            spark.range(0).select(col("id").as("index_id")))).distinct())
+          .orElse(masks.bans) match {
+        case None => all
+        case Some(t) =>
+          val td = t.select(col("index_id").as("first_doc"))
+          val live = all.join(td, Seq("first_doc"), "left_anti")
+          // shingles that lost a RECORDED holder: only these need the
+          // repair scan — everything else already has its true min
+          val affected = all.join(td, Seq("first_doc"), "left_semi")
+            .select("s").distinct()
+          reassignSrc.fold(live) { src =>
+            val repaired = src
+              .select(col("s"), col("doc_id").cast("long").as("first_doc"))
+              .join(affected, Seq("s"), "left_semi")
+              .join(td, Seq("first_doc"), "left_anti")
+            live.unionByName(repaired)
+          }
       }
+      writeMap(merged0.groupBy("s").agg(min("first_doc").as("first_doc")), st)
     }
 
   // ------------------------------------------------------ probe
@@ -269,12 +202,11 @@ object FirstSeenIndex {
 
   private def probeCore(spark: SparkSession, batchShingles: DataFrame,
                         root: String, materialize: Boolean): DataFrame = {
-    // read-order discipline (see SimIndex.probeTopK): tombstones, then
-    // the delta listing, then resolve
-    val ts = tombstones(spark, root)
+    // read-order discipline (see SimIndex.probeTopK): masks, then the
+    // delta listing, then resolve
+    val masks = this.masks(spark, root)
     val listed = deltas(root)
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val idxPath = head(root)
     val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     // the checkpointed keyed batch backs the touched-bucket set AND
     // the returned join, and is held until the result is materialized
@@ -283,22 +215,14 @@ object FirstSeenIndex {
       batchShingles.withColumn("pbucket", pbucketOf(col("s"))),
       "pbucket", NumBuckets, materialize)
     bs.settle {
-      val idx0 = ProbeCache.prunedRead(spark, idxPath +: deltaSnap,
-          "pbucket", bs.touched)
-        .select(col("pbucket"), col("s"), col("first_doc"))
-      val live0 = ts.fold(idx0)(t =>
-        idx0.join(t.select(col("index_id").as("first_doc")),
-          Seq("first_doc"), "left_anti"))
-      // bans mask like tombstones but never reset (the re-ingestion
-      // closure — see [[addBans]])
-      val live = bans(spark, root).fold(live0)(b =>
-        live0.join(b.select(col("index_id").as("first_doc")),
-          Seq("first_doc"), "left_anti"))
+      val live = masks.scrub(ProbeCache.prunedRead(spark,
+          idxPath +: deltaSnap, "pbucket", bs.touched)
+        .select(col("pbucket"), col("s"), col("first_doc")), "first_doc")
       // base-only, purge-free reads skip the min-union aggregate — the
       // committed map is already one row per shingle (masks only
       // REMOVE rows, so a banned-masked base read stays one-per-key)
       val idx =
-        if (deltaSnap.isEmpty && ts.isEmpty)
+        if (deltaSnap.isEmpty && masks.tombstones.isEmpty)
           live.select(col("pbucket"), col("s"),
             col("first_doc").as("seen_doc"))
         else live.groupBy("pbucket", "s").agg(min("first_doc").as("seen_doc"))

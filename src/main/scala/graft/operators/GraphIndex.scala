@@ -46,8 +46,17 @@ import org.apache.spark.sql.functions._
   *     bucket-addressable (src rows in `out/`'s buckets, dst rows in
   *     `in/`'s), where the r13 single-layout artifact had to scan
   *     every bucket for the scattered dst half.
+  *
+  * Bans ("forgotten must STAY forgotten"): tombstones mask what was
+  * already ingested and RESET at compaction — nothing stops a LATER
+  * batch from re-mentioning a deleted identity (at-least-once
+  * upstreams and backfills do exactly that), and post-compact the
+  * re-mention would serve. A banned node set ([[MaskedIndexFamily]],
+  * never reset) is filtered out of arriving edges at [[fold]] on both
+  * endpoints, and probes and [[mergeCompact]] mask it as defense in
+  * depth — O(bans) per fold, GDPR request-sized, never data-sized.
   */
-object GraphIndex {
+object GraphIndex extends MaskedIndexFamily {
 
   /** Partition-dir count (layout constant, [[DedupIndex]]'s class). */
   val NumBuckets = 64
@@ -57,9 +66,6 @@ object GraphIndex {
     */
   def pbucketOf(node: Column): Column =
     pmod(xxhash64(node), lit(NumBuckets.toLong)).cast("int")
-
-  /** Highest committed version under `root`, if any. */
-  def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
 
   /** The shared twin-layout write of [[publish]], [[fold]] and
     * [[mergeCompact]]: one row per (src, dst) with the summed weight,
@@ -112,17 +118,6 @@ object GraphIndex {
 
   // ------------------------------------------------------ delta folds
 
-  /** The committed delta roots. */
-  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
-
-  /** True when a fold tagged `tag` has already committed. Edge
-    * weights are SUMS, not min/union — a double fold double-counts —
-    * so this closure is what keeps an at-least-once redelivery
-    * correct, exactly the [[SketchIndex.folded]] burden.
-    */
-  def folded(root: String, tag: String): Boolean =
-    DeltaLog.contains(root, tag)
-
   /** Fold a batch's edges in at BATCH cost: the delta holds the
     * batch's OWN (src, dst, w) sums — the committed adjacency is
     * never read, never rewritten. Probes serve the weight-SUM of
@@ -135,16 +130,13 @@ object GraphIndex {
            tag: String = java.util.UUID.randomUUID().toString): String =
     synchronized {
       DeltaLog.requireTag(tag)
-      val genPath = resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
-      DeltaLog.append(root, genPath, tag) { staging =>
+      DeltaLog.append(root, head(root), tag) { staging =>
         // the ingestion gate of the ban closure: edges re-mentioning a
-        // banned identity never enter the delta (see the bans section).
+        // banned identity never enter the delta (class doc).
         // Batch-scoped cache: the emptiness check and the write are two
         // actions over the same (possibly anti-joined) frame — persist
         // so the batch scan runs once, not twice.
-        val bn = bans(spark, root)
-        val gated = maskBoth(batchEdges, bn).persist()
+        val gated = gate(spark, root, batchEdges, "src", "dst").persist()
         try {
           if (gated.isEmpty) {
             // an EMPTY batch — fully banned, or empty at the source —
@@ -176,66 +168,6 @@ object GraphIndex {
       }
     }
 
-  // ------------------------------------------------------ deletes
-
-  /** Record node `ids` as purged: every edge INCIDENT to them (either
-    * endpoint) vanishes from probes immediately via the two-sided
-    * anti-join mask, and physically at the next [[mergeCompact]].
-    * O(deletes) — no index rewrite.
-    */
-  def addTombstones(spark: SparkSession, ids: DataFrame, idCol: String,
-                    root: String): String = synchronized {
-    Tombstones.add(spark, ids, idCol, root)
-  }
-
-  /** The committed purged-node set, if any. */
-  def tombstones(spark: SparkSession, root: String): Option[DataFrame] =
-    Tombstones.get(spark, root)
-
-  // ------------------------------------------------------ bans
-  //
-  // "Forgotten must STAY forgotten": tombstones mask what was already
-  // ingested and RESET at compaction — nothing stops a LATER batch
-  // from re-mentioning a deleted identity (at-least-once upstreams and
-  // backfills do exactly that), and post-compact the re-mention would
-  // serve. The ban list is the durable companion: a committed node
-  // set (union-append like the tombstone log, NEVER reset) that
-  // [[fold]] filters arriving edges against (both endpoints) at
-  // ingestion, probes and [[mergeCompact]] mask as defense in depth.
-  // O(bans) broadcast per fold — GDPR request-sized, never data-sized.
-
-  /** Durably ban node `ids`: never ingested again (fold-side filter),
-    * masked everywhere meanwhile. Unlike tombstones, bans survive
-    * compaction — the re-ingestion closure a GDPR erasure needs
-    * (shared [[Bans]] log, same shape in [[DedupIndex]]).
-    */
-  def addBans(spark: SparkSession, ids: DataFrame, idCol: String,
-              root: String): String = synchronized {
-    Bans.add(spark, ids, idCol, root)
-  }
-
-  /** The committed ban set, if any. */
-  def bans(spark: SparkSession, root: String): Option[DataFrame] =
-    Bans.get(spark, root)
-
-  /** Drop every generation but the newest committed one. */
-  def vacuumOld(root: String): Unit = synchronized {
-    VersionedDirs.retainLatestGenerations(root, keep = 1)
-  }
-
-  /** Mask `edges` against the tombstoned node set on BOTH endpoints —
-    * the family's two-sided deletion semantics (class doc).
-    */
-  private def maskBoth(edges: DataFrame, ts: Option[DataFrame]): DataFrame =
-    ts.fold(edges) { t =>
-      val tids = t.select(col("index_id"))
-      edges
-        .join(tids.withColumnRenamed("index_id", "src"), Seq("src"),
-          "left_anti")
-        .join(tids.withColumnRenamed("index_id", "dst"), Seq("dst"),
-          "left_anti")
-    }
-
   /** Fold every committed delta and pending purge into the next
     * generation: weight-sum of base ∪ live deltas, minus every row
     * incident to a tombstoned node (both endpoints — and with the
@@ -249,30 +181,16 @@ object GraphIndex {
     * ([[DeltaLog.unlessIdle]]).
     */
   def mergeCompact(spark: SparkSession, root: String): String =
-    synchronized {
-      val listed = deltas(root)
-      val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root")),
-        listed)
-      val ts = tombstones(spark, root)
-      val bn = bans(spark, root)
-      DeltaLog.unlessIdle(root, log, ts, bn) {
-        // a marker delta holds no bucket dir, so it contributes nothing
-        val all = ProbeCache.prunedRead(spark,
-            (log.genPath +: log.live).map(p => s"$p/out"), "pbucket",
-            0 until NumBuckets, Some(EdgeSchema))
-          .select(col("src"), col("dst"), col("w"))
-        // tombstones reset below; bans do NOT — and the physical drop
-        // here also scrubs any banned edge that slipped in pre-ban
-        val merged = aggEdges(maskBoth(maskBoth(all, ts), bn))
-        val path = VersionedDirs.commit(root) { st =>
-          writeAdj(merged, st)
-          DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
-        }
-        DeltaLog.cleanup(root, listed)
-        Tombstones.reset(root)
-        path
-      }
+    compactWith(spark, root) { (log, masks, st) =>
+      // a marker delta holds no bucket dir, so it contributes nothing
+      val all = ProbeCache.prunedRead(spark,
+          (log.genPath +: log.live).map(p => s"$p/out"), "pbucket",
+          0 until NumBuckets, Some(EdgeSchema))
+        .select(col("src"), col("dst"), col("w"))
+      // tombstones reset after the commit; bans do NOT — and the
+      // physical drop here also scrubs any banned edge that slipped in
+      // pre-ban (both endpoints, the family's two-sided deletion)
+      writeAdj(aggEdges(masks.scrub(all, "src", "dst")), st)
     }
 
   /** Purge-ONLY compaction — the bucket-local rewrite the twin
@@ -302,8 +220,7 @@ object GraphIndex {
   def purgeCompact(spark: SparkSession, root: String): String =
     synchronized {
       val ts = tombstones(spark, root)
-      val basePath = resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
+      val basePath = head(root)
       if (ts.isEmpty) return basePath
       val log = new DeltaLog.Snapshot(basePath, deltas(root))
       if (log.live.nonEmpty) return mergeCompact(spark, root)
@@ -333,13 +250,13 @@ object GraphIndex {
           val dst = new java.io.File(s"$st/$layout")
           dst.mkdirs()
           if (touched.nonEmpty)
-            maskBoth(
+            Masks(Some(t.withColumnRenamed("tid", "index_id")), None).scrub(
               spark.read.parquet(src.getAbsolutePath)
                 .filter(col("pbucket")
                   .isin(touched.toSeq.sorted.map(Int.box): _*))
                 .select(col("src"), col("dst"), col("w"),
                   col("pbucket")),
-              Some(t.withColumnRenamed("tid", "index_id")))
+              "src", "dst")
               .repartition(col("pbucket"))
               // keep the layout's clustering contract: every other
               // write path (publish/fold/mergeCompact via writeAdj)
@@ -387,8 +304,7 @@ object GraphIndex {
         ensureFooters("out")
         ensureFooters("in")
         // fold ledger carries forward unchanged — no delta consumed
-        if (log.ledger.nonEmpty)
-          DeltaLog.writeLedger(st, DeltaLog.Folded, log.ledger)
+        DeltaLog.writeLedger(st, DeltaLog.Folded, log.ledger)
         java.nio.file.Files.createFile(
           java.nio.file.Paths.get(st, "_SUCCESS"))
         ()
@@ -465,17 +381,16 @@ object GraphIndex {
     // probe key, so the pruning logic is identical
     val (layout, keyCol, nbrCol) =
       if (out) ("out", "src", "dst") else ("in", "dst", "src")
-    // read-order discipline (SimIndex.probeTopK): tombstones, then the
+    // read-order discipline (SimIndex.probeTopK): masks, then the
     // delta listing, then resolve; the ledger filter is load-bearing
     // (double-reading a folded delta would double-COUNT).
     // pinned = fleet-snapshot read: `root` IS the generation path and
     // every later log is out of scope.
-    val ts = if (pinned) None else tombstones(spark, root)
+    val masks = if (pinned) Masks.none else this.masks(spark, root)
     val listed = if (pinned) Nil else deltas(root)
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
-      else resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
+      else head(root)
     val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     val ns0 = nodes.withColumn("pbucket", pbucketOf(col("node")))
     val ns = if (materialize) ns0.persist() else ns0
@@ -516,12 +431,11 @@ object GraphIndex {
         .filter(col("pbucket").isin(touched.toIndexedSeq.map(Int.box): _*))
         .select(col("pbucket"), col("src"), col("dst"), col("w")))
       .reduce(_.unionByName(_))
-    val live = maskBoth(maskBoth(adj0, ts),
-      if (pinned) None else bans(spark, root))
+    val live = masks.scrub(adj0, "src", "dst")
     // base-only, purge-free reads skip the sum aggregate — the
     // committed adjacency is already one row per (src, dst)
     val adj =
-      if (deltaSnap.isEmpty && ts.isEmpty) live
+      if (deltaSnap.isEmpty && masks.tombstones.isEmpty) live
       else live.groupBy("pbucket", "src", "dst").agg(sum("w").as("w"))
     val result = ns
       .join(adj, ns("pbucket") === adj("pbucket") &&
@@ -542,19 +456,18 @@ object GraphIndex {
     * the caller's algorithm owns the execution discipline.
     */
   def edges(spark: SparkSession, root: String): DataFrame = {
-    val ts = tombstones(spark, root)
+    val masks = this.masks(spark, root)
     val listed = deltas(root)
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val idxPath = head(root)
     val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     val all = (idxPath +: deltaSnap)
       .map(p => spark.read.parquet(s"$p/out").select(col("src"), col("dst"),
         col("w")))
       .reduce(_.unionByName(_))
-    val live = maskBoth(maskBoth(all, ts), bans(spark, root))
+    val live = masks.scrub(all, "src", "dst")
     // masks only REMOVE rows — base-only reads stay one row per
     // (src, dst) and skip the aggregate even under a mask
-    if (deltaSnap.isEmpty && ts.isEmpty) live
+    if (deltaSnap.isEmpty && masks.tombstones.isEmpty) live
     else live.groupBy("src", "dst").agg(sum("w").as("w"))
   }
 

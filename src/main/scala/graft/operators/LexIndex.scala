@@ -28,10 +28,18 @@ import graft.functions.TextFunctions
   * delete and its merge, documented rather than hidden (q281 judges
   * the post-compaction state, where stats are exact again).
   *
-  * Layout/commit/retention ride [[VersionedDirs]]; deletes ride the
-  * shared [[Tombstones]] log; appends ride [[DeltaLog]], whose ledger
-  * filter is load-bearing here — BM25 SUMS per-term contributions,
-  * so a delta read twice would double df and score.
+  * Layout/commit/retention ride [[VersionedDirs]]; deletes, bans and
+  * compaction are [[MaskedIndexFamily]]'s; appends ride [[DeltaLog]],
+  * whose ledger filter is load-bearing here — BM25 SUMS per-term
+  * contributions, so a delta read twice would double df and score.
+  *
+  * Bans: tombstones reset at [[mergeCompact]], so a backfill
+  * re-appending a purged doc would re-enter the postings AND shift the
+  * collection statistics (N, Σdl, df — the family's distinctive
+  * burden: a leak here doesn't just resurface a doc, it moves every
+  * other doc's score). Banned ids are gated at [[appendDelta]] (their
+  * rows and their stats contributions never commit), masked at
+  * [[bm25TopK]], and scrubbed at [[mergeCompact]].
   *
   * Scale shape: postings are corpus-linear, written once per
   * re-index; a probe costs the touched partition dirs of base +
@@ -42,7 +50,7 @@ import graft.functions.TextFunctions
   * at probe time and the 1-row stats aggregate at publish/compact
   * cadence.
   */
-object LexIndex {
+object LexIndex extends MaskedIndexFamily {
 
   /** Partition-dir count — a layout constant (64 for test-visible
     * pruning; thousands at 100 TB), as [[SimIndex.NumBuckets]].
@@ -54,9 +62,6 @@ object LexIndex {
     */
   def pbucketOf(term: Column): Column =
     pmod(xxhash64(term), lit(NumBuckets.toLong)).cast("int")
-
-  /** Highest committed index version under `root`, if any. */
-  def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
 
   /** The ONE definition of the per-(doc, term) BM25 contribution,
     * shared by the probe (`idiv = "div"`, Spark) and the judged
@@ -129,11 +134,8 @@ object LexIndex {
       .first()
     // max_dl rides along for the probe-time contribSql headroom
     // check (9000·dl·N < 2⁶³ — see [[ContribDlNBound]])
-    java.nio.file.Files.writeString(
-      new java.io.File(dir, "_stats.json").toPath,
-      s"""{"n_docs":${r.getLong(0)},"sumdl":${r.getLong(1)},""" +
-        s""""max_dl":${r.getLong(2)}}""")
-    ()
+    Sidecar.write(dir, Sidecar.Stats, "n_docs" -> r.getLong(0),
+      "sumdl" -> r.getLong(1), "max_dl" -> r.getLong(2))
   }
 
   /** The frozen (N, Σdl, max dl) of one committed generation or delta
@@ -142,16 +144,8 @@ object LexIndex {
     * assumed).
     */
   private def statsAt(path: String): (Long, Long, Long) = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(path, "_stats.json"))
-    def field(k: String): Long =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(txt)
-        .getOrElse(throw new IllegalStateException(
-          s"malformed _stats.json in $path: $txt"))
-        .group(1).toLong
-    val maxDl = s""""max_dl":(\\d+)""".r.findFirstMatchIn(txt)
-      .fold(0L)(_.group(1).toLong)
-    (field("n_docs"), field("sumdl"), maxDl)
+    val s = Sidecar.read(path, Sidecar.Stats)
+    (s.long("n_docs"), s.long("sumdl"), s.long("max_dl", 0L))
   }
 
   /** Publish `docs`' postings as the next committed version under
@@ -172,58 +166,14 @@ object LexIndex {
     }
   }
 
-  // ------------------------------------------------------ deletes
-
-  /** Record `ids` as deleted — hidden from rankings and df
-    * immediately, removed physically (with exact stats recompute) at
-    * the next [[mergeCompact]].
-    */
-  def addTombstones(spark: SparkSession, ids: DataFrame, idCol: String,
-                    root: String): String = synchronized {
-    Tombstones.add(spark, ids, idCol, root)
-  }
-
-  /** The committed tombstone set, if any. */
-  def tombstones(spark: SparkSession, root: String): Option[DataFrame] =
-    Tombstones.get(spark, root)
-
-  /** Durably ban doc `ids` — the re-ingestion closure ([[Bans]]):
-    * tombstones reset at [[mergeCompact]], so a backfill re-appending
-    * a purged doc would re-enter the postings AND shift the
-    * collection statistics (N, Σdl, df — the family's distinctive
-    * burden: a leak here doesn't just resurface a doc, it moves every
-    * other doc's score). Banned ids are gated at [[appendDelta]]
-    * (their rows and their stats contributions never commit), masked
-    * at [[bm25TopK]], and scrubbed at [[mergeCompact]].
-    */
-  def addBans(spark: SparkSession, ids: DataFrame, idCol: String,
-              root: String): String = synchronized {
-    Bans.add(spark, ids, idCol, root)
-  }
-
-  /** The committed ban set, if any. */
-  def bans(spark: SparkSession, root: String): Option[DataFrame] =
-    Bans.get(spark, root)
-
-  /** Drop every index generation but the newest committed one — the
-    * post-grace step of a compliance purge.
-    */
-  def vacuumOld(root: String): Unit = synchronized {
-    VersionedDirs.retainLatestGenerations(root, keep = 1)
-  }
-
   // ------------------------------------------------------ delta appends
 
-  /** The committed delta roots. Caller batches are disjoint doc sets
-    * by construction (the family contract).
-    */
-  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
-
   /** Append `docs` as a new postings delta with its own frozen stats
-    * sidecar — batch cost, the base is never touched. Probes then
-    * serve N' = N + ΔN, Σdl' = Σdl + ΔΣdl and union postings, so the
-    * append shifts df AND the collection statistics exactly as a
-    * re-index over the grown corpus would. A caller-supplied `tag`
+    * sidecar — batch cost, the base is never touched. Caller batches
+    * are disjoint doc sets by construction (the family contract).
+    * Probes then serve N' = N + ΔN, Σdl' = Σdl + ΔΣdl and union
+    * postings, so the append shifts df AND the collection statistics
+    * exactly as a re-index over the grown corpus would. A caller-supplied `tag`
     * names the delta dir deterministically and makes the append
     * IDEMPOTENT ([[DeltaLog.append]]) — the at-least-once hook
     * [[graft.streaming.LexStream]] rides. BM25 sums df/score, so an
@@ -234,17 +184,13 @@ object LexIndex {
                   tag: String = java.util.UUID.randomUUID().toString)
       : String = synchronized {
     DeltaLog.requireTag(tag)
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val idxPath = head(root)
     DeltaLog.append(root, idxPath, tag) { staging =>
       // the ingestion gate of the ban closure: a banned doc's rows AND
       // its stats contribution (its dl toward Σdl, its +1 toward N, its
       // terms toward df) never commit — the sidecar below is computed
       // from the gated frame
-      val gated = bans(docs.sparkSession, root)
-        .map(b => docs.join(b.select(col("index_id").cast("long").as(id)),
-          Seq(id), "left_anti"))
-        .getOrElse(docs)
+      val gated = gate(docs.sparkSession, root, docs, id)
       val (rows, dl, tfc) = postingRows(gated, id, text)
       try {
         rows.repartition(col("pbucket"))
@@ -291,14 +237,10 @@ object LexIndex {
           "normalizer")
   }
 
-  /** Has the tagged append already been ingested — either live in the
-    * append log or folded into the resolved generation? The folded
-    * half matters to at-least-once callers: a replay arriving AFTER a
-    * merge deleted the delta dir must not re-append rows the
-    * generation already holds.
+  /** [[folded]]: a replay arriving AFTER a merge deleted the delta dir
+    * must not re-append rows the generation already holds.
     */
-  def appended(root: String, tag: String): Boolean =
-    DeltaLog.contains(root, tag)
+  def appended(root: String, tag: String): Boolean = folded(root, tag)
 
   /** Fold every committed delta and pending delete or ban into the
     * next generation — pure row union + filter, no re-tokenization —
@@ -312,40 +254,21 @@ object LexIndex {
     * unchanged when nothing was pending ([[DeltaLog.unlessIdle]]).
     */
   def mergeCompact(spark: SparkSession, root: String): String =
-    synchronized {
-      val listed = deltas(root)
-      val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root")),
-        listed)
-      val ts = tombstones(spark, root)
-      val bn = bans(spark, root)
-      DeltaLog.unlessIdle(root, log, ts, bn) {
-        val all0 = ProbeCache.prunedRead(spark, log.genPath +: log.live,
-          "pbucket", 0 until NumBuckets, Some(PostingSchema))
-        val all1 = ts
-          .map(t => all0.join(t, Seq("index_id"), "left_anti"))
-          .getOrElse(all0)
-        // banned rows that slipped in pre-ban scrub physically here —
-        // and the exact stats recompute below then counts survivors only
-        val all = bn
-          .map(b => all1.join(b, Seq("index_id"), "left_anti"))
-          .getOrElse(all1)
-        // LexStream carries its own durable marker, but a non-stream
-        // tagged caller has only the ledger
-        val path = VersionedDirs.commit(root) { st =>
-          val allc = all.persist() // write + exact stats recompute
-          try {
-            allc.repartition(col("pbucket"))
-              .sortWithinPartitions("term")
-              .write.partitionBy("pbucket").mode("overwrite").parquet(st)
-            writeStats(allc.select("index_id", "dl").distinct(), st)
-          } finally allc.unpersist()
-          DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
-        }
-        DeltaLog.cleanup(root, listed)
-        Tombstones.reset(root)
-        path
-      }
+    // LexStream carries its own durable marker, but a non-stream tagged
+    // caller has only the ledger
+    compactWith(spark, root) { (log, masks, st) =>
+      // banned rows that slipped in pre-ban scrub physically here — and
+      // the exact stats recompute below then counts survivors only
+      val allc = masks.scrub(ProbeCache.prunedRead(spark,
+          log.genPath +: log.live, "pbucket", 0 until NumBuckets,
+          Some(PostingSchema)))
+        .persist() // write + exact stats recompute
+      try {
+        allc.repartition(col("pbucket"))
+          .sortWithinPartitions("term")
+          .write.partitionBy("pbucket").mode("overwrite").parquet(st)
+        writeStats(allc.select("index_id", "dl").distinct(), st)
+      } finally { allc.unpersist(); () }
     }
 
   /** Integer-BM25 top-k of each query (a bag of terms: one row per
@@ -388,16 +311,15 @@ object LexIndex {
                        materialize: Boolean,
                        pinned: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // read-order discipline (see DedupIndex.probeBanded): tombstones,
-    // then the delta listing, then resolve. pinned = fleet-snapshot
-    // read: `root` IS the generation path and every later log is out
-    // of scope.
-    val ts = if (pinned) None else tombstones(spark, root)
+    // read-order discipline (see DedupIndex.probeBanded): masks, then
+    // the delta listing, then resolve. pinned = fleet-snapshot read:
+    // `root` IS the generation path and every later log is out of
+    // scope.
+    val masks = if (pinned) Masks.none else this.masks(spark, root)
     val listed = if (pinned) Nil else deltas(root)
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
-      else resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
+      else head(root)
     val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     val stats = (idxPath +: deltaSnap).map(statsAt)
     val nDocs = stats.map(_._1).sum
@@ -431,16 +353,8 @@ object LexIndex {
     // BOTH joins below, and are held until the result is materialized
     // (the [[ProbeCache]] contract)
     qt.settle {
-      val post0 = ProbeCache.prunedRead(spark, idxPath +: deltaSnap,
-        "pbucket", qt.touched)
-      val post1 = ts
-        .map(t => post0.join(t, Seq("index_id"), "left_anti"))
-        .getOrElse(post0)
-      // bans mask like tombstones but never reset (the re-ingestion
-      // closure — see [[addBans]]); out of scope for a pinned read
-      val post = (if (pinned) None else bans(spark, root))
-        .map(b => post1.join(b, Seq("index_id"), "left_anti"))
-        .getOrElse(post1)
+      val post = masks.scrub(ProbeCache.prunedRead(spark,
+        idxPath +: deltaSnap, "pbucket", qt.touched))
       // postings restricted to the query's terms (bucket-pruned scan,
       // then a term equi-join); df derives from exactly these rows —
       // tombstone-masked, so a purged doc stops counting immediately.

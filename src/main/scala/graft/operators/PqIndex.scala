@@ -39,11 +39,45 @@ import org.apache.spark.sql.functions._
   * on any engine, any partitioning — which is what lets a DuckDB
   * oracle replay fit → encode → ADC against the artifact-served
   * probe and hash-match.
+  *
+  * Deletes, bans and compaction are [[MaskedIndexFamily]]'s. Bans:
+  * tombstones reset at [[mergeCompact]], so a deleted user's embedding
+  * re-uploaded under a fresh tag would re-encode into the code table;
+  * banned ids are gated at [[appendDelta]] (their code rows never
+  * commit), masked at [[probeTopK]], scrubbed at [[mergeCompact]].
   */
-object PqIndex {
+object PqIndex extends MaskedIndexFamily {
 
-  /** Highest committed index version under `root`, if any. */
-  def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
+  /** The frozen `_params.json` of one generation: the PQ geometry
+    * (m, dsub, ks, iters), the coarse quantizer (c, citers — 0 for a
+    * flat-PQ artifact), the by_residual flag, the publish-time
+    * quantization error `qerr` and the optional dimension permutation
+    * — model state, derived at train and applied to every later
+    * scaling (probe queries, delta appends, drift measurements): a
+    * probe that skipped `perm` would ADC-score queries in a different
+    * basis than the codes. Fields a sidecar predates read as 0/none,
+    * so the drift trigger never fires on an unrecorded `qerr`.
+    */
+  private final case class Params(m: Int, dsub: Int, ks: Int, iters: Int,
+                                  c: Int, citers: Int, resid: Boolean,
+                                  qerr: Long, perm: Option[Seq[Int]]) {
+    def write(dir: String): Unit =
+      Sidecar.write(dir, Sidecar.Params, Seq("m" -> m, "dsub" -> dsub,
+        "ks" -> ks, "iters" -> iters, "c" -> c, "citers" -> citers,
+        "resid" -> (if (resid) 1 else 0), "qerr" -> qerr) ++
+        perm.map("perm" -> _): _*)
+  }
+
+  /** The frozen params of ONE resolved generation — internal reads go
+    * through this with a pinned path so a probe never mixes one
+    * generation's codebook with a racing re-publish's (m, dsub).
+    */
+  private def paramsAt(genPath: String): Params = {
+    val p = Sidecar.read(genPath, Sidecar.Params)
+    Params(p.int("m"), p.int("dsub"), p.int("ks"), p.int("iters"),
+      p.int("c", 0), p.int("citers", 0), p.int("resid", 0) == 1,
+      p.long("qerr", 0L), p.ints("perm").filter(_.nonEmpty))
+  }
 
   /** Apply a dimension permutation to a scaled frame:
     * xs'(p) = xs(perm(p)) — the OPQ-permutation layout (q317: rank
@@ -53,23 +87,6 @@ object PqIndex {
   private def applyPerm(e: DataFrame, perm: Option[Seq[Int]]): DataFrame =
     perm.fold(e)(p => e.withColumn("xs",
       array(p.map(i => element_at(col("xs"), i + 1)): _*)))
-
-  /** The frozen dimension permutation of one resolved generation, if
-    * it was published with one. Model state exactly like the
-    * codebooks: derived from train, frozen at publish, applied to
-    * every later scaling (probe queries, delta appends, drift
-    * measurements) — a probe that skipped it would ADC-score queries
-    * in a different basis than the codes.
-    */
-  private def permAt(genPath: String): Option[Seq[Int]] =
-    """"perm":\[([0-9, ]*)\]""".r.findFirstMatchIn(
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(genPath, "_params.json")))
-      .map(_.group(1).trim).filter(_.nonEmpty)
-      .map(_.split(',').toIndexedSeq.map(_.trim.toInt))
-
-  private def permJson(perm: Option[Seq[Int]]): String =
-    perm.fold("")(p => s""","perm":[${p.mkString(",")}]""")
 
   /** Train per-subspace codebooks on `corpus`, encode it, and commit
     * codebook + code table + frozen params as the next version under
@@ -101,7 +118,6 @@ object PqIndex {
       // against the new generation's ADC tables is garbage. The new
       // generation's ledger names them and the dirs drop post-commit.
       val log = resolve(root).map(new DeltaLog.Snapshot(_, deltas(root)))
-      val invalidated = log.fold(Seq.empty[String])(_.consumed)
       val committed = VersionedDirs.commit(root) { staging =>
         val e = applyPerm(VectorQuantizer.scaled(corpus, id, vec), dimPerm)
           .persist()
@@ -137,14 +153,10 @@ object PqIndex {
         val qerr = meanAssignD2(train, cent, id, m, dsub)
         if (byResidual) train.unpersist()
         e.unpersist()
-        java.nio.file.Files.writeString(
-          new java.io.File(staging, "_params.json").toPath,
-          s"""{"m":$m,"dsub":$dsub,"ks":$ks,"iters":$iters,""" +
-            s""""c":$coarseC,"citers":$coarseIters,""" +
-            s""""resid":${if (byResidual) 1 else 0},"qerr":$qerr""" +
-            s"""${permJson(dimPerm)}}""")
-        if (invalidated.nonEmpty)
-          DeltaLog.writeLedger(staging, DeltaLog.Folded, invalidated)
+        Params(m, dsub, ks, iters, coarseC, coarseIters, byResidual, qerr,
+          dimPerm).write(staging)
+        DeltaLog.writeLedger(staging, DeltaLog.Folded,
+          log.fold(Seq.empty[String])(_.consumed))
         // the parquet writes each committed their own subdir; the
         // version-level marker is what resolve() keys on
         java.nio.file.Files.createFile(
@@ -218,22 +230,12 @@ object PqIndex {
     if (r.getLong(1) == 0L) 0L else r.getLong(0) / r.getLong(1)
   }
 
-  /** The publish-time quantization-error baseline of one resolved
-    * generation (0 for sidecars written before it was recorded —
-    * the trigger then never fires, it can verify but not assume).
-    */
-  private def qerrAt(genPath: String): Long =
-    """"qerr":(\d+)""".r.findFirstMatchIn(
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(genPath, "_params.json")))
-      .fold(0L)(_.group(1).toLong)
-
   /** The publish-time quantization-error baseline of the newest
-    * committed generation — what [[retrainOnDrift]] measures against.
+    * committed generation — what [[retrainOnDrift]] measures against
+    * (0 for sidecars written before it was recorded — the trigger then
+    * never fires, it can verify but not assume).
     */
-  def publishQuantizationError(root: String): Long =
-    qerrAt(resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root")))
+  def publishQuantizationError(root: String): Long = paramsAt(head(root)).qerr
 
   /** Mean quantization error of `corpus` under the CURRENT committed
     * codebooks — one encode pass, the drift measurement. Residual
@@ -242,19 +244,17 @@ object PqIndex {
     */
   def quantizationError(spark: SparkSession, corpus: DataFrame,
                         id: String, vec: String, root: String): Long = {
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    val (m, dsub, _, _) = paramsAt(idxPath)
+    val idxPath = head(root)
+    val p = paramsAt(idxPath)
     val cent = spark.read.parquet(
       new java.io.File(idxPath, "codebook").toString)
-    val e = applyPerm(VectorQuantizer.scaled(corpus, id, vec),
-      permAt(idxPath))
-    val frame = if (residAt(idxPath)) {
+    val e = applyPerm(VectorQuantizer.scaled(corpus, id, vec), p.perm)
+    val frame = if (p.resid) {
       val coarse = spark.read.parquet(
         new java.io.File(idxPath, "coarse").toString)
       residualFrame(e, coarse, id)
     } else e
-    meanAssignD2(frame, cent, id, m, dsub)
+    meanAssignD2(frame, cent, id, p.m, p.dsub)
   }
 
   /** Re-publish the index over `corpus` with the committed
@@ -271,17 +271,12 @@ object PqIndex {
   def retrainOnDrift(spark: SparkSession, corpus: DataFrame, id: String,
                      vec: String, root: String,
                      factorMilli: Long): Option[String] = {
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    val (m, dsub, ks, iters) = paramsAt(idxPath)
-    val (cc, citers) = coarseAt(idxPath)
-    val base = qerrAt(idxPath)
+    val p = paramsAt(head(root))
     val cur = quantizationError(spark, corpus, id, vec, root)
-    if (base > 0L && cur * 1000L > factorMilli * base)
-      Some(publish(corpus, id, vec, m, dsub, ks, iters, root,
-        coarseC = cc, coarseIters = citers,
-        byResidual = residAt(idxPath),
-        dimPerm = permAt(idxPath)))
+    if (p.qerr > 0L && cur * 1000L > factorMilli * p.qerr)
+      Some(publish(corpus, id, vec, p.m, p.dsub, p.ks, p.iters, root,
+        coarseC = p.c, coarseIters = p.citers, byResidual = p.resid,
+        dimPerm = p.perm))
     else None
   }
 
@@ -319,47 +314,6 @@ object PqIndex {
     }
   }
 
-  // ------------------------------------------------------ deletes
-  //
-  // Identical semantics to [[SimIndex]]/[[DedupIndex]] (shared
-  // [[Tombstones]] log): deletes commit in O(deletes), probes
-  // anti-join the committed set immediately, [[mergeCompact]] drops
-  // the rows physically and resets the log, [[vacuumOld]] is the
-  // post-grace compliance step.
-
-  /** Record `ids` as deleted — hidden from every probe immediately,
-    * removed physically at the next [[mergeCompact]].
-    */
-  def addTombstones(spark: SparkSession, ids: DataFrame, idCol: String,
-                    root: String): String = synchronized {
-    Tombstones.add(spark, ids, idCol, root)
-  }
-
-  /** The committed tombstone set, if any. */
-  def tombstones(spark: SparkSession, root: String): Option[DataFrame] =
-    Tombstones.get(spark, root)
-
-  /** Durably ban vector `ids` — the re-ingestion closure ([[Bans]],
-    * the [[SimIndex.addBans]] shape): tombstones reset at
-    * [[mergeCompact]], so a deleted user's embedding re-uploaded
-    * under a fresh tag would re-encode into the code table; banned
-    * ids are gated at [[appendDelta]] (their code rows never
-    * commit), masked at [[probeTopK]], scrubbed at [[mergeCompact]].
-    */
-  def addBans(spark: SparkSession, ids: DataFrame, idCol: String,
-              root: String): String = synchronized {
-    Bans.add(spark, ids, idCol, root)
-  }
-
-  /** The committed ban set, if any. */
-  def bans(spark: SparkSession, root: String): Option[DataFrame] =
-    Bans.get(spark, root)
-
-  /** Drop every index generation but the newest committed one. */
-  def vacuumOld(root: String): Unit = synchronized {
-    VersionedDirs.retainLatestGenerations(root, keep = 1)
-  }
-
   // ------------------------------------------------------ delta appends
   //
   // Daily growth without daily re-train: a new vector batch is
@@ -370,9 +324,6 @@ object PqIndex {
   // deltas into the next generation as a pure row union, codebook
   // and params carried over byte-identically.
 
-  /** The committed delta roots. */
-  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
-
   /** Append `corpus` as a new code delta, encoded with the base's
     * frozen codebooks. Batch cost: one argmin pass over the batch
     * against the broadcast m·ks codebook — the corpus is never
@@ -381,44 +332,37 @@ object PqIndex {
   def appendDelta(corpus: DataFrame, id: String, vec: String,
                   root: String): String = synchronized {
     val spark = corpus.sparkSession
-    val idxPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val idxPath = head(root)
     // geometry read from the SAME resolved generation as the codebook
     // — params(root) would re-resolve and could land on a racing
     // re-publish with different (m, dsub)
-    val (m, dsub, _, _) = paramsAt(idxPath)
+    val p = paramsAt(idxPath)
     val cent = spark.read.parquet(
       new java.io.File(idxPath, "codebook").toString)
     // IVFPQ artifacts assign delta rows with the FROZEN coarse
     // centroids (pure argmin — the coarse twin of the frozen-codebook
     // encode), so base and delta partition dirs stay prunable by the
     // same probed-cell set
-    val coarse = if (coarseAt(idxPath)._1 > 0)
+    val coarse = if (p.c > 0)
       Some(spark.read.parquet(new java.io.File(idxPath, "coarse").toString))
     else None
     // untagged: every call is a fresh batch
     val tag = java.util.UUID.randomUUID().toString
     DeltaLog.append(root, idxPath, tag) { staging =>
-      // the ingestion gate of the ban closure: a banned vector's code
-      // rows never commit (see [[addBans]])
-      val gatedCorpus = bans(spark, root)
-        .map(b => corpus.join(
-          b.select(col("index_id").cast("long").as(id)), Seq(id),
-          "left_anti"))
-        .getOrElse(corpus)
+      // a banned vector's code rows never commit
+      val gatedCorpus = gate(spark, root, corpus, id)
       // a by_residual generation's deltas encode residuals against
       // the SAME frozen coarse centroids + codebooks (pure
       // assign+argmin, never a Lloyd round — the flat path's
       // frozen-codebook rule); the frozen permutation applies to
       // every later scaling — a delta encoded in the unpermuted
       // basis would ADC-score garbage
-      val e = applyPerm(VectorQuantizer.scaled(gatedCorpus, id, vec),
-        permAt(idxPath))
+      val e = applyPerm(VectorQuantizer.scaled(gatedCorpus, id, vec), p.perm)
       val rows =
-        if (residAt(idxPath))
+        if (p.resid)
           codeRowsResidual(residualFrame(e, coarse.get, id),
-            cent, id, m, dsub)
-        else codeRows(e, id, cent, m, dsub, coarse)
+            cent, id, p.m, p.dsub)
+        else codeRows(e, id, cent, p.m, p.dsub, coarse)
       writeCodes(rows, staging.getAbsolutePath)
       // an empty batch writes no row: the write itself says whether
       // there is anything to commit
@@ -435,117 +379,37 @@ object PqIndex {
     * double its distance — the ledger filter is load-bearing. Clears
     * the append log and resets tombstones. Returns the serving
     * generation after the call; unchanged when nothing was pending
-    * ([[DeltaLog.unlessIdle]]; here a ledger left naming a cleaned-up
-    * dir is pending too, so the merge after a fold prunes it).
+    * ([[DeltaLog.unlessIdle]]).
     */
   def mergeCompact(spark: SparkSession, root: String): String =
-    synchronized {
-      val listed = deltas(root)
-      val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root")),
-        listed)
-      val ts = tombstones(spark, root)
-      val bn = bans(spark, root)
-      // this family's ledger names only the last merge's listing (see
-      // below), so a serving ledger naming a dir no longer listed is
-      // pending work too: the next generation prunes it
-      val prune = Option.when(log.ledger != listed.map(DeltaLog.nameOf).toSet)(())
-      DeltaLog.unlessIdle(root, log, ts, bn, prune) {
-        val basePath = log.genPath
-        val (m, dsub, ks, iters) = paramsAt(basePath)
-        val (cc, citers) = coarseAt(basePath)
-        val cent = spark.read.parquet(
-          new java.io.File(basePath, "codebook").toString)
-        val coarse = if (cc > 0)
-          Some(spark.read.parquet(new java.io.File(basePath, "coarse").toString))
-        else None
-        // the base generation keeps its codes under codes/; each delta
-        // dir IS a codes table
-        val all0 = log.live
+    compactWith(spark, root) { (log, masks, st) =>
+      val basePath = log.genPath
+      // the base generation keeps its codes under codes/; each delta
+      // dir IS a codes table
+      writeCodes(masks.scrub(log.live
           .map(spark.read.parquet(_))
           .foldLeft(spark.read.parquet(
-            new java.io.File(basePath, "codes").toString))(_.unionByName(_))
-        val all1 = ts
-          .map(t => all0.join(t, Seq("index_id"), "left_anti"))
-          .getOrElse(all0)
-        // banned rows that slipped in pre-ban scrub physically here
-        val all = bn
-          .map(b => all1.join(b, Seq("index_id"), "left_anti"))
-          .getOrElse(all1)
-        // untagged appends never redeliver, so the ledger need only
-        // name the listed dirs (a deleted UUID dir can never reappear) —
-        // not the root's whole history — to keep readers of the
-        // pre-merge listing from reading them twice
-        val path = VersionedDirs.commit(root) { st =>
-          writeCodes(all, new java.io.File(st, "codes").toString)
-          cent.write.parquet(new java.io.File(st, "codebook").toString)
-          coarse.foreach(_.write.parquet(
-            new java.io.File(st, "coarse").toString))
-          // qerr carries forward VERBATIM: the codebooks are frozen
-          // across a compaction, so the publish-time fit baseline is
-          // unchanged — dropping it would silently kill
-          // [[retrainOnDrift]] after the first GDPR compaction
-          java.nio.file.Files.writeString(
-            new java.io.File(st, "_params.json").toPath,
-            s"""{"m":$m,"dsub":$dsub,"ks":$ks,"iters":$iters,""" +
-              s""""c":$cc,"citers":$citers,""" +
-              s""""resid":${if (residAt(basePath)) 1 else 0},""" +
-              s""""qerr":${qerrAt(basePath)}""" +
-              s"""${permJson(permAt(basePath))}}""")
-          DeltaLog.writeLedger(st, DeltaLog.Folded,
-            listed.map(DeltaLog.nameOf).sorted)
-          java.nio.file.Files.createFile(
-            new java.io.File(st, "_SUCCESS").toPath)
-          ()
-        }
-        DeltaLog.cleanup(root, listed)
-        Tombstones.reset(root)
-        path
-      }
+            new java.io.File(basePath, "codes").toString))(_.unionByName(_))),
+        new java.io.File(st, "codes").toString)
+      spark.read.parquet(new java.io.File(basePath, "codebook").toString)
+        .write.parquet(new java.io.File(st, "codebook").toString)
+      val p = paramsAt(basePath)
+      if (p.c > 0)
+        spark.read.parquet(new java.io.File(basePath, "coarse").toString)
+          .write.parquet(new java.io.File(st, "coarse").toString)
+      // qerr carries forward VERBATIM: the codebooks are frozen across
+      // a compaction, so the publish-time fit baseline is unchanged —
+      // dropping it would silently kill [[retrainOnDrift]] after the
+      // first GDPR compaction
+      p.write(st)
+      java.nio.file.Files.createFile(new java.io.File(st, "_SUCCESS").toPath)
+      ()
     }
 
   /** The frozen (m, dsub, ks, iters) of the newest committed index. */
-  def params(root: String): (Int, Int, Int, Int) =
-    paramsAt(resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root")))
-
-  /** The frozen geometry of ONE resolved generation — internal reads
-    * go through this with a pinned path so a probe never mixes one
-    * generation's codebook with a racing re-publish's (m, dsub).
-    */
-  private def paramsAt(genPath: String): (Int, Int, Int, Int) = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(genPath, "_params.json"))
-    def field(k: String): Int =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(txt)
-        .getOrElse(throw new IllegalStateException(
-          s"malformed _params.json in $genPath: $txt"))
-        .group(1).toInt
-    (field("m"), field("dsub"), field("ks"), field("iters"))
-  }
-
-  /** The frozen coarse-quantizer geometry (c, citers) of ONE resolved
-    * generation — (0, 0) for a flat-PQ artifact (including sidecars
-    * written before the IVF half existed).
-    */
-  private def coarseAt(genPath: String): (Int, Int) = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(genPath, "_params.json"))
-    def field(k: String): Int =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toInt).getOrElse(0)
-    (field("c"), field("citers"))
-  }
-
-  /** Whether ONE resolved generation encodes residuals
-    * (by_residual=true) — false for flat-PQ and for sidecars written
-    * before residual coding existed.
-    */
-  private def residAt(genPath: String): Boolean = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(genPath, "_params.json"))
-    """"resid":(\d+)""".r.findFirstMatchIn(txt)
-      .exists(_.group(1).toInt == 1)
+  def params(root: String): (Int, Int, Int, Int) = {
+    val p = paramsAt(head(root))
+    (p.m, p.dsub, p.ks, p.iters)
   }
 
   /** Top-k of each query against the committed code table by exact
@@ -620,34 +484,34 @@ object PqIndex {
                         nprobe: Int, materialize: Boolean,
                         pinned: Boolean = false,
                         candPairs: Option[DataFrame] = None): DataFrame = {
-    // read-order discipline (see DedupIndex.probeBanded): tombstones,
-    // then the delta listing, then resolve ([[DeltaLog]]) — no
+    // read-order discipline (see DedupIndex.probeBanded): masks, then
+    // the delta listing, then resolve ([[DeltaLog]]) — no
     // vector's d² is ever summed twice
     // pinned = fleet-snapshot read: `root` IS the generation path and
     // every later log (deltas, tombstones, bans) is out of scope
-    val ts = if (pinned) None else tombstones(spark, root)
+    val masks = if (pinned) Masks.none else this.masks(spark, root)
     val listed = if (pinned) Nil else deltas(root)
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
-      else resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
+      else head(root)
     // geometry pinned to the SAME resolved generation as the codebook
     // and codes — params(root) would re-resolve under a racing
     // re-publish and split queries with the wrong (m, dsub)
-    val (m, dsub, _, _) = paramsAt(idxPath)
+    val params = paramsAt(idxPath)
+    val (m, dsub) = (params.m, params.dsub)
     val cent = spark.read.parquet(
       new java.io.File(idxPath, "codebook").toString)
     // the scaled batch feeds BOTH the cell assignment and the ADC
     // distance table — cache it until the result is materialized
     // below (the [[ProbeCache]] contract)
     val sq0 = applyPerm(VectorQuantizer.scaled(queries, id, vec),
-      permAt(idxPath))
+      params.perm)
     val sq = if (materialize) sq0.persist() else sq0
     // the IVF half: nprobe coarse cells per query under the FROZEN
     // coarse centroids; the distinct probed-cell set (≤ coarseC ints)
     // is the static partition filter every code root gets below
     val queryCells = if (nprobe > 0) {
-      require(coarseAt(idxPath)._1 > 0,
+      require(params.c > 0,
         s"nprobe=$nprobe needs an IVFPQ artifact (published with " +
           s"coarseC > 0); $idxPath is a flat-PQ generation")
       val coarse = spark.read.parquet(
@@ -669,14 +533,7 @@ object PqIndex {
         new java.io.File(idxPath, "codes").toString))(_.unionByName(_))
     val pruned = probed.fold(codes0)(cells =>
       codes0.filter(col("ccell").isin(cells.toIndexedSeq.map(Int.box): _*)))
-    val codes1 = ts
-      .map(t => pruned.join(t, Seq("index_id"), "left_anti"))
-      .getOrElse(pruned)
-    // bans mask like tombstones but never reset (the re-ingestion
-    // closure — see [[addBans]]); out of scope for a pinned read
-    val codes2 = (if (pinned) None else bans(spark, root))
-      .map(b => codes1.join(b, Seq("index_id"), "left_anti"))
-      .getOrElse(codes1)
+    val codes2 = masks.scrub(pruned)
     // rank-stage pruning ([[adcRescoreAt]]): only candidate ids'
     // code rows enter the ADC join — batch-bounded broadcast
     val codes = candPairs
@@ -692,7 +549,7 @@ object PqIndex {
             slice(col("xs"), j * dsub + 1, dsub).as("xs"))): _*)).as("t"): _*)
         .select(keep.map(col) :+ col("t.sub").as("sub") :+
           col("t.xs").as("xs"): _*)
-    val resid = residAt(idxPath)
+    val resid = params.resid
     require(!resid || queryCells.isDefined,
       s"a by_residual artifact serves IVF-pruned probes only " +
         s"(nprobe > 0); $idxPath was published with byResidual=true")

@@ -52,46 +52,41 @@ object PurgeCascade {
       vacuum: () => Unit,
       addBans: (SparkSession, DataFrame) => Unit = (_, _) => ())
 
+  /** An id-keyed family's Target: tombstones, bans and vacuum from
+    * [[MaskedIndexFamily]], `compact` the family's own compaction.
+    */
+  private def masked(family: String, index: MaskedIndexFamily, root: String,
+                     idCol: String)(compact: SparkSession => String): Target =
+    Target(family, root,
+      (s, ids) => { index.addTombstones(s, ids, idCol, root); () },
+      (s, _) => compact(s),
+      () => index.vacuumOld(root),
+      (s, ids) => { index.addBans(s, ids, idCol, root); () })
+
   /** A MinHash-band dedup index ([[DedupIndex]]); `idCol` names the
     * deletion frame's id column.
     */
-  def dedup(root: String, idCol: String = "doc_id"): Target = Target(
-    "dedup", root,
-    (s, ids) => DedupIndex.addTombstones(s, ids, idCol, root),
-    (s, _) => DedupIndex.compact(s, root),
-    () => DedupIndex.vacuumOld(root),
-    (s, ids) => { DedupIndex.addBans(s, ids, idCol, root); () })
+  def dedup(root: String, idCol: String = "doc_id"): Target =
+    masked("dedup", DedupIndex, root, idCol)(DedupIndex.compact(_, root))
 
   /** An LSH ANN index ([[SimIndex]]) — compaction also folds pending
     * delta appends (the family's mergeCompact).
     */
-  def sim(root: String, idCol: String = "vec_id"): Target = Target(
-    "sim", root,
-    (s, ids) => SimIndex.addTombstones(s, ids, idCol, root),
-    (s, _) => SimIndex.mergeCompact(s, root),
-    () => SimIndex.vacuumOld(root),
-    (s, ids) => { SimIndex.addBans(s, ids, idCol, root); () })
+  def sim(root: String, idCol: String = "vec_id"): Target =
+    masked("sim", SimIndex, root, idCol)(SimIndex.mergeCompact(_, root))
 
   /** A PQ/IVFPQ index ([[PqIndex]]); codebooks and coarse centroids
     * stay frozen across the purge (the family invariant).
     */
-  def pq(root: String, idCol: String = "vec_id"): Target = Target(
-    "pq", root,
-    (s, ids) => PqIndex.addTombstones(s, ids, idCol, root),
-    (s, _) => PqIndex.mergeCompact(s, root),
-    () => PqIndex.vacuumOld(root),
-    (s, ids) => { PqIndex.addBans(s, ids, idCol, root); () })
+  def pq(root: String, idCol: String = "vec_id"): Target =
+    masked("pq", PqIndex, root, idCol)(PqIndex.mergeCompact(_, root))
 
   /** A lexical BM25 index ([[LexIndex]]) — compaction also recomputes
     * the collection statistics exactly from the surviving postings
     * (the family's stats burden; see its scaladoc).
     */
-  def lex(root: String, idCol: String = "doc_id"): Target = Target(
-    "lex", root,
-    (s, ids) => LexIndex.addTombstones(s, ids, idCol, root),
-    (s, _) => LexIndex.mergeCompact(s, root),
-    () => LexIndex.vacuumOld(root),
-    (s, ids) => { LexIndex.addBans(s, ids, idCol, root); () })
+  def lex(root: String, idCol: String = "doc_id"): Target =
+    masked("lex", LexIndex, root, idCol)(LexIndex.mergeCompact(_, root))
 
   /** A first-seen novelty map ([[FirstSeenIndex]]). `reassignSrc`
     * (surviving corpus shingles, or any superset covering the
@@ -100,12 +95,9 @@ object PurgeCascade {
     * family's conservative default.
     */
   def firstSeen(root: String, idCol: String = "doc_id",
-                reassignSrc: Option[DataFrame] = None): Target = Target(
-    "firstSeen", root,
-    (s, ids) => FirstSeenIndex.addTombstones(s, ids, idCol, root),
-    (s, _) => FirstSeenIndex.mergeCompact(s, root, reassignSrc),
-    () => FirstSeenIndex.vacuumOld(root),
-    (s, ids) => { FirstSeenIndex.addBans(s, ids, idCol, root); () })
+                reassignSrc: Option[DataFrame] = None): Target =
+    masked("firstSeen", FirstSeenIndex, root, idCol)(
+      FirstSeenIndex.mergeCompact(_, root, reassignSrc))
 
   /** A persisted adjacency index ([[GraphIndex]]) — the eighth
     * family: the tombstoned ids are NODES, and compaction drops every
@@ -113,12 +105,8 @@ object PurgeCascade {
     * scattered across other nodes' buckets, the family's two-sided
     * deletion burden). `idCol` names the deletion frame's id column.
     */
-  def graph(root: String, idCol: String = "node"): Target = Target(
-    "graph", root,
-    (s, ids) => GraphIndex.addTombstones(s, ids, idCol, root),
-    (s, _) => GraphIndex.mergeCompact(s, root),
-    () => GraphIndex.vacuumOld(root),
-    (s, ids) => { GraphIndex.addBans(s, ids, idCol, root); () })
+  def graph(root: String, idCol: String = "node"): Target =
+    masked("graph", GraphIndex, root, idCol)(GraphIndex.mergeCompact(_, root))
 
   /** A persisted tokenizer ([[BpeIndex]]) — the sixth family, whose
     * deletion surface is WORDS, not doc ids: the cascade derives

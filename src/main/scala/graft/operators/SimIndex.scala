@@ -41,9 +41,26 @@ import graft.functions.VectorFunctions._
   * reads them back — the caller never re-derives.
   *
   * Layout/commit/retention are [[VersionedDirs]]' versioned-dir
-  * protocol, identical to [[DedupIndex]].
+  * protocol, identical to [[DedupIndex]]; deletes, bans, compaction
+  * and vacuum are [[MaskedIndexFamily]]'s.
+  *
+  * Deltas: daily growth without daily re-index — a new batch lands as
+  * an append-log delta ([[DeltaLog]]), keyed with the BASE index's
+  * frozen (r, T) so base and delta keys stay joinable; probes read
+  * base ∪ deltas with the same bucket pruning applied to each, and
+  * [[mergeCompact]] folds them into the next generation (append order
+  * is irrelevant — deltas are disjoint key sets by construction of the
+  * caller's batches). The ledger half of [[folded]] matters even
+  * though the probe max-aggregates an idempotent score: a redelivery
+  * arriving after a purge + [[mergeCompact]] (tombstones reset) would
+  * resurrect the purged vec_ids' band rows.
+  *
+  * Bans: tombstones reset at [[mergeCompact]], so a deleted user's
+  * embedding re-uploaded by a backfill would re-enter the LSH tables;
+  * banned ids are gated at [[appendDelta]] (their key rows never
+  * commit), masked at [[probeTopK]], scrubbed at [[mergeCompact]].
   */
-object SimIndex {
+object SimIndex extends MaskedIndexFamily {
 
   /** Partition-dir count — a layout constant (64 for test-visible
     * pruning; thousands at 100 TB), the same bounded-by-design class
@@ -54,9 +71,6 @@ object SimIndex {
   /** Stable partition bucket of a key row. */
   def pbucketOf(tbl: Column, bucket: Column): Column =
     pmod(xxhash64(tbl, bucket), lit(NumBuckets.toLong)).cast("int")
-
-  /** Highest committed index version under `root`, if any. */
-  def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
 
   /** Publish `corpus`'s multi-table LSH key set (with vectors
     * attached) as the next committed version under `root`: one row
@@ -72,100 +86,24 @@ object SimIndex {
         .sortWithinPartitions("tbl", "bucket")
         .write.partitionBy("pbucket").mode("overwrite")
         .parquet(staging)
-      val params = new java.io.File(staging, "_params.json")
-      java.nio.file.Files.writeString(params.toPath,
-        s"""{"bits":$bits,"tables":$tables}""")
-      ()
+      writeParams(staging, bits, tables)
     }
   }
 
+  private def writeParams(dir: String, bits: Int, tables: Int): Unit =
+    Sidecar.write(dir, Sidecar.Params, "bits" -> bits, "tables" -> tables)
+
   /** The frozen (bits, tables) of the newest committed index. */
-  def params(root: String): (Int, Int) =
-    paramsAt(resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root")))
+  def params(root: String): (Int, Int) = paramsAt(head(root))
 
   /** The frozen params of ONE resolved generation — internal reads
     * pin the path so a probe never keys with a racing re-publish's
     * (r, T) against this generation's buckets.
     */
   private def paramsAt(genPath: String): (Int, Int) = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(genPath, "_params.json"))
-    def field(k: String): Int =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(txt)
-        .getOrElse(throw new IllegalStateException(
-          s"malformed _params.json in $genPath: $txt"))
-        .group(1).toInt
-    (field("bits"), field("tables"))
+    val p = Sidecar.read(genPath, Sidecar.Params)
+    (p.int("bits"), p.int("tables"))
   }
-
-  // ------------------------------------------------------ deletes
-  //
-  // Identical semantics to [[DedupIndex]]'s delete support (shared
-  // [[Tombstones]] log): deletes commit in O(deletes), probes
-  // anti-join the committed set immediately, [[mergeCompact]] drops
-  // the rows physically and resets the log, and [[vacuumOld]] is the
-  // post-grace compliance step.
-
-  /** Record `ids` as deleted — hidden from every probe immediately,
-    * removed physically at the next [[mergeCompact]].
-    */
-  def addTombstones(spark: SparkSession, ids: DataFrame, idCol: String,
-                    root: String): String = synchronized {
-    Tombstones.add(spark, ids, idCol, root)
-  }
-
-  /** The committed tombstone set, if any. */
-  def tombstones(spark: SparkSession, root: String): Option[DataFrame] =
-    Tombstones.get(spark, root)
-
-  /** Durably ban vector `ids` — the re-ingestion closure ([[Bans]]):
-    * tombstones reset at [[mergeCompact]], so a deleted user's
-    * embedding re-uploaded by a backfill would re-enter the LSH
-    * tables; banned ids are gated at [[appendDelta]] (their key rows
-    * never commit), masked at [[probeTopK]], scrubbed at
-    * [[mergeCompact]].
-    */
-  def addBans(spark: SparkSession, ids: DataFrame, idCol: String,
-              root: String): String = synchronized {
-    Bans.add(spark, ids, idCol, root)
-  }
-
-  /** The committed ban set, if any. */
-  def bans(spark: SparkSession, root: String): Option[DataFrame] =
-    Bans.get(spark, root)
-
-  /** Drop every index generation but the newest committed one — the
-    * post-grace step of a compliance purge.
-    */
-  def vacuumOld(root: String): Unit = synchronized {
-    VersionedDirs.retainLatestGenerations(root, keep = 1)
-  }
-
-  // ------------------------------------------------------ delta appends
-  //
-  // Daily growth without daily re-index: a new batch lands as an
-  // append-log delta ([[DeltaLog]]), keyed with the BASE index's
-  // frozen (r, T) so base and delta keys stay joinable. Probes read
-  // base ∪ deltas with the same bucket pruning applied to each; a
-  // periodic merge-compaction folds every delta into the next base
-  // generation and clears the log. Appends are batch-cost, probes pay
-  // one extra root per unmerged delta — the knob is the compaction
-  // cadence.
-
-  /** The committed delta roots (append order is irrelevant — deltas
-    * are disjoint key sets by construction of the caller's batches).
-    */
-  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
-
-  /** True when an append tagged `tag` has already committed. The
-    * ledger half matters even though the probe max-aggregates an
-    * idempotent score: a redelivery arriving after a purge +
-    * [[mergeCompact]] (tombstones reset) would resurrect the purged
-    * vec_ids' band rows.
-    */
-  def folded(root: String, tag: String): Boolean =
-    DeltaLog.contains(root, tag)
 
   /** Append `corpus` as a new delta batch, keyed with the base
     * index's frozen (r, T). `tag` names the batch (an at-least-once
@@ -177,17 +115,11 @@ object SimIndex {
                   tag: String = java.util.UUID.randomUUID().toString)
       : String = synchronized {
     DeltaLog.requireTag(tag)
-    val genPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val genPath = head(root)
     val (bits, tables) = paramsAt(genPath)
     DeltaLog.append(root, genPath, tag) { staging =>
-      // the ingestion gate of the ban closure: a banned vector's key
-      // rows never enter the delta (see [[addBans]])
-      val gated = Bans.get(corpus.sparkSession, root)
-        .map(b => corpus.join(
-          b.select(col("index_id").cast("long").as(id)), Seq(id),
-          "left_anti"))
-        .getOrElse(corpus)
+      // a banned vector's key rows never enter the delta
+      val gated = gate(corpus.sparkSession, root, corpus, id)
       // an empty batch writes no part file: the write itself says
       // whether there is anything to commit
       keyRows(gated, id, vec, bits, tables)
@@ -207,40 +139,18 @@ object SimIndex {
     * Returns the serving generation after the call; unchanged when
     * nothing was pending ([[DeltaLog.unlessIdle]]).
     */
-  def mergeCompact(spark: SparkSession, root: String): String = synchronized {
-    val listed = deltas(root)
-    val log = new DeltaLog.Snapshot(resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root")),
-      listed)
-    val ts = tombstones(spark, root)
-    val bn = bans(spark, root)
-    DeltaLog.unlessIdle(root, log, ts, bn) {
+  def mergeCompact(spark: SparkSession, root: String): String =
+    compactWith(spark, root) { (log, masks, st) =>
       val (bits, tables) = paramsAt(log.genPath)
-      val all0 = ProbeCache.prunedRead(spark, log.genPath +: log.live,
-        "pbucket", 0 until NumBuckets)
-      // fold pending deletes into the rewrite (pure row filter, no
-      // re-hashing), then reset the log
-      val all1 = ts
-        .map(t => all0.join(t, Seq("index_id"), "left_anti"))
-        .getOrElse(all0)
-      // banned rows that slipped in pre-ban scrub physically here
-      val all = bn
-        .map(b => all1.join(b, Seq("index_id"), "left_anti"))
-        .getOrElse(all1)
-      val path = VersionedDirs.commit(root) { st =>
-        all.repartition(col("pbucket"))
-          .sortWithinPartitions("tbl", "bucket")
-          .write.partitionBy("pbucket").mode("overwrite").parquet(st)
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_params.json").toPath,
-          s"""{"bits":$bits,"tables":$tables}""")
-        DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
-      }
-      DeltaLog.cleanup(root, listed)
-      Tombstones.reset(root)
-      path
+      // pending deletes and banned rows that slipped in pre-ban drop
+      // out as a pure row filter — no re-hashing
+      masks.scrub(ProbeCache.prunedRead(spark, log.genPath +: log.live,
+          "pbucket", 0 until NumBuckets))
+        .repartition(col("pbucket"))
+        .sortWithinPartitions("tbl", "bucket")
+        .write.partitionBy("pbucket").mode("overwrite").parquet(st)
+      writeParams(st, bits, tables)
     }
-  }
 
   /** The shared key layout of [[publish]] and [[appendDelta]]. */
   private def keyRows(corpus: DataFrame, id: String, vec: String,
@@ -293,18 +203,17 @@ object SimIndex {
                         id: String, vec: String, k: Int, root: String,
                         materialize: Boolean,
                         pinned: Boolean = false): DataFrame = {
-    // read-order discipline (see DedupIndex.probeBanded): tombstones,
-    // then the delta listing, then resolve ([[DeltaLog]]).
+    // read-order discipline (see DedupIndex.probeBanded): masks, then
+    // the delta listing, then resolve ([[DeltaLog]]).
     // Tombstones-first keeps a racing compact's log reset from
     // resurfacing purged vectors.
     // pinned = fleet-snapshot read: `root` IS the generation path and
     // every later log (deltas, tombstones, bans) is out of scope
-    val ts = if (pinned) None else tombstones(spark, root)
+    val masks = if (pinned) Masks.none else this.masks(spark, root)
     val listed = if (pinned) Nil else deltas(root)
     val idxPath =
       if (pinned) { graft.sources.Artifacts.noteResolveHit(); root }
-      else resolve(root).getOrElse(
-        throw new IllegalStateException(s"no committed index under $root"))
+      else head(root)
     val deltaSnap = DeltaLog.unfolded(listed, idxPath)
     // params pinned to the resolved generation (re-resolving could
     // land on a racing re-publish's (r, T))
@@ -323,19 +232,9 @@ object SimIndex {
     qk.settle {
       // base ∪ committed deltas, each read through its touched bucket
       // dirs only — an unmerged delta costs its touched buckets only
-      val idx0 = ProbeCache.prunedRead(spark, idxPath +: deltaSnap,
-        "pbucket", qk.touched)
-      // uncompacted deletes are honored at probe time; strategy left
-      // to AQE (a mass purge can be arbitrarily large — no broadcast
-      // hint)
-      val idx1 = ts
-        .map(t => idx0.join(t, Seq("index_id"), "left_anti"))
-        .getOrElse(idx0)
-      // bans mask like tombstones but never reset (the re-ingestion
-      // closure — see [[addBans]]); out of scope for a pinned read
-      val idx = (if (pinned) None else bans(spark, root))
-        .map(b => idx1.join(b, Seq("index_id"), "left_anti"))
-        .getOrElse(idx1)
+      // uncompacted deletes and bans are masked at probe time
+      val idx = masks.scrub(ProbeCache.prunedRead(spark,
+        idxPath +: deltaSnap, "pbucket", qk.touched))
       val scored = qk.frame.join(idx, Seq("pbucket", "tbl", "bucket"))
         .filter(col("index_id") =!= col("query_id"))
         .groupBy(col("query_id"), col("index_id"))

@@ -37,11 +37,11 @@ import org.apache.spark.sql.functions._
   * Layout per committed generation: `cells/` (r, cell, cnt) +
   * `_params.json` {"depth","width"} + the [[DeltaLog]] ledgers. Here
   * the ledger hazard is arithmetic: a redelivered fold after a merge
-  * would DOUBLE-COUNT its cells, sums are not idempotent.
+  * would DOUBLE-COUNT its cells, sums are not idempotent, so the
+  * closure of [[folded]] is what keeps an at-least-once redelivery
+  * from double-counting.
   */
-object SketchIndex {
-
-  def resolve(root: String): Option[String] = VersionedDirs.resolve(root)
+object SketchIndex extends IndexFamily {
 
   private val CellSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "r INT, cell BIGINT, cnt BIGINT")
@@ -51,26 +51,20 @@ object SketchIndex {
         col("cnt").cast("long"))
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
 
-  private def paramsText(genPath: String): String =
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(genPath, "_params.json"))
-
   /** The frozen (depth, width) of the newest committed generation. */
-  def geometry(root: String): (Int, Int) =
-    geometryAt(resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root")))
+  def geometry(root: String): (Int, Int) = geometryAt(head(root))
 
   /** The frozen (depth, width) of ONE resolved generation — internal
     * reads pin the path, so cells and geometry always come from the
     * same generation even while a regrow commits a wider one.
     */
   private def geometryAt(genPath: String): (Int, Int) = {
-    val t = paramsText(genPath)
-    def f(k: String) = s""""$k":(\\d+)""".r.findFirstMatchIn(t)
-      .map(_.group(1).toInt).getOrElse(
-        throw new IllegalStateException(s"malformed params under $genPath"))
-    (f("depth"), f("width"))
+    val p = Sidecar.read(genPath, Sidecar.Params)
+    (p.int("depth"), p.int("width"))
   }
+
+  private def writeParams(dir: String, depth: Int, width: Int): Unit =
+    Sidecar.write(dir, Sidecar.Params, "depth" -> depth, "width" -> width)
 
   /** Build and commit the sketch of `items`' string column `term` as
     * the next version.
@@ -89,15 +83,11 @@ object SketchIndex {
     val path = VersionedDirs.commit(root) { st =>
       writeCells(CountMin.build(items, term, depth, width),
         new java.io.File(st, "cells"))
-      java.nio.file.Files.writeString(
-        new java.io.File(st, "_params.json").toPath,
-        s"""{"depth":$depth,"width":$width}""")
+      writeParams(st, depth, width)
       log.foreach { l =>
-        if (l.consumed.nonEmpty)
-          DeltaLog.writeLedger(st, DeltaLog.Folded, l.consumed)
-        val purgedNames = DeltaLog.ledger(l.genPath, DeltaLog.Purged)
-        if (purgedNames.nonEmpty)
-          DeltaLog.writeLedger(st, DeltaLog.Purged, purgedNames)
+        DeltaLog.writeLedger(st, DeltaLog.Folded, l.consumed)
+        DeltaLog.writeLedger(st, DeltaLog.Purged,
+          DeltaLog.ledger(l.genPath, DeltaLog.Purged))
       }
       java.nio.file.Files.createFile(
         new java.io.File(st, "_SUCCESS").toPath)
@@ -109,15 +99,6 @@ object SketchIndex {
 
   // ------------------------------------------------------ deltas
 
-  def deltas(root: String): Seq[String] = DeltaLog.committed(root)
-
-  /** True when a delta tagged `tag` has already committed. Cell sums
-    * are NOT idempotent, so this closure is what keeps an
-    * at-least-once redelivery from double-counting.
-    */
-  def folded(root: String, tag: String): Boolean =
-    DeltaLog.contains(root, tag)
-
   /** Commit a batch's OWN sketch as a delta — O(d·w), the committed
     * cells never read or rewritten. Serving state is the cell-sum of
     * base ∪ deltas (linearity).
@@ -127,8 +108,7 @@ object SketchIndex {
                   tag: String = java.util.UUID.randomUUID().toString)
       : String = synchronized {
     DeltaLog.requireTag(tag)
-    val genPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val genPath = head(root)
     DeltaLog.append(root, genPath, tag) { staging =>
       val (d, w) = geometryAt(genPath)
       writeCells(CountMin.build(items, term, d, w), staging)
@@ -167,8 +147,7 @@ object SketchIndex {
     */
   private def served(root: String): (String, Seq[String]) = {
     val listed = deltas(root)
-    val genPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val genPath = head(root)
     (genPath, DeltaLog.unfolded(listed, genPath))
   }
 
@@ -283,8 +262,7 @@ object SketchIndex {
     synchronized {
     // read order (see [[DeltaLog]]): list the log, then resolve
     val listed = deltas(root)
-    val genPath = resolve(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
+    val genPath = head(root)
     // locked re-check of the purge ledger: a concurrent same-tag
     // purge that committed while this call waited must absorb here
     val purgedNames = DeltaLog.ledger(genPath, DeltaLog.Purged)
@@ -292,12 +270,11 @@ object SketchIndex {
     val log = new DeltaLog.Snapshot(genPath, listed)
     // a purge always rewrites; a merge only over live deltas
     DeltaLog.unlessIdle(root, log, purgeTag) {
-      val params = paramsText(genPath)
-      val cells = f(geometryAt(genPath), servedCells(spark, genPath, log.live))
+      val (d, w) = geometryAt(genPath)
+      val cells = f((d, w), servedCells(spark, genPath, log.live))
       val path = VersionedDirs.commit(root) { st =>
         writeCells(cells, new java.io.File(st, "cells"))
-        java.nio.file.Files.writeString(
-          new java.io.File(st, "_params.json").toPath, params)
+        writeParams(st, d, w)
         DeltaLog.writeLedger(st, DeltaLog.Folded, log.consumed)
         DeltaLog.writeLedger(st, DeltaLog.Purged, purgedNames ++ purgeTag)
         java.nio.file.Files.createFile(
@@ -307,11 +284,6 @@ object SketchIndex {
       DeltaLog.cleanup(root, log.listed)
       path
     }
-  }
-
-  /** Drop every generation but the newest committed one. */
-  def vacuumOld(root: String): Unit = synchronized {
-    VersionedDirs.retainLatestGenerations(root, keep = 1)
   }
 
   // ------------------------------------------------------ saturation

@@ -103,27 +103,22 @@ final class DedupStream(spark: SparkSession, root: String,
     // id arriving in a later batch — a backfill re-submitting a purged
     // doc — is dropped BEFORE banding commits anything; its signature
     // never lands in the tail, so nothing downstream can match it
-    val bn = DedupIndex.bans(spark, compactedRoot)
-    val nb0 = bandsOf(batch).withColumnRenamed(id, "new_id")
+    // Tombstones (a purge between batches) mask BOTH probe sides: the
+    // generation through [[DedupIndex.probeBanded]]'s own anti-join,
+    // the tail through the explicit scrub below. Read the masks BEFORE
+    // the dirs (probeBanded's race discipline).
+    val masks = DedupIndex.masks(spark, compactedRoot)
     // batch-sized and read three times (touched set, probe join, sig
     // write) — cache for the scope of this batch only
-    val nb = bn.map(b =>
-        nb0.join(b.select(col("index_id").as("new_id")), Seq("new_id"),
-          "left_anti"))
-      .getOrElse(nb0).persist()
+    val nb = masks.copy(tombstones = None)
+      .scrub(bandsOf(batch).withColumnRenamed(id, "new_id"), "new_id")
+      .persist()
     try {
       // the probe base: the compacted generation (directory-pruned)
       // plus only the batch-dir TAIL above the compaction floor — the
       // candidate SET is identical before and after a compaction (the
       // generation holds exactly the folded band rows), so replays
       // stay deterministic by value across compactions too.
-      // Tombstones (a purge between batches) mask BOTH sides: the
-      // generation through [[DedupIndex.probeBanded]]'s own anti-join,
-      // the tail through the explicit one below — without it a purged
-      // doc whose sig batch had not yet been folded keeps surfacing
-      // through every probe until the next compaction. Read the log
-      // BEFORE the dirs (probeBanded's race discipline).
-      val ts = DedupIndex.tombstones(spark, compactedRoot)
       val floor = foldedThrough
       val tail = sigDirs
         .filter(d => d._1 < batchId && d._1 > floor).map(_._2.toString)
@@ -143,17 +138,15 @@ final class DedupStream(spark: SparkSession, root: String,
               new java.io.File(new Path(p).toUri.getPath)))
             .getOrElse(throw new IllegalStateException(
               s"no parquet part file in the tail under $root"))
-          val joined = spark.read.schema(schema).parquet(tail: _*)
+          // without the mask a purged doc whose sig batch had not yet
+          // been folded keeps surfacing through every probe until the
+          // next compaction; bans mask the tail too (a pre-ban batch
+          // may hold them)
+          Some(masks.scrub(spark.read.schema(schema).parquet(tail: _*)
             .filter(col("bucket").isin(touched.toIndexedSeq.map(Int.box): _*))
             .withColumnRenamed("new_id", "index_id")
             .join(nb, Seq("bucket", "band", "band_key"))
-            .select(col("new_id"), col("index_id"))
-          val masked = ts
-            .map(t => joined.join(t, Seq("index_id"), "left_anti"))
-            .getOrElse(joined)
-          // bans mask the tail too (a pre-ban batch may hold them)
-          Some(bn.map(b => masked.join(b, Seq("index_id"), "left_anti"))
-            .getOrElse(masked))
+            .select(col("new_id"), col("index_id"))))
         }
       val matches = (fromCompacted, fromTail) match {
         case (Some(a), Some(b)) => a.unionByName(b).distinct()
@@ -215,24 +208,19 @@ final class DedupStream(spark: SparkSession, root: String,
             col("bucket"))
           .unionByName(tailRows))
         .getOrElse(tailRows)
-      // a purge between batches folds here physically — pure row
-      // filter over generation ∪ tail (DedupIndex.compact's rule),
-      // then the log resets so probes stop paying the anti-join
-      val ts = DedupIndex.tombstones(spark, compactedRoot)
-      val rows1 = ts
-        .map(t => rows0.join(t, Seq("index_id"), "left_anti"))
-        .getOrElse(rows0)
-      // banned rows that slipped in pre-ban scrub physically here
-      val rows = DedupIndex.bans(spark, compactedRoot)
-        .map(b => rows1.join(b, Seq("index_id"), "left_anti"))
-        .getOrElse(rows1)
+      // a purge between batches — and banned rows that slipped in
+      // pre-ban — fold here physically: pure row filter over
+      // generation ∪ tail (DedupIndex.compact's rule), then the log
+      // resets so probes stop paying the anti-join
+      val masks = DedupIndex.masks(spark, compactedRoot)
+      val rows = masks.scrub(rows0)
       graft.sources.Artifacts.notePublish()
       val path = new java.io.File(compactedRoot,
         s"index.v${sigDirs.map(_._1).max + 1}").getAbsolutePath
       rows.repartition(col("bucket"))
         .sortWithinPartitions("band", "band_key")
         .write.partitionBy("bucket").mode("overwrite").parquet(path)
-      if (ts.isDefined)
+      if (masks.tombstones.isDefined)
         graft.operators.Tombstones.reset(compactedRoot)
       DedupIndex.retainLatestGenerations(compactedRoot)
       Some(path)

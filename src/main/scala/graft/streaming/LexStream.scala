@@ -68,11 +68,7 @@ final class LexStream(spark: SparkSession, indexRoot: String,
     // id arriving in a later batch is dropped up front — neither
     // served as a query nor appended; appendDelta gates again for
     // direct callers, so the stats sidecar counts survivors only
-    val gated = LexIndex.bans(spark, indexRoot)
-      .map(b => docs.join(
-        b.select(col("index_id").cast("long").as(id)), Seq(id),
-        "left_anti"))
-      .getOrElse(docs)
+    val gated = LexIndex.gate(spark, indexRoot, docs, id)
     if (!probed) {
       graft.sources.Artifacts.notePublish()
       LexIndex.bm25TopK(spark, termBags(gated), "query_id", "term",

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.operators.FirstSeenIndex
 
@@ -49,11 +48,7 @@ final class NoveltyStream(spark: SparkSession, indexRoot: String,
     // doc arriving in a later batch is neither scored nor folded —
     // fold gates again for direct callers, so a banned early id can
     // never steal first-occurrence back through the min-union
-    val gated = FirstSeenIndex.bans(spark, indexRoot)
-      .map(b => batchShingles.join(
-        b.select(col("index_id").as("doc_id")), Seq("doc_id"),
-        "left_anti"))
-      .getOrElse(batchShingles)
+    val gated = FirstSeenIndex.gate(spark, indexRoot, batchShingles, "doc_id")
     if (!scoredDone) {
       // score against the PRE-FOLD committed state — probing after a
       // self-fold would mark every shingle seen by its own batch

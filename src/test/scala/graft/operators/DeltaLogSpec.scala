@@ -58,6 +58,16 @@ class DeltaLogSpec extends AnyFunSuite {
     assert(DeltaLog.ledger(gen, DeltaLog.Purged).isEmpty)
   }
 
+  test("an empty ledger write leaves no file and reads back empty") {
+    val gen = emptyRoot()
+    DeltaLog.writeLedger(gen, DeltaLog.Folded, Nil)
+    DeltaLog.writeLedger(gen, DeltaLog.Purged, Set.empty[String])
+    assert(new File(gen).list().isEmpty,
+      s"wrote ${new File(gen).list().mkString(",")}")
+    assert(DeltaLog.ledger(gen).isEmpty)
+    assert(DeltaLog.ledger(gen, DeltaLog.Purged).isEmpty)
+  }
+
   test("a name that would forge ledger entries is refused by the codec") {
     intercept[IllegalArgumentException] {
       DeltaLog.encode(Seq("""batch-x","batch-y"""))

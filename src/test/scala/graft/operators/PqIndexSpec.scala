@@ -333,14 +333,12 @@ class PqIndexSpec extends SparkSpec {
     assert(!deltaPath.exists(),
       "already-folded crash leftover survived the next merge")
     assert(probeSet() == clean, "second merge changed answers")
-    // with the dir physically gone, the merge AFTER that prunes the
-    // carried name and the sidecar shrinks back to empty
-    PqIndex.mergeCompact(spark, root)
-    val folded = new java.io.File(PqIndex.resolve(root).get, "_folded.json")
-    assert(!folded.isFile ||
-      Files.readString(folded.toPath).matches("\\[\\s*\\]"),
-      s"sidecar did not shrink back to empty: " +
-        Files.readString(folded.toPath))
+    // the ledger is cumulative: with the dir physically gone, the
+    // merge AFTER that has nothing pending and commits no version
+    val serving = PqIndex.resolve(root).get
+    assert(PqIndex.mergeCompact(spark, root) == serving,
+      "a merge with nothing pending committed a new generation")
+    assert(PqIndex.resolve(root).contains(serving))
     assert(probeSet() == clean, "third merge changed answers")
   }
 

@@ -227,10 +227,14 @@ class RewriteCensusSpec extends SparkSpec {
     PqIndex.publish(vecs(0 until 40), "vec_id", "embedding", 4, 4, 8, 2, root)
     PqIndex.appendDelta(vecs(100 until 110), "vec_id", "embedding", root)
     PqIndex.addTombstones(spark, ids(6L), "id", root)
-    PqIndex.mergeCompact(spark, root)
-    // the family's ledger names only the last merge's listing: the
-    // merge after a fold prunes the cleaned-up name (PqIndexSpec)
-    PqIndex.mergeCompact(spark, root)
+    val merged = PqIndex.mergeCompact(spark, root)
+    // the family's ledger is cumulative like the other six: a merge
+    // right after a real merge has nothing pending
+    val versions = VersionedDirs.versionsOf(root)
+    val (again, jobs) = census(PqIndex.mergeCompact(spark, root))
+    assert(again == merged && VersionedDirs.versionsOf(root) == versions,
+      "pq: the merge after a real merge committed a version")
+    assert(jobs.isEmpty, s"pq: the merge after a real merge ran jobs: $jobs")
     new Family("pq", root,
       () => rowsOf(PqIndex.probeTopK(spark, vecs(0 until 3), "vec_id",
         "embedding", 3, root)),
