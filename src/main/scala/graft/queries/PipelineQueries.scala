@@ -17,6 +17,22 @@ import graft.operators.{Bpe, BpeIndex, Compaction, ConnectedComponents, CountMin
   * Every DuckDB oracle here is *generated from the same constants*
   * (hash seeds, band layout, stopword lists) as the Spark
   * implementation — the two sides cannot drift independently.
+  *
+  * A chain that more than one query uses is rendered by ONE named
+  * builder, never re-typed at the call site — on the Spark side and
+  * in the oracle alike. The builders live beside the constants they
+  * share: the `*Sql` helpers of [[VectorFunctions]] / [[Hashing]] /
+  * [[TextFunctions]] render single expressions; the private builders
+  * of this object render whole chains — the kNN-graph build and beam
+  * search ([[GraphBeam]], [[knnGraphEdges]], [[knnTruth]],
+  * [[DeleteRule]] at the top; [[knnGraphCtes]], [[beamWalkCtes]] and
+  * kin after [[kmeansCtes]]), the MinHash signature/band SQL after
+  * the `MH_*` constants, the LSH keying and top-k tail
+  * ([[lshKeyCtes]], [[lshTopKSql]]) beside [[mtCtes]], and the PQ
+  * fit/encode/ADC and recall chains ([[pqFitCtes]], [[pqExactTruth]],
+  * [[armRecall]]) beside the `PQ_*` constants. `OracleSqlDigestSpec`
+  * pins every oracle's bytes, so a builder edit that changes any
+  * oracle fails the spec suite.
   */
 object PipelineQueries {
 
@@ -51,6 +67,138 @@ object PipelineQueries {
       ranked.filter(col("rnk") <= beamWidth).select("query_id", "node"),
       m("nf").asInstanceOf[Long])
   }
+
+  /** Graph beam search over one kNN-graph artifact (q327/q331/q333/
+    * q334/q338): entries → [[beamStage]] → per round the neighbors of
+    * the frontier, minus the already-visited nodes (`left_anti`),
+    * scored and settled by [[beamStage]] again. `qxs` is the scaled
+    * query side (`query_id`, `qx`), `ixs` the scaled index side
+    * (`node`, `nx`), and `probe` the adjacency read —
+    * [[GraphIndex.neighbors]] over a root or [[GraphIndex.neighborsAt]]
+    * over a pinned generation. Every probe of one instance (entry
+    * liveness, every round, every beam arm) shares ONE scan cache,
+    * so each artifact path is listed once. The cache is a TrieMap
+    * because arms run from driver threads ([[concurrently]]); arms
+    * only read the artifact, so they may share an instance.
+    */
+  private final class GraphBeam(
+      qxs: DataFrame, ixs: DataFrame, rounds: Int,
+      probe: (DataFrame, Option[scala.collection.concurrent.Map[
+        String, DataFrame]]) => DataFrame) {
+    private val scans = scala.collection.concurrent.TrieMap
+      .empty[String, DataFrame]
+
+    def neighbors(nodes: DataFrame): DataFrame = probe(nodes, Some(scans))
+
+    private def score(cand: DataFrame): DataFrame =
+      cand.join(ixs, "node").join(qxs, "query_id")
+        .select(col("query_id"), col("node"),
+          VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2"))
+
+    /** Every (query_id, node, d2) the width-`b` beam visited. */
+    def visited(entries: DataFrame, b: Int): DataFrame = {
+      var (visited, frontier, nf) =
+        beamStage(score(qxs.select("query_id").crossJoin(entries)), b)
+      for (_ <- 1 to rounds) {
+        if (nf > 0) {
+          val fresh = neighbors(frontier)
+            .select(col("query_id"), col("nbr").as("node")).distinct()
+            .join(visited.select("query_id", "node"),
+              Seq("query_id", "node"), "left_anti")
+          val (newV, newF, nf2) = beamStage(score(fresh), b)
+          // pieces are lineage-free — plain union (khop's rule)
+          visited = visited.unionByName(newV)
+          frontier = newF
+          nf = nf2
+        }
+      }
+      visited
+    }
+  }
+
+  /** The `n` nearest (query_id, node) rows per query by (d2, node),
+    * with their `rnk` kept. */
+  private def rankPerQuery(scored: DataFrame, n: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("d2"), col("node"))))
+      .filter(col("rnk") <= n)
+  }
+
+  /** [[rankPerQuery]] projected to (query_id, node). */
+  private def topPerQuery(scored: DataFrame, n: Int): DataFrame =
+    rankPerQuery(scored, n).select(col("query_id"), col("node"))
+
+  /** Exact top-`k` truth of every query in `qxs` over the index rows
+    * `ixs` (a full cross join — the recall reference of the kNN-graph
+    * queries), flagged `hit = 1` for a left join from the served rows.
+    */
+  private def knnTruth(qxs: DataFrame, ixs: DataFrame, k: Int): DataFrame =
+    topPerQuery(
+      qxs.crossJoin(ixs).select(col("query_id"), col("node"),
+        VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2")), k)
+      .withColumn("hit", lit(1L))
+
+  /** Symmetrized kNN edges (`src`, `dst`, `w` = 1): each `newSide` row
+    * keeps its `mKnn` nearest same-cell `candSide` rows (exact scaled
+    * L2 from `xsSrc`'s `xs`, ties by id), and every kept edge is also
+    * written reversed. Both sides carry (`vec_id`, `cell`) from
+    * [[VectorQuantizer.assignCells]]. A full build passes the same
+    * cells twice; q333's delta insert passes only the new nodes as
+    * `newSide` against the grown world.
+    */
+  private def knnEdges(xsSrc: DataFrame, newSide: DataFrame,
+                       candSide: DataFrame, mKnn: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val xs = xsSrc.select(col("vec_id"), col("xs"))
+    val pairs = newSide.as("a")
+      .join(candSide.as("b"), col("a.cell") === col("b.cell") &&
+        col("a.vec_id") =!= col("b.vec_id"))
+      .select(col("a.vec_id").as("u"), col("b.vec_id").as("v"))
+      .join(xs.select(col("vec_id").as("u"), col("xs").as("xu")), "u")
+      .join(xs.select(col("vec_id").as("v"), col("xs").as("xv")), "v")
+      .select(col("u"), col("v"),
+        VectorQuantizer.l2DistSq(col("xu"), col("xv")).as("d2"))
+    val knn = pairs.withColumn("rnk", row_number().over(
+        Window.partitionBy("u").orderBy(col("d2"), col("v"))))
+      .filter(col("rnk") <= mKnn)
+      .select(col("u"), col("v"))
+    knn.select(col("u").as("src"), col("v").as("dst"))
+      .unionByName(knn.select(col("v").as("src"), col("u").as("dst")))
+      .distinct()
+      .withColumn("w", lit(1L))
+  }
+
+  /** The q327 kNN graph over the scaled index rows `eIdx`: fit the
+    * shared coarse quantizer on them, assign each to its cell, and
+    * derive [[knnEdges]] among same-cell pairs — the edge frame every
+    * kNN-graph artifact publishes. The oracle twin is [[knnGraphCtes]].
+    */
+  private def knnGraphEdges(eIdx: DataFrame, mKnn: Int): DataFrame = {
+    val cent = VectorQuantizer.fitCentroids(eIdx, "vec_id", KM_C, KM_ITERS)
+    val cells = VectorQuantizer.assignCells(eIdx, cent, "vec_id")
+    knnEdges(eIdx, cells, cells, mKnn)
+  }
+
+  /** A deletion rule over one id column — ids with `id % mod = rem`,
+    * plus the single `extra` id when given — defined once and rendered
+    * both as a Spark [[Column]] and as oracle SQL, so the purge a query
+    * runs and the survivor world its oracle replays cannot disagree.
+    * `sql` renders without outer parentheses.
+    */
+  private final case class DeleteRule(mod: Int, rem: Int,
+                                      extra: Option[Int] = None) {
+    def apply(c: Column): Column =
+      extra.foldLeft(c % mod === rem)((p, x) => p || c === x)
+    def sql(c: String): String =
+      (s"$c % $mod = $rem" +: extra.map(x => s"$c = $x").toSeq)
+        .mkString(" OR ")
+  }
+
+  /** The purge slice of the kNN-graph lifecycle queries (q331/q334/
+    * q338): a 4% id rule PLUS entry node 100, so the entry-point drop
+    * is exercised, not just leaf retrieval. */
+  private val KNN_PURGED = DeleteRule(25, 7, Some(100))
 
   /** Build independent arms from driver threads (guide §2.6 — overlap
     * independent jobs): each arm's construction runs its OWN chain of
@@ -229,6 +377,47 @@ object PipelineQueries {
   private val MH_K = 16; private val MH_BANDS = 4; private val MH_R = 4
   private val MH_THRESH = 0.25
 
+  /** The oracle's MinHash signature select list over shingle column
+    * `s`: `min(h_i(s)) AS h$i` for each of the [[MH_K]] seeds
+    * ([[Hashing.seededSql]], the Spark side's hash bit-for-bit). */
+  private def mhSigColsSql: String =
+    (0 until MH_K).map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
+      .mkString(",\n    ")
+
+  /** The oracle's word-shingle MinHash chain over the word arrays
+    * `arr` of CTE `w`: `sh` holds the distinct 3-gram shingles, `sig`
+    * each doc's signature and `bands` its band rows — every row
+    * carrying the id columns `cols` (doc id plus its side tag). */
+  private def mhShingleBandCtes(cols: String): String =
+    s"""sh AS (SELECT DISTINCT $cols,
+       |         unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
+       |sig AS (
+       |  SELECT $cols,
+       |    $mhSigColsSql
+       |  FROM sh GROUP BY $cols),
+       |bands AS (
+       |  ${mhBandRowsSql(cols)})""".stripMargin
+
+  /** `cand`: the banded probe's candidate pairs — every new doc
+    * (`is_new = 1`) sharing a band key with an indexed doc
+    * (`is_new = 0`, aliased `x`). */
+  private def mhCandCte(x: String): String =
+    s"""cand AS (
+       |  SELECT DISTINCT a.doc_id AS new_id, $x.doc_id AS index_id
+       |  FROM bands a JOIN bands $x
+       |    ON a.band = $x.band AND a.band_key = $x.band_key
+       |  WHERE a.is_new = 1 AND $x.is_new = 0)""".stripMargin
+
+  /** The oracle's LSH band rows over signature CTE `sig`: one
+    * `UNION ALL` branch per band, keyed by its [[MH_R]] hashes joined
+    * with ','; `cols` are the id columns each row carries. */
+  private def mhBandRowsSql(cols: String, sig: String = "sig"): String =
+    (0 until MH_BANDS).map { b =>
+      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
+        .mkString(" || ',' || ")
+      s"SELECT $cols, $b AS band, $key AS band_key FROM $sig"
+    }.mkString("\n  UNION ALL ")
+
   // shared geometry of the substring-span family (q245/q257): one
   // gram width, one hot-gram cap, one minimum span — and ONE committed
   // posting artifact ([[gramPostings]]) both queries consume, so the
@@ -341,12 +530,6 @@ object PipelineQueries {
     * twin of [[minhashPairs]], generated from the same constants.
     */
   private def minhashPairsCtes: String = {
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i").mkString(",\n    ")
-    val bandRows = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}").mkString(" || ',' || ")
-      s"SELECT doc_id, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     val matchSum = (0 until MH_K)
       .map(i => s"(CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END)").mkString(" + ")
     s"""w AS (
@@ -355,10 +538,10 @@ object PipelineQueries {
        |  SELECT DISTINCT doc_id, unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
        |sig AS (
        |  SELECT doc_id,
-       |    $sigCols
+       |    $mhSigColsSql
        |  FROM sh GROUP BY doc_id),
        |bands AS (
-       |  $bandRows),
+       |  ${mhBandRowsSql("doc_id")}),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM bands a JOIN bands b
@@ -719,6 +902,116 @@ object PipelineQueries {
        |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
        |  FROM ek)""".stripMargin
   }
+
+  /** `params`: the banding parameters (r bits, nt tables) a
+    * [[SimIndex]] publish derives from its corpus count — `corpus` is
+    * the CTE of the rows the index was PUBLISHED from, so appends and
+    * purges key with the frozen publish-time values. */
+  private def lshParamsCte(corpus: String): String =
+    s"""params AS (
+       |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
+       |    ${VectorFunctions.mtTablesSql(VectorFunctions.mtBitsSql("count(*)"))} AS nt
+       |  FROM $corpus)""".stripMargin
+
+  /** Oracle twin of [[SimIndex]] keying for one side of a probe,
+    * against a `params` CTE carrying the frozen (r, nt): `${p}e`
+    * scales each `embeddings` row (projected as `id`) and attaches
+    * (r, nt), `${p}ek` fans it out once per table, and `${p}kb` holds
+    * its packed bucket per table — the [[mtCtes]] keying with the row
+    * filter free. `rows` follows `FROM embeddings, params` verbatim,
+    * leading whitespace included (" WHERE …" or "\n  WHERE …"): it
+    * selects the side (index rows, query rows, survivors of a purge).
+    * Probes name the index side "i" and the query side "q".
+    */
+  private def lshKeyCtes(p: String, rows: String,
+                         id: String = "vec_id"): String =
+    s"""${p}e AS (
+       |  SELECT $id, embedding,
+       |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
+       |  FROM embeddings, params$rows),
+       |${p}ek AS (
+       |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
+       |  FROM ${p}e),
+       |${p}kb AS (
+       |  SELECT vec_id, embedding, tbl,
+       |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
+       |  FROM ${p}ek)""".stripMargin
+
+  /** Oracle twin of the banded probe's scoring over [[lshKeyCtes]]'
+    * sides: `scored` keeps each (query, index row) pair's best
+    * in-bucket cosine over `qkb` ⋈ `ikb` (restricted by `pred` when
+    * given — the side rules the probe applies after the join), and
+    * `ranked` numbers each query's candidates by (cos_sim DESC,
+    * index_id) — [[SimIndex.probeTopK]]'s order.
+    */
+  private def lshRankedCtes(pred: Option[String] = None): String =
+    s"""scored AS (
+       |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
+       |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
+       |      AS cos_sim
+       |  FROM qkb q JOIN ikb kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
+       |${pred.map(p => s"  WHERE $p\n").getOrElse("")}  GROUP BY 1, 2),
+       |ranked AS (
+       |  SELECT query_id, index_id, cos_sim,
+       |    row_number() OVER (PARTITION BY query_id
+       |                       ORDER BY cos_sim DESC, index_id) AS rnk
+       |  FROM scored)""".stripMargin
+
+  /** [[lshRankedCtes]] plus the probe's judged output: each query's
+    * top `k` as (query_id, index_id, cos_sim, rnk). */
+  private def lshTopKSql(k: Int, pred: Option[String] = None): String =
+    s"""${lshRankedCtes(pred)}
+       |SELECT query_id, index_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
+       |FROM ranked WHERE rnk <= $k
+       |ORDER BY query_id, rnk""".stripMargin
+
+  /** The approximate arm of the recall audits over [[mtCtes]]' `kb`:
+    * `ascore` is each (query, index row) pair's best in-bucket cosine,
+    * `ar` numbers each query's candidates by (cos_sim DESC, index_id).
+    */
+  private def annRankedCtes: String =
+    s"""ascore AS (
+       |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
+       |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
+       |      AS cos_sim
+       |  FROM qkb q JOIN kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
+       |  GROUP BY 1, 2),
+       |ar AS (
+       |  SELECT query_id, index_id,
+       |    row_number() OVER (PARTITION BY query_id
+       |                       ORDER BY cos_sim DESC, index_id) AS rnk
+       |  FROM ascore)""".stripMargin
+
+  /** One BM25 world of the lexical oracles over the token CTE `tok`:
+    * the collection stats (`tf$i`, `dl$i`, `df$i`, `st$i`) of the
+    * corpus rows `corpusPred` admits, the query terms `qt$i` of docs
+    * `qLo <= doc_id < qHi`, and their scored, ranked matches `rk$i`
+    * ([[LexIndex.contribSql]], the probe's integer contribution). */
+  private def lexWorldCtes(i: Int, corpusPred: String, qLo: Long,
+                           qHi: Long): String =
+    s"""tf$i AS (SELECT doc_id, term, count(*)::BIGINT AS tf
+       |         FROM tok WHERE $corpusPred GROUP BY 1, 2),
+       |dl$i AS (SELECT doc_id, count(*)::BIGINT AS dl
+       |         FROM tok WHERE $corpusPred GROUP BY 1),
+       |df$i AS (SELECT term, count(*)::BIGINT AS df FROM tf$i GROUP BY 1),
+       |st$i AS (SELECT count(*)::BIGINT AS n_docs,
+       |           sum(dl)::BIGINT AS sumdl FROM dl$i),
+       |qt$i AS (
+       |  SELECT DISTINCT doc_id AS query_id, term FROM tok
+       |  WHERE doc_id >= $qLo AND doc_id < $qHi),
+       |sc$i AS (
+       |  SELECT q.query_id, f.doc_id AS index_id,
+       |    ${graft.operators.LexIndex.contribSql(
+             "f.tf", "d.df", "l.dl", "n_docs", "sumdl", "//")} AS contrib
+       |  FROM tf$i f JOIN qt$i q USING (term) JOIN df$i d USING (term)
+       |  JOIN dl$i l ON l.doc_id = f.doc_id CROSS JOIN st$i),
+       |ag$i AS (
+       |  SELECT query_id, index_id, count(*)::BIGINT AS n_hit,
+       |    sum(contrib)::BIGINT AS score
+       |  FROM sc$i GROUP BY 1, 2),
+       |rk$i AS (
+       |  SELECT ag$i.*, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY score DESC, index_id) AS rnk FROM ag$i)""".stripMargin
 
   private def probesSqlDyn(queryCte: String): String =
     s"""SELECT query_id, qv,
@@ -1689,6 +1982,140 @@ object PipelineQueries {
        |${(1 to KM_ITERS).map(iterCte).mkString(",\n")}""".stripMargin
   }
 
+  /** The IVF coarse assignment after [[kmeansCtes]]: `fa` holds every
+    * `e` vector's distance to each final centroid, and `ca` each
+    * vector's nearest cell (ties by cell id) among the rows `caPred`
+    * admits — the index corpus when `e` also carries query vectors.
+    */
+  private def ivfCellCtes(caPred: Option[String] = None): String =
+    s"""fa AS (
+       |  SELECT e.vec_id, c.cell,
+       |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
+       |  FROM e JOIN c$KM_ITERS c USING (dim)
+       |  GROUP BY e.vec_id, c.cell),
+       |ca AS (
+       |  SELECT vec_id, cell FROM (
+       |    SELECT vec_id, cell,
+       |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rnk
+       |    FROM fa${caPred.map(p => s" WHERE $p").getOrElse("")}) WHERE rnk = 1)""".stripMargin
+
+  /** Oracle twin of the kNN-graph cell assignment: [[kmeansCtes]] fit
+    * on `e.vec_id < fitMax`, then `ca` = every `vec_id < cellMax`
+    * assigned its nearest fitted cell (ties by cell id).
+    */
+  private def knnCellCtes(fitMax: Long, cellMax: Long): String =
+    s"""${kmeansCtes(fitPred = s"e.vec_id < $fitMax")},
+       |fa AS (
+       |  SELECT e.vec_id, c.cell,
+       |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
+       |  FROM e JOIN c$KM_ITERS c USING (dim)
+       |  WHERE e.vec_id < $cellMax
+       |  GROUP BY e.vec_id, c.cell),
+       |ca AS (
+       |  SELECT vec_id, cell FROM (
+       |    SELECT vec_id, cell,
+       |      row_number() OVER (PARTITION BY vec_id
+       |                         ORDER BY d2, cell) AS rnk
+       |    FROM fa) z WHERE rnk = 1)""".stripMargin
+
+  /** Oracle twin of [[knnEdges]] before symmetrizing: `pd` holds the
+    * same-cell pair distances (restricted by `pairPred` when given)
+    * and `knn` each u's `mKnn` nearest v. */
+  private def knnPairCtes(pd: String, knn: String, mKnn: Int,
+                          pairPred: Option[String] = None): String =
+    s"""$pd AS (
+       |  SELECT a.vec_id AS u, b.vec_id AS v,
+       |    sum((ea.xs - eb.xs) * (ea.xs - eb.xs)) AS d2
+       |  FROM ca a JOIN ca b ON a.cell = b.cell
+       |    AND a.vec_id <> b.vec_id
+       |  JOIN e ea ON ea.vec_id = a.vec_id
+       |  JOIN e eb ON eb.vec_id = b.vec_id AND eb.dim = ea.dim
+       |${pairPred.map(p => s"  WHERE $p\n").getOrElse("")}  GROUP BY 1, 2),
+       |$knn AS (
+       |  SELECT u, v FROM (
+       |    SELECT u, v,
+       |      row_number() OVER (PARTITION BY u ORDER BY d2, v) AS rnk
+       |    FROM $pd) z WHERE rnk <= $mKnn)""".stripMargin
+
+  /** Oracle twin of [[knnGraphEdges]] over the index rows
+    * `vec_id < indexMax`: cells, pairs, and the symmetrized edge CTE
+    * named `graph` (src, dst). */
+  private def knnGraphCtes(graph: String, indexMax: Long, mKnn: Int): String =
+    s"""${knnCellCtes(indexMax, indexMax)},
+       |${knnPairCtes("pd", "knn", mKnn)},
+       |$graph AS (SELECT u AS src, v AS dst FROM knn
+       |${" " * (graph.length + 5)}UNION SELECT v, u FROM knn)""".stripMargin
+
+  /** Oracle twin of the kNN-graph purge ([[KNN_PURGED]] tombstoned,
+    * then [[GraphIndex.purgeCompact]]): `del` holds the purged index
+    * ids below `indexMax`, and `gm` the edges of `graph` with every
+    * edge incident to one dropped — exactly the rows the compaction
+    * removes from both twins. */
+  private def knnPurgedCtes(graph: String, indexMax: Long): String =
+    s"""del AS (SELECT DISTINCT vec_id FROM e
+       |        WHERE vec_id < $indexMax AND (${KNN_PURGED.sql("vec_id")})),
+       |gm AS (
+       |  SELECT src, dst FROM $graph
+       |  WHERE src NOT IN (SELECT vec_id FROM del)
+       |    AND dst NOT IN (SELECT vec_id FROM del))""".stripMargin
+
+  /** `qd`: the exact scaled-L2 distance of every query
+    * (`indexMax <= vec_id < qMax`) to every index row, the oracle's
+    * scoring table for the beam rounds and the truth; `indexPred`
+    * further restricts the index rows. */
+  private def knnQueryDistCte(indexMax: Long, qMax: Long,
+                              indexPred: Option[String] = None): String =
+    s"""qd AS (
+       |  SELECT q.vec_id AS query_id, x.vec_id AS node,
+       |    sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
+       |  FROM e q JOIN e x ON q.dim = x.dim AND x.vec_id < $indexMax
+       |  WHERE q.vec_id >= $indexMax AND q.vec_id < $qMax
+       |${indexPred.map(p => s"    AND $p\n").getOrElse("")}  GROUP BY 1, 2)""".stripMargin
+
+  /** Oracle twin of [[topPerQuery]]: CTE `name` keeps the `n` nearest
+    * (query_id, node) per query of `from` by (d2, node). */
+  private def topNodesCte(name: String, from: String, n: Int): String =
+    s"""$name AS (
+       |  SELECT query_id, node FROM (
+       |    SELECT query_id, node,
+       |      row_number() OVER (PARTITION BY query_id
+       |                         ORDER BY d2, node) AS rnk
+       |    FROM $from) z WHERE rnk <= $n)""".stripMargin
+
+  /** Oracle twin of [[GraphBeam.visited]] from the seed rows onward:
+    * given the scored entry rows `v0$sfx`, the beam `f0$sfx`, then per
+    * round r the fresh frontier `n$r$sfx` (neighbors of f_{r-1} not
+    * yet visited), the visited union `v$r$sfx` and the next beam
+    * `f$r$sfx` — all scored off `qd`. `edges` is the FROM item that
+    * binds the edge CTE as `g` (`g` itself, or e.g. `gm g`).
+    */
+  private def beamWalkCtes(sfx: String, edges: String, b: Int,
+                           rounds: Int): String = {
+    val walk = (1 to rounds).map { r =>
+      s"""n$r$sfx AS (
+         |  SELECT DISTINCT f.query_id, g.dst AS node
+         |  FROM f${r - 1}$sfx f JOIN $edges ON g.src = f.node
+         |  WHERE NOT EXISTS (SELECT 1 FROM v${r - 1}$sfx v
+         |                    WHERE v.query_id = f.query_id
+         |                      AND v.node = g.dst)),
+         |v$r$sfx AS (
+         |  SELECT query_id, node, d2 FROM v${r - 1}$sfx
+         |  UNION ALL
+         |  SELECT n.query_id, n.node, q.d2
+         |  FROM n$r$sfx n JOIN qd q
+         |    ON q.query_id = n.query_id AND q.node = n.node),
+         |f$r$sfx AS (
+         |  SELECT query_id, node FROM (
+         |    SELECT n.query_id, n.node,
+         |      row_number() OVER (PARTITION BY n.query_id
+         |                         ORDER BY q.d2, n.node) AS rnk
+         |    FROM n$r$sfx n JOIN qd q
+         |      ON q.query_id = n.query_id AND q.node = n.node) z
+         |  WHERE rnk <= $b)""".stripMargin
+    }
+    (topNodesCte(s"f0$sfx", s"v0$sfx", b) +: walk).mkString(",\n")
+  }
+
   val kmeansCodebook: Q = Q(
     (s, d) => {
       val fitted = VectorQuantizer.fit(
@@ -1740,16 +2167,7 @@ object PipelineQueries {
           .orderBy("query_id", "rnk")
       },
       s"""WITH ${kmeansCtes()},
-         |fa AS (
-         |  SELECT e.vec_id, c.cell,
-         |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-         |  FROM e JOIN c$KM_ITERS c USING (dim)
-         |  GROUP BY e.vec_id, c.cell),
-         |ca AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rnk
-         |    FROM fa) WHERE rnk = 1),
+         |${ivfCellCtes()},
          |qa AS (
          |  SELECT vec_id AS query_id, cell FROM (
          |    SELECT vec_id, cell,
@@ -2774,14 +3192,6 @@ object PipelineQueries {
     */
   val streamBatchTwin: Q = {
     val NB = 3L
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, b, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -2810,14 +3220,7 @@ object PipelineQueries {
          |  SELECT doc_id + 1000000, text, (doc_id + 1000000) % $NB FROM docs),
          |w AS (SELECT doc_id, b, ${TextFunctions.wordsSql("text")} AS arr
          |      FROM corpus),
-         |sh AS (SELECT DISTINCT doc_id, b,
-         |         unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
-         |sig AS (
-         |  SELECT doc_id, b,
-         |    $sigCols
-         |  FROM sh GROUP BY doc_id, b),
-         |bands AS (
-         |  $bandRowsSql)
+         |${mhShingleBandCtes("doc_id, b")}
          |SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
          |FROM bands a JOIN bands x
          |  ON a.band = x.band AND a.band_key = x.band_key
@@ -2846,14 +3249,6 @@ object PipelineQueries {
     */
   val dedupPurgeStream: Q = {
     val NB = 3L
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, b, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -2893,14 +3288,7 @@ object PipelineQueries {
          |  SELECT doc_id + 1000000, text, (doc_id + 1000000) % $NB FROM docs),
          |w AS (SELECT doc_id, b, ${TextFunctions.wordsSql("text")} AS arr
          |      FROM corpus),
-         |sh AS (SELECT DISTINCT doc_id, b,
-         |         unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
-         |sig AS (
-         |  SELECT doc_id, b,
-         |    $sigCols
-         |  FROM sh GROUP BY doc_id, b),
-         |bands AS (
-         |  $bandRowsSql)
+         |${mhShingleBandCtes("doc_id, b")}
          |SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
          |FROM bands a JOIN bands x
          |  ON a.band = x.band AND a.band_key = x.band_key
@@ -3776,12 +4164,6 @@ object PipelineQueries {
     */
   val incrementalDedup: Q = {
     val INDEX_MAX = 400L; val REDELIVER = 50L; val MIN_J = 0.5
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i").mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}").mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -3820,19 +4202,8 @@ object PipelineQueries {
          |    WHERE doc_id < $REDELIVER),
          |w AS (SELECT doc_id, is_new,
          |        ${TextFunctions.wordsSql("text")} AS arr FROM corpus),
-         |sh AS (SELECT DISTINCT doc_id, is_new,
-         |         unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
-         |sig AS (
-         |  SELECT doc_id, is_new,
-         |    $sigCols
-         |  FROM sh GROUP BY doc_id, is_new),
-         |bands AS (
-         |  $bandRowsSql),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS index_id
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_key = b.band_key
-         |  WHERE a.is_new = 1 AND b.is_new = 0),
+         |${mhShingleBandCtes("doc_id, is_new")},
+         |${mhCandCte("b")},
          |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
          |inter AS (
          |  SELECT c.new_id, c.index_id, count(*) AS n_inter
@@ -3908,29 +4279,8 @@ object PipelineQueries {
       s"""WITH idx AS (SELECT vec_id, embedding FROM embeddings
          |             WHERE vec_id < $INDEX_MAX),
          |${mtCtes("idx")},
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |ascore AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  GROUP BY 1, 2),
-         |ar AS (
-         |  SELECT query_id, index_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM ascore),
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX")},
+         |$annRankedCtes,
          |ax AS (SELECT query_id, index_id FROM ar WHERE rnk <= $K),
          |qx AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
          |       FROM embeddings
@@ -3999,47 +4349,10 @@ object PipelineQueries {
       },
       s"""WITH idx0 AS (SELECT vec_id, embedding FROM embeddings
          |              WHERE vec_id < $BASE_MAX),
-         |params AS (
-         |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-         |    ${VectorFunctions.mtTablesSql(VectorFunctions.mtBitsSql("count(*)"))} AS nt
-         |  FROM idx0),
-         |ie AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params WHERE vec_id < $DELTA_MAX),
-         |iek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM ie),
-         |ikb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM iek),
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $DELTA_MAX AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN ikb kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, cos_sim,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${lshParamsCte("idx0")},
+         |${lshKeyCtes("i", s" WHERE vec_id < $DELTA_MAX")},
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $DELTA_MAX AND vec_id < $Q_MAX")},
+         |${lshTopKSql(K)}""".stripMargin)
   }
 
   /** ANN index purge (q258) — the GDPR chain judged end-to-end on the
@@ -4090,48 +4403,10 @@ object PipelineQueries {
       },
       s"""WITH idx0 AS (SELECT vec_id, embedding FROM embeddings
          |              WHERE vec_id < $INDEX_MAX),
-         |params AS (
-         |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-         |    ${VectorFunctions.mtTablesSql(VectorFunctions.mtBitsSql("count(*)"))} AS nt
-         |  FROM idx0),
-         |ie AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id < $INDEX_MAX AND vec_id % 10 <> 0),
-         |iek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM ie),
-         |ikb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM iek),
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN ikb kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, cos_sim,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${lshParamsCte("idx0")},
+         |${lshKeyCtes("i", s"\n  WHERE vec_id < $INDEX_MAX AND vec_id % 10 <> 0")},
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX")},
+         |${lshTopKSql(K)}""".stripMargin)
   }
 
   /** ANN delta redelivery across a purge boundary (q301) — the last
@@ -4188,48 +4463,10 @@ object PipelineQueries {
       },
       s"""WITH idx0 AS (SELECT vec_id, embedding FROM embeddings
          |              WHERE vec_id < $BASE_MAX),
-         |params AS (
-         |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-         |    ${VectorFunctions.mtTablesSql(VectorFunctions.mtBitsSql("count(*)"))} AS nt
-         |  FROM idx0),
-         |ie AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id < $DELTA_MAX AND vec_id % 10 <> 0),
-         |iek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM ie),
-         |ikb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM iek),
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $DELTA_MAX AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN ikb kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, cos_sim,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${lshParamsCte("idx0")},
+         |${lshKeyCtes("i", s"\n  WHERE vec_id < $DELTA_MAX AND vec_id % 10 <> 0")},
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $DELTA_MAX AND vec_id < $Q_MAX")},
+         |${lshTopKSql(K)}""".stripMargin)
   }
 
   /** Judged batch twin of the continuous ANN probe (q259) — the
@@ -4282,48 +4519,11 @@ object PipelineQueries {
       },
       s"""WITH idx0 AS (SELECT vec_id, embedding FROM embeddings
          |              WHERE vec_id < $BASE_MAX),
-         |params AS (
-         |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-         |    ${VectorFunctions.mtTablesSql(VectorFunctions.mtBitsSql("count(*)"))} AS nt
-         |  FROM idx0),
-         |ie AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params WHERE vec_id < $DELTA_MAX),
-         |iek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM ie),
-         |ikb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM iek),
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $DELTA_MAX AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN ikb kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  WHERE kb.vec_id < $BASE_MAX OR q.vec_id >= $B0_MAX
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, cos_sim,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${lshParamsCte("idx0")},
+         |${lshKeyCtes("i", s" WHERE vec_id < $DELTA_MAX")},
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $DELTA_MAX AND vec_id < $Q_MAX")},
+         |${lshTopKSql(K,
+              Some(s"kb.vec_id < $BASE_MAX OR q.vec_id >= $B0_MAX"))}""".stripMargin)
   }
 
   /** Streaming ANN gate across a PURGE boundary (q305) — the
@@ -4389,49 +4589,11 @@ object PipelineQueries {
       },
       s"""WITH idx0 AS (SELECT vec_id, embedding FROM embeddings
          |              WHERE vec_id < $BASE),
-         |params AS (
-         |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-         |    ${VectorFunctions.mtTablesSql(VectorFunctions.mtBitsSql("count(*)"))} AS nt
-         |  FROM idx0),
-         |ie AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params WHERE vec_id < $B0),
-         |iek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM ie),
-         |ikb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM iek),
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $BASE AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN ikb kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  WHERE (q.vec_id < $B0 AND kb.vec_id < $BASE)
-         |     OR (q.vec_id >= $B0 AND kb.vec_id % 10 <> 0)
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, cos_sim,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${lshParamsCte("idx0")},
+         |${lshKeyCtes("i", s" WHERE vec_id < $B0")},
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $BASE AND vec_id < $Q_MAX")},
+         |${lshTopKSql(K, Some(s"(q.vec_id < $B0 AND kb.vec_id < $BASE)" +
+              s"\n     OR (q.vec_id >= $B0 AND kb.vec_id % 10 <> 0)"))}""".stripMargin)
   }
 
   /** Persisted product-quantization index (q260) — q247's PQ/ADC
@@ -4486,10 +4648,77 @@ object PipelineQueries {
        |  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS dim,
        |    round(unnest(embedding)::DOUBLE * 1000000)::BIGINT AS xs
        |  FROM embeddings),
-       |ep AS (
+       |$pqEpCte""".stripMargin
+
+  /** `ep`: the scaled long-form rows of `e` split into [[PQ_M]]
+    * subspaces of [[PQ_DSUB]] dims (sub, sdim, xs). */
+  private def pqEpCte: String =
+    s"""ep AS (
        |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
        |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
        |  FROM e)""".stripMargin
+
+  /** The PQ codebook fit over the train CTE `ix`: seeds `pc0` (the
+    * first [[PQ_KS]] train vectors), then [[PQ_ITERS]] Lloyd rounds
+    * ([[pqIterCte]]) ending at the final codebook. */
+  private def pqFitCtes: String =
+    s"""pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
+       |        WHERE vec_id < $PQ_KS),
+       |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")}""".stripMargin
+
+  /** `codes`: each vector's PQ code — per subspace the nearest cell
+    * of the `fd` distance rows (ties by cell id), the oracle twin of
+    * the encode step every PQ artifact persists. */
+  private def pqCodesCte: String =
+    s"""codes AS (
+       |  SELECT vec_id, sub, cell FROM (
+       |    SELECT vec_id, sub, cell,
+       |      row_number() OVER (PARTITION BY vec_id, sub
+       |                         ORDER BY d2, cell) AS rnk
+       |    FROM fd) WHERE rnk = 1)""".stripMargin
+
+  /** [[pqCodesCte]] over the train CTE `ix` itself: `fd` holds each
+    * train row's subspace distances to the final pc[[PQ_ITERS]]
+    * codebook, `codes` its code. */
+  private def pqTrainCodesCtes: String =
+    s"""fd AS (
+       |  SELECT ix.vec_id, c.sub, c.cell,
+       |    sum((ix.xs - c.cs) * (ix.xs - c.cs)) AS d2
+       |  FROM ix JOIN pc$PQ_ITERS c ON ix.sub = c.sub AND ix.sdim = c.sdim
+       |  GROUP BY 1, 2, 3),
+       |$pqCodesCte""".stripMargin
+
+  /** `dtab`: the ADC distance table — each query row's (`queriesPred`
+    * over `ep`) squared distance to every pc[[PQ_ITERS]] cell, per
+    * subspace. */
+  private def pqDistTableCte(queriesPred: String): String =
+    s"""dtab AS (
+       |  SELECT q.vec_id AS query_id, c.sub, c.cell,
+       |    sum((q.xs - c.cs) * (q.xs - c.cs)) AS d2
+       |  FROM ep q JOIN pc$PQ_ITERS c ON q.sub = c.sub AND q.sdim = c.sdim
+       |  WHERE $queriesPred
+       |  GROUP BY 1, 2, 3)""".stripMargin
+
+  /** The IVF-PQ probe's judged tail: ADC-score only the candidate
+    * (query_id, vec_id) rows of `cand` through `codes` ⋈ `dtab`, rank
+    * by (adc_d2, index_id) and keep each query's top `k`. */
+  private def ivfPqTopKSql(k: Int): String =
+    s"""scored AS (
+       |  SELECT cand.query_id, cd.vec_id AS index_id,
+       |    sum(dt.d2)::BIGINT AS adc_d2
+       |  FROM cand
+       |  JOIN codes cd ON cd.vec_id = cand.vec_id
+       |  JOIN dtab dt ON dt.query_id = cand.query_id
+       |    AND dt.sub = cd.sub AND dt.cell = cd.cell
+       |  GROUP BY 1, 2),
+       |ranked AS (
+       |  SELECT query_id, index_id, adc_d2,
+       |    row_number() OVER (PARTITION BY query_id
+       |                       ORDER BY adc_d2, index_id) AS rnk
+       |  FROM scored)
+       |SELECT query_id, index_id, adc_d2, CAST(rnk AS BIGINT) AS rnk
+       |FROM ranked WHERE rnk <= $k
+       |ORDER BY query_id, rnk""".stripMargin
 
   /** Encode `encodeCte`'s vectors with the pc[[PQ_ITERS]] codebook and
     * ADC-score `queriesPred` rows against them — CTE chain ending at
@@ -4506,18 +4735,8 @@ object PipelineQueries {
        |  FROM $encodeCte ib JOIN pc$PQ_ITERS c
        |    ON ib.sub = c.sub AND ib.sdim = c.sdim
        |  GROUP BY 1, 2, 3),
-       |codes AS (
-       |  SELECT vec_id, sub, cell FROM (
-       |    SELECT vec_id, sub, cell,
-       |      row_number() OVER (PARTITION BY vec_id, sub
-       |                         ORDER BY d2, cell) AS rnk
-       |    FROM fd) WHERE rnk = 1),
-       |dtab AS (
-       |  SELECT q.vec_id AS query_id, c.sub, c.cell,
-       |    sum((q.xs - c.cs) * (q.xs - c.cs)) AS d2
-       |  FROM ep q JOIN pc$PQ_ITERS c ON q.sub = c.sub AND q.sdim = c.sdim
-       |  WHERE $queriesPred
-       |  GROUP BY 1, 2, 3),
+       |$pqCodesCte,
+       |${pqDistTableCte(queriesPred)},
        |scored AS (
        |  SELECT dt.query_id, cd.vec_id AS index_id,
        |    sum(dt.d2)::BIGINT AS adc_d2
@@ -4530,6 +4749,77 @@ object PipelineQueries {
        |    row_number() OVER (PARTITION BY query_id
        |                       ORDER BY adc_d2, index_id) AS rnk
        |  FROM scored)""".stripMargin
+
+  /** Exact top-[[PQ_K]] truth (query_id, index_id, hit = 1) of the
+    * scaled query rows `eQ` over the scaled index rows `eI`: a full
+    * cross join with the (fixed, small) query side broadcast, ranked
+    * by (integer L2, index_id) — the recall reference of the PQ
+    * multi-arm audits. The oracle twin is [[pqTruthCte]]. */
+  private def pqExactTruth(eI: DataFrame, eQ: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    eI.crossJoin(broadcast(eQ.select(
+        col("vec_id").as("query_id"), col("xs").as("qxs"))))
+      .select(col("query_id"), col("vec_id").as("index_id"),
+        VectorQuantizer.l2DistSq(col("qxs"), col("xs")).as("d2"))
+      .withColumn("rnk", row_number().over(Window
+        .partitionBy("query_id").orderBy(asc("d2"), asc("index_id"))))
+      .filter(col("rnk") <= PQ_K)
+      .select(col("query_id"), col("index_id"), lit(1L).as("hit"))
+  }
+
+  /** Recall of the `served` (query_id, index_id) rows of each arm
+    * (grouped by `keys`, ordered by the first) against `truth`:
+    * n_pairs, n_hit and recall_ppm out of `nExpected` true pairs.
+    * The oracle twin is [[variantRecallSql]]. */
+  private def armRecall(served: DataFrame, truth: DataFrame,
+                        keys: Seq[String], nExpected: Long): DataFrame =
+    served
+      .join(truth, Seq("query_id", "index_id"), "left")
+      .groupBy(keys.head, keys.tail: _*)
+      .agg(count(lit(1)).as("n_pairs"),
+        coalesce(sum("hit"), lit(0L)).as("n_hit"))
+      .withColumn("recall_ppm",
+        expr(s"n_hit * 1000000 div ($nExpected)"))
+      .orderBy(keys.head)
+
+  /** `truth`: the oracle's exact top-[[PQ_K]] (query_id, index_id)
+    * over the scaled long-form corpus `e` (built by `eCtes`), scoring
+    * the (query, index) pairs `pairPred` admits. */
+  private def pqTruthCte(pairPred: String,
+                         eCtes: String = """e AS (
+      |      SELECT vec_id,
+      |        unnest(range(1, len(embedding) + 1)) AS dim,
+      |        round(unnest(embedding)::DOUBLE * 1000000)::BIGINT AS xs
+      |      FROM embeddings)""".stripMargin): String =
+    s"""truth AS (
+       |  SELECT query_id, index_id FROM (
+       |    WITH $eCtes,
+       |    td AS (
+       |      SELECT q.vec_id AS query_id, x.vec_id AS index_id,
+       |        sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
+       |      FROM e q JOIN e x USING (dim)
+       |      WHERE $pairPred
+       |      GROUP BY 1, 2)
+       |    SELECT query_id, index_id FROM (
+       |      SELECT query_id, index_id,
+       |        row_number() OVER (PARTITION BY query_id
+       |                           ORDER BY d2, index_id) AS rnk
+       |      FROM td) WHERE rnk <= $PQ_K))""".stripMargin
+
+  /** The oracle's per-variant recall over `truth`: `arms` is the FROM
+    * item of every served (variant, query_id, index_id) row. */
+  private def variantRecallSql(arms: String, nExpected: Long): String =
+    s"""SELECT variant, count(*)::BIGINT AS n_pairs,
+       |  coalesce(sum(hit), 0)::BIGINT AS n_hit,
+       |  (coalesce(sum(hit), 0) * 1000000 // $nExpected)::BIGINT
+       |    AS recall_ppm
+       |FROM (
+       |  SELECT p.variant,
+       |    CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END AS hit
+       |  FROM $arms p
+       |  LEFT JOIN truth t ON t.query_id = p.query_id
+       |    AND t.index_id = p.index_id)
+       |GROUP BY variant ORDER BY variant""".stripMargin
 
   /** [[pqRankCtes]] closed with the top-[[PQ_K]] select. */
   private def pqScoreSql(encodeCte: String, queriesPred: String): String =
@@ -4605,9 +4895,7 @@ object PipelineQueries {
       },
       s"""WITH $pqEpCtes,
          |ix AS (SELECT * FROM ep WHERE vec_id < $BASE_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |enc AS (SELECT * FROM ep WHERE vec_id < $DELTA_MAX),
          |${pqScoreSql("enc",
              s"q.vec_id >= $DELTA_MAX AND q.vec_id < $Q_MAX")}""".stripMargin)
@@ -4656,9 +4944,7 @@ object PipelineQueries {
       },
       s"""WITH $pqEpCtes,
          |ix AS (SELECT * FROM ep WHERE vec_id < $INDEX_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |enc AS (SELECT * FROM ix WHERE vec_id % 10 <> 0),
          |${pqScoreSql("enc",
              s"q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX")}""".stripMargin)
@@ -4736,16 +5022,7 @@ object PipelineQueries {
           .orderBy("query_id", "rnk")
       },
       s"""WITH ${kmeansCtes()},
-         |fa AS (
-         |  SELECT e.vec_id, c.cell,
-         |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-         |  FROM e JOIN c$KM_ITERS c USING (dim)
-         |  GROUP BY e.vec_id, c.cell),
-         |ca AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rnk
-         |    FROM fa) WHERE rnk = 1),
+         |${ivfCellCtes()},
          |qa AS (
          |  SELECT vec_id AS query_id, cell FROM (
          |    SELECT vec_id, cell,
@@ -4754,47 +5031,12 @@ object PipelineQueries {
          |cand AS (
          |  SELECT qa.query_id, ca.vec_id
          |  FROM qa JOIN ca ON qa.cell = ca.cell AND ca.vec_id <> qa.query_id),
-         |ep AS (
-         |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
-         |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
-         |  FROM e),
+         |$pqEpCte,
          |ix AS (SELECT * FROM ep),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
-         |fd AS (
-         |  SELECT ix.vec_id, c.sub, c.cell,
-         |    sum((ix.xs - c.cs) * (ix.xs - c.cs)) AS d2
-         |  FROM ix JOIN pc$PQ_ITERS c ON ix.sub = c.sub AND ix.sdim = c.sdim
-         |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT vec_id, sub, cell,
-         |      row_number() OVER (PARTITION BY vec_id, sub
-         |                         ORDER BY d2, cell) AS rnk
-         |    FROM fd) WHERE rnk = 1),
-         |dtab AS (
-         |  SELECT q.vec_id AS query_id, c.sub, c.cell,
-         |    sum((q.xs - c.cs) * (q.xs - c.cs)) AS d2
-         |  FROM ep q JOIN pc$PQ_ITERS c ON q.sub = c.sub AND q.sdim = c.sdim
-         |  WHERE q.vec_id < $NQ
-         |  GROUP BY 1, 2, 3),
-         |scored AS (
-         |  SELECT cand.query_id, cd.vec_id AS index_id,
-         |    sum(dt.d2)::BIGINT AS adc_d2
-         |  FROM cand
-         |  JOIN codes cd ON cd.vec_id = cand.vec_id
-         |  JOIN dtab dt ON dt.query_id = cand.query_id
-         |    AND dt.sub = cd.sub AND dt.cell = cd.cell
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, adc_d2,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY adc_d2, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, adc_d2, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $PQ_K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |$pqFitCtes,
+         |$pqTrainCodesCtes,
+         |${pqDistTableCte(s"q.vec_id < $NQ")},
+         |${ivfPqTopKSql(PQ_K)}""".stripMargin)
   }
 
   /** PERSISTED IVFPQ serving (q270) — q263's pruning algebra served
@@ -4834,16 +5076,7 @@ object PipelineQueries {
           .orderBy("query_id", "rnk")
       },
       s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $INDEX_MAX")},
-         |fa AS (
-         |  SELECT e.vec_id, c.cell,
-         |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-         |  FROM e JOIN c$KM_ITERS c USING (dim)
-         |  GROUP BY e.vec_id, c.cell),
-         |ca AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rnk
-         |    FROM fa WHERE vec_id < $INDEX_MAX) WHERE rnk = 1),
+         |${ivfCellCtes(Some(s"vec_id < $INDEX_MAX"))},
          |qa AS (
          |  SELECT vec_id AS query_id, cell FROM (
          |    SELECT vec_id, cell,
@@ -4853,47 +5086,12 @@ object PipelineQueries {
          |cand AS (
          |  SELECT qa.query_id, ca.vec_id
          |  FROM qa JOIN ca ON qa.cell = ca.cell AND ca.vec_id <> qa.query_id),
-         |ep AS (
-         |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
-         |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
-         |  FROM e),
+         |$pqEpCte,
          |ix AS (SELECT * FROM ep WHERE vec_id < $INDEX_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
-         |fd AS (
-         |  SELECT ix.vec_id, c.sub, c.cell,
-         |    sum((ix.xs - c.cs) * (ix.xs - c.cs)) AS d2
-         |  FROM ix JOIN pc$PQ_ITERS c ON ix.sub = c.sub AND ix.sdim = c.sdim
-         |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT vec_id, sub, cell,
-         |      row_number() OVER (PARTITION BY vec_id, sub
-         |                         ORDER BY d2, cell) AS rnk
-         |    FROM fd) WHERE rnk = 1),
-         |dtab AS (
-         |  SELECT q.vec_id AS query_id, c.sub, c.cell,
-         |    sum((q.xs - c.cs) * (q.xs - c.cs)) AS d2
-         |  FROM ep q JOIN pc$PQ_ITERS c ON q.sub = c.sub AND q.sdim = c.sdim
-         |  WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-         |  GROUP BY 1, 2, 3),
-         |scored AS (
-         |  SELECT cand.query_id, cd.vec_id AS index_id,
-         |    sum(dt.d2)::BIGINT AS adc_d2
-         |  FROM cand
-         |  JOIN codes cd ON cd.vec_id = cand.vec_id
-         |  JOIN dtab dt ON dt.query_id = cand.query_id
-         |    AND dt.sub = cd.sub AND dt.cell = cd.cell
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, adc_d2,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY adc_d2, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, adc_d2, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $PQ_K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |$pqFitCtes,
+         |$pqTrainCodesCtes,
+         |${pqDistTableCte(s"q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX")},
+         |${ivfPqTopKSql(PQ_K)}""".stripMargin)
   }
 
   /** IVFPQ nprobe/recall tuning sweep (q274) — THE operating knob of
@@ -4945,16 +5143,7 @@ object PipelineQueries {
           .orderBy("np")
       },
       s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $INDEX_MAX")},
-         |fa AS (
-         |  SELECT e.vec_id, c.cell,
-         |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-         |  FROM e JOIN c$KM_ITERS c USING (dim)
-         |  GROUP BY e.vec_id, c.cell),
-         |ca AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rnk
-         |    FROM fa WHERE vec_id < $INDEX_MAX) WHERE rnk = 1),
+         |${ivfCellCtes(Some(s"vec_id < $INDEX_MAX"))},
          |qa AS (
          |  SELECT vec_id AS query_id, cell, rnk FROM (
          |    SELECT vec_id, cell,
@@ -4962,31 +5151,11 @@ object PipelineQueries {
          |    FROM fa WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX)
          |  WHERE rnk <= ${NPS.max}),
          |nps(np) AS (VALUES ${NPS.map(n => s"($n)").mkString(", ")}),
-         |ep AS (
-         |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
-         |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
-         |  FROM e),
+         |$pqEpCte,
          |ix AS (SELECT * FROM ep WHERE vec_id < $INDEX_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
-         |fd AS (
-         |  SELECT ix.vec_id, c.sub, c.cell,
-         |    sum((ix.xs - c.cs) * (ix.xs - c.cs)) AS d2
-         |  FROM ix JOIN pc$PQ_ITERS c ON ix.sub = c.sub AND ix.sdim = c.sdim
-         |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT vec_id, sub, cell,
-         |      row_number() OVER (PARTITION BY vec_id, sub
-         |                         ORDER BY d2, cell) AS rnk
-         |    FROM fd) WHERE rnk = 1),
-         |dtab AS (
-         |  SELECT q.vec_id AS query_id, c.sub, c.cell,
-         |    sum((q.xs - c.cs) * (q.xs - c.cs)) AS d2
-         |  FROM ep q JOIN pc$PQ_ITERS c ON q.sub = c.sub AND q.sdim = c.sdim
-         |  WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-         |  GROUP BY 1, 2, 3),
+         |$pqFitCtes,
+         |$pqTrainCodesCtes,
+         |${pqDistTableCte(s"q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX")},
          |adc AS (
          |  SELECT dt.query_id, cd.vec_id AS index_id,
          |    sum(dt.d2)::BIGINT AS adc_d2
@@ -5290,9 +5459,7 @@ object PipelineQueries {
       },
       s"""WITH $pqEpCtes,
          |ix AS (SELECT * FROM ep WHERE vec_id < $INDEX_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |${pqRankCtes("ix",
              s"q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX")},
          |cands AS (
@@ -5555,9 +5722,7 @@ object PipelineQueries {
       },
       s"""WITH $pqEpCtes,
          |ix AS (SELECT * FROM ep WHERE vec_id < $BASE_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |enc AS (SELECT * FROM ep WHERE vec_id < $DELTA_MAX),
          |${pqRankCtes("enc",
              s"q.vec_id >= $DELTA_MAX AND q.vec_id < $Q_MAX",
@@ -5617,9 +5782,7 @@ object PipelineQueries {
       },
       s"""WITH $pqEpCtes,
          |ix AS (SELECT * FROM ep WHERE vec_id < $INDEX_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |enc AS (SELECT * FROM ix),
          |${pqRankCtes("enc",
              s"q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX",
@@ -6099,30 +6262,6 @@ object PipelineQueries {
     */
   val lexStreamTwin: Q = {
     val BASE_MAX = 300L; val B0_MAX = 350L; val Q_MAX = 400L; val K = 3
-    def world(i: Int, corpusHi: Long, qLo: Long, qHi: Long): String =
-      s"""tf$i AS (SELECT doc_id, term, count(*)::BIGINT AS tf
-         |         FROM tok WHERE doc_id < $corpusHi GROUP BY 1, 2),
-         |dl$i AS (SELECT doc_id, count(*)::BIGINT AS dl
-         |         FROM tok WHERE doc_id < $corpusHi GROUP BY 1),
-         |df$i AS (SELECT term, count(*)::BIGINT AS df FROM tf$i GROUP BY 1),
-         |st$i AS (SELECT count(*)::BIGINT AS n_docs,
-         |           sum(dl)::BIGINT AS sumdl FROM dl$i),
-         |qt$i AS (
-         |  SELECT DISTINCT doc_id AS query_id, term FROM tok
-         |  WHERE doc_id >= $qLo AND doc_id < $qHi),
-         |sc$i AS (
-         |  SELECT q.query_id, f.doc_id AS index_id,
-         |    ${graft.operators.LexIndex.contribSql(
-               "f.tf", "d.df", "l.dl", "n_docs", "sumdl", "//")} AS contrib
-         |  FROM tf$i f JOIN qt$i q USING (term) JOIN df$i d USING (term)
-         |  JOIN dl$i l ON l.doc_id = f.doc_id CROSS JOIN st$i),
-         |ag$i AS (
-         |  SELECT query_id, index_id, count(*)::BIGINT AS n_hit,
-         |    sum(contrib)::BIGINT AS score
-         |  FROM sc$i GROUP BY 1, 2),
-         |rk$i AS (
-         |  SELECT ag$i.*, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY score DESC, index_id) AS rnk FROM ag$i)"""
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -6150,8 +6289,8 @@ object PipelineQueries {
          |  SELECT doc_id, t AS term FROM (
          |    SELECT doc_id, unnest(arr) AS t FROM w)
          |  WHERE length(t) > 0),
-         |${world(0, BASE_MAX, BASE_MAX, B0_MAX)},
-         |${world(1, B0_MAX, B0_MAX, Q_MAX)}
+         |${lexWorldCtes(0, s"doc_id < $BASE_MAX", BASE_MAX, B0_MAX)},
+         |${lexWorldCtes(1, s"doc_id < $B0_MAX", B0_MAX, Q_MAX)}
          |SELECT query_id, index_id, n_hit, score, CAST(rnk AS BIGINT) AS rnk
          |FROM (SELECT * FROM rk0 WHERE rnk <= $K
          |      UNION ALL SELECT * FROM rk1 WHERE rnk <= $K)
@@ -6178,30 +6317,6 @@ object PipelineQueries {
     */
   val lexPurgeStream: Q = {
     val BASE_MAX = 300L; val B0_MAX = 350L; val Q_MAX = 400L; val K = 3
-    def world(i: Int, corpusPred: String, qLo: Long, qHi: Long): String =
-      s"""tf$i AS (SELECT doc_id, term, count(*)::BIGINT AS tf
-         |         FROM tok WHERE $corpusPred GROUP BY 1, 2),
-         |dl$i AS (SELECT doc_id, count(*)::BIGINT AS dl
-         |         FROM tok WHERE $corpusPred GROUP BY 1),
-         |df$i AS (SELECT term, count(*)::BIGINT AS df FROM tf$i GROUP BY 1),
-         |st$i AS (SELECT count(*)::BIGINT AS n_docs,
-         |           sum(dl)::BIGINT AS sumdl FROM dl$i),
-         |qt$i AS (
-         |  SELECT DISTINCT doc_id AS query_id, term FROM tok
-         |  WHERE doc_id >= $qLo AND doc_id < $qHi),
-         |sc$i AS (
-         |  SELECT q.query_id, f.doc_id AS index_id,
-         |    ${graft.operators.LexIndex.contribSql(
-               "f.tf", "d.df", "l.dl", "n_docs", "sumdl", "//")} AS contrib
-         |  FROM tf$i f JOIN qt$i q USING (term) JOIN df$i d USING (term)
-         |  JOIN dl$i l ON l.doc_id = f.doc_id CROSS JOIN st$i),
-         |ag$i AS (
-         |  SELECT query_id, index_id, count(*)::BIGINT AS n_hit,
-         |    sum(contrib)::BIGINT AS score
-         |  FROM sc$i GROUP BY 1, 2),
-         |rk$i AS (
-         |  SELECT ag$i.*, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY score DESC, index_id) AS rnk FROM ag$i)"""
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -6240,8 +6355,8 @@ object PipelineQueries {
          |  SELECT doc_id, t AS term FROM (
          |    SELECT doc_id, unnest(arr) AS t FROM w)
          |  WHERE length(t) > 0),
-         |${world(0, s"doc_id < $BASE_MAX", BASE_MAX, B0_MAX)},
-         |${world(1, s"doc_id < $B0_MAX AND doc_id % 10 <> 0",
+         |${lexWorldCtes(0, s"doc_id < $BASE_MAX", BASE_MAX, B0_MAX)},
+         |${lexWorldCtes(1, s"doc_id < $B0_MAX AND doc_id % 10 <> 0",
              B0_MAX, Q_MAX)}
          |SELECT query_id, index_id, n_hit, score, CAST(rnk AS BIGINT) AS rnk
          |FROM (SELECT * FROM rk0 WHERE rnk <= $K
@@ -6316,29 +6431,8 @@ object PipelineQueries {
       s"""WITH idx AS (SELECT vec_id, embedding FROM embeddings
          |             WHERE vec_id < $INDEX_MAX),
          |${mtCtes("idx")},
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |ascore AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  GROUP BY 1, 2),
-         |ar AS (
-         |  SELECT query_id, index_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM ascore),
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX")},
+         |$annRankedCtes,
          |ap AS (SELECT query_id, index_id, rnk AS prnk FROM ar
          |       WHERE rnk <= $K),
          |qx AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
@@ -6486,29 +6580,8 @@ object PipelineQueries {
          |idx AS (SELECT vec_id, embedding FROM embeddings
          |        WHERE vec_id < $INDEX_MAX),
          |${mtCtes("idx")},
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |ascore AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  GROUP BY 1, 2),
-         |ar AS (
-         |  SELECT query_id, index_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM ascore),
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX")},
+         |$annRankedCtes,
          |vectop AS (
          |  SELECT query_id, index_id AS doc_id,
          |    (${K + 1} - rnk)::BIGINT AS vec_pts
@@ -6582,16 +6655,7 @@ object PipelineQueries {
         ann.results().orderBy("query_id", "rnk")
       },
       s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $BASE_MAX")},
-         |fa AS (
-         |  SELECT e.vec_id, c.cell,
-         |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-         |  FROM e JOIN c$KM_ITERS c USING (dim)
-         |  GROUP BY e.vec_id, c.cell),
-         |ca AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rnk
-         |    FROM fa WHERE vec_id < $DELTA_MAX) WHERE rnk = 1),
+         |${ivfCellCtes(Some(s"vec_id < $DELTA_MAX"))},
          |qa AS (
          |  SELECT vec_id AS query_id, cell FROM (
          |    SELECT vec_id, cell,
@@ -6602,14 +6666,9 @@ object PipelineQueries {
          |  SELECT qa.query_id, ca.vec_id
          |  FROM qa JOIN ca ON qa.cell = ca.cell AND ca.vec_id <> qa.query_id
          |  WHERE ca.vec_id < $BASE_MAX OR qa.query_id >= $B0_MAX),
-         |ep AS (
-         |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
-         |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
-         |  FROM e),
+         |$pqEpCte,
          |ix AS (SELECT * FROM ep WHERE vec_id < $BASE_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |fd AS (
          |  SELECT ib.vec_id, c.sub, c.cell,
          |    sum((ib.xs - c.cs) * (ib.xs - c.cs)) AS d2
@@ -6617,34 +6676,9 @@ object PipelineQueries {
          |    ON ib.sub = c.sub AND ib.sdim = c.sdim
          |  WHERE ib.vec_id < $DELTA_MAX
          |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT vec_id, sub, cell,
-         |      row_number() OVER (PARTITION BY vec_id, sub
-         |                         ORDER BY d2, cell) AS rnk
-         |    FROM fd) WHERE rnk = 1),
-         |dtab AS (
-         |  SELECT q.vec_id AS query_id, c.sub, c.cell,
-         |    sum((q.xs - c.cs) * (q.xs - c.cs)) AS d2
-         |  FROM ep q JOIN pc$PQ_ITERS c ON q.sub = c.sub AND q.sdim = c.sdim
-         |  WHERE q.vec_id >= $DELTA_MAX AND q.vec_id < $Q_MAX
-         |  GROUP BY 1, 2, 3),
-         |scored AS (
-         |  SELECT cand.query_id, cd.vec_id AS index_id,
-         |    sum(dt.d2)::BIGINT AS adc_d2
-         |  FROM cand
-         |  JOIN codes cd ON cd.vec_id = cand.vec_id
-         |  JOIN dtab dt ON dt.query_id = cand.query_id
-         |    AND dt.sub = cd.sub AND dt.cell = cd.cell
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, adc_d2,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY adc_d2, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, adc_d2, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |$pqCodesCte,
+         |${pqDistTableCte(s"q.vec_id >= $DELTA_MAX AND q.vec_id < $Q_MAX")},
+         |${ivfPqTopKSql(K)}""".stripMargin)
   }
 
   /** Incremental novelty with a PERSISTED first-seen map (q266) —
@@ -6962,12 +6996,7 @@ object PipelineQueries {
          |    sum((ep.xs - c.cs) * (ep.xs - c.cs)) AS d2
          |  FROM ep JOIN pc$ITERS c ON ep.sub = c.sub AND ep.sdim = c.sdim
          |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT vec_id, sub, cell,
-         |      row_number() OVER (PARTITION BY vec_id, sub
-         |                         ORDER BY d2, cell) AS rnk
-         |    FROM fd) WHERE rnk = 1),
+         |$pqCodesCte,
          |dtab AS (
          |  SELECT q.vec_id AS query_id, c.sub, c.cell,
          |    sum((q.xs - c.cs) * (q.xs - c.cs)) AS d2
@@ -7392,12 +7421,6 @@ object PipelineQueries {
     */
   val indexPurge: Q = {
     val INDEX_MAX = 400L; val REDELIVER = 50L; val MIN_J = 0.5
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i").mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}").mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -7436,19 +7459,8 @@ object PipelineQueries {
          |    WHERE doc_id < $REDELIVER),
          |w AS (SELECT doc_id, is_new,
          |        ${TextFunctions.wordsSql("text")} AS arr FROM corpus),
-         |sh AS (SELECT DISTINCT doc_id, is_new,
-         |         unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
-         |sig AS (
-         |  SELECT doc_id, is_new,
-         |    $sigCols
-         |  FROM sh GROUP BY doc_id, is_new),
-         |bands AS (
-         |  $bandRowsSql),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS index_id
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_key = b.band_key
-         |  WHERE a.is_new = 1 AND b.is_new = 0),
+         |${mhShingleBandCtes("doc_id, is_new")},
+         |${mhCandCte("b")},
          |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
          |inter AS (
          |  SELECT c.new_id, c.index_id, count(*) AS n_inter
@@ -8130,14 +8142,6 @@ object PipelineQueries {
   val mediaIndex: Q = {
     val FRAME = 32; val STRIDE = 16; val MAX_F = 8
     val MIN_SHARED = 4L; val INDEX_MAX = 400L; val REDELIVER = 20L
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     def frameSets(corpus: DataFrame): DataFrame =
       mediaFrameSets(corpus, FRAME, STRIDE, MAX_F)
     Q(
@@ -8190,15 +8194,11 @@ object PipelineQueries {
          |    = $FRAME),
          |sig AS (
          |  SELECT doc_id, is_new,
-         |    $sigCols
+         |    $mhSigColsSql
          |  FROM f32 GROUP BY doc_id, is_new),
          |bands AS (
-         |  $bandRowsSql),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
-         |  FROM bands a JOIN bands x
-         |    ON a.band = x.band AND a.band_key = x.band_key
-         |  WHERE a.is_new = 1 AND x.is_new = 0)
+         |  ${mhBandRowsSql("doc_id, is_new")}),
+         |${mhCandCte("x")}
          |SELECT c.new_id, c.index_id, count(*)::BIGINT AS n_shared
          |FROM cand c
          |JOIN f32 fa ON fa.doc_id = c.new_id
@@ -8267,14 +8267,6 @@ object PipelineQueries {
   val mediaPurgeCascade: Q = {
     val FRAME = 32; val STRIDE = 16; val MAX_F = 8
     val MIN_SHARED = 4L; val INDEX_MAX = 400L; val REDELIVER = 60L
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         import graft.operators.PurgeCascade
@@ -8334,15 +8326,11 @@ object PipelineQueries {
          |    = $FRAME),
          |sig AS (
          |  SELECT doc_id, is_new,
-         |    $sigCols
+         |    $mhSigColsSql
          |  FROM f32 GROUP BY doc_id, is_new),
          |bands AS (
-         |  $bandRowsSql),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
-         |  FROM bands a JOIN bands x
-         |    ON a.band = x.band AND a.band_key = x.band_key
-         |  WHERE a.is_new = 1 AND x.is_new = 0)
+         |  ${mhBandRowsSql("doc_id, is_new")}),
+         |${mhCandCte("x")}
          |SELECT c.new_id, c.index_id, count(*)::BIGINT AS n_shared
          |FROM cand c
          |JOIN f32 fa ON fa.doc_id = c.new_id
@@ -11834,12 +11822,7 @@ object PipelineQueries {
     val FS_MAX = 900L
     // the media arm's frame-sampling geometry (q287's)
     val FRAME = 32; val STRIDE = 16; val MAX_F = 8
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i").mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}").mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM csig"
-    }.mkString("\n  UNION ALL ")
+    val bandRowsSql = mhBandRowsSql("doc_id, is_new", "csig")
     def armSql(family: String, hashExpr: String, body: String): String =
       s"""SELECT '$family' AS family, count(*)::BIGINT AS n_rows,
          |  coalesce(sum(${Hashing.seededSql(0, hashExpr)}), 0)::BIGINT AS fp
@@ -12022,15 +12005,11 @@ object PipelineQueries {
            |         unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
            |csig AS (
            |  SELECT doc_id, is_new,
-           |    $sigCols
+           |    $mhSigColsSql
            |  FROM sh GROUP BY doc_id, is_new),
            |bands AS (
            |  $bandRowsSql),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS index_id
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.band_key = b.band_key
-           |  WHERE a.is_new = 1 AND b.is_new = 0)
+           |${mhCandCte("b")}
            |SELECT new_id, index_id FROM cand""".stripMargin)}
          |UNION ALL
          |${armSql("first_seen", "doc_id || ',' || n_sh || ',' || n_novel",
@@ -12061,9 +12040,7 @@ object PipelineQueries {
          |${armSql("pq", "query_id || ',' || index_id || ',' || rnk",
         s"""WITH $pqEpCtes,
            |ix AS (SELECT * FROM ep WHERE vec_id < $INDEX_MAX),
-           |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-           |        WHERE vec_id < $PQ_KS),
-           |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+           |$pqFitCtes,
            |enc AS (SELECT * FROM ix WHERE vec_id % 10 <> 0),
            |${pqRankCtes("enc",
                s"q.vec_id >= $INDEX_MAX AND q.vec_id < $PQ_Q_MAX")}
@@ -12073,47 +12050,10 @@ object PipelineQueries {
          |${armSql("sim", "query_id || ',' || index_id || ',' || rnk",
         s"""WITH idx0 AS (SELECT vec_id, embedding FROM embeddings
            |              WHERE vec_id < $INDEX_MAX),
-           |params AS (
-           |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-           |    ${VectorFunctions.mtTablesSql(
-                 VectorFunctions.mtBitsSql("count(*)"))} AS nt
-           |  FROM idx0),
-           |ie AS (
-           |  SELECT vec_id, embedding,
-           |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-           |  FROM embeddings, params
-           |  WHERE vec_id < $INDEX_MAX AND vec_id % 10 <> 0),
-           |iek AS (
-           |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-           |  FROM ie),
-           |ikb AS (
-           |  SELECT vec_id, embedding, tbl,
-           |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-           |  FROM iek),
-           |qe AS (
-           |  SELECT vec_id, embedding,
-           |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-           |  FROM embeddings, params
-           |  WHERE vec_id >= $INDEX_MAX AND vec_id < $SIM_Q_MAX),
-           |qek AS (
-           |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-           |  FROM qe),
-           |qkb AS (
-           |  SELECT vec_id, embedding, tbl,
-           |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-           |  FROM qek),
-           |scored AS (
-           |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-           |    max(round(${VectorFunctions.cosineSql(
-                 "q.embedding", "kb.embedding")}, 6))
-           |      AS cos_sim
-           |  FROM qkb q JOIN ikb kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-           |  GROUP BY 1, 2),
-           |ranked AS (
-           |  SELECT query_id, index_id, cos_sim,
-           |    row_number() OVER (PARTITION BY query_id
-           |                       ORDER BY cos_sim DESC, index_id) AS rnk
-           |  FROM scored)
+           |${lshParamsCte("idx0")},
+           |${lshKeyCtes("i", s"\n  WHERE vec_id < $INDEX_MAX AND vec_id % 10 <> 0")},
+           |${lshKeyCtes("q", s"\n  WHERE vec_id >= $INDEX_MAX AND vec_id < $SIM_Q_MAX")},
+           |${lshRankedCtes()}
            |SELECT query_id, index_id, CAST(rnk AS BIGINT) AS rnk
            |FROM ranked WHERE rnk <= $SIM_K""".stripMargin)}
          |UNION ALL
@@ -12170,15 +12110,11 @@ object PipelineQueries {
            |    = $FRAME),
            |csig AS (
            |  SELECT doc_id, is_new,
-           |    $sigCols
+           |    $mhSigColsSql
            |  FROM f32 GROUP BY doc_id, is_new),
            |bands AS (
            |  $bandRowsSql),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS index_id
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.band_key = b.band_key
-           |  WHERE a.is_new = 1 AND b.is_new = 0)
+           |${mhCandCte("b")}
            |SELECT new_id, index_id FROM cand""".stripMargin)}
          |UNION ALL
          |${armSql("graph", "node || ',' || nbr || ',' || w",
@@ -12280,16 +12216,7 @@ object PipelineQueries {
            |    AND dt.sub = cd.sub AND dt.cell = cd.cell""".stripMargin
       s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $INDEX_MAX",
              eSql = eSql)},
-         |fa AS (
-         |  SELECT e.vec_id, c.cell,
-         |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-         |  FROM e JOIN c$KM_ITERS c USING (dim)
-         |  GROUP BY e.vec_id, c.cell),
-         |ca AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rnk
-         |    FROM fa WHERE vec_id < $INDEX_MAX) WHERE rnk = 1),
+         |${ivfCellCtes(Some(s"vec_id < $INDEX_MAX"))},
          |qa AS (
          |  SELECT vec_id AS query_id, cell FROM (
          |    SELECT vec_id, cell,
@@ -12300,25 +12227,10 @@ object PipelineQueries {
          |  SELECT qa.query_id, qa.cell AS ccell, ca.vec_id
          |  FROM qa JOIN ca ON qa.cell = ca.cell AND ca.vec_id <> qa.query_id
          |  WHERE $candPred),
-         |ep AS (
-         |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
-         |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
-         |  FROM e),
+         |$pqEpCte,
          |${if (residual) resid else flat}
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
-         |fd AS (
-         |  SELECT ix.vec_id, c.sub, c.cell,
-         |    sum((ix.xs - c.cs) * (ix.xs - c.cs)) AS d2
-         |  FROM ix JOIN pc$PQ_ITERS c ON ix.sub = c.sub AND ix.sdim = c.sdim
-         |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT vec_id, sub, cell,
-         |      row_number() OVER (PARTITION BY vec_id, sub
-         |                         ORDER BY d2, cell) AS rnk
-         |    FROM fd) WHERE rnk = 1),
+         |$pqFitCtes,
+         |$pqTrainCodesCtes,
          |$dtab
          |scored AS (
          |  SELECT cand.query_id, cd.vec_id AS index_id,
@@ -12344,7 +12256,6 @@ object PipelineQueries {
       ivfpqArmSql(residual, INDEX_MAX, Q_MAX, NPROBE)
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val index = emb.filter(col("vec_id") < INDEX_MAX)
         val queries = emb.filter(
@@ -12364,65 +12275,26 @@ object PipelineQueries {
         // exact integer-L2 truth over the FIXED 20-query batch
         val eI = VectorQuantizer.scaled(index, "vec_id", "embedding")
         val eQ = VectorQuantizer.scaled(queries, "vec_id", "embedding")
-        val truth = eI.crossJoin(broadcast(eQ.select(
-            col("vec_id").as("query_id"), col("xs").as("qxs"))))
-          .select(col("query_id"), col("vec_id").as("index_id"),
-            VectorQuantizer.l2DistSq(col("qxs"), col("xs")).as("d2"))
-          .withColumn("rnk", row_number().over(Window
-            .partitionBy("query_id").orderBy(asc("d2"), asc("index_id"))))
-          .filter(col("rnk") <= PQ_K)
-          .select(col("query_id"), col("index_id"), lit(1L).as("hit"))
+        val truth = pqExactTruth(eI, eQ)
         def armOf(root: String, name: String) =
           PqIndex.probeTopK(s, queries, "vec_id", "embedding", PQ_K,
               root, NPROBE)
             .select(lit(name).as("variant"), col("query_id"),
               col("index_id"))
-        concurrently(Seq(() => armOf(flatRoot, "flat_code"),
+        val served = concurrently(Seq(() => armOf(flatRoot, "flat_code"),
             () => armOf(residRoot, "residual")))
           .reduce(_.unionByName(_))
-          .join(truth, Seq("query_id", "index_id"), "left")
-          .groupBy("variant")
-          .agg(count(lit(1)).as("n_pairs"),
-            coalesce(sum("hit"), lit(0L)).as("n_hit"))
-          .withColumn("recall_ppm",
-            expr(s"n_hit * 1000000 div (${NQ * PQ_K})"))
-          .orderBy("variant")
+        armRecall(served, truth, Seq("variant"), NQ * PQ_K)
       },
-      s"""WITH truth AS (
-         |  SELECT query_id, index_id FROM (
-         |    WITH e AS (
-         |      SELECT vec_id,
-         |        unnest(range(1, len(embedding) + 1)) AS dim,
-         |        round(unnest(embedding)::DOUBLE * 1000000)::BIGINT AS xs
-         |      FROM embeddings),
-         |    td AS (
-         |      SELECT q.vec_id AS query_id, x.vec_id AS index_id,
-         |        sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-         |      FROM e q JOIN e x USING (dim)
-         |      WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-         |        AND x.vec_id < $INDEX_MAX
-         |      GROUP BY 1, 2)
-         |    SELECT query_id, index_id FROM (
-         |      SELECT query_id, index_id,
-         |        row_number() OVER (PARTITION BY query_id
-         |                           ORDER BY d2, index_id) AS rnk
-         |      FROM td) WHERE rnk <= $PQ_K)),
+      s"""WITH ${pqTruthCte(s"q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX" +
+              s"\n        AND x.vec_id < $INDEX_MAX")},
          |flatp AS (SELECT query_id, index_id FROM (
          |${prunedArm(residual = false)})),
          |residp AS (SELECT query_id, index_id FROM (
          |${prunedArm(residual = true)}))
-         |SELECT variant, count(*)::BIGINT AS n_pairs,
-         |  coalesce(sum(hit), 0)::BIGINT AS n_hit,
-         |  (coalesce(sum(hit), 0) * 1000000 // ${NQ * PQ_K})::BIGINT
-         |    AS recall_ppm
-         |FROM (
-         |  SELECT p.variant,
-         |    CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |  FROM (SELECT 'flat_code' AS variant, * FROM flatp
-         |        UNION ALL SELECT 'residual', * FROM residp) p
-         |  LEFT JOIN truth t ON t.query_id = p.query_id
-         |    AND t.index_id = p.index_id)
-         |GROUP BY variant ORDER BY variant""".stripMargin)
+         |${variantRecallSql("(SELECT 'flat_code' AS variant, * FROM flatp" +
+              "\n        UNION ALL SELECT 'residual', * FROM residp)",
+              NQ * PQ_K)}""".stripMargin)
   }
 
   /** Residual IVFPQ's ACCURACY claim made real (q302) — q291 proved
@@ -12463,7 +12335,6 @@ object PipelineQueries {
          |        FROM embeddings WHERE vec_id < $Q_MAX))""".stripMargin
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val ids = t(s, d, "embeddings").select(col("vec_id"))
         def world(df: DataFrame) = df.select(col("vec_id"), expr(
           s"transform(sequence(1, $DIMS), j -> " +
@@ -12487,61 +12358,26 @@ object PipelineQueries {
             coarseC = KM_C, coarseIters = KM_ITERS, byResidual = true)
         val eI = VectorQuantizer.scaled(index, "vec_id", "embedding")
         val eQ = VectorQuantizer.scaled(queries, "vec_id", "embedding")
-        val truth = eI.crossJoin(broadcast(eQ.select(
-            col("vec_id").as("query_id"), col("xs").as("qxs"))))
-          .select(col("query_id"), col("vec_id").as("index_id"),
-            VectorQuantizer.l2DistSq(col("qxs"), col("xs")).as("d2"))
-          .withColumn("rnk", row_number().over(Window
-            .partitionBy("query_id").orderBy(asc("d2"), asc("index_id"))))
-          .filter(col("rnk") <= PQ_K)
-          .select(col("query_id"), col("index_id"), lit(1L).as("hit"))
+        val truth = pqExactTruth(eI, eQ)
         def armOf(root: String, name: String) =
           PqIndex.probeTopK(s, queries, "vec_id", "embedding", PQ_K,
               root, NPROBE)
             .select(lit(name).as("variant"), col("query_id"),
               col("index_id"))
-        concurrently(Seq(() => armOf(flatRoot, "flat_code"),
+        val served = concurrently(Seq(() => armOf(flatRoot, "flat_code"),
             () => armOf(residRoot, "residual")))
           .reduce(_.unionByName(_))
-          .join(truth, Seq("query_id", "index_id"), "left")
-          .groupBy("variant")
-          .agg(count(lit(1)).as("n_pairs"),
-            coalesce(sum("hit"), lit(0L)).as("n_hit"))
-          .withColumn("recall_ppm",
-            expr(s"n_hit * 1000000 div (${NQ * PQ_K})"))
-          .orderBy("variant")
+        armRecall(served, truth, Seq("variant"), NQ * PQ_K)
       },
-      s"""WITH truth AS (
-         |  SELECT query_id, index_id FROM (
-         |    WITH $eSql,
-         |    td AS (
-         |      SELECT q.vec_id AS query_id, x.vec_id AS index_id,
-         |        sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-         |      FROM e q JOIN e x USING (dim)
-         |      WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-         |        AND x.vec_id < $INDEX_MAX
-         |      GROUP BY 1, 2)
-         |    SELECT query_id, index_id FROM (
-         |      SELECT query_id, index_id,
-         |        row_number() OVER (PARTITION BY query_id
-         |                           ORDER BY d2, index_id) AS rnk
-         |      FROM td) WHERE rnk <= $PQ_K)),
+      s"""WITH ${pqTruthCte(s"q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX" +
+              s"\n        AND x.vec_id < $INDEX_MAX", eSql)},
          |flatp AS (SELECT query_id, index_id FROM (
          |${ivfpqArmSql(residual = false, INDEX_MAX, Q_MAX, NPROBE, eSql)})),
          |residp AS (SELECT query_id, index_id FROM (
          |${ivfpqArmSql(residual = true, INDEX_MAX, Q_MAX, NPROBE, eSql)}))
-         |SELECT variant, count(*)::BIGINT AS n_pairs,
-         |  coalesce(sum(hit), 0)::BIGINT AS n_hit,
-         |  (coalesce(sum(hit), 0) * 1000000 // ${NQ * PQ_K})::BIGINT
-         |    AS recall_ppm
-         |FROM (
-         |  SELECT p.variant,
-         |    CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |  FROM (SELECT 'flat_code' AS variant, * FROM flatp
-         |        UNION ALL SELECT 'residual', * FROM residp) p
-         |  LEFT JOIN truth t ON t.query_id = p.query_id
-         |    AND t.index_id = p.index_id)
-         |GROUP BY variant ORDER BY variant""".stripMargin)
+         |${variantRecallSql("(SELECT 'flat_code' AS variant, * FROM flatp" +
+              "\n        UNION ALL SELECT 'residual', * FROM residp)",
+              NQ * PQ_K)}""".stripMargin)
   }
 
   /** Residual-IVFPQ purge (q311) — the deletion cell the FAISS-default
@@ -12646,25 +12482,10 @@ object PipelineQueries {
          |    unnest(range(1, len(embedding) + 1)) AS dim,
          |    round(unnest(list_transform(embedding, x -> x::DOUBLE + 0.25)) * 1000000)::BIGINT AS xs
          |  FROM embeddings WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX),
-         |ep AS (
-         |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
-         |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
-         |  FROM e),
+         |$pqEpCte,
          |ix AS (SELECT * FROM ep WHERE vec_id < $INDEX_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
-         |fd AS (
-         |  SELECT ix.vec_id, c.sub, c.cell,
-         |    sum((ix.xs - c.cs) * (ix.xs - c.cs)) AS d2
-         |  FROM ix JOIN pc$PQ_ITERS c ON ix.sub = c.sub AND ix.sdim = c.sdim
-         |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT vec_id, sub, cell,
-         |      row_number() OVER (PARTITION BY vec_id, sub
-         |                         ORDER BY d2, cell) AS rnk
-         |    FROM fd) WHERE rnk = 1),
+         |$pqFitCtes,
+         |$pqTrainCodesCtes,
          |qp AS (
          |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
          |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
@@ -12704,14 +12525,9 @@ object PipelineQueries {
          |    unnest(range(1, len(embedding) + 1)) AS dim,
          |    round(unnest(list_transform(embedding, x -> x::DOUBLE + 0.25)) * 1000000)::BIGINT AS xs
          |  FROM embeddings WHERE vec_id < $INDEX_MAX),
-         |ep AS (
-         |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
-         |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
-         |  FROM e),
+         |$pqEpCte,
          |ix AS (SELECT * FROM ep WHERE vec_id < $INDEX_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |vp AS (
          |  SELECT vec_id, (dim - 1) // $PQ_DSUB AS sub,
          |    (dim - 1) % $PQ_DSUB + 1 AS sdim, xs
@@ -12740,7 +12556,6 @@ object PipelineQueries {
     }
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val v1 = emb.filter(col("vec_id") < INDEX_MAX)
         val shift = (v: Column) =>
@@ -12777,49 +12592,19 @@ object PipelineQueries {
         // the raw truth, which is what the oracle computes)
         val eI = VectorQuantizer.scaled(v2, "vec_id", "embedding")
         val eQ = VectorQuantizer.scaled(qDrift, "vec_id", "embedding")
-        val truth = eI.crossJoin(broadcast(eQ.select(
-            col("vec_id").as("query_id"), col("xs").as("qxs"))))
-          .select(col("query_id"), col("vec_id").as("index_id"),
-            VectorQuantizer.l2DistSq(col("qxs"), col("xs")).as("d2"))
-          .withColumn("rnk", row_number().over(Window
-            .partitionBy("query_id").orderBy(asc("d2"), asc("index_id"))))
-          .filter(col("rnk") <= PQ_K)
-          .select(col("query_id"), col("index_id"), lit(1L).as("hit"))
+        val truth = pqExactTruth(eI, eQ)
         def armOf(root: String, name: String, ratio: Long) =
           PqIndex.probeTopK(s, qDrift, "vec_id", "embedding", PQ_K, root)
             .select(lit(name).as("arm"),
               lit(ratio).as("qerr_ratio_milli"),
               col("query_id"), col("index_id"))
-        concurrently(Seq(() => armOf(rootLive, "retrained", liveRatio),
+        val served = concurrently(Seq(() => armOf(rootLive, "retrained", liveRatio),
             () => armOf(rootStale, "stale", staleRatio)))
           .reduce(_.unionByName(_))
-          .join(truth, Seq("query_id", "index_id"), "left")
-          .groupBy("arm", "qerr_ratio_milli")
-          .agg(count(lit(1)).as("n_pairs"),
-            coalesce(sum("hit"), lit(0L)).as("n_hit"))
-          .withColumn("recall_ppm",
-            expr(s"n_hit * 1000000 div (${NQ * PQ_K})"))
-          .orderBy("arm")
+        armRecall(served, truth, Seq("arm", "qerr_ratio_milli"), NQ * PQ_K)
       },
-      s"""WITH truth AS (
-         |  SELECT query_id, index_id FROM (
-         |    WITH e AS (
-         |      SELECT vec_id,
-         |        unnest(range(1, len(embedding) + 1)) AS dim,
-         |        round(unnest(embedding)::DOUBLE * 1000000)::BIGINT AS xs
-         |      FROM embeddings),
-         |    td AS (
-         |      SELECT q.vec_id AS query_id, x.vec_id AS index_id,
-         |        sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-         |      FROM e q JOIN e x USING (dim)
-         |      WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-         |        AND x.vec_id < $INDEX_MAX
-         |      GROUP BY 1, 2)
-         |    SELECT query_id, index_id FROM (
-         |      SELECT query_id, index_id,
-         |        row_number() OVER (PARTITION BY query_id
-         |                           ORDER BY d2, index_id) AS rnk
-         |      FROM td) WHERE rnk <= $PQ_K)),
+      s"""WITH ${pqTruthCte(s"q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX" +
+              s"\n        AND x.vec_id < $INDEX_MAX")},
          |stalep AS (SELECT query_id, index_id FROM (
          |${fitArm(drifted = false)})),
          |livep AS (SELECT query_id, index_id FROM (
@@ -14339,9 +14124,7 @@ object PipelineQueries {
          |         (row_number() OVER (ORDER BY energy DESC, dim) - 1) AS r
          |       FROM en),
          |ix AS ($ixSel),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |md AS (
          |  SELECT vec_id, sub, min(d2) AS d2 FROM (
          |    SELECT ix.vec_id, c.sub, c.cell,
@@ -14518,20 +14301,8 @@ object PipelineQueries {
          |qp AS (SELECT e.vec_id, l.sub, l.sdim, e.xs
          |       FROM e JOIN lay l USING (dim)
          |       WHERE e.vec_id >= $INDEX_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
-         |fd AS (
-         |  SELECT ix.vec_id, c.sub, c.cell,
-         |    sum((ix.xs - c.cs) * (ix.xs - c.cs)) AS d2
-         |  FROM ix JOIN pc$PQ_ITERS c ON ix.sub = c.sub AND ix.sdim = c.sdim
-         |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT vec_id, sub, cell,
-         |      row_number() OVER (PARTITION BY vec_id, sub
-         |                         ORDER BY d2, cell) AS rnk
-         |    FROM fd) WHERE rnk = 1),
+         |$pqFitCtes,
+         |$pqTrainCodesCtes,
          |dtab AS (
          |  SELECT q.vec_id AS query_id, c.sub, c.cell,
          |    sum((q.xs - c.cs) * (q.xs - c.cs)) AS d2
@@ -14552,7 +14323,6 @@ object PipelineQueries {
     }
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
           .filter(col("vec_id") < Q_MAX)
@@ -14588,59 +14358,24 @@ object PipelineQueries {
         // exact-L2 truth on the anisotropic world — permutation-
         // INVARIANT, so one truth scores both arms
         val eQ = VectorQuantizer.scaled(queries, "vec_id", "embedding")
-        val truth = eI.crossJoin(broadcast(eQ.select(
-            col("vec_id").as("query_id"), col("xs").as("qxs"))))
-          .select(col("query_id"), col("vec_id").as("index_id"),
-            VectorQuantizer.l2DistSq(col("qxs"), col("xs")).as("d2"))
-          .withColumn("rnk", row_number().over(Window
-            .partitionBy("query_id").orderBy(asc("d2"), asc("index_id"))))
-          .filter(col("rnk") <= PQ_K)
-          .select(col("query_id"), col("index_id"), lit(1L).as("hit"))
+        val truth = pqExactTruth(eI, eQ)
         def armOf(root: String, name: String) =
           PqIndex.probeTopK(s, queries, "vec_id", "embedding", PQ_K, root)
             .select(lit(name).as("variant"), col("query_id"),
               col("index_id"))
-        concurrently(Seq(() => armOf(rootI, "1_identity"),
+        val served = concurrently(Seq(() => armOf(rootI, "1_identity"),
             () => armOf(rootP, "2_balanced")))
           .reduce(_.unionByName(_))
-          .join(truth, Seq("query_id", "index_id"), "left")
-          .groupBy("variant")
-          .agg(count(lit(1)).as("n_pairs"),
-            coalesce(sum("hit"), lit(0L)).as("n_hit"))
-          .withColumn("recall_ppm",
-            expr(s"n_hit * 1000000 div (${NQ * PQ_K})"))
-          .orderBy("variant")
+        armRecall(served, truth, Seq("variant"), NQ * PQ_K)
       },
-      s"""WITH truth AS (
-         |  SELECT query_id, index_id FROM (
-         |    WITH $eCtes,
-         |    td AS (
-         |      SELECT q.vec_id AS query_id, x.vec_id AS index_id,
-         |        sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-         |      FROM e q JOIN e x USING (dim)
-         |      WHERE q.vec_id >= $INDEX_MAX AND x.vec_id < $INDEX_MAX
-         |      GROUP BY 1, 2)
-         |    SELECT query_id, index_id FROM (
-         |      SELECT query_id, index_id,
-         |        row_number() OVER (PARTITION BY query_id
-         |                           ORDER BY d2, index_id) AS rnk
-         |      FROM td) WHERE rnk <= $PQ_K)),
+      s"""WITH ${pqTruthCte(s"q.vec_id >= $INDEX_MAX AND x.vec_id < $INDEX_MAX", eCtes)},
          |ia AS (${armSql("1_identity",
         s"SELECT dim, (dim - 1) // $PQ_DSUB AS sub, " +
           s"(dim - 1) % $PQ_DSUB + 1 AS sdim FROM en")}),
          |ba AS (${armSql("2_balanced",
         s"SELECT dim, r % $PQ_M AS sub, r // $PQ_M + 1 AS sdim FROM rk")})
-         |SELECT variant, count(*)::BIGINT AS n_pairs,
-         |  coalesce(sum(hit), 0)::BIGINT AS n_hit,
-         |  (coalesce(sum(hit), 0) * 1000000 // ${NQ * PQ_K})::BIGINT
-         |    AS recall_ppm
-         |FROM (
-         |  SELECT p.variant,
-         |    CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |  FROM (SELECT * FROM ia UNION ALL SELECT * FROM ba) p
-         |  LEFT JOIN truth t ON t.query_id = p.query_id
-         |    AND t.index_id = p.index_id)
-         |GROUP BY variant ORDER BY variant""".stripMargin)
+         |${variantRecallSql("(SELECT * FROM ia UNION ALL SELECT * FROM ba)",
+              NQ * PQ_K)}""".stripMargin)
   }
 
   /** The dedup family's re-ingestion ban gate (q320) — q318's closure
@@ -14663,14 +14398,6 @@ object PipelineQueries {
     */
   val dedupBanGate: Q = {
     val NB = 3L
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, b, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -14719,14 +14446,7 @@ object PipelineQueries {
          |  WHERE doc_id % 10 = 0),
          |w AS (SELECT doc_id, b, ${TextFunctions.wordsSql("text")} AS arr
          |      FROM corpus),
-         |sh AS (SELECT DISTINCT doc_id, b,
-         |         unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
-         |sig AS (
-         |  SELECT doc_id, b,
-         |    $sigCols
-         |  FROM sh GROUP BY doc_id, b),
-         |bands AS (
-         |  $bandRowsSql)
+         |${mhShingleBandCtes("doc_id, b")}
          |SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
          |FROM bands a JOIN bands x
          |  ON a.band = x.band AND a.band_key = x.band_key
@@ -14757,30 +14477,6 @@ object PipelineQueries {
   val lexBanGate: Q = {
     val BASE_MAX = 300L; val B0_MAX = 350L; val B1_MAX = 400L
     val B2_MAX = 450L; val K = 3
-    def world(i: Int, corpusPred: String, qLo: Long, qHi: Long): String =
-      s"""tf$i AS (SELECT doc_id, term, count(*)::BIGINT AS tf
-         |         FROM tok WHERE $corpusPred GROUP BY 1, 2),
-         |dl$i AS (SELECT doc_id, count(*)::BIGINT AS dl
-         |         FROM tok WHERE $corpusPred GROUP BY 1),
-         |df$i AS (SELECT term, count(*)::BIGINT AS df FROM tf$i GROUP BY 1),
-         |st$i AS (SELECT count(*)::BIGINT AS n_docs,
-         |           sum(dl)::BIGINT AS sumdl FROM dl$i),
-         |qt$i AS (
-         |  SELECT DISTINCT doc_id AS query_id, term FROM tok
-         |  WHERE doc_id >= $qLo AND doc_id < $qHi),
-         |sc$i AS (
-         |  SELECT q.query_id, f.doc_id AS index_id,
-         |    ${graft.operators.LexIndex.contribSql(
-               "f.tf", "d.df", "l.dl", "n_docs", "sumdl", "//")} AS contrib
-         |  FROM tf$i f JOIN qt$i q USING (term) JOIN df$i d USING (term)
-         |  JOIN dl$i l ON l.doc_id = f.doc_id CROSS JOIN st$i),
-         |ag$i AS (
-         |  SELECT query_id, index_id, count(*)::BIGINT AS n_hit,
-         |    sum(contrib)::BIGINT AS score
-         |  FROM sc$i GROUP BY 1, 2),
-         |rk$i AS (
-         |  SELECT ag$i.*, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY score DESC, index_id) AS rnk FROM ag$i)"""
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -14824,10 +14520,10 @@ object PipelineQueries {
          |  SELECT doc_id, t AS term FROM (
          |    SELECT doc_id, unnest(arr) AS t FROM w)
          |  WHERE length(t) > 0),
-         |${world(0, s"doc_id < $BASE_MAX", BASE_MAX, B0_MAX)},
-         |${world(1, s"doc_id < $B0_MAX AND doc_id % 10 <> 0",
+         |${lexWorldCtes(0, s"doc_id < $BASE_MAX", BASE_MAX, B0_MAX)},
+         |${lexWorldCtes(1, s"doc_id < $B0_MAX AND doc_id % 10 <> 0",
              B0_MAX, B1_MAX)},
-         |${world(2,
+         |${lexWorldCtes(2,
              s"(doc_id < $B0_MAX AND doc_id % 10 <> 0) OR " +
                s"(doc_id >= $B0_MAX AND doc_id < $B1_MAX)",
              B1_MAX, B2_MAX)}
@@ -14987,49 +14683,11 @@ object PipelineQueries {
       },
       s"""WITH idx0 AS (SELECT vec_id, embedding FROM embeddings
          |              WHERE vec_id < $BASE_MAX),
-         |params AS (
-         |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-         |    ${VectorFunctions.mtTablesSql(VectorFunctions.mtBitsSql("count(*)"))} AS nt
-         |  FROM idx0),
-         |ie AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE (vec_id < $DELTA_MAX AND vec_id % 10 <> 0)
-         |     OR (vec_id >= $DELTA_MAX AND vec_id < $BF_MAX)),
-         |iek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM ie),
-         |ikb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM iek),
-         |qe AS (
-         |  SELECT vec_id, embedding,
-         |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-         |  FROM embeddings, params
-         |  WHERE vec_id >= $BF_MAX AND vec_id < $Q_MAX),
-         |qek AS (
-         |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-         |  FROM qe),
-         |qkb AS (
-         |  SELECT vec_id, embedding, tbl,
-         |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-         |  FROM qek),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, kb.vec_id AS index_id,
-         |    max(round(${VectorFunctions.cosineSql("q.embedding", "kb.embedding")}, 6))
-         |      AS cos_sim
-         |  FROM qkb q JOIN ikb kb ON q.tbl = kb.tbl AND q.bucket = kb.bucket
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, index_id, cos_sim,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY cos_sim DESC, index_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, index_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= $K
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${lshParamsCte("idx0")},
+         |${lshKeyCtes("i", s"\n  WHERE (vec_id < $DELTA_MAX AND vec_id % 10 <> 0)" +
+              s"\n     OR (vec_id >= $DELTA_MAX AND vec_id < $BF_MAX)")},
+         |${lshKeyCtes("q", s"\n  WHERE vec_id >= $BF_MAX AND vec_id < $Q_MAX")},
+         |${lshTopKSql(K)}""".stripMargin)
   }
 
   /** The PQ family's re-ingestion ban gate (q324) — q323's closure on
@@ -15087,9 +14745,7 @@ object PipelineQueries {
       },
       s"""WITH $pqEpCtes,
          |ix AS (SELECT * FROM ep WHERE vec_id < $BASE_MAX),
-         |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-         |        WHERE vec_id < $PQ_KS),
-         |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+         |$pqFitCtes,
          |enc AS (SELECT * FROM ep
          |        WHERE (vec_id < $DELTA_MAX AND vec_id % 10 <> 0)
          |           OR (vec_id >= $DELTA_MAX AND vec_id < $BF_MAX)),
@@ -15269,7 +14925,6 @@ object PipelineQueries {
     val ENT_MOD = 50L
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val eAll = VectorQuantizer.scaled(
@@ -15279,71 +14934,20 @@ object PipelineQueries {
         val root = graft.sources.Artifacts.versionedRoot(
           "graft-knn-graph", d, Seq("embeddings.parquet"))
         if (GraphIndex.resolve(root).isEmpty) {
-          val cent = VectorQuantizer.fitCentroids(
-            eIdx, "vec_id", KM_C, KM_ITERS)
-          val cells = VectorQuantizer.assignCells(eIdx, cent, "vec_id")
-          val xs = eIdx.select(col("vec_id"), col("xs"))
-          val pairs = cells.as("a")
-            .join(cells.as("b"), col("a.cell") === col("b.cell") &&
-              col("a.vec_id") =!= col("b.vec_id"))
-            .select(col("a.vec_id").as("u"), col("b.vec_id").as("v"))
-            .join(xs.select(col("vec_id").as("u"), col("xs").as("xu")), "u")
-            .join(xs.select(col("vec_id").as("v"), col("xs").as("xv")), "v")
-            .select(col("u"), col("v"),
-              VectorQuantizer.l2DistSq(col("xu"), col("xv")).as("d2"))
-          val knn = pairs.withColumn("rnk", row_number().over(
-              Window.partitionBy("u").orderBy(col("d2"), col("v"))))
-            .filter(col("rnk") <= M_KNN)
-            .select(col("u"), col("v"))
-          GraphIndex.publish(
-            knn.select(col("u").as("src"), col("v").as("dst"))
-              .unionByName(knn.select(col("v").as("src"),
-                col("u").as("dst")))
-              .distinct()
-              .withColumn("w", lit(1L)),
-            root)
+          GraphIndex.publish(knnGraphEdges(eIdx, M_KNN), root)
         }
         val qxs = eAll.filter(col("vec_id") >= INDEX_MAX)
           .select(col("vec_id").as("query_id"), col("xs").as("qx"))
         val ixs = eIdx.select(col("vec_id").as("node"), col("xs").as("nx"))
-        def score(cand: DataFrame): DataFrame =
-          cand.join(ixs, "node").join(qxs, "query_id")
-            .select(col("query_id"), col("node"),
-              VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2"))
-        def topPerQuery(scored: DataFrame, n: Int): DataFrame =
-          scored.withColumn("rnk", row_number().over(
-              Window.partitionBy("query_id").orderBy(col("d2"), col("node"))))
-            .filter(col("rnk") <= n)
-            .select(col("query_id"), col("node"))
-        val truth = topPerQuery(
-          qxs.crossJoin(ixs).select(col("query_id"), col("node"),
-            VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2")), K)
-          .withColumn("hit", lit(1L))
+        val truth = knnTruth(qxs, ixs, K)
         val entries = ixs.filter(col("node") % ENT_MOD === 0)
           .select("node")
-        // one file listing per artifact path across ALL rounds and
-        // BOTH beam arms (TrieMap: arms probe from driver threads)
-        val scans = scala.collection.concurrent.TrieMap
-          .empty[String, DataFrame]
-        def beam(b: Int): DataFrame = {
-          var (visited, frontier, nf) =
-            beamStage(score(qxs.select("query_id").crossJoin(entries)), b)
-          for (_ <- 1 to ROUNDS) {
-            if (nf > 0) {
-              val nb = GraphIndex.neighbors(s, frontier, root, Some(scans))
-              val fresh = nb
-                .select(col("query_id"), col("nbr").as("node")).distinct()
-                .join(visited.select("query_id", "node"),
-                  Seq("query_id", "node"), "left_anti")
-              val (newV, newF, nf2) = beamStage(score(fresh), b)
-              // pieces are lineage-free — plain union (khop's rule)
-              visited = visited.unionByName(newV)
-              frontier = newF
-              nf = nf2
-            }
-          }
-          topPerQuery(visited, K).withColumn("beam", lit(b.toLong))
-        }
+        // both beam arms share one instance: one listing per artifact
+        val walk = new GraphBeam(qxs, ixs, ROUNDS,
+          GraphIndex.neighbors(s, _, root, _))
+        def beam(b: Int): DataFrame =
+          topPerQuery(walk.visited(entries, b), K)
+            .withColumn("beam", lit(b.toLong))
         concurrently(BEAMS.map(b => () => beam(b))).reduce(_.unionByName(_))
           .join(truth, Seq("query_id", "node"), "left")
           .groupBy("beam")
@@ -15353,90 +14957,20 @@ object PipelineQueries {
             expr(s"n_hit * 1000000 div (${NQ * K})"))
           .orderBy("beam")
       }, {
-        // one beam arm's unrolled rounds: v0/f0 from the entry set,
-        // then per round r the fresh frontier n_r (neighbors of
-        // f_{r-1} not yet visited), the visited union v_r, and the
-        // next beam f_r — all scored off the shared qd table
-        def beamCtes(b: Int): String = {
-          val rounds = (1 to ROUNDS).map { r =>
-            s"""n$r$b AS (
-               |  SELECT DISTINCT f.query_id, g.dst AS node
-               |  FROM f${r - 1}$b f JOIN g ON g.src = f.node
-               |  WHERE NOT EXISTS (SELECT 1 FROM v${r - 1}$b v
-               |                    WHERE v.query_id = f.query_id
-               |                      AND v.node = g.dst)),
-               |v$r$b AS (
-               |  SELECT query_id, node, d2 FROM v${r - 1}$b
-               |  UNION ALL
-               |  SELECT n.query_id, n.node, q.d2
-               |  FROM n$r$b n JOIN qd q
-               |    ON q.query_id = n.query_id AND q.node = n.node),
-               |f$r$b AS (
-               |  SELECT query_id, node FROM (
-               |    SELECT n.query_id, n.node,
-               |      row_number() OVER (PARTITION BY n.query_id
-               |                         ORDER BY q.d2, n.node) AS rnk
-               |    FROM n$r$b n JOIN qd q
-               |      ON q.query_id = n.query_id AND q.node = n.node) z
-               |  WHERE rnk <= $b)""".stripMargin
-          }.mkString(",\n")
+        def beamCtes(b: Int): String =
           s"""v0$b AS (
              |  SELECT qd.query_id, qd.node, qd.d2
              |  FROM qd JOIN ent ON qd.node = ent.node),
-             |f0$b AS (
-             |  SELECT query_id, node FROM (
-             |    SELECT query_id, node,
-             |      row_number() OVER (PARTITION BY query_id
-             |                         ORDER BY d2, node) AS rnk
-             |    FROM v0$b) z WHERE rnk <= $b),
-             |$rounds,
+             |${beamWalkCtes(b.toString, "g", b, ROUNDS)},
              |res$b AS (
              |  SELECT $b AS beam, query_id, node FROM (
              |    SELECT query_id, node,
              |      row_number() OVER (PARTITION BY query_id
              |                         ORDER BY d2, node) AS rnk
              |    FROM v$ROUNDS$b) z WHERE rnk <= $K)""".stripMargin
-        }
-        s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $INDEX_MAX")},
-           |fa AS (
-           |  SELECT e.vec_id, c.cell,
-           |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-           |  FROM e JOIN c$KM_ITERS c USING (dim)
-           |  WHERE e.vec_id < $INDEX_MAX
-           |  GROUP BY e.vec_id, c.cell),
-           |ca AS (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell,
-           |      row_number() OVER (PARTITION BY vec_id
-           |                         ORDER BY d2, cell) AS rnk
-           |    FROM fa) z WHERE rnk = 1),
-           |pd AS (
-           |  SELECT a.vec_id AS u, b.vec_id AS v,
-           |    sum((ea.xs - eb.xs) * (ea.xs - eb.xs)) AS d2
-           |  FROM ca a JOIN ca b ON a.cell = b.cell
-           |    AND a.vec_id <> b.vec_id
-           |  JOIN e ea ON ea.vec_id = a.vec_id
-           |  JOIN e eb ON eb.vec_id = b.vec_id AND eb.dim = ea.dim
-           |  GROUP BY 1, 2),
-           |knn AS (
-           |  SELECT u, v FROM (
-           |    SELECT u, v,
-           |      row_number() OVER (PARTITION BY u ORDER BY d2, v) AS rnk
-           |    FROM pd) z WHERE rnk <= $M_KNN),
-           |g AS (SELECT u AS src, v AS dst FROM knn
-           |      UNION SELECT v, u FROM knn),
-           |qd AS (
-           |  SELECT q.vec_id AS query_id, x.vec_id AS node,
-           |    sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-           |  FROM e q JOIN e x ON q.dim = x.dim AND x.vec_id < $INDEX_MAX
-           |  WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-           |  GROUP BY 1, 2),
-           |truth AS (
-           |  SELECT query_id, node FROM (
-           |    SELECT query_id, node,
-           |      row_number() OVER (PARTITION BY query_id
-           |                         ORDER BY d2, node) AS rnk
-           |    FROM qd) z WHERE rnk <= $K),
+        s"""WITH ${knnGraphCtes("g", INDEX_MAX, M_KNN)},
+           |${knnQueryDistCte(INDEX_MAX, Q_MAX)},
+           |${topNodesCte("truth", "qd", K)},
            |ent AS (SELECT DISTINCT vec_id AS node FROM e
            |        WHERE vec_id < $INDEX_MAX AND vec_id % $ENT_MOD = 0),
            |${BEAMS.map(beamCtes).mkString(",\n")},
@@ -15749,14 +15283,6 @@ object PipelineQueries {
   val mediaPerceptualIndex: Q = {
     val INDEX_MAX = 400L; val COPY = 1000000L; val SH = 8L
     val MIN_SHARED = 3L
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -15850,15 +15376,11 @@ object PipelineQueries {
          |  FROM rh),
          |sig AS (
          |  SELECT doc_id, is_new,
-         |    $sigCols
+         |    $mhSigColsSql
          |  FROM el GROUP BY doc_id, is_new),
          |bands AS (
-         |  $bandRowsSql),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
-         |  FROM bands a JOIN bands x
-         |    ON a.band = x.band AND a.band_key = x.band_key
-         |  WHERE a.is_new = 1 AND x.is_new = 0)
+         |  ${mhBandRowsSql("doc_id, is_new")}),
+         |${mhCandCte("x")}
          |SELECT c.new_id, c.index_id, count(*)::BIGINT AS n_shared
          |FROM cand c
          |JOIN el a ON a.doc_id = c.new_id
@@ -15890,13 +15412,8 @@ object PipelineQueries {
     val INDEX_MAX = 400L; val Q_MAX = 420L; val NQ = Q_MAX - INDEX_MAX
     val M_KNN = 6; val ROUNDS = 3; val K = 10; val B = 8
     val ENT_MOD = 50L
-    // the deletion slice: a 4% id rule PLUS entry node 100 (so the
-    // entry-point drop is exercised, not just leaf retrieval)
-    val delSql = "(vec_id % 25 = 7 OR vec_id = 100)"
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        def isDel(c: Column): Column = c % 25 === 7 || c === 100
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val eAll = VectorQuantizer.scaled(
@@ -15909,174 +15426,49 @@ object PipelineQueries {
           // the q327 build, on the FULL pre-purge corpus (edges are
           // frozen-as-built; the purge drops incident rows, it never
           // re-derives the graph — the family rule)
-          val cent = VectorQuantizer.fitCentroids(
-            eIdx, "vec_id", KM_C, KM_ITERS)
-          val cells = VectorQuantizer.assignCells(eIdx, cent, "vec_id")
-          val xs = eIdx.select(col("vec_id"), col("xs"))
-          val pairs = cells.as("a")
-            .join(cells.as("b"), col("a.cell") === col("b.cell") &&
-              col("a.vec_id") =!= col("b.vec_id"))
-            .select(col("a.vec_id").as("u"), col("b.vec_id").as("v"))
-            .join(xs.select(col("vec_id").as("u"), col("xs").as("xu")), "u")
-            .join(xs.select(col("vec_id").as("v"), col("xs").as("xv")), "v")
-            .select(col("u"), col("v"),
-              VectorQuantizer.l2DistSq(col("xu"), col("xv")).as("d2"))
-          val knn = pairs.withColumn("rnk", row_number().over(
-              Window.partitionBy("u").orderBy(col("d2"), col("v"))))
-            .filter(col("rnk") <= M_KNN)
-            .select(col("u"), col("v"))
-          GraphIndex.publish(
-            knn.select(col("u").as("src"), col("v").as("dst"))
-              .unionByName(knn.select(col("v").as("src"),
-                col("u").as("dst")))
-              .distinct()
-              .withColumn("w", lit(1L)),
-            root)
+          GraphIndex.publish(knnGraphEdges(eIdx, M_KNN), root)
           // the forget: tombstone the slice, compact bucket-locally
           GraphIndex.addTombstones(s,
-            eIdx.select(col("vec_id").as("node")).filter(isDel(col("node"))),
+            eIdx.select(col("vec_id").as("node")).filter(KNN_PURGED(col("node"))),
             "node", root)
           GraphIndex.purgeCompact(s, root)
         }
         val qxs = eAll.filter(col("vec_id") >= INDEX_MAX)
           .select(col("vec_id").as("query_id"), col("xs").as("qx"))
         val ixs = eIdx.select(col("vec_id").as("node"), col("xs").as("nx"))
-        val survivors = ixs.filter(!isDel(col("node")))
-        def score(cand: DataFrame): DataFrame =
-          cand.join(ixs, "node").join(qxs, "query_id")
-            .select(col("query_id"), col("node"),
-              VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2"))
-        def topPerQuery(scored: DataFrame, n: Int): DataFrame =
-          scored.withColumn("rnk", row_number().over(
-              Window.partitionBy("query_id").orderBy(col("d2"), col("node"))))
-            .filter(col("rnk") <= n)
-            .select(col("query_id"), col("node"))
-        val truth = topPerQuery(
-          qxs.crossJoin(survivors).select(col("query_id"), col("node"),
-            VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2")), K)
-          .withColumn("hit", lit(1L))
+        val survivors = ixs.filter(!KNN_PURGED(col("node")))
+        val truth = knnTruth(qxs, survivors, K)
         val entries = survivors.filter(col("node") % ENT_MOD === 0)
           .select("node")
-        // one file listing per artifact path across all beam rounds
-        val scans = scala.collection.concurrent.TrieMap
-          .empty[String, DataFrame]
-        var (visited, frontier, nf) =
-          beamStage(score(qxs.select("query_id").crossJoin(entries)), B)
-        for (_ <- 1 to ROUNDS) {
-          if (nf > 0) {
-            val nb = GraphIndex.neighbors(s, frontier, root, Some(scans))
-            val fresh = nb
-              .select(col("query_id"), col("nbr").as("node")).distinct()
-              .join(visited.select("query_id", "node"),
-                Seq("query_id", "node"), "left_anti")
-            val (newV, newF, nf2) = beamStage(score(fresh), B)
-            visited = visited.unionByName(newV)
-            frontier = newF
-            nf = nf2
-          }
-        }
+        val visited = new GraphBeam(qxs, ixs, ROUNDS,
+          GraphIndex.neighbors(s, _, root, _)).visited(entries, B)
         topPerQuery(visited, K)
           .join(truth, Seq("query_id", "node"), "left")
           .agg(count(lit(1)).as("n_pairs"),
             sum(coalesce(col("hit"), lit(0L))).as("n_hit"),
-            sum(when(isDel(col("node")), 1L).otherwise(0L))
+            sum(when(KNN_PURGED(col("node")), 1L).otherwise(0L))
               .as("n_purged_served"))
           .withColumn("recall_ppm",
             expr(s"n_hit * 1000000 div (${NQ * K})"))
           .select("n_pairs", "n_hit", "n_purged_served", "recall_ppm")
       }, {
-        val rounds = (1 to ROUNDS).map { r =>
-          s"""n$r AS (
-             |  SELECT DISTINCT f.query_id, g.dst AS node
-             |  FROM f${r - 1} f JOIN gm g ON g.src = f.node
-             |  WHERE NOT EXISTS (SELECT 1 FROM v${r - 1} v
-             |                    WHERE v.query_id = f.query_id
-             |                      AND v.node = g.dst)),
-             |v$r AS (
-             |  SELECT query_id, node, d2 FROM v${r - 1}
-             |  UNION ALL
-             |  SELECT n.query_id, n.node, q.d2
-             |  FROM n$r n JOIN qd q
-             |    ON q.query_id = n.query_id AND q.node = n.node),
-             |f$r AS (
-             |  SELECT query_id, node FROM (
-             |    SELECT n.query_id, n.node,
-             |      row_number() OVER (PARTITION BY n.query_id
-             |                         ORDER BY q.d2, n.node) AS rnk
-             |    FROM n$r n JOIN qd q
-             |      ON q.query_id = n.query_id AND q.node = n.node) z
-             |  WHERE rnk <= $B)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $INDEX_MAX")},
-           |fa AS (
-           |  SELECT e.vec_id, c.cell,
-           |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-           |  FROM e JOIN c$KM_ITERS c USING (dim)
-           |  WHERE e.vec_id < $INDEX_MAX
-           |  GROUP BY e.vec_id, c.cell),
-           |ca AS (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell,
-           |      row_number() OVER (PARTITION BY vec_id
-           |                         ORDER BY d2, cell) AS rnk
-           |    FROM fa) z WHERE rnk = 1),
-           |pd AS (
-           |  SELECT a.vec_id AS u, b.vec_id AS v,
-           |    sum((ea.xs - eb.xs) * (ea.xs - eb.xs)) AS d2
-           |  FROM ca a JOIN ca b ON a.cell = b.cell
-           |    AND a.vec_id <> b.vec_id
-           |  JOIN e ea ON ea.vec_id = a.vec_id
-           |  JOIN e eb ON eb.vec_id = b.vec_id AND eb.dim = ea.dim
-           |  GROUP BY 1, 2),
-           |knn AS (
-           |  SELECT u, v FROM (
-           |    SELECT u, v,
-           |      row_number() OVER (PARTITION BY u ORDER BY d2, v) AS rnk
-           |    FROM pd) z WHERE rnk <= $M_KNN),
-           |g AS (SELECT u AS src, v AS dst FROM knn
-           |      UNION SELECT v, u FROM knn),
-           |del AS (SELECT DISTINCT vec_id FROM e
-           |        WHERE vec_id < $INDEX_MAX AND $delSql),
-           |gm AS (
-           |  SELECT src, dst FROM g
-           |  WHERE src NOT IN (SELECT vec_id FROM del)
-           |    AND dst NOT IN (SELECT vec_id FROM del)),
-           |qd AS (
-           |  SELECT q.vec_id AS query_id, x.vec_id AS node,
-           |    sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-           |  FROM e q JOIN e x ON q.dim = x.dim AND x.vec_id < $INDEX_MAX
-           |  WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-           |    AND x.vec_id NOT IN (SELECT vec_id FROM del)
-           |  GROUP BY 1, 2),
-           |truth AS (
-           |  SELECT query_id, node FROM (
-           |    SELECT query_id, node,
-           |      row_number() OVER (PARTITION BY query_id
-           |                         ORDER BY d2, node) AS rnk
-           |    FROM qd) z WHERE rnk <= $K),
+        s"""WITH ${knnGraphCtes("g", INDEX_MAX, M_KNN)},
+           |${knnPurgedCtes("g", INDEX_MAX)},
+           |${knnQueryDistCte(INDEX_MAX, Q_MAX,
+              Some("x.vec_id NOT IN (SELECT vec_id FROM del)"))},
+           |${topNodesCte("truth", "qd", K)},
            |ent AS (SELECT DISTINCT vec_id AS node FROM e
            |        WHERE vec_id < $INDEX_MAX AND vec_id % $ENT_MOD = 0
-           |          AND NOT $delSql),
+           |          AND NOT (${KNN_PURGED.sql("vec_id")})),
            |v0 AS (
            |  SELECT qd.query_id, qd.node, qd.d2
            |  FROM qd JOIN ent ON qd.node = ent.node),
-           |f0 AS (
-           |  SELECT query_id, node FROM (
-           |    SELECT query_id, node,
-           |      row_number() OVER (PARTITION BY query_id
-           |                         ORDER BY d2, node) AS rnk
-           |    FROM v0) z WHERE rnk <= $B),
-           |$rounds,
-           |res AS (
-           |  SELECT query_id, node FROM (
-           |    SELECT query_id, node,
-           |      row_number() OVER (PARTITION BY query_id
-           |                         ORDER BY d2, node) AS rnk
-           |    FROM v$ROUNDS) z WHERE rnk <= $K)
+           |${beamWalkCtes("", "gm g", B, ROUNDS)},
+           |${topNodesCte("res", s"v$ROUNDS", K)}
            |SELECT count(*)::BIGINT AS n_pairs,
            |  sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
            |    AS n_hit,
-           |  sum(CASE WHEN r.node % 25 = 7 OR r.node = 100
+           |  sum(CASE WHEN ${KNN_PURGED.sql("r.node")}
            |           THEN 1 ELSE 0 END)::BIGINT AS n_purged_served,
            |  (sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
            |    * 1000000 // ${NQ * K})::BIGINT AS recall_ppm
@@ -16118,7 +15510,6 @@ object PipelineQueries {
     val ENT_MOD = 50L
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val eAll = VectorQuantizer.scaled(
@@ -16127,28 +15518,6 @@ object PipelineQueries {
         val eIdx = eAll.filter(col("vec_id") < INDEX_MAX)
         val root = graft.sources.Artifacts.versionedRoot(
           "graft-knn-fold", d, Seq("embeddings.parquet"))
-        // per-node top-M nearest among same-cell candidates,
-        // symmetrized — the shared edge derivation of the base build
-        // and the delta insert (only the candidate sides differ)
-        def knnEdges(newSide: DataFrame, candSide: DataFrame): DataFrame = {
-          val xs = eIdx.select(col("vec_id"), col("xs"))
-          val pairs = newSide.as("a")
-            .join(candSide.as("b"), col("a.cell") === col("b.cell") &&
-              col("a.vec_id") =!= col("b.vec_id"))
-            .select(col("a.vec_id").as("u"), col("b.vec_id").as("v"))
-            .join(xs.select(col("vec_id").as("u"), col("xs").as("xu")), "u")
-            .join(xs.select(col("vec_id").as("v"), col("xs").as("xv")), "v")
-            .select(col("u"), col("v"),
-              VectorQuantizer.l2DistSq(col("xu"), col("xv")).as("d2"))
-          val knn = pairs.withColumn("rnk", row_number().over(
-              Window.partitionBy("u").orderBy(col("d2"), col("v"))))
-            .filter(col("rnk") <= M_KNN)
-            .select(col("u"), col("v"))
-          knn.select(col("u").as("src"), col("v").as("dst"))
-            .unionByName(knn.select(col("v").as("src"), col("u").as("dst")))
-            .distinct()
-            .withColumn("w", lit(1L))
-        }
         val needBase = GraphIndex.resolve(root).isEmpty
         if (needBase || !GraphIndex.folded(root, "append-1")) {
           // the FROZEN coarse quantizer: fit on the base world only.
@@ -16162,51 +15531,24 @@ object PipelineQueries {
             eBase, "vec_id", KM_C, KM_ITERS)
           if (needBase) {
             val cells = VectorQuantizer.assignCells(eBase, cent, "vec_id")
-            GraphIndex.publish(knnEdges(cells, cells), root)
+            GraphIndex.publish(knnEdges(eIdx, cells, cells, M_KNN), root)
           }
           if (!GraphIndex.folded(root, "append-1")) {
             val cellsAll = VectorQuantizer.assignCells(eIdx, cent, "vec_id")
             GraphIndex.fold(s,
-              knnEdges(cellsAll.filter(col("vec_id") >= SPLIT), cellsAll),
+              knnEdges(eIdx, cellsAll.filter(col("vec_id") >= SPLIT),
+                cellsAll, M_KNN),
               root, tag = "append-1")
           }
         }
         val qxs = eAll.filter(col("vec_id") >= INDEX_MAX)
           .select(col("vec_id").as("query_id"), col("xs").as("qx"))
         val ixs = eIdx.select(col("vec_id").as("node"), col("xs").as("nx"))
-        def score(cand: DataFrame): DataFrame =
-          cand.join(ixs, "node").join(qxs, "query_id")
-            .select(col("query_id"), col("node"),
-              VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2"))
-        def topPerQuery(scored: DataFrame, n: Int): DataFrame =
-          scored.withColumn("rnk", row_number().over(
-              Window.partitionBy("query_id").orderBy(col("d2"), col("node"))))
-            .filter(col("rnk") <= n)
-            .select(col("query_id"), col("node"))
-        val truth = topPerQuery(
-          qxs.crossJoin(ixs).select(col("query_id"), col("node"),
-            VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2")), K)
-          .withColumn("hit", lit(1L))
+        val truth = knnTruth(qxs, ixs, K)
         val entries = ixs.filter(col("node") % ENT_MOD === 0)
           .select("node")
-        // one file listing per artifact path across all beam rounds
-        val scans = scala.collection.concurrent.TrieMap
-          .empty[String, DataFrame]
-        var (visited, frontier, nf) =
-          beamStage(score(qxs.select("query_id").crossJoin(entries)), B)
-        for (_ <- 1 to ROUNDS) {
-          if (nf > 0) {
-            val nb = GraphIndex.neighbors(s, frontier, root, Some(scans))
-            val fresh = nb
-              .select(col("query_id"), col("nbr").as("node")).distinct()
-              .join(visited.select("query_id", "node"),
-                Seq("query_id", "node"), "left_anti")
-            val (newV, newF, nf2) = beamStage(score(fresh), B)
-            visited = visited.unionByName(newV)
-            frontier = newF
-            nf = nf2
-          }
-        }
+        val visited = new GraphBeam(qxs, ixs, ROUNDS,
+          GraphIndex.neighbors(s, _, root, _)).visited(entries, B)
         topPerQuery(visited, K)
           .join(truth, Seq("query_id", "node"), "left")
           .agg(count(lit(1)).as("n_pairs"),
@@ -16217,103 +15559,23 @@ object PipelineQueries {
             expr(s"n_hit * 1000000 div (${NQ * K})"))
           .select("n_pairs", "n_hit", "n_appended_served", "recall_ppm")
       }, {
-        val rounds = (1 to ROUNDS).map { r =>
-          s"""n$r AS (
-             |  SELECT DISTINCT f.query_id, g.dst AS node
-             |  FROM f${r - 1} f JOIN g ON g.src = f.node
-             |  WHERE NOT EXISTS (SELECT 1 FROM v${r - 1} v
-             |                    WHERE v.query_id = f.query_id
-             |                      AND v.node = g.dst)),
-             |v$r AS (
-             |  SELECT query_id, node, d2 FROM v${r - 1}
-             |  UNION ALL
-             |  SELECT n.query_id, n.node, q.d2
-             |  FROM n$r n JOIN qd q
-             |    ON q.query_id = n.query_id AND q.node = n.node),
-             |f$r AS (
-             |  SELECT query_id, node FROM (
-             |    SELECT n.query_id, n.node,
-             |      row_number() OVER (PARTITION BY n.query_id
-             |                         ORDER BY q.d2, n.node) AS rnk
-             |    FROM n$r n JOIN qd q
-             |      ON q.query_id = n.query_id AND q.node = n.node) z
-             |  WHERE rnk <= $B)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $SPLIT")},
-           |fa AS (
-           |  SELECT e.vec_id, c.cell,
-           |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-           |  FROM e JOIN c$KM_ITERS c USING (dim)
-           |  WHERE e.vec_id < $INDEX_MAX
-           |  GROUP BY e.vec_id, c.cell),
-           |ca AS (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell,
-           |      row_number() OVER (PARTITION BY vec_id
-           |                         ORDER BY d2, cell) AS rnk
-           |    FROM fa) z WHERE rnk = 1),
-           |pdb AS (
-           |  SELECT a.vec_id AS u, b.vec_id AS v,
-           |    sum((ea.xs - eb.xs) * (ea.xs - eb.xs)) AS d2
-           |  FROM ca a JOIN ca b ON a.cell = b.cell
-           |    AND a.vec_id <> b.vec_id
-           |  JOIN e ea ON ea.vec_id = a.vec_id
-           |  JOIN e eb ON eb.vec_id = b.vec_id AND eb.dim = ea.dim
-           |  WHERE a.vec_id < $SPLIT AND b.vec_id < $SPLIT
-           |  GROUP BY 1, 2),
-           |knb AS (
-           |  SELECT u, v FROM (
-           |    SELECT u, v,
-           |      row_number() OVER (PARTITION BY u ORDER BY d2, v) AS rnk
-           |    FROM pdb) z WHERE rnk <= $M_KNN),
-           |pdn AS (
-           |  SELECT a.vec_id AS u, b.vec_id AS v,
-           |    sum((ea.xs - eb.xs) * (ea.xs - eb.xs)) AS d2
-           |  FROM ca a JOIN ca b ON a.cell = b.cell
-           |    AND a.vec_id <> b.vec_id
-           |  JOIN e ea ON ea.vec_id = a.vec_id
-           |  JOIN e eb ON eb.vec_id = b.vec_id AND eb.dim = ea.dim
-           |  WHERE a.vec_id >= $SPLIT
-           |  GROUP BY 1, 2),
-           |knd AS (
-           |  SELECT u, v FROM (
-           |    SELECT u, v,
-           |      row_number() OVER (PARTITION BY u ORDER BY d2, v) AS rnk
-           |    FROM pdn) z WHERE rnk <= $M_KNN),
+        s"""WITH ${knnCellCtes(SPLIT, INDEX_MAX)},
+           |${knnPairCtes("pdb", "knb", M_KNN,
+              Some(s"a.vec_id < $SPLIT AND b.vec_id < $SPLIT"))},
+           |${knnPairCtes("pdn", "knd", M_KNN, Some(s"a.vec_id >= $SPLIT"))},
            |g AS (SELECT u AS src, v AS dst FROM knb
            |      UNION SELECT v, u FROM knb
            |      UNION SELECT u, v FROM knd
            |      UNION SELECT v, u FROM knd),
-           |qd AS (
-           |  SELECT q.vec_id AS query_id, x.vec_id AS node,
-           |    sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-           |  FROM e q JOIN e x ON q.dim = x.dim AND x.vec_id < $INDEX_MAX
-           |  WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-           |  GROUP BY 1, 2),
-           |truth AS (
-           |  SELECT query_id, node FROM (
-           |    SELECT query_id, node,
-           |      row_number() OVER (PARTITION BY query_id
-           |                         ORDER BY d2, node) AS rnk
-           |    FROM qd) z WHERE rnk <= $K),
+           |${knnQueryDistCte(INDEX_MAX, Q_MAX)},
+           |${topNodesCte("truth", "qd", K)},
            |ent AS (SELECT DISTINCT vec_id AS node FROM e
            |        WHERE vec_id < $INDEX_MAX AND vec_id % $ENT_MOD = 0),
            |v0 AS (
            |  SELECT qd.query_id, qd.node, qd.d2
            |  FROM qd JOIN ent ON qd.node = ent.node),
-           |f0 AS (
-           |  SELECT query_id, node FROM (
-           |    SELECT query_id, node,
-           |      row_number() OVER (PARTITION BY query_id
-           |                         ORDER BY d2, node) AS rnk
-           |    FROM v0) z WHERE rnk <= $B),
-           |$rounds,
-           |res AS (
-           |  SELECT query_id, node FROM (
-           |    SELECT query_id, node,
-           |      row_number() OVER (PARTITION BY query_id
-           |                         ORDER BY d2, node) AS rnk
-           |    FROM v$ROUNDS) z WHERE rnk <= $K)
+           |${beamWalkCtes("", "g", B, ROUNDS)},
+           |${topNodesCte("res", s"v$ROUNDS", K)}
            |SELECT count(*)::BIGINT AS n_pairs,
            |  sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
            |    AS n_hit,
@@ -16351,11 +15613,8 @@ object PipelineQueries {
     val INDEX_MAX = 400L; val B0_MAX = 410L; val Q_MAX = 420L
     val M_KNN = 6; val ROUNDS = 3; val K = 10; val B = 8
     val ENT_MOD = 50L
-    val delSql = "(vec_id % 25 = 7 OR vec_id = 100)"
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        def isDel(c: Column): Column = c % 25 === 7 || c === 100
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val eAll = VectorQuantizer.scaled(
@@ -16369,29 +15628,7 @@ object PipelineQueries {
           "graft-knn-pstream-out", d, Seq("embeddings.parquet"))
         if (GraphIndex.resolve(idxRoot).isEmpty) {
           // the q327 build on the full pre-purge index world
-          val cent = VectorQuantizer.fitCentroids(
-            eIdx, "vec_id", KM_C, KM_ITERS)
-          val cells = VectorQuantizer.assignCells(eIdx, cent, "vec_id")
-          val xs = eIdx.select(col("vec_id"), col("xs"))
-          val pairs = cells.as("a")
-            .join(cells.as("b"), col("a.cell") === col("b.cell") &&
-              col("a.vec_id") =!= col("b.vec_id"))
-            .select(col("a.vec_id").as("u"), col("b.vec_id").as("v"))
-            .join(xs.select(col("vec_id").as("u"), col("xs").as("xu")), "u")
-            .join(xs.select(col("vec_id").as("v"), col("xs").as("xv")), "v")
-            .select(col("u"), col("v"),
-              VectorQuantizer.l2DistSq(col("xu"), col("xv")).as("d2"))
-          val knn = pairs.withColumn("rnk", row_number().over(
-              Window.partitionBy("u").orderBy(col("d2"), col("v"))))
-            .filter(col("rnk") <= M_KNN)
-            .select(col("u"), col("v"))
-          GraphIndex.publish(
-            knn.select(col("u").as("src"), col("v").as("dst"))
-              .unionByName(knn.select(col("v").as("src"),
-                col("u").as("dst")))
-              .distinct()
-              .withColumn("w", lit(1L)),
-            idxRoot)
+          GraphIndex.publish(knnGraphEdges(eIdx, M_KNN), idxRoot)
         }
         // the probe seam: beam search over whatever generation the
         // artifact serves AT BATCH TIME — partially applied over the
@@ -16401,41 +15638,14 @@ object PipelineQueries {
                            vec: String, k: Int, root: String): DataFrame = {
           val qxs = VectorQuantizer.scaled(batch, id, vec)
             .select(col(id).as("query_id"), col("xs").as("qx"))
-          def score(cand: DataFrame): DataFrame =
-            cand.join(ixs, "node").join(qxs, "query_id")
-              .select(col("query_id"), col("node"),
-                VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2"))
-          def top(scored: DataFrame, n: Int): DataFrame =
-            scored.withColumn("rnk", row_number().over(
-                Window.partitionBy("query_id")
-                  .orderBy(col("d2"), col("node"))))
-              .filter(col("rnk") <= n)
           val entCand = ixs.filter(col("node") % ENT_MOD === 0)
             .select("node")
-          // one file listing per artifact path across entry probe +
-          // all beam rounds
-          val scans = scala.collection.concurrent.TrieMap
-            .empty[String, DataFrame]
+          val walk = new GraphBeam(qxs, ixs, ROUNDS,
+            GraphIndex.neighbors(sp, _, root, _))
           // artifact-derived entry liveness: a purged entry has no
           // adjacency row left, so it (and only it) drops here
-          val entries = GraphIndex.neighbors(sp, entCand, root, Some(scans))
-            .select("node").distinct()
-          var (visited, frontier, nf) =
-            beamStage(score(qxs.select("query_id").crossJoin(entries)), B)
-          for (_ <- 1 to ROUNDS) {
-            if (nf > 0) {
-              val nb = GraphIndex.neighbors(sp, frontier, root, Some(scans))
-              val fresh = nb
-                .select(col("query_id"), col("nbr").as("node")).distinct()
-                .join(visited.select("query_id", "node"),
-                  Seq("query_id", "node"), "left_anti")
-              val (newV, newF, nf2) = beamStage(score(fresh), B)
-              visited = visited.unionByName(newV)
-              frontier = newF
-              nf = nf2
-            }
-          }
-          top(visited, k)
+          val entries = walk.neighbors(entCand).select("node").distinct()
+          rankPerQuery(walk.visited(entries, B), k)
             .select(col("query_id"), col("node"), col("d2"),
               col("rnk").cast("long").as("rnk"))
         }
@@ -16451,7 +15661,7 @@ object PipelineQueries {
         if (VersionedDirs.versionsOf(idxRoot).size < 2) {
           GraphIndex.addTombstones(s,
             eIdx.select(col("vec_id").as("node"))
-              .filter(isDel(col("node"))), "node", idxRoot)
+              .filter(KNN_PURGED(col("node"))), "node", idxRoot)
           GraphIndex.purgeCompact(s, idxRoot)
         }
         ann.processBatch(b0, 0) // redelivery AFTER the purge: absorbed
@@ -16460,28 +15670,6 @@ object PipelineQueries {
       }, {
         def beamCtes(sfx: String, graph: String, ent: String,
                      qPred: String): String = {
-          val rounds = (1 to ROUNDS).map { r =>
-            s"""n$r$sfx AS (
-               |  SELECT DISTINCT f.query_id, g.dst AS node
-               |  FROM f${r - 1}$sfx f JOIN $graph g ON g.src = f.node
-               |  WHERE NOT EXISTS (SELECT 1 FROM v${r - 1}$sfx v
-               |                    WHERE v.query_id = f.query_id
-               |                      AND v.node = g.dst)),
-               |v$r$sfx AS (
-               |  SELECT query_id, node, d2 FROM v${r - 1}$sfx
-               |  UNION ALL
-               |  SELECT n.query_id, n.node, q.d2
-               |  FROM n$r$sfx n JOIN qd q
-               |    ON q.query_id = n.query_id AND q.node = n.node),
-               |f$r$sfx AS (
-               |  SELECT query_id, node FROM (
-               |    SELECT n.query_id, n.node,
-               |      row_number() OVER (PARTITION BY n.query_id
-               |                         ORDER BY q.d2, n.node) AS rnk
-               |    FROM n$r$sfx n JOIN qd q
-               |      ON q.query_id = n.query_id AND q.node = n.node) z
-               |  WHERE rnk <= $B)""".stripMargin
-          }.mkString(",\n")
           s"""$ent$sfx AS (
              |  SELECT DISTINCT vec_id AS node FROM e
              |  WHERE vec_id < $INDEX_MAX AND vec_id % $ENT_MOD = 0
@@ -16491,13 +15679,7 @@ object PipelineQueries {
              |  SELECT qd.query_id, qd.node, qd.d2
              |  FROM qd JOIN $ent$sfx ON qd.node = $ent$sfx.node
              |  WHERE $qPred),
-             |f0$sfx AS (
-             |  SELECT query_id, node FROM (
-             |    SELECT query_id, node,
-             |      row_number() OVER (PARTITION BY query_id
-             |                         ORDER BY d2, node) AS rnk
-             |    FROM v0$sfx) z WHERE rnk <= $B),
-             |$rounds,
+             |${beamWalkCtes(sfx, s"$graph g", B, ROUNDS)},
              |res$sfx AS (
              |  SELECT query_id, node, d2 FROM (
              |    SELECT query_id, node, d2,
@@ -16505,46 +15687,9 @@ object PipelineQueries {
              |                         ORDER BY d2, node) AS rnk
              |    FROM v$ROUNDS$sfx) z WHERE rnk <= $K)""".stripMargin
         }
-        s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $INDEX_MAX")},
-           |fa AS (
-           |  SELECT e.vec_id, c.cell,
-           |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-           |  FROM e JOIN c$KM_ITERS c USING (dim)
-           |  WHERE e.vec_id < $INDEX_MAX
-           |  GROUP BY e.vec_id, c.cell),
-           |ca AS (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell,
-           |      row_number() OVER (PARTITION BY vec_id
-           |                         ORDER BY d2, cell) AS rnk
-           |    FROM fa) z WHERE rnk = 1),
-           |pd AS (
-           |  SELECT a.vec_id AS u, b.vec_id AS v,
-           |    sum((ea.xs - eb.xs) * (ea.xs - eb.xs)) AS d2
-           |  FROM ca a JOIN ca b ON a.cell = b.cell
-           |    AND a.vec_id <> b.vec_id
-           |  JOIN e ea ON ea.vec_id = a.vec_id
-           |  JOIN e eb ON eb.vec_id = b.vec_id AND eb.dim = ea.dim
-           |  GROUP BY 1, 2),
-           |knn AS (
-           |  SELECT u, v FROM (
-           |    SELECT u, v,
-           |      row_number() OVER (PARTITION BY u ORDER BY d2, v) AS rnk
-           |    FROM pd) z WHERE rnk <= $M_KNN),
-           |gf AS (SELECT u AS src, v AS dst FROM knn
-           |       UNION SELECT v, u FROM knn),
-           |del AS (SELECT DISTINCT vec_id FROM e
-           |        WHERE vec_id < $INDEX_MAX AND $delSql),
-           |gm AS (
-           |  SELECT src, dst FROM gf
-           |  WHERE src NOT IN (SELECT vec_id FROM del)
-           |    AND dst NOT IN (SELECT vec_id FROM del)),
-           |qd AS (
-           |  SELECT q.vec_id AS query_id, x.vec_id AS node,
-           |    sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-           |  FROM e q JOIN e x ON q.dim = x.dim AND x.vec_id < $INDEX_MAX
-           |  WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-           |  GROUP BY 1, 2),
+        s"""WITH ${knnGraphCtes("gf", INDEX_MAX, M_KNN)},
+           |${knnPurgedCtes("gf", INDEX_MAX)},
+           |${knnQueryDistCte(INDEX_MAX, Q_MAX)},
            |${beamCtes("a", "gf", "ent",
               s"qd.query_id < $B0_MAX")},
            |${beamCtes("b", "gm", "ent",
@@ -16665,39 +15810,12 @@ object PipelineQueries {
              |  FROM adc$sfx)""".stripMargin
         s"""WITH idx0 AS (SELECT vec_id, embedding FROM embeddings
            |              WHERE vec_id < $BASE),
-           |params AS (
-           |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-           |    ${VectorFunctions.mtTablesSql(
-                  VectorFunctions.mtBitsSql("count(*)"))} AS nt
-           |  FROM idx0),
-           |ie AS (
-           |  SELECT vec_id, embedding,
-           |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-           |  FROM embeddings, params WHERE vec_id < $BASE),
-           |iek AS (
-           |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-           |  FROM ie),
-           |ikb AS (
-           |  SELECT vec_id, embedding, tbl,
-           |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-           |  FROM iek),
-           |qe AS (
-           |  SELECT vec_id, embedding,
-           |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-           |  FROM embeddings, params
-           |  WHERE vec_id >= $BASE AND vec_id < $Q_MAX),
-           |qek AS (
-           |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-           |  FROM qe),
-           |qkb AS (
-           |  SELECT vec_id, embedding, tbl,
-           |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-           |  FROM qek),
+           |${lshParamsCte("idx0")},
+           |${lshKeyCtes("i", s" WHERE vec_id < $BASE")},
+           |${lshKeyCtes("q", s"\n  WHERE vec_id >= $BASE AND vec_id < $Q_MAX")},
            |$pqEpCtes,
            |ix AS (SELECT * FROM ep WHERE vec_id < $BASE),
-           |pc0 AS (SELECT sub, vec_id AS cell, sdim, xs AS cs FROM ix
-           |        WHERE vec_id < $PQ_KS),
-           |${(1 to PQ_ITERS).map(pqIterCte).mkString(",\n")},
+           |$pqFitCtes,
            |cds AS (
            |  SELECT vec_id, sub, cell FROM (
            |    SELECT ib.vec_id, c.sub, c.cell,
@@ -17016,11 +16134,10 @@ object PipelineQueries {
     */
   val pinnedHybridServe: Q = {
     val INDEX_MAX = 400L; val Q_MAX = 410L; val K = 10; val F = 5
-    val delSql = "% 7 = 2"
+    val purged = DeleteRule(7, 2)
     Q(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        def isDel(c: Column): Column = c % 7 === 2
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         val base = docs.filter(col("doc_id") < INDEX_MAX)
         val emb = t(s, d, "embeddings")
@@ -17040,7 +16157,7 @@ object PipelineQueries {
             Map("lex" -> lexRoot, "sim" -> simRoot))
         }
         if (FleetSnapshot.list(fleetRoot).size < 2) {
-          val del = base.filter(isDel(col("doc_id"))).select("doc_id")
+          val del = base.filter(purged(col("doc_id"))).select("doc_id")
           LexIndex.addTombstones(s, del, "doc_id", lexRoot)
           LexIndex.mergeCompact(s, lexRoot)
           SimIndex.addTombstones(s,
@@ -17155,36 +16272,11 @@ object PipelineQueries {
            |  WHERE length(t) > 0),
            |idx0 AS (SELECT vec_id, embedding FROM embeddings
            |         WHERE vec_id < $INDEX_MAX),
-           |params AS (
-           |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-           |    ${VectorFunctions.mtTablesSql(
-                  VectorFunctions.mtBitsSql("count(*)"))} AS nt
-           |  FROM idx0),
-           |ie AS (
-           |  SELECT vec_id, embedding,
-           |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-           |  FROM embeddings, params WHERE vec_id < $INDEX_MAX),
-           |iek AS (
-           |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-           |  FROM ie),
-           |ikb AS (
-           |  SELECT vec_id, embedding, tbl,
-           |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-           |  FROM iek),
-           |qe AS (
-           |  SELECT vec_id, embedding,
-           |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-           |  FROM embeddings, params
-           |  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX),
-           |qek AS (
-           |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-           |  FROM qe),
-           |qkb AS (
-           |  SELECT vec_id, embedding, tbl,
-           |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-           |  FROM qek),
+           |${lshParamsCte("idx0")},
+           |${lshKeyCtes("i", s" WHERE vec_id < $INDEX_MAX")},
+           |${lshKeyCtes("q", s"\n  WHERE vec_id >= $INDEX_MAX AND vec_id < $Q_MAX")},
            |${armCtes("a", c => s"$c IS NOT NULL")},
-           |${armCtes("b", c => s"NOT ($c $delSql)")}
+           |${armCtes("b", c => s"NOT (${purged.sql(c)})")}
            |SELECT snap, query_id, doc_id, lex_pts, vec_pts,
            |  (lex_pts + vec_pts)::BIGINT AS borda, r::BIGINT AS rnk
            |FROM (
@@ -17218,11 +16310,8 @@ object PipelineQueries {
     val INDEX_MAX = 400L; val Q_MAX = 420L
     val M_KNN = 6; val ROUNDS = 3; val K = 10; val B = 8
     val ENT_MOD = 50L
-    val delSql = "(vec_id % 25 = 7 OR vec_id = 100)"
     Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        def isDel(c: Column): Column = c % 25 === 7 || c === 100
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val eAll = VectorQuantizer.scaled(
@@ -17233,77 +16322,28 @@ object PipelineQueries {
           "graft-fleet-gr", d, Seq("embeddings.parquet"))
         val graphRoot = new java.io.File(fleetRoot, "knn").getAbsolutePath
         if (FleetSnapshot.list(fleetRoot).isEmpty) {
-          val cent = VectorQuantizer.fitCentroids(
-            eIdx, "vec_id", KM_C, KM_ITERS)
-          val cells = VectorQuantizer.assignCells(eIdx, cent, "vec_id")
-          val xs = eIdx.select(col("vec_id"), col("xs"))
-          val pairs = cells.as("a")
-            .join(cells.as("b"), col("a.cell") === col("b.cell") &&
-              col("a.vec_id") =!= col("b.vec_id"))
-            .select(col("a.vec_id").as("u"), col("b.vec_id").as("v"))
-            .join(xs.select(col("vec_id").as("u"), col("xs").as("xu")), "u")
-            .join(xs.select(col("vec_id").as("v"), col("xs").as("xv")), "v")
-            .select(col("u"), col("v"),
-              VectorQuantizer.l2DistSq(col("xu"), col("xv")).as("d2"))
-          val knn = pairs.withColumn("rnk", row_number().over(
-              Window.partitionBy("u").orderBy(col("d2"), col("v"))))
-            .filter(col("rnk") <= M_KNN)
-            .select(col("u"), col("v"))
-          GraphIndex.publish(
-            knn.select(col("u").as("src"), col("v").as("dst"))
-              .unionByName(knn.select(col("v").as("src"),
-                col("u").as("dst")))
-              .distinct()
-              .withColumn("w", lit(1L)),
-            graphRoot)
+          GraphIndex.publish(knnGraphEdges(eIdx, M_KNN), graphRoot)
           FleetSnapshot.pin(fleetRoot, Map("knn" -> graphRoot))
         }
         if (FleetSnapshot.list(fleetRoot).size < 2) {
           GraphIndex.addTombstones(s,
             eIdx.select(col("vec_id").as("node"))
-              .filter(isDel(col("node"))), "node", graphRoot)
+              .filter(KNN_PURGED(col("node"))), "node", graphRoot)
           GraphIndex.purgeCompact(s, graphRoot)
           FleetSnapshot.pin(fleetRoot, Map("knn" -> graphRoot))
         }
         val qxs = eAll.filter(col("vec_id") >= INDEX_MAX)
           .select(col("vec_id").as("query_id"), col("xs").as("qx"))
         val ixs = eIdx.select(col("vec_id").as("node"), col("xs").as("nx"))
-        def score(cand: DataFrame): DataFrame =
-          cand.join(ixs, "node").join(qxs, "query_id")
-            .select(col("query_id"), col("node"),
-              VectorQuantizer.l2DistSq(col("qx"), col("nx")).as("d2"))
-        def top(scored: DataFrame, n: Int): DataFrame =
-          scored.withColumn("rnk", row_number().over(
-              Window.partitionBy("query_id").orderBy(col("d2"), col("node"))))
-            .filter(col("rnk") <= n)
-        // one file listing per pinned generation across entry probe +
-        // all rounds of BOTH snapshot arms (TrieMap: arms run on
-        // driver threads; keys are generation paths so the two pinned
-        // worlds never collide)
-        val scans = scala.collection.concurrent.TrieMap
-          .empty[String, DataFrame]
         def arm(n: Long): DataFrame = {
           val gen = FleetSnapshot.at(fleetRoot, n)("knn")
           val entCand = ixs.filter(col("node") % ENT_MOD === 0)
             .select("node")
-          val entries = GraphIndex.neighborsAt(s, entCand, gen, Some(scans))
-            .select("node").distinct()
-          var (visited, frontier, nf) =
-            beamStage(score(qxs.select("query_id").crossJoin(entries)), B)
-          for (_ <- 1 to ROUNDS) {
-            if (nf > 0) {
-              val nb = GraphIndex.neighborsAt(s, frontier, gen, Some(scans))
-              val fresh = nb
-                .select(col("query_id"), col("nbr").as("node")).distinct()
-                .join(visited.select("query_id", "node"),
-                  Seq("query_id", "node"), "left_anti")
-              val (newV, newF, nf2) = beamStage(score(fresh), B)
-              visited = visited.unionByName(newV)
-              frontier = newF
-              nf = nf2
-            }
-          }
-          top(visited, K)
+          // each arm walks its own pinned generation
+          val walk = new GraphBeam(qxs, ixs, ROUNDS,
+            GraphIndex.neighborsAt(s, _, gen, _))
+          val entries = walk.neighbors(entCand).select("node").distinct()
+          rankPerQuery(walk.visited(entries, B), K)
             .select(lit(n).as("snap"), col("query_id"), col("node"),
               col("d2"), col("rnk").cast("long").as("rnk"))
         }
@@ -17312,28 +16352,6 @@ object PipelineQueries {
           .orderBy("snap", "query_id", "rnk")
       }, {
         def beamCtes(sfx: String, graph: String): String = {
-          val rounds = (1 to ROUNDS).map { r =>
-            s"""n$r$sfx AS (
-               |  SELECT DISTINCT f.query_id, g.dst AS node
-               |  FROM f${r - 1}$sfx f JOIN $graph g ON g.src = f.node
-               |  WHERE NOT EXISTS (SELECT 1 FROM v${r - 1}$sfx v
-               |                    WHERE v.query_id = f.query_id
-               |                      AND v.node = g.dst)),
-               |v$r$sfx AS (
-               |  SELECT query_id, node, d2 FROM v${r - 1}$sfx
-               |  UNION ALL
-               |  SELECT n.query_id, n.node, q.d2
-               |  FROM n$r$sfx n JOIN qd q
-               |    ON q.query_id = n.query_id AND q.node = n.node),
-               |f$r$sfx AS (
-               |  SELECT query_id, node FROM (
-               |    SELECT n.query_id, n.node,
-               |      row_number() OVER (PARTITION BY n.query_id
-               |                         ORDER BY q.d2, n.node) AS rnk
-               |    FROM n$r$sfx n JOIN qd q
-               |      ON q.query_id = n.query_id AND q.node = n.node) z
-               |  WHERE rnk <= $B)""".stripMargin
-          }.mkString(",\n")
           s"""ent$sfx AS (
              |  SELECT DISTINCT vec_id AS node FROM e
              |  WHERE vec_id < $INDEX_MAX AND vec_id % $ENT_MOD = 0
@@ -17342,13 +16360,7 @@ object PipelineQueries {
              |v0$sfx AS (
              |  SELECT qd.query_id, qd.node, qd.d2
              |  FROM qd JOIN ent$sfx ON qd.node = ent$sfx.node),
-             |f0$sfx AS (
-             |  SELECT query_id, node FROM (
-             |    SELECT query_id, node,
-             |      row_number() OVER (PARTITION BY query_id
-             |                         ORDER BY d2, node) AS rnk
-             |    FROM v0$sfx) z WHERE rnk <= $B),
-             |$rounds,
+             |${beamWalkCtes(sfx, s"$graph g", B, ROUNDS)},
              |res$sfx AS (
              |  SELECT query_id, node, d2 FROM (
              |    SELECT query_id, node, d2,
@@ -17356,46 +16368,9 @@ object PipelineQueries {
              |                         ORDER BY d2, node) AS rnk
              |    FROM v$ROUNDS$sfx) z WHERE rnk <= $K)""".stripMargin
         }
-        s"""WITH ${kmeansCtes(fitPred = s"e.vec_id < $INDEX_MAX")},
-           |fa AS (
-           |  SELECT e.vec_id, c.cell,
-           |    sum((e.xs - c.cs) * (e.xs - c.cs)) AS d2
-           |  FROM e JOIN c$KM_ITERS c USING (dim)
-           |  WHERE e.vec_id < $INDEX_MAX
-           |  GROUP BY e.vec_id, c.cell),
-           |ca AS (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell,
-           |      row_number() OVER (PARTITION BY vec_id
-           |                         ORDER BY d2, cell) AS rnk
-           |    FROM fa) z WHERE rnk = 1),
-           |pd AS (
-           |  SELECT a.vec_id AS u, b.vec_id AS v,
-           |    sum((ea.xs - eb.xs) * (ea.xs - eb.xs)) AS d2
-           |  FROM ca a JOIN ca b ON a.cell = b.cell
-           |    AND a.vec_id <> b.vec_id
-           |  JOIN e ea ON ea.vec_id = a.vec_id
-           |  JOIN e eb ON eb.vec_id = b.vec_id AND eb.dim = ea.dim
-           |  GROUP BY 1, 2),
-           |knn AS (
-           |  SELECT u, v FROM (
-           |    SELECT u, v,
-           |      row_number() OVER (PARTITION BY u ORDER BY d2, v) AS rnk
-           |    FROM pd) z WHERE rnk <= $M_KNN),
-           |gf AS (SELECT u AS src, v AS dst FROM knn
-           |       UNION SELECT v, u FROM knn),
-           |del AS (SELECT DISTINCT vec_id FROM e
-           |        WHERE vec_id < $INDEX_MAX AND $delSql),
-           |gm AS (
-           |  SELECT src, dst FROM gf
-           |  WHERE src NOT IN (SELECT vec_id FROM del)
-           |    AND dst NOT IN (SELECT vec_id FROM del)),
-           |qd AS (
-           |  SELECT q.vec_id AS query_id, x.vec_id AS node,
-           |    sum((q.xs - x.xs) * (q.xs - x.xs)) AS d2
-           |  FROM e q JOIN e x ON q.dim = x.dim AND x.vec_id < $INDEX_MAX
-           |  WHERE q.vec_id >= $INDEX_MAX AND q.vec_id < $Q_MAX
-           |  GROUP BY 1, 2),
+        s"""WITH ${knnGraphCtes("gf", INDEX_MAX, M_KNN)},
+           |${knnPurgedCtes("gf", INDEX_MAX)},
+           |${knnQueryDistCte(INDEX_MAX, Q_MAX)},
            |${beamCtes("a", "gf")},
            |${beamCtes("b", "gm")}
            |SELECT snap, query_id, node, d2::BIGINT AS d2,
@@ -17434,19 +16409,10 @@ object PipelineQueries {
     */
   val pinnedNegatives: Q = {
     val INDEX_MAX = 400L; val Q_SRC = 10L; val C = 12
-    val delSql = "% 9 = 4"
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    val bandRowsSql = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM sig"
-    }.mkString("\n  UNION ALL ")
+    val purged = DeleteRule(9, 4)
     Q(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        def isDel(c: Column): Column = c % 9 === 4
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         val base = docs.filter(col("doc_id") < INDEX_MAX)
         val emb = t(s, d, "embeddings")
@@ -17475,7 +16441,7 @@ object PipelineQueries {
             Map("sim" -> simRoot, "dedup" -> dedupRoot), corpus)
         }
         if (FleetSnapshot.list(fleetRoot).size < 2) {
-          val del = base.filter(isDel(col("doc_id"))).select("doc_id")
+          val del = base.filter(purged(col("doc_id"))).select("doc_id")
           SimIndex.addTombstones(s,
             del.withColumnRenamed("doc_id", "vec_id"), "vec_id", simRoot)
           SimIndex.mergeCompact(s, simRoot)
@@ -17578,45 +16544,14 @@ object PipelineQueries {
            |    WHERE doc_id < $Q_SRC),
            |w AS (SELECT doc_id, is_new,
            |        ${TextFunctions.wordsSql("text")} AS arr FROM corpus),
-           |sh AS (SELECT DISTINCT doc_id, is_new,
-           |         unnest(${TextFunctions.shinglesSql("arr")}) AS s FROM w),
-           |sig AS (
-           |  SELECT doc_id, is_new,
-           |    $sigCols
-           |  FROM sh GROUP BY doc_id, is_new),
-           |bands AS (
-           |  $bandRowsSql),
+           |${mhShingleBandCtes("doc_id, is_new")},
            |idx0 AS (SELECT vec_id, embedding FROM embeddings
            |         WHERE vec_id < $INDEX_MAX),
-           |params AS (
-           |  SELECT (${VectorFunctions.mtBitsSql("count(*)")}) AS r,
-           |    ${VectorFunctions.mtTablesSql(
-                  VectorFunctions.mtBitsSql("count(*)"))} AS nt
-           |  FROM idx0),
-           |ie AS (
-           |  SELECT vec_id, embedding,
-           |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-           |  FROM embeddings, params WHERE vec_id < $INDEX_MAX),
-           |iek AS (
-           |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-           |  FROM ie),
-           |ikb AS (
-           |  SELECT vec_id, embedding, tbl,
-           |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-           |  FROM iek),
-           |qe AS (
-           |  SELECT vec_id + 1000 AS vec_id, embedding,
-           |    ${VectorFunctions.scaledMicroSql("embedding")} AS xs, r, nt
-           |  FROM embeddings, params WHERE vec_id < $Q_SRC),
-           |qek AS (
-           |  SELECT vec_id, embedding, xs, r, unnest(range(0, nt)) AS tbl
-           |  FROM qe),
-           |qkb AS (
-           |  SELECT vec_id, embedding, tbl,
-           |    ${VectorFunctions.mtBucketSqlDyn("xs", "tbl", "r")} AS bucket
-           |  FROM qek),
+           |${lshParamsCte("idx0")},
+           |${lshKeyCtes("i", s" WHERE vec_id < $INDEX_MAX")},
+           |${lshKeyCtes("q", s" WHERE vec_id < $Q_SRC", id = "vec_id + 1000 AS vec_id")},
            |${armCtes("a", c => s"$c IS NOT NULL")},
-           |${armCtes("b", c => s"NOT ($c $delSql)")}
+           |${armCtes("b", c => s"NOT (${purged.sql(c)})")}
            |SELECT snap, query_id, n_cand, n_excluded, n_negs,
            |  top_neg_id, top_neg_rnk
            |FROM (
@@ -17820,14 +16755,6 @@ object PipelineQueries {
   val persistedDctIndex: Q = {
     val INDEX_MAX = 400L; val C1 = 1000000L; val C2 = 2000000L
     val SH = 8L; val MIN_ROWH = 3L; val MIN_DCT = 6L
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    def bandsSqlFor(sig: String): String = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM $sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -17963,10 +16890,10 @@ object PipelineQueries {
            |  FROM rhh),
            |rsig AS (
            |  SELECT doc_id, is_new,
-           |    $sigCols
+           |    $mhSigColsSql
            |  FROM rel GROUP BY doc_id, is_new),
            |rbands AS (
-           |  ${bandsSqlFor("rsig")}),
+           |  ${mhBandRowsSql("doc_id, is_new", "rsig")}),
            |rcand AS (
            |  SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
            |  FROM rbands a JOIN rbands x
@@ -18021,10 +16948,10 @@ object PipelineQueries {
            |  CROSS JOIN (SELECT unnest(range(0, 8)) AS b) b),
            |dsig AS (
            |  SELECT doc_id, is_new,
-           |    $sigCols
+           |    $mhSigColsSql
            |  FROM del GROUP BY doc_id, is_new),
            |dbands AS (
-           |  ${bandsSqlFor("dsig")}),
+           |  ${mhBandRowsSql("doc_id, is_new", "dsig")}),
            |dcand AS (
            |  SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
            |  FROM dbands a JOIN dbands x
@@ -18280,14 +17207,6 @@ object PipelineQueries {
   val audioHkIndex: Q = {
     val INDEX_MAX = 400L; val MAX_S = 96
     val C1 = 1000000L; val C2 = 2000000L; val GAIN = 2L
-    val sigCols = (0 until MH_K)
-      .map(i => s"min(${Hashing.seededSql(i, "s")}) AS h$i")
-      .mkString(",\n    ")
-    def bandsSqlFor(sig: String): String = (0 until MH_BANDS).map { b =>
-      val key = (0 until MH_R).map(r => s"h${b * MH_R + r}")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, is_new, $b AS band, $key AS band_key FROM $sig"
-    }.mkString("\n  UNION ALL ")
     Q(
       (s, d) => {
         val base = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -18464,10 +17383,10 @@ object PipelineQueries {
          |  GROUP BY cur.media_id, cur.f),
          |esig AS (
          |  SELECT doc_id, is_new,
-         |    $sigCols
+         |    $mhSigColsSql
          |  FROM eel GROUP BY doc_id, is_new),
          |ebands AS (
-         |  ${bandsSqlFor("esig")}),
+         |  ${mhBandRowsSql("doc_id, is_new", "esig")}),
          |ecand AS (
          |  SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
          |  FROM ebands a JOIN ebands x
@@ -18485,10 +17404,10 @@ object PipelineQueries {
          |  HAVING count(*) * 2 > ne.n_el),
          |hsig AS (
          |  SELECT doc_id, is_new,
-         |    $sigCols
+         |    $mhSigColsSql
          |  FROM hel GROUP BY doc_id, is_new),
          |hbands AS (
-         |  ${bandsSqlFor("hsig")}),
+         |  ${mhBandRowsSql("doc_id, is_new", "hsig")}),
          |hcand AS (
          |  SELECT DISTINCT a.doc_id AS new_id, x.doc_id AS index_id
          |  FROM hbands a JOIN hbands x

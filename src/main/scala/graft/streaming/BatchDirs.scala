@@ -4,14 +4,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The shared committed-batch-dir protocol of the foreachBatch
-  * streams ([[AnnStream]], [[NoveltyStream]], [[LexStream]]): each
+  * streams ([[AnnStream]], [[NoveltyStream]], [[LexStream]],
+  * [[SketchStream]], [[GraphStream]], [[BpeStream]]): each
   * micro-batch's output lands as one `_SUCCESS`-committed
   * `<prefix><batchId>` dir under `outRoot` — the [[VersionedSink]]
   * idempotence trick, so an at-least-once replay overwrites identical
   * bytes and is absorbed. Factored once so the commit/listing rules
   * (the `_SUCCESS` check, the strict-digits name parse that skips
   * foreign dirs and half-written writes) cannot drift between the
-  * three streams that ride them.
+  * six streams that ride them.
   */
 private[streaming] final class BatchDirs(spark: SparkSession,
                                          outRoot: String, prefix: String) {
