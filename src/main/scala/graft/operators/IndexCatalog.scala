@@ -27,8 +27,9 @@ import org.apache.spark.sql.SparkSession
   *     deletion-request ids the family will refuse forever);
   *   - `nRows` / `nBytes` — the head generation's physical footprint
   *     (every parquet dataset under it, layout-agnostic: memo+merges,
-  *     cells, postings, band keys, and BOTH twins of a mirrored
-  *     adjacency alike — physical rows, not logical entities).
+  *     cells, postings, band keys, BOTH twins of a mirrored adjacency,
+  *     and Sim's key rows plus its vector table alike — physical rows,
+  *     not logical entities).
   *
   * Cost: filesystem listings plus parquet FOOTER reads
   * ([[ParquetFooters]] — one metadata seek per part file, no Spark

@@ -29,11 +29,16 @@ private[graft] object ParquetFooters {
     f.isFile && !f.getName.endsWith(".crc") &&
       (f.getName.endsWith(".parquet") || f.getName.startsWith("part-"))
 
-  /** Every parquet part file under `dir` (recursive). */
-  private def parts(dir: File): Seq[File] =
+  /** Every parquet part file under `dir` (recursive); with `visible`,
+    * none below a hidden (`_`/`.`-prefixed) subdir, the dirs Spark's
+    * file index skips (SimIndex keeps its vector table in one).
+    */
+  private def parts(dir: File, visible: Boolean = false): Seq[File] =
     if (dir.isFile) { if (isPart(dir)) Seq(dir) else Nil }
-    else Option(dir.listFiles()).getOrElse(Array.empty[File])
-      .toSeq.flatMap(parts)
+    else Option(dir.listFiles()).getOrElse(Array.empty[File]).toSeq
+      .filterNot(f => visible && f.isDirectory &&
+        (f.getName.startsWith("_") || f.getName.startsWith(".")))
+      .flatMap(parts(_, visible))
 
   /** Exact row count of one parquet file, from its footer. */
   def rowsOf(f: File): Long = {
@@ -55,19 +60,21 @@ private[graft] object ParquetFooters {
   private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** The Spark schema recorded in the footer of the first parquet part
-    * file under `dirs` (searched in order), if any holds one. Data
-    * columns only: partition columns live in directory names, not in
-    * the files.
+    * file under `dirs` (searched in order, hidden subdirs skipped as a
+    * read of the dir would skip them), if any holds one. Data columns
+    * only: partition columns live in directory names, not in the
+    * files.
     */
   def sparkSchema(dirs: Seq[File]): Option[StructType] =
-    dirs.iterator.flatMap(d => parts(d).headOption).nextOption().map { f =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf))
-      val json =
-        try r.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey)
-        finally r.close()
-      if (json == null)
-        throw new IllegalStateException(s"no Spark row schema in $f")
-      DataType.fromJson(json).asInstanceOf[StructType]
-    }
+    dirs.iterator.flatMap(d => parts(d, visible = true).headOption)
+      .nextOption().map { f =>
+        val r = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf))
+        val json =
+          try r.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey)
+          finally r.close()
+        if (json == null)
+          throw new IllegalStateException(s"no Spark row schema in $f")
+        DataType.fromJson(json).asInstanceOf[StructType]
+      }
 }

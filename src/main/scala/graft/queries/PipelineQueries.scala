@@ -10562,7 +10562,6 @@ object PipelineQueries {
           .agg(sum("toks").as("tokens"),
             expr("sum(q_ppm) div count(1)").as("quality_ppm"))
         // global-window: per-source token/quality rows (source taxonomy)
-        val wAll = Window.partitionBy()
         val wg = Window.partitionBy()
           .orderBy(desc("quality_ppm"), asc("source"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -14765,9 +14764,10 @@ object PipelineQueries {
     * ban) → one more pending delta + one uncompacted tombstone set —
     * and the report's six counters per family are judged against a
     * DuckDB replay: nRows recomputed RELATIONALLY from the same
-    * parquet tables (docs×bands for the banded signatures, vecs×T for
-    * the LSH key rows, 2 layouts × surviving symmetric chain pairs
-    * for the graph twins — the oracle knows the families' row
+    * parquet tables (docs×bands for the banded signatures, vecs×(T+1)
+    * for the LSH key rows plus the one vector row per id, 2 layouts ×
+    * surviving symmetric chain pairs for the graph twins — the oracle
+    * knows the families' row
     * arithmetic, so a count drift in any artifact layout breaks the
     * hash), tombstone/ban counts as the deletion slices' sizes, and
     * the lifecycle counts (generations, pending deltas, folded tags)
@@ -14784,9 +14784,11 @@ object PipelineQueries {
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
+        // logicVersion 2: Sim generations hold one vector row per id
+        // beside the key rows
         val root = graft.sources.Artifacts.versionedRoot(
           "graft-catalog", d,
-          Seq("documents.parquet", "embeddings.parquet"))
+          Seq("documents.parquet", "embeddings.parquet"), logicVersion = 2)
         val dRoot = s"$root/dedup"; val sRoot = s"$root/sim"
         val gRoot = s"$root/graph"
         // doc i chained to its source's k-th next doc — the q290
@@ -14856,7 +14858,7 @@ object PipelineQueries {
          |       WHERE doc_id % 10 = 4),
          |ded AS (SELECT count(*)::BIGINT * $MH_BANDS AS n
          |        FROM documents WHERE doc_id % 10 <> 3),
-         |simv AS (SELECT count(*)::BIGINT * $TABLES AS n FROM embeddings
+         |simv AS (SELECT count(*)::BIGINT * ($TABLES + 1) AS n FROM embeddings
          |         WHERE NOT (vec_id % 10 = 3
          |                    AND vec_id IN (SELECT doc_id FROM p))),
          |ch AS (
@@ -15932,7 +15934,6 @@ object PipelineQueries {
     val ctVals = DCT_CT
     Q(
       (s, d) => {
-        import s.implicits._
         val base = t(s, d, "documents")
           .select(col("doc_id"), col("text"))
           .filter(length(col("text")) >= 1)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._

@@ -23,7 +23,8 @@ import graft.SparkSpec
   *     commits no version and launches no job, for all seven
   *     compactions; pending bans alone still force a rewrite;
   *   - a rewrite keeps exactly the rows of the old generation plus its
-  *     live deltas, minus tombstones and bans;
+  *     live deltas, minus tombstones and bans (for Sim, its key rows
+  *     and its vector table each);
   *   - the tombstone reset after a compaction launches no job;
   *   - Graph and Lex read through their own schema, so a generation
   *     every row of which was purged still rewrites.
@@ -380,11 +381,20 @@ class RewriteCensusSpec extends SparkSpec {
     SimIndex.appendDelta(vecs(1000 until 1010), "vec_id", "embedding", sim, "a")
     SimIndex.addTombstones(spark, ids(3L, 1004L), "id", sim)
     SimIndex.addBans(spark, ids(21L), "id", sim)
-    val simCols = Seq("index_id", "tbl", "bucket", "ivec", "pbucket")
-    val simWant = rowsOf(masked(fullRead(SimIndex.resolve(sim).get +:
-      SimIndex.deltas(sim), simCols: _*), "index_id", gone))
+    // the key rows and the vector table, each checked on its own
+    val simRoots = SimIndex.resolve(sim).get +: SimIndex.deltas(sim)
+    def simVecs(roots: Seq[String]) = roots.map(r => s"$r/${SimIndex.VecDir}")
+    val simKeyCols = Seq("index_id", "tbl", "bucket", "pbucket")
+    val simVecCols = Seq("index_id", "ivec", "ibucket")
+    val simKeyWant = rowsOf(masked(fullRead(simRoots, simKeyCols: _*),
+      "index_id", gone))
+    val simVecWant = rowsOf(masked(fullRead(simVecs(simRoots),
+      simVecCols: _*), "index_id", gone))
     val simGen = SimIndex.mergeCompact(spark, sim)
-    assert(rowsOf(fullRead(Seq(simGen), simCols: _*)) == simWant, "sim")
+    assert(rowsOf(fullRead(Seq(simGen), simKeyCols: _*)) == simKeyWant,
+      "sim key rows")
+    assert(rowsOf(fullRead(simVecs(Seq(simGen)), simVecCols: _*)) ==
+      simVecWant, "sim vectors")
 
     // Lex: base + tagged delta
     val lex = tmp("rows-lex")

@@ -2,15 +2,25 @@ package graft.operators
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{DynamicPruningExpression, Literal}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
 /** The persisted ANN index: versioned publish with frozen (r, T)
   * params, bucket-pruned probe, and exact parity with the in-plan
-  * multi-table top-k ([[Similarity.multiTableTopK]]).
+  * multi-table top-k ([[Similarity.multiTableTopK]]); the split layout
+  * (vector-free key rows plus one vector row per id), its run-time
+  * id-bucket pruning, and reads of generations written before it.
   */
-class SimIndexSpec extends SparkSpec {
+class SimIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val BITS = 8; private val TABLES = 4; private val K = 3
@@ -203,5 +213,158 @@ class SimIndexSpec extends SparkSpec {
     val orphan = new java.io.File(root, "index.v9")
     assert(orphan.mkdir())
     assert(SimIndex.resolve(root).contains(v2))
+  }
+
+  // ------------------------------------------------------ split layout
+
+  private def probeRows(df: DataFrame): Set[(Long, Long, Double, Long)] =
+    df.select("query_id", "index_id", "cos_sim", "rnk")
+      .as[(Long, Long, Double, Long)].collect().toSet
+
+  /** `dir` (a generation or delta) holds the split layout over exactly
+    * the ids `want`: T key rows per id with no vector, and one vector
+    * row per id.
+    */
+  private def assertSplit(dir: String, want: Set[Long]): Unit = {
+    val keys = spark.read.parquet(dir)
+    assert(!keys.columns.contains("ivec"), s"key rows carry ivec in $dir")
+    assert(keys.count() == want.size.toLong * TABLES, s"key rows of $dir")
+    assert(keys.select("index_id").distinct().as[Long].collect().toSet == want)
+    val perId = spark.read.parquet(s"$dir/${SimIndex.VecDir}")
+      .groupBy("index_id").count().as[(Long, Long)].collect().toMap
+    assert(perId.keySet == want, s"vector ids of $dir")
+    assert(perId.values.forall(_ == 1L), s"an id stored twice in $dir: $perId")
+  }
+
+  test("key rows carry no vector; each live id has one vector row after " +
+    "publish, append, merge and purge") {
+    val root = Files.createTempDirectory("simidx").toString
+    val gen = SimIndex.publish(index.filter(col("vec_id") < 120L),
+      "vec_id", "embedding", BITS, TABLES, root)
+    assertSplit(gen, (100L until 120L).toSet)
+    assert(Sidecar.read(gen, Sidecar.Params).int("layout", 1) == 2)
+    SimIndex.appendDelta(index.filter(col("vec_id") >= 120L),
+      "vec_id", "embedding", root, tag = "a")
+    assertSplit(SimIndex.deltas(root).head, (120L until 140L).toSet)
+    assertSplit(SimIndex.mergeCompact(spark, root), (100L until 140L).toSet)
+    SimIndex.addTombstones(spark, Seq(103L, 125L).toDF("vec_id"), "vec_id",
+      root)
+    assertSplit(SimIndex.mergeCompact(spark, root),
+      (100L until 140L).toSet - 103L - 125L)
+  }
+
+  test("a probe reads only its candidates' id buckets of the vector table") {
+    val root = Files.createTempDirectory("simidx").toString
+    // Gaussian vectors spread over the LSH buckets
+    def gauss(seed: Long, perturb: Float): Array[Float] = {
+      val r = new scala.util.Random(seed)
+      Array.tabulate(DIM)(i =>
+        r.nextGaussian().toFloat + (if (i == 0) perturb else 0.0f))
+    }
+    val corpus = (0 until 300).map(i => (100L + i, gauss(i.toLong, 0.0f)))
+      .toDF("vec_id", "embedding")
+    // 16-bit keys: a handful of candidates, not a fifth of the corpus
+    val gen = SimIndex.publish(corpus, "vec_id", "embedding", 16, TABLES,
+      root)
+    val stored = new java.io.File(gen, SimIndex.VecDir).listFiles()
+      .count(_.getName.startsWith("ibucket="))
+    val q = Seq((2L, gauss(2L, 0.001f))).toDF("vec_id", "embedding")
+    // the executed plans of the probe's own SQL executions
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val got = try {
+      val r = SimIndex.probeTopK(spark, q, "vec_id", "embedding", K, root)
+      ListenerBusDrain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(got.collect().map(_.getAs[Long]("index_id")).contains(102L))
+    val scans = plans.asScala.toSeq.flatMap(p => collectWithSubqueries(p) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths
+          .exists(_.toString.contains(s"/${SimIndex.VecDir}/")) => s
+    })
+    assert(scans.nonEmpty, "no vector-table scan in the probe's executions")
+    for (s <- scans) assert(s.partitionFilters.exists {
+        case DynamicPruningExpression(Literal.TrueLiteral) => false
+        case _: DynamicPruningExpression => true
+        case _ => false
+      }, s"vector scan without a run-time id-bucket filter: ${s.partitionFilters}")
+    val read = scans.map(_.metrics("numPartitions").value).sum
+    assert(read > 0 && read < stored,
+      s"the probe read $read of $stored id-bucket dirs")
+  }
+
+  /** The key rows every generation carried before the split: one row
+    * per (id, tbl) with the vector attached, params without a layout.
+    */
+  private def publishPreSplit(corpus: DataFrame, root: String): String =
+    VersionedDirs.commit(root) { st =>
+      corpus.select(col("vec_id").as("index_id"), col("embedding").as("ivec"),
+          posexplode(graft.functions.VectorFunctions
+            .multiTableBuckets(col("embedding"), BITS, TABLES))
+            .as(Seq("tbl", "bucket")))
+        .withColumn("pbucket", SimIndex.pbucketOf(col("tbl"), col("bucket")))
+        .repartition(col("pbucket"))
+        .sortWithinPartitions("tbl", "bucket")
+        .write.partitionBy("pbucket").mode("overwrite").parquet(st)
+      Sidecar.write(st, Sidecar.Params, "bits" -> BITS, "tables" -> TABLES)
+    }
+
+  test("a pre-split generation plus a split delta probes like a fresh " +
+    "publish, then merges into the split layout") {
+    val base = index.filter(col("vec_id") < 120L)
+    val delta = index.filter(col("vec_id") >= 120L)
+    def fresh(corpus: DataFrame) = {
+      val r = Files.createTempDirectory("simidx").toString
+      SimIndex.publish(corpus, "vec_id", "embedding", BITS, TABLES, r)
+      probeRows(SimIndex.probeTopK(spark, queries, "vec_id", "embedding",
+        K, r))
+    }
+    val root = Files.createTempDirectory("simidx").toString
+    val old = publishPreSplit(base, root)
+    assert(!new java.io.File(old, SimIndex.VecDir).exists())
+    val wantBase = fresh(base)
+    assert(wantBase.nonEmpty)
+    assert(probeRows(SimIndex.probeTopK(spark, queries, "vec_id",
+      "embedding", K, root)) == wantBase, "pre-split generation alone")
+    SimIndex.appendDelta(delta, "vec_id", "embedding", root, tag = "a")
+    val want = fresh(index)
+    assert(probeRows(SimIndex.probeTopK(spark, queries, "vec_id",
+      "embedding", K, root)) == want, "pre-split generation + split delta")
+    assert(probeRows(SimIndex.probeTopKAt(spark, queries, "vec_id",
+      "embedding", K, old)) == wantBase, "pinned pre-split generation")
+    val merged = SimIndex.mergeCompact(spark, root)
+    assertSplit(merged, (100L until 140L).toSet)
+    assert(Sidecar.read(merged, Sidecar.Params).int("layout", 1) == 2)
+    assert(SimIndex.params(root) == ((BITS, TABLES)))
+    assert(probeRows(SimIndex.probeTopK(spark, queries, "vec_id",
+      "embedding", K, root)) == want, "after the merge")
+  }
+
+  test("purging every vector compacts, probes empty, and appends again") {
+    val root = Files.createTempDirectory("simidx").toString
+    SimIndex.publish(index, "vec_id", "embedding", BITS, TABLES, root)
+    SimIndex.addTombstones(spark, index.select("vec_id"), "vec_id", root)
+    val gen = SimIndex.mergeCompact(spark, root)
+    assert(ParquetFooters.rows(new java.io.File(gen)) == 0L)
+    assert(SimIndex.probeTopK(spark, queries, "vec_id", "embedding", K,
+      root).collect().isEmpty)
+    assert(SimIndex.probeTopKAt(spark, queries, "vec_id", "embedding", K,
+      gen).collect().isEmpty)
+    SimIndex.appendDelta(index.filter(col("vec_id") < 110L),
+      "vec_id", "embedding", root, tag = "again")
+    val got = probeRows(SimIndex.probeTopK(spark, queries, "vec_id",
+      "embedding", K, root))
+    assert(got.exists(_._2 == 102L), s"re-appended vector not served: $got")
+    assertSplit(SimIndex.mergeCompact(spark, root), (100L until 110L).toSet)
+    assert(probeRows(SimIndex.probeTopK(spark, queries, "vec_id",
+      "embedding", K, root)) == got, "post-merge probe diverges")
   }
 }
